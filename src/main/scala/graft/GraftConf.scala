@@ -211,19 +211,6 @@ object GraftConf {
       }
     }
 
-  /** Score the REPLICATED probe orientation against PQ codes + codebook
-    * LUTs (`spark.graft.ann.probePq`, default false): the resident copy
-    * shrinks to `pqM` bytes/vector + a driver-small shared codebook —
-    * 2–4× under the int8 copy, 8–16× under float at dim 64 — and scoring
-    * a candidate is m table lookups instead of dim multiplies. Shortlist
-    * + exact rerank exactly like the int8 regime (emitted scores exact);
-    * ADC error exceeds int8 error, so shortlist recall is the honest
-    * cost — measure it before turning this on for a threshold consumer.
-    * Opt-in (wins over the int8 regime when set).
-    */
-  def annProbePq(spark: SparkSession): Boolean =
-    bool(spark, "spark.graft.ann.probePq", default = false)
-
   /** Per-search generic-id corpus audit
     * (`spark.graft.ann.auditGenericIdsPerSearch`, default false): the
     * corpus-side surrogate-collision audit (countDistinct(surrogate) ==
@@ -237,39 +224,7 @@ object GraftConf {
   def annAuditGenericIdsPerSearch(spark: SparkSession): Boolean =
     bool(spark, "spark.graft.ann.auditGenericIdsPerSearch", default = false)
 
-  /** Disk-lazy in-kernel exact rerank of the int8 replicated probe
-    * (`spark.graft.ann.rerankDiskLazy`, default FALSE — measured
-    * negative): when the loaded artifact carries a blob sidecar, the
-    * probe kernel rescores its own shortlist by positioned-reading the
-    * winners' packed float blobs through a per-executor LRU — no
-    * shortlist exchange at all, vs the join-form rerank's
-    * corpus_vec-per-shortlist-row shuffle. Measured at the adversarial
-    * sf20 1M-queries-=-corpus shape it LOST ≥10× to the join-form
-    * (kernel-stage tasks 676–1050 s, projected stage ≈ 3500 s vs the
-    * join-form's 330.9 s total): per-winner LRU round-trips through one
-    * global lock, with unsorted queries collapsing the hit rate against
-    * a corpus 4× the cache budget (PLANS.md round-18). Results are
-    * bit-equal either way (spec-pinned); opt in only for bounded query
-    * batches against big corpora, where the fetched blob set is small.
-    * Named next levers before the default can flip: query-locality sort
-    * (repartition queries by primary probe list) + per-query ordinal
-    * batching + striped locks.
-    */
-  def annRerankDiskLazy(spark: SparkSession): Boolean =
-    bool(spark, "spark.graft.ann.rerankDiskLazy", default = false)
-
-  /** Per-executor decoded-blob LRU budget of the disk-lazy rerank
-    * (`spark.graft.ann.blobCacheBytes`, default 256 MiB): bounds the
-    * float blocks resident for rescoring; blobs past the budget are
-    * re-read (page cache makes the re-read cheap on a warm host).
-    */
-  def annBlobCacheBytes(spark: SparkSession): Long = {
-    val v = long(spark, "spark.graft.ann.blobCacheBytes", 268435456L)
-    require(v > 0, s"spark.graft.ann.blobCacheBytes must be > 0, got $v")
-    v
-  }
-
-  /** What the quantized/PQ replicated probe EMITS
+  /** What the int8 replicated probe EMITS
     * (`spark.graft.ann.probeRerank` = exact | off, default exact):
     *
     *   - `exact`: the approximate scan only selects a shortlist
@@ -277,8 +232,8 @@ object GraftConf {
     *     an in-operator float rerank re-scores it, so emitted cosines
     *     and the `minCosine` filter are exact. Costs one corpus-join
     *     pass over the shortlist (~rerankFactor·k rows/query).
-    *   - `off`: emit the approximate scores directly (int8: ~1e-2 error;
-    *     ADC: coarser) with `minCosine` applied to the APPROXIMATE
+    *   - `off`: emit the approximate scores directly (~1e-2 error)
+    *     with `minCosine` applied to the APPROXIMATE
     *     score — the right mode when the caller reranks exactly
     *     downstream anyway (the q204 composition), where the in-operator
     *     rerank would be a redundant second pass.
@@ -297,54 +252,13 @@ object GraftConf {
       }
     }
 
-  /** Shortlist overfetch of the quantized/PQ replicated probe: the
+  /** Shortlist overfetch of the int8 replicated probe: the
     * approximate scan keeps `rerankFactor`·k candidates per query for the
     * exact rerank (the same knob the PQ search routes default to 4).
     */
   def annRerankFactor(spark: SparkSession): Int = {
     val v = int(spark, "spark.graft.ann.rerankFactor", 4)
     require(v >= 1, s"spark.graft.ann.rerankFactor must be >= 1, got $v")
-    v
-  }
-
-  /** Floor relaxation of the PQ/ADC shortlist scan
-    * (`spark.graft.ann.pqFloorMargin`, default 0.10): a candidate whose
-    * TRUE cosine clears `minCosine` may score up to this much lower under
-    * ADC reconstruction, so the quantized scan keeps everything above
-    * `floor − margin` and the exact rerank re-applies the exact floor.
-    * Unlike the int8 margin (a measured global bound — scalar-quantizer
-    * error stays well under 0.02 on unit-ish vectors), ADC error is
-    * DATASET-dependent: codebook quality sets it, and sparse/hashed
-    * vectors reconstruct far worse than dense ones (the measured PQ
-    * rejection on the tf-idf corpus). The default is pinned against the
-    * observed max ADC error on the dense test fixture (QuantizedProbeSpec
-    * measures it the way the int8 off-mode test pins Int8FloorMargin);
-    * a corpus with coarser reconstruction must widen it from its own
-    * off-mode measurement before trusting a PQ shortlist under a floor.
-    */
-  def annPqFloorMargin(spark: SparkSession): Double = {
-    val v = double(spark, "spark.graft.ann.pqFloorMargin",
-      graft.operators.Similarity.PqFloorMargin)
-    require(v >= 0, s"spark.graft.ann.pqFloorMargin must be >= 0, got $v")
-    v
-  }
-
-  /** Subquantizer count for the replicated PQ probe copy (dim must
-    * divide by it). 8 at dim 64 → 8-float subspaces, 8 bytes/vector.
-    */
-  def annPqM(spark: SparkSession): Int = {
-    val v = int(spark, "spark.graft.ann.pqM", 8)
-    require(v >= 1, s"spark.graft.ann.pqM must be >= 1, got $v")
-    v
-  }
-
-  /** Codebook size per subspace for the replicated PQ probe copy (byte
-    * codes: at most 256).
-    */
-  def annPqKsub(spark: SparkSession): Int = {
-    val v = int(spark, "spark.graft.ann.pqKsub", 256)
-    require(v >= 2 && v <= 256,
-      s"spark.graft.ann.pqKsub must be in [2, 256], got $v")
     v
   }
 

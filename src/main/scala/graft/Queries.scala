@@ -2515,23 +2515,15 @@ object Queries {
           .ivfBuild(emb.repartition(fanout), numCentroids = nLists,
             trainIters = confInt(spark, "spark.graft.ann.trainIters", 1)),
         emb.repartition(fanout), k = 25, nprobe = nprobe,
-        // floor relaxed by the ACTIVE regime's quantization margin: with
-        // the in-operator rerank deliberately OFF (below), the quantized
-        // regimes apply this floor to APPROXIMATE scores, and a neighbor
-        // whose true hashed cosine clears 0.6 can score just under it and
+        // floor relaxed by the int8 quantization margin: with the
+        // in-operator rerank deliberately OFF (below), the int8 regime
+        // applies this floor to APPROXIMATE scores, and a neighbor whose
+        // true hashed cosine clears 0.6 can score just under it and
         // silently drop out of the shortlist; the downstream exact
         // sorted_dot ≥0.8 rerank restores precision either way, so the
         // relaxation only widens the shortlist (float regime: admits a
-        // thin band below 0.6 the 0.8 rerank then rejects). When probePq
-        // is on, ADC error (measured max 0.102 on the dense fixture —
-        // worse on tf-idf) dwarfs the int8 margin, so the relaxation must
-        // take the PQ margin or true ≥0.6 neighbors still silently drop
-        // and the recall pin breaks.
-        minCosine = Some(0.6 - (
-          if (graft.GraftConf.annProbePq(spark))
-            math.max(graft.operators.Similarity.Int8FloorMargin,
-              graft.GraftConf.annPqFloorMargin(spark))
-          else graft.operators.Similarity.Int8FloorMargin)),
+        // thin band below 0.6 the 0.8 rerank then rejects).
+        minCosine = Some(0.6 - graft.operators.Similarity.Int8FloorMargin),
         // the sorted_dot ≥0.8 rerank below rescoring TRUE tf-idf vectors
         // makes any in-operator quantized-shortlist rerank a redundant
         // second pass — the ivfSearch output is a shortlist heuristic

@@ -851,46 +851,6 @@ object NativeTextExpressions {
       copy(child = newChild)
   }
 
-  /** Pack one block of sorted long-set rows (id, sorted token array) into
-    * [n:int][ids: n×long][offs: (n+1)×int][keys: total×long] — the
-    * jaccard twin of [[PackSparseVecBlock]].
-    */
-  case class PackLongSetBlock(child: Expression)
-    extends UnaryExpression with CodegenFallback {
-    override def dataType: DataType = BinaryType
-    override def prettyName: String = "pack_long_set_block"
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(s: StructType, _)
-        if s.length == 2 && s(0).dataType == LongType &&
-          s(1).dataType.isInstanceOf[ArrayType] &&
-          s(1).dataType.asInstanceOf[ArrayType].elementType == LongType =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"pack_long_set_block expects array<struct<id:long,toks:array<bigint>>>, got ${other.simpleString}")
-    }
-
-    override def nullSafeEval(input: Any): Any = {
-      val entries = input.asInstanceOf[ArrayData]
-      val n = entries.numElements()
-      val rows = Array.tabulate(n) { i =>
-        val e = entries.getStruct(i, 2)
-        (e.getLong(0), e.getArray(1).toLongArray())
-      }.sortBy(_._1)
-      val total = rows.iterator.map(_._2.length).sum
-      val buf = java.nio.ByteBuffer.allocate(4 + n * 8 + (n + 1) * 4 + total * 8)
-      buf.putInt(n)
-      rows.foreach { case (id, _) => buf.putLong(id) }
-      var off = 0
-      buf.putInt(0)
-      rows.foreach { case (_, ks) => off += ks.length; buf.putInt(off) }
-      rows.foreach { case (_, ks) => ks.foreach(buf.putLong) }
-      buf.array()
-    }
-
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
   /** Decoded view of one packed block. Decoding materializes the blob
     * into primitive arrays ONCE per kernel call — the merge loops then
     * run on plain long[]/double[] indexing. (The first cut read every
@@ -899,15 +859,14 @@ object NativeTextExpressions {
     * the per-pair NLJ at sf1; one bulk decode per call is ~60× fewer
     * buffer reads than per-merge access at blockRows=32.)
     */
-  private final class SparseBlock(blob: Array[Byte], withVals: Boolean) {
+  private final class SparseBlock(blob: Array[Byte]) {
     private val buf = java.nio.ByteBuffer.wrap(blob)
     val n: Int = buf.getInt()
     val ids: Array[Long] = Array.fill(n)(buf.getLong())
     val offs: Array[Int] = Array.fill(n + 1)(buf.getInt())
     private val total = offs(n)
     val keys: Array[Long] = Array.fill(total)(buf.getLong())
-    val vals: Array[Double] = if (withVals) Array.fill(total)(buf.getDouble())
-                              else null
+    val vals: Array[Double] = Array.fill(total)(buf.getDouble())
   }
 
   /** All qualifying pairs between two [[PackSparseVecBlock]] blobs — the
@@ -937,8 +896,8 @@ object NativeTextExpressions {
         "sorted_dot_block_pairs expects (binary, binary, <minDot literal>, boolean)")
 
     override def nullSafeEval(a: Any, b: Any, s: Any): Any = {
-      val ba = new SparseBlock(a.asInstanceOf[Array[Byte]], withVals = true)
-      val bb = new SparseBlock(b.asInstanceOf[Array[Byte]], withVals = true)
+      val ba = new SparseBlock(a.asInstanceOf[Array[Byte]])
+      val bb = new SparseBlock(b.asInstanceOf[Array[Byte]])
       val same = s.asInstanceOf[Boolean]
       val (na, aIds, aOffs, aKeys, aVals) = (ba.n, ba.ids, ba.offs, ba.keys, ba.vals)
       val (nb, bIds, bOffs, bKeys, bVals) = (bb.n, bb.ids, bb.offs, bb.keys, bb.vals)
@@ -960,84 +919,6 @@ object NativeTextExpressions {
           if (dot >= minDot && ida != bIds(j)) {
             val (lo, hi) = if (ida < bIds(j)) (ida, bIds(j)) else (bIds(j), ida)
             out += org.apache.spark.sql.catalyst.InternalRow(lo, hi, dot)
-          }
-          j += 1
-        }
-        i += 1
-      }
-      new GenericArrayData(out.toArray)
-    }
-
-    override protected def withNewChildrenInternal(
-        newFirst: Expression, newSecond: Expression,
-        newThird: Expression): Expression =
-      copy(first = newFirst, second = newSecond, fourth = newThird)
-  }
-
-  /** All qualifying pairs between two [[PackLongSetBlock]] blobs — the
-    * blocked form of `jaccard_sorted` + threshold. The jaccard is the
-    * identical |A∩B| / (|A|+|B|−|A∩B|) integer-exact IEEE division, so
-    * the ≥ `threshold` cut IS membership here (no rounding involved).
-    * Emits (id_a, id_b, jaccard), id_a < id_b.
-    */
-  case class JaccardBlockPairs(first: Expression, second: Expression,
-                               threshold: Double, fourth: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
-    with CodegenFallback {
-    override def third: Expression = fourth
-    override def dataType: DataType = ArrayType(StructType(Seq(
-      StructField("id_a", LongType, nullable = false),
-      StructField("id_b", LongType, nullable = false),
-      StructField("jaccard", DoubleType, nullable = false))), containsNull = false)
-    override def prettyName: String = "jaccard_block_pairs"
-    override def checkInputDataTypes(): TypeCheckResult =
-      if (first.dataType == BinaryType && second.dataType == BinaryType &&
-        fourth.dataType == BooleanType) TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure(
-        "jaccard_block_pairs expects (binary, binary, <threshold literal>, boolean)")
-
-    override def nullSafeEval(a: Any, b: Any, s: Any): Any = {
-      val ba = new SparseBlock(a.asInstanceOf[Array[Byte]], withVals = false)
-      val bb = new SparseBlock(b.asInstanceOf[Array[Byte]], withVals = false)
-      val same = s.asInstanceOf[Boolean]
-      val (na, aIds, aOffs, aKeys) = (ba.n, ba.ids, ba.offs, ba.keys)
-      val (nb, bIds, bOffs, bKeys) = (bb.n, bb.ids, bb.offs, bb.keys)
-      val out = new scala.collection.mutable.ArrayBuffer[Any]()
-      var i = 0
-      while (i < na) {
-        val ps = aOffs(i); val pe = aOffs(i + 1); val ida = aIds(i)
-        val lenA = (pe - ps).toLong
-        var j = if (same) i + 1 else 0
-        while (j < nb) {
-          val q0 = bOffs(j); val qe = bOffs(j + 1)
-          val lenB = (qe - q0).toLong
-          // length filter (AllPairs): max possible inter = min(|A|,|B|),
-          // so pairs whose best-case jaccard is provably < t never merge.
-          // The 1e-9 slack makes float error skip-averse: a borderline
-          // pair still merges and the exact division decides. Inside the
-          // merge, the positional bound inter + min(remaining) yields the
-          // same provable cut, so disjoint-heavy corpora abort early.
-          // Neither prune can change the emitted set — only pairs that
-          // cannot reach t are skipped (spec pins blocked == NLJ).
-          val maxInter = math.min(lenA, lenB)
-          if (maxInter.toDouble >= threshold * (lenA + lenB - maxInter) - 1e-9) {
-            val needInter = threshold * (lenA + lenB) / (1.0 + threshold) - 1e-9
-            var p = ps
-            var q = q0
-            var inter = 0L
-            while (p < pe && q < qe &&
-                inter + math.min(pe - p, qe - q) >= needInter) {
-              val x = aKeys(p); val y = bKeys(q)
-              if (x == y) { inter += 1; p += 1; q += 1 }
-              else if (x < y) p += 1
-              else q += 1
-            }
-            val union = lenA + lenB - inter
-            val jac = if (union == 0L) 0.0 else inter.toDouble / union
-            if (jac >= threshold && ida != bIds(j)) {
-              val (lo, hi) = if (ida < bIds(j)) (ida, bIds(j)) else (bIds(j), ida)
-              out += org.apache.spark.sql.catalyst.InternalRow(lo, hi, jac)
-            }
           }
           j += 1
         }
@@ -1154,11 +1035,8 @@ object NativeTextExpressions {
     "lenient_temporal_norm" -> (c => LenientTemporalNorm(c.head)),
     "sorted_dot" -> (c => SortedDot(c)),
     "pack_sparse_vec_block" -> (c => PackSparseVecBlock(c.head)),
-    "pack_long_set_block" -> (c => PackLongSetBlock(c.head)),
     "sorted_dot_block_pairs" -> (c =>
       SortedDotBlockPairs(c.head, c(1), litDbl(c(2), "minDot"), c(3))),
-    "jaccard_block_pairs" -> (c =>
-      JaccardBlockPairs(c.head, c(1), litDbl(c(2), "threshold"), c(3))),
     "bloom_might_contain" -> (c => BloomMightContain(c.head, c(1))),
     "winnow_hashes" -> (c => WinnowHashes(c.head, litInt(c(1), "k"), litInt(c(2), "w"))),
     "cdc_cuts" -> (c => CdcCuts(c.head, litInt(c(1), "w"), litInt(c(2), "mask"))))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Text-analysis building blocks for the training-data-pipeline surface:
-  * tokenization, quality scoring, language ID, shingling, MinHash, SimHash,
+  * tokenization, quality signals, language ID, SimHash, word n-grams
   * and rolling-hash fingerprints — all as pure Column expressions
   * (higher-order functions + built-ins), so every one of them stays inside
   * whole-stage codegen and distributes trivially: no UDFs, no driver-side
@@ -39,18 +39,6 @@ object TextFunctions {
   def stopwordCount(text: Column): Column =
     size(filter(tokens(text), t => t.isInCollection(stopwords)))
 
-  /** Composite quality score in [0,1]: length prior × stopword presence ×
-    * low-punctuation prior. Weights are heuristic; the shape (cheap, fully
-    * columnar, one pass) is the point.
-    */
-  def qualityScore(text: Column): Column = {
-    val n = tokenCount(text).cast("double")
-    val lengthPrior = least(n / 50.0, lit(1.0))
-    val stopPrior = least(stopwordCount(text).cast("double") / 3.0, lit(1.0))
-    val punctPrior = lit(1.0) - least(punctRatio(text) * 5.0, lit(1.0))
-    round(lengthPrior * (lit(0.5) + stopPrior * 0.25 + punctPrior * 0.25), 4)
-  }
-
   /** Marker-word profiles for a tiny language-ID heuristic. Real pipelines
     * use fastText/CLD3; the Spark-side shape — score per language as a
     * column, argmax via greatest + case — is identical.
@@ -76,37 +64,6 @@ object TextFunctions {
     scores.foldRight(lit("und"): Column) { case ((lang, s), acc) =>
       when(s === best && best > 0, lit(lang)).otherwise(acc)
     }
-  }
-
-  /** Distinct character k-shingles (k-grams) of the lowercased text.
-    *
-    * IMPORTANT for hot paths: expressions referenced inside a higher-order
-    * lambda are re-evaluated per element, so `lower(text)` here would run
-    * once per shingle — O(len²) per document. Callers on large corpora
-    * should project `lower(text)` into a column first and use
-    * [[shinglesOfPreLowered]].
-    */
-  def shinglesOf(text: Column, k: Int = 5): Column =
-    shinglesOfPreLowered(lower(text), k)
-
-  /** As [[shinglesOf]] but assumes the input is already lowercased (pass a
-    * plain column reference so per-element re-evaluation is a no-op).
-    */
-  def shinglesOfPreLowered(t: Column, k: Int = 5): Column =
-    array_distinct(transform(
-      sequence(lit(0), greatest(length(t) - k, lit(0))),
-      i => t.substr(i + 1, lit(k))))
-
-  /** MinHash signature: for each of `numHashes` seeded hash functions, the
-    * minimum over the shingle set of `xxhash64(seed_tag || shingle)`.
-    * One array column per document — the signature consumed by the LSH
-    * banding in [[graft.operators.Dedup]].
-    */
-  def minhashSignature(text: Column, numHashes: Int = 16, k: Int = 5): Column = {
-    val sh = shinglesOf(text, k)
-    array((0 until numHashes).map { seed =>
-      array_min(transform(sh, s => xxhash64(concat(lit(s"mh$seed#"), s))))
-    }: _*)
   }
 
   /** ±1 per bit of a 64-bit hash value (bit 0 first). The shift amounts are

@@ -381,7 +381,7 @@ case class PackVecBlock(child: Expression)
   * BYTES are identical to the window form's by construction (ids
   * ascend within a list either way; chunk i = rows [i·blockRows,
   * (i+1)·blockRows) of that order), so every downstream consumer —
-  * probe kernels, packed artifacts, the blobstore sidecar — sees the
+  * probe kernels and packed artifacts — sees the
   * exact same (list_id, chunk, block) rows. Memory posture unchanged:
   * the window form's pack task also held all of a list's chunks in its
   * aggregation map at once.
@@ -864,207 +864,6 @@ object VectorFunctions {
           val sc =
             if (nx == 0L || ny == 0L) 0.0
             else dot.toDouble / math.sqrt(nx.toDouble * ny.toDouble)
-          val last = size - 1
-          if (sc >= floor && (size < k || sc > topScores(last) ||
-              (sc == topScores(last) && id < topIds(last)))) {
-            var p = if (size < k) size else k - 1
-            while (p > 0 && (topScores(p - 1) < sc ||
-                (topScores(p - 1) == sc && topIds(p - 1) > id))) {
-              topIds(p) = topIds(p - 1); topScores(p) = topScores(p - 1); p -= 1
-            }
-            topIds(p) = id; topScores(p) = sc
-            if (size < k) size += 1
-          }
-        }
-        r += 1
-      }
-    }
-    (topIds, topScores, size)
-  }
-
-  /** [[replicatedTopKI8]] that also RECORDS each winner's source blob —
-    * (list_id, chunk) ride two parallel primitive arrays through the
-    * same insertion shifts — so the disk-lazy exact rerank can fetch
-    * exactly the blobs that hold shortlist members instead of joining
-    * the whole corpus's float vectors onto the shortlist (the 28 GB
-    * exchange at the 1M-queries-=-corpus shape). Selection semantics,
-    * arithmetic, and the (cosine desc, id asc) insertion order are
-    * IDENTICAL to the unkeyed kernel; only the bookkeeping differs.
-    */
-  private[graft] def replicatedTopKI8Keyed(qid: Long, q: Array[Byte],
-                                           blocks: Iterator[(Long, Int, QuantBlock)],
-                                           k: Int, floor: Double):
-      (Array[Long], Array[Double], Array[Long], Array[Int], Int) = {
-    val nxFull = VecKernels.normSqI8(q, 0, q.length)
-    val topIds = new Array[Long](k)
-    val topScores = new Array[Double](k)
-    val topList = new Array[Long](k)
-    val topChunk = new Array[Int](k)
-    var size = 0
-    while (blocks.hasNext) {
-      val (listId, chunk, blk) = blocks.next()
-      val dim = blk.dim
-      val qvecs = blk.qvecs
-      val m = math.min(q.length, dim)
-      var r = 0
-      while (r < blk.n) {
-        val id = blk.ids(r)
-        if (id != qid) {
-          val dot = VecKernels.dotI8(q, 0, qvecs, r * dim, m)
-          val nx = if (m == q.length) nxFull else VecKernels.normSqI8(q, 0, m)
-          val ny =
-            if (m == dim) blk.normSq(r)
-            else VecKernels.normSqI8(qvecs, r * dim, m)
-          val sc =
-            if (nx == 0L || ny == 0L) 0.0
-            else dot.toDouble / math.sqrt(nx.toDouble * ny.toDouble)
-          val last = size - 1
-          if (sc >= floor && (size < k || sc > topScores(last) ||
-              (sc == topScores(last) && id < topIds(last)))) {
-            var p = if (size < k) size else k - 1
-            while (p > 0 && (topScores(p - 1) < sc ||
-                (topScores(p - 1) == sc && topIds(p - 1) > id))) {
-              topIds(p) = topIds(p - 1); topScores(p) = topScores(p - 1)
-              topList(p) = topList(p - 1); topChunk(p) = topChunk(p - 1)
-              p -= 1
-            }
-            topIds(p) = id; topScores(p) = sc
-            topList(p) = listId; topChunk(p) = chunk
-            if (size < k) size += 1
-          }
-        }
-        r += 1
-      }
-    }
-    (topIds, topScores, topList, topChunk, size)
-  }
-
-  /** A [[DecodedBlock]] PQ-encoded for the REPLICATED orientation's ADC
-    * scoring regime (spark.graft.ann.probePq): `codes` holds m bytes per
-    * vector (row-major), the codebooks are shared across blocks (driver-
-    * small). Resident bytes shrink to ~m + 8 per vector — 2–4× under the
-    * int8 copy — and scoring is m LUT adds per candidate.
-    */
-  private[graft] final class PqRepBlock(val n: Int, val m: Int,
-                                        val ids: Array[Long],
-                                        val codes: Array[Byte]) extends Serializable
-
-  /** Encode one decoded block against shared PQ codebooks (L2-nearest
-    * code per subspace — the same assignment rule as the distributed
-    * `nearest_code` expression; ties take the lowest code).
-    */
-  private[graft] def encodePqRepBlock(blk: DecodedBlock,
-      codebooks: Array[Array[Array[Float]]]): PqRepBlock = {
-    val m = codebooks.length
-    val sub = blk.dim / m
-    val codes = new Array[Byte](blk.n * m)
-    var r = 0
-    while (r < blk.n) {
-      val base = r * blk.dim
-      var j = 0
-      while (j < m) {
-        val cb = codebooks(j)
-        var best = 0
-        var bd = Double.MaxValue
-        var c = 0
-        while (c < cb.length) {
-          val cent = cb(c)
-          var d = 0.0
-          var i = 0
-          while (i < sub) {
-            val diff = blk.vecs(base + j * sub + i) - cent(i)
-            d += diff.toDouble * diff
-            i += 1
-          }
-          if (d < bd) { bd = d; best = c }
-          c += 1
-        }
-        codes(r * m + j) = best.toByte
-        j += 1
-      }
-      r += 1
-    }
-    new PqRepBlock(blk.n, m, blk.ids, codes)
-  }
-
-  /** Per-codebook-entry squared norms (m × ksub doubles) — the `cnorm`
-    * side of the ADC score, products in DOUBLE exactly like the
-    * `pq_code_norms` literal the distributed ADC routes inline.
-    */
-  private[graft] def pqRepCodeNorms(
-      codebooks: Array[Array[Array[Float]]]): Array[Array[Double]] =
-    codebooks.map(_.map { cent =>
-      var s = 0.0; var i = 0
-      while (i < cent.length) { s += cent(i).toDouble * cent(i); i += 1 }
-      s
-    })
-
-  /** Per-query ADC lookup table: `lut(j)(c)` = dot(query subvector j,
-    * codebook entry c). Products in FLOAT then double-accumulated — the
-    * same arithmetic as the distributed `pq_query_lut` column (zip_with
-    * over float arrays multiplies in float), so kernel scores agree with
-    * the SQL ADC score exactly (spec-pinned).
-    */
-  private[graft] def pqRepLut(q: Array[Float],
-      codebooks: Array[Array[Array[Float]]]): Array[Array[Double]] = {
-    val m = codebooks.length
-    val sub = q.length / m
-    Array.tabulate(m) { j =>
-      val cb = codebooks(j)
-      Array.tabulate(cb.length) { c =>
-        val cent = cb(c)
-        var s = 0.0
-        var i = 0
-        while (i < sub) { s += (q(j * sub + i) * cent(i)).toDouble; i += 1 }
-        s
-      }
-    }
-  }
-
-  /** Query norm with the distributed ADC's arithmetic: FLOAT squares,
-    * double accumulation (`aggregate(vec, 0.0d, acc + x*x)` multiplies
-    * in float before widening). */
-  private[graft] def pqRepQueryNorm(q: Array[Float]): Double = {
-    var s = 0.0
-    var i = 0
-    while (i < q.length) { s += (q(i) * q(i)).toDouble; i += 1 }
-    math.sqrt(s)
-  }
-
-  /** [[replicatedTopK]] over PQ-coded blocks: IDENTICAL selection
-    * semantics (floor inside the scan, self-match excluded, full
-    * (cosine desc, id asc) insertion order) with the ADC reconstructed
-    * score — m LUT adds for the dot, m LUT adds for the candidate norm,
-    * `approxDot / (qNorm · sqrt(approxNorm2))`, 0.0 on a non-positive
-    * norm (the distributed `adcCosine` guard). Scores approximate the
-    * float cosine; callers rerank the shortlist exactly downstream.
-    */
-  private[graft] def replicatedTopKPq(qid: Long, lut: Array[Array[Double]],
-                                      normLut: Array[Array[Double]],
-                                      qNorm: Double,
-                                      blocks: Iterator[PqRepBlock],
-                                      k: Int, floor: Double):
-      (Array[Long], Array[Double], Int) = {
-    val topIds = new Array[Long](k)
-    val topScores = new Array[Double](k)
-    var size = 0
-    while (blocks.hasNext) {
-      val blk = blocks.next()
-      val m = blk.m
-      var r = 0
-      while (r < blk.n) {
-        val id = blk.ids(r)
-        if (id != qid) {
-          var dot = 0.0
-          var n2 = 0.0
-          var j = 0
-          while (j < m) {
-            val c = blk.codes(r * m + j) & 0xff
-            dot += lut(j)(c)
-            n2 += normLut(j)(c)
-            j += 1
-          }
-          val sc = if (n2 > 0.0 && qNorm > 0.0) dot / (qNorm * math.sqrt(n2)) else 0.0
           val last = size - 1
           if (sc >= floor && (size < k || sc > topScores(last) ||
               (sc == topScores(last) && id < topIds(last)))) {

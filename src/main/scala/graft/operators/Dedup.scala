@@ -667,8 +667,13 @@ object Dedup extends org.apache.spark.internal.Logging {
     // cached once: every round joins against the edge table, and its
     // lineage (typically an LSH/verify pair computation) must not re-run
     // per round — same single-scan rule as the signature cache above.
-    val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
+    // Null-endpoint pairs are dropped once, before the regime split:
+    // neither regime can label a null id, and filtering here (a narrow
+    // transformation, no extra job) keeps the two regimes' edge sets
+    // identical without a per-row check in either.
+    val keyed = pairs.filter(col(aCol).isNotNull && col(bCol).isNotNull)
+    val edges = keyed.select(col(aCol).as("src"), col(bCol).as("dst"))
+      .union(keyed.select(col(bCol).as("src"), col(aCol).as("dst")))
       .persist()
     // r19 physical-strategy gate (guide §1.2 step 1 — the same cost-based
     // regime choice as PrefixJoin's brute/index gate and Spark's own
@@ -705,15 +710,11 @@ object Dedup extends org.apache.spark.internal.Logging {
           r
         }
         edges.collect().foreach { row =>
-          // null-keyed rows never join in the loop regime; skip them here
-          // so both regimes see the identical edge set
-          if (!row.isNullAt(0) && !row.isNullAt(1)) {
-            val a = row.getLong(0); val b = row.getLong(1)
-            parent.putIfAbsent(a, a); parent.putIfAbsent(b, b)
-            val ra = find(a); val rb = find(b)
-            if (ra < rb) parent.put(rb, ra)
-            else if (rb < ra) parent.put(ra, rb)
-          }
+          val a = row.getLong(0); val b = row.getLong(1)
+          parent.putIfAbsent(a, a); parent.putIfAbsent(b, b)
+          val ra = find(a); val rb = find(b)
+          if (ra < rb) parent.put(rb, ra)
+          else if (rb < ra) parent.put(ra, rb)
         }
         val rows = new scala.collection.mutable.ArrayBuffer[(Long, Long)](parent.size)
         parent.keySet.forEach(id => rows += ((id, find(id))))

@@ -59,7 +59,10 @@ object Graph extends org.apache.spark.internal.Logging {
     // degree aggregate ever exchanges the edge table again
     // (ranks/deg/nodes are node-partitioned from their own aggregates,
     // and localCheckpoint preserves hash partitioning) — edge shuffles
-    // per 3-iteration call: 3 → 1. Below the gate the extra checkpoint
+    // per 3-iteration call: 3 → 1. That holds only with adaptive
+    // execution off: under AQE the checkpoint reports unknown
+    // partitioning, the loop joins exchange anyway and the call pays
+    // 4 (PlanShapeSpec pins both). Below the gate the extra checkpoint
     // JOB costs more than the tiny in-join exchanges it saves (measured
     // at sf0.1, 100k edges: q132 1.80 → 1.88 s pre-partitioned; at the
     // sf1 shape, 1M edges: 6.41 → 5.52 s — the crossover sits between
@@ -142,7 +145,9 @@ object Graph extends org.apache.spark.internal.Logging {
     // checkpoints (one per join key — localCheckpoint preserves hash
     // partitioning) mean the loop joins never re-exchange the edge
     // table: edge shuffles per 3-iteration call 6 → 2, paid once up
-    // front. Below the gate the two extra checkpoint JOBS cost more
+    // front (with adaptive execution off; under AQE the loop joins still
+    // exchange and the call pays 8 — see pageRank). Below the gate the
+    // two extra checkpoint JOBS cost more
     // than the tiny exchanges they save (same crossover as pageRank's —
     // measured there at sf0.1 vs the sf1 shape; shared 8 MiB default).
     val e = edges.select(col("src"), col("dst")).localCheckpoint()
@@ -250,8 +255,13 @@ object Graph extends org.apache.spark.internal.Logging {
   def bfsHops(edges: DataFrame, sources: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
     // consumed once per hop — checkpoint so the caller's edge subtree
-    // executes once, not maxHops times
-    val e = edges.select(col("src"), col("dst")).localCheckpoint()
+    // executes once, not maxHops times. Null-keyed edges and source
+    // nodes are dropped once, before the regime split (narrow filters,
+    // no extra job): a null node has no hop distance in either regime,
+    // so neither walk needs a per-row null check.
+    val e = edges.select(col("src"), col("dst"))
+      .filter(col("src").isNotNull && col("dst").isNotNull).localCheckpoint()
+    val srcNodes = sources.select(col("node")).filter(col("node").isNotNull)
     // r19 local regime: BFS hop distances are a unique integer function
     // of (edges, sources, maxHops) — a graph whose edge table fits the
     // byte gate walks locally in one pass instead of one join + one
@@ -266,16 +276,14 @@ object Graph extends org.apache.spark.internal.Logging {
         logInfo(s"bfsHops: LOCAL walk regime ($nE edge rows x 16 B <= $budget B)")
         val adj = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[Long]]()
         e.collect().foreach { r =>
-          if (!r.isNullAt(0) && !r.isNullAt(1)) {
-            var l = adj.get(r.getLong(0))
-            if (l == null) { l = new scala.collection.mutable.ArrayBuffer[Long](); adj.put(r.getLong(0), l) }
-            l += r.getLong(1)
-          }
+          var l = adj.get(r.getLong(0))
+          if (l == null) { l = new scala.collection.mutable.ArrayBuffer[Long](); adj.put(r.getLong(0), l) }
+          l += r.getLong(1)
         }
         val dist = new java.util.HashMap[Long, Long]()
         var frontier = new scala.collection.mutable.ArrayBuffer[Long]()
-        sources.select(col("node")).distinct().collect().foreach { r =>
-          if (!r.isNullAt(0)) { dist.put(r.getLong(0), 0L); frontier += r.getLong(0) }
+        srcNodes.distinct().collect().foreach { r =>
+          dist.put(r.getLong(0), 0L); frontier += r.getLong(0)
         }
         var hop = 0L
         while (hop < maxHops && frontier.nonEmpty) {
@@ -308,7 +316,7 @@ object Graph extends org.apache.spark.internal.Logging {
     // are released only once a compaction (or the final stage) no
     // longer references them.
     val live = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var visited = sources.select(col("node")).distinct()
+    var visited = srcNodes.distinct()
       .select(col("node"), lit(0L).as("hops")).localCheckpoint()
     live += visited
     var frontier = visited

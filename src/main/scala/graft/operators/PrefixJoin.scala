@@ -71,24 +71,6 @@ object PrefixJoin {
     }.getOrElse(32)
   }
 
-  /** The jaccard brute branch keeps the per-pair NLJ by DEFAULT: blocking
-    * was a measured negative there (sf1 shape: NLJ 6.9 s vs blocked 8.9 s
-    * even with the length filter + positional early exit; sf0.1: 2.36 vs
-    * 2.60) — gram sets are long, so the merge loop dominates and the
-    * whole-stage-codegen per-pair loop beats the kernel's per step, where
-    * the SHORT tf-idf vectors of the cosine branch are row-overhead-bound
-    * and blocking wins (q203 29.3 → 20.7 s at sf1). Same key shape so the
-    * equality spec can still force either form.
-    */
-  private def jaccardBruteBlockRows(docs: DataFrame): Int = {
-    val key = "spark.graft.prefixJoin.jaccardBruteBlockRows"
-    docs.sparkSession.conf.getOption(key).map { raw =>
-      scala.util.Try(raw.trim.toInt).getOrElse(
-        throw new IllegalArgumentException(
-          s"conf $key must be an integer, got '$raw'"))
-    }.getOrElse(0)
-  }
-
   /** Assign each row a deterministic block id (hash of `id`, never RNG —
     * retried tasks must reproduce the assignment) targeting `blockRows`
     * rows per block. Block membership is a physical layout choice: the
@@ -120,23 +102,6 @@ object PrefixJoin {
     if (nSets <= bruteMax) {
       val sorted = sets.select(col("id"), array_sort(col("toks")).as("toks"))
       val fanout = graft.GraftConf.explosiveFanout(docs.sparkSession)
-      val blockRows = jaccardBruteBlockRows(docs)
-      if (blockRows > 0) {
-        // blocked verify, conf-opt-in only (see [[jaccardBruteBlockRows]]
-        // — a measured NEGATIVE for long gram sets, kept for the
-        // equality spec and for short-set corpora). The jaccard division
-        // is jaccard_sorted's own integer-exact IEEE division, so the
-        // ≥ t cut is identical (spec pins blocked == NLJ row-for-row).
-        val blocks = withBlockId(sorted, nSets, blockRows)
-          .groupBy(col("bid"))
-          .agg(expr("pack_long_set_block(collect_list(struct(id, toks)))").as("blob"))
-        return blocks.repartition(fanout).as("a")
-          .join(broadcast(blocks).as("b"), col("a.bid") <= col("b.bid"))
-          .select(explode(expr(
-            s"jaccard_block_pairs(a.blob, b.blob, $threshold, a.bid = b.bid)")).as("e"))
-          .select(col("e.id_a").as("id_a"), col("e.id_b").as("id_b"),
-            col("e.jaccard").as("jaccard"))
-      }
       return sorted.repartition(fanout)
         .select(col("id").as("id_a"), col("toks").as("ta"))
         .join(broadcast(sorted.select(col("id").as("id_b"), col("toks").as("tb"))),
@@ -350,19 +315,22 @@ object PrefixJoin {
       val fanout = graft.GraftConf.explosiveFanout(docs.sparkSession)
       val blockRows = bruteBlockRows(docs)
       if (blockRows > 0) {
-        // r19 blocked verify (guide §1.2 step 2): same recipe as the
-        // jaccard branch — pack, broadcast, one fused kernel call per
-        // block pair. The kernel emits RAW dots above threshold − 1e-4
-        // (pruning only: round-to-4 moves a value by ≤ 5e-5) and the
-        // SAME relational round+filter as the NLJ form decides
-        // membership, so the output rows are bit-identical (spec-pinned).
+        // r19 blocked verify (guide §1.2 step 2): pack, broadcast, one
+        // fused kernel call per block pair. The kernel emits RAW dots
+        // above threshold − 1e-4 (pruning only: round-to-4 moves a value
+        // by ≤ 5e-5) and the SAME relational round+filter as the NLJ
+        // form decides membership, so the output rows are bit-identical
+        // (spec-pinned). The floor clamps at 0 for thresholds under
+        // 1e-4: tf-idf weights are non-negative, so a negative floor
+        // prunes nothing, and the interpolated literal stays unsigned.
+        val minDot = math.max(0.0, threshold - 1e-4)
         val blocks = withBlockId(vecs, nDocs.toLong, blockRows)
           .groupBy(col("bid"))
           .agg(expr("pack_sparse_vec_block(collect_list(struct(id, ks, vs)))").as("blob"))
         return blocks.repartition(fanout).as("a")
           .join(broadcast(blocks).as("b"), col("a.bid") <= col("b.bid"))
           .select(explode(expr(
-            s"sorted_dot_block_pairs(a.blob, b.blob, ${threshold - 1e-4}, a.bid = b.bid)")).as("e"))
+            s"sorted_dot_block_pairs(a.blob, b.blob, $minDot, a.bid = b.bid)")).as("e"))
           .select(col("e.id_a").as("id_a"), col("e.id_b").as("id_b"),
             round(col("e.dot"), 4).as("cosine"))
           .filter(col("cosine") >= threshold)

@@ -50,32 +50,6 @@ object Similarity extends org.apache.spark.internal.Logging {
         col("rk").cast("int").as("rk"))
   }
 
-  /** Brute-force top-k over int8-QUANTIZED vectors: the corpus scan reads
-    * 1 byte/dim instead of 4 (cosine is scale-invariant, so symmetric
-    * quantization needs no dequantize) — the memory/bandwidth lever when
-    * the embedding column dominates a 100 TB corpus. Ranking approximates
-    * the float cosine to the quantization error; recall-gated vs
-    * [[bruteForceTopK]] in tests. At scale, materialize
-    * `quantize_i8(embedding)` once as a stored column and scan that.
-    */
-  def bruteForceTopKQuantized(corpus: DataFrame, queries: DataFrame, k: Int,
-                              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    VectorFunctions.register(corpus.sparkSession)
-    val q = queries.select(col(idCol).as("query_id"),
-      expr(s"quantize_i8($vecCol)").as("query_q"))
-    val c = corpus.select(col(idCol).as("neighbor_id"),
-      expr(s"quantize_i8($vecCol)").as("corpus_q"))
-    val scored = c.join(broadcast(q), col("neighbor_id") =!= col("query_id"))
-      .withColumn("cosine", expr("cosine_sim_i8(query_q, corpus_q)"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("neighbor_id"), round(col("cosine"), 4).as("cosine"),
-        col("rk").cast("int").as("rk"))
-  }
-
   /** Exact all-pairs cosine above a threshold — the oracle/recall baseline
     * the approximate operators are measured against. O(N²) comparisons by
     * definition (that is what "exact all-pairs" means); use it on bounded
@@ -110,40 +84,6 @@ object Similarity extends org.apache.spark.internal.Logging {
       .withColumn("c", expr("cosine_sim_i8(q_a, q_b)"))
       .filter(col("c") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("c"), 4).as("qcosine"))
-  }
-
-  /** Exact all-pairs without a broadcast bound — the blocked form of
-    * [[exactCosinePairs]] for corpora past nested-loop-broadcast size.
-    * Each vector hashes to one of `blocks` blocks; every unordered block
-    * pair (i ≤ j) is an equi-join key, so the work shuffles as ~(blocks+1)×
-    * corpus replicated rows and each task compares one (N/blocks)² tile in
-    * memory. Still O(N²) comparisons — exact is exact — but memory per task
-    * is corpus/blocks and nothing broadcasts. Size `blocks` ≈
-    * corpus_bytes / executor_tile_budget.
-    */
-  def exactCosinePairsBlocked(corpus: DataFrame, threshold: Double, blocks: Int = 8,
-                              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val spark = corpus.sparkSession
-    VectorFunctions.register(spark)
-    import spark.implicits._
-    val v = corpus.select(col(idCol).as("id"), col(vecCol).as("v"),
-      pmod(xxhash64(col(idCol)), lit(blocks)).cast("int").as("blk"))
-    val blockPairs = (for { i <- 0 until blocks; j <- i until blocks } yield (i, j))
-      .toDF("bi", "bj").withColumn("bp", col("bi") * blocks + col("bj"))
-    val l = v.join(broadcast(blockPairs), col("blk") === col("bi"))
-      .select(col("bp"), col("id").as("ida"), col("v").as("va"))
-    val r = v.join(broadcast(blockPairs), col("blk") === col("bj"))
-      .select(col("bp"), col("id").as("idb"), col("v").as("vb"))
-    l.join(r, Seq("bp"))
-      // same-block tiles see both orders — keep one; cross-block tiles see
-      // each unordered pair exactly once — keep all, normalize id order.
-      .filter(col("bp") % (blocks + 1) =!= 0 || col("ida") < col("idb"))
-      .filter(col("ida") =!= col("idb"))
-      .withColumn("cosine", VectorFunctions.cosine("va", "vb"))
-      .filter(col("cosine") >= threshold)
-      .select(least(col("ida"), col("idb")).as("id_a"),
-        greatest(col("ida"), col("idb")).as("id_b"),
-        round(col("cosine"), 4).as("cosine"))
   }
 
   /** Deterministic random hyperplanes for sign-bit LSH (seeded). Kept for
@@ -656,15 +596,6 @@ object Similarity extends org.apache.spark.internal.Logging {
     cents.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toSeq
   }
 
-  /** [[trainCentroidsLocal]] as a DataFrame (centroid_id, centroid_vec). */
-  def trainCentroids(corpus: DataFrame, numCentroids: Int, iters: Int = 3,
-                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    trainCentroidsLocal(corpus, numCentroids, iters, idCol, vecCol)
-      .toDF("centroid_id", "centroid_vec")
-  }
-
   /** A built IVF index: the trained codebook plus the corpus with its
     * inverted-list assignment. Build once, search many — the assignment
     * pass over the corpus is the expensive part, so amortize it across
@@ -674,8 +605,7 @@ object Similarity extends org.apache.spark.internal.Logging {
     */
   final case class IvfIndex private[operators] (
       centroids: Seq[(Long, Array[Float])], assigned: DataFrame,
-      packed: Option[DataFrame] = None,
-      blobs: Option[DataFrame] = None) {
+      packed: Option[DataFrame] = None) {
     /** Memo for the corpus-side surrogate-collision audit (generic-id
       * builds only): flips true after the one full-corpus
       * countDistinct(surrogate)==countDistinct(orig) scan passes, so
@@ -691,7 +621,7 @@ object Similarity extends org.apache.spark.internal.Logging {
 
   /** Deterministic i64 surrogate for a non-long id column — the id-generic
     * ramp onto the long-id core: every kernel (pack_vec_block's blobs, the
-    * int8/PQ resident copies, the SIMD dots) carries ids as i64, so a
+    * int8 resident copy, the SIMD dots) carries ids as i64, so a
     * string/UUID/composite-key corpus maps ids once at BUILD time
     * (xxhash64 over the canonical string form — order-free, replay-stable)
     * and the original ids ride `assigned` as an `orig_id` column the
@@ -850,8 +780,7 @@ object Similarity extends org.apache.spark.internal.Logging {
     // the budget gates what RESIDES on every executor: the float arrays
     // (dim·4B + id + norm per vector), the int8 copy (dim·1B + id + long
     // norm — a corpus up to ~4× over the float budget still replicates
-    // quantized), or the PQ codes (pqM bytes + id — another 2–4× under
-    // int8). estRows keeps the FLOAT width (it estimates rows from
+    // quantized). estRows keeps the FLOAT width (it estimates rows from
     // float-table bytes). The decision itself is a pure function
     // ([[replicatedDecision]]) so every branch — including the skips —
     // is unit-testable, and EVERY outcome logs (the greppability rule:
@@ -860,10 +789,9 @@ object Similarity extends org.apache.spark.internal.Logging {
     logInfo(s"ivf probe scan: corpus rows ~ $corpusRowsEst via $corpusRowsSrc")
     replicatedDecision(
       estRows = corpusRowsEst, dim = indexDim, floatWidth = vecWidth,
-      pqM = graft.GraftConf.annPqM(spark), budget = replicateBytes,
+      budget = replicateBytes,
       broadcastEligible = maxBroadcastQueries > 0L,
-      int8Mode = graft.GraftConf.annProbeInt8Mode(spark),
-      pq = graft.GraftConf.annProbePq(spark)) match {
+      int8Mode = graft.GraftConf.annProbeInt8Mode(spark)) match {
       case Right((scoring, why)) =>
         val rerank = quantizedRerank.getOrElse(
           graft.GraftConf.annProbeRerank(spark) == "exact")
@@ -1034,7 +962,7 @@ object Similarity extends org.apache.spark.internal.Logging {
   /** [[ivfSearch]] for a non-long id column: encode query ids onto the
     * same i64 surrogate the generic [[ivfBuild]] stamped into `assigned`,
     * run the long-id core (every orientation available — replicated
-    * float/int8/PQ included, which the old non-long-id skip forbade), and
+    * float/int8 included, which the old non-long-id skip forbade), and
     * decode both id columns in the final projection. The decode joins are
     * SLIM: the query dictionary is the query batch's (orig, surrogate)
     * pairs (search-small — Spark broadcasts it under its own threshold),
@@ -1117,23 +1045,13 @@ object Similarity extends org.apache.spark.internal.Logging {
     * artifact when the index carries one (zero pack work per search) and
     * from one pack pass otherwise.
     */
-  /** Floor relaxation of the approximate shortlist scans: a candidate
-    * whose TRUE cosine clears `minCosine` may score up to this much lower
-    * under the approximate arithmetic, so the scan keeps everything above
+  /** Floor relaxation of the int8 shortlist scan: a candidate whose TRUE
+    * cosine clears `minCosine` may score up to this much lower under the
+    * int8 arithmetic, so the scan keeps everything above
     * `floor − margin` and the exact rerank re-applies the exact floor.
-    * int8: |Δcos| stays well under 1e-2 on unit-ish vectors (measured);
-    * PQ/ADC reconstruction error is coarser.
+    * |Δcos| stays well under 1e-2 on unit-ish vectors (measured).
     */
   private[graft] val Int8FloorMargin = 0.02
-  /** DEFAULT of `spark.graft.ann.pqFloorMargin` (the operator reads the
-    * conf — ADC error is dataset-dependent, so the margin must be
-    * overridable per corpus; see [[graft.GraftConf.annPqFloorMargin]]).
-    * Pinned against observed max ADC error on the dense gaussian fixture
-    * in QuantizedProbeSpec: measured 0.102 at dim 64 / m=8 / ksub=256,
-    * so 0.15 carries real headroom where the first-cut 0.10 was an
-    * asserted-not-measured bound that the fixture itself breached.
-    */
-  private[graft] val PqFloorMargin = 0.15
 
   /** Honest row-count estimate for the replicate-budget / copy-volume
     * gates, tried in cost order:
@@ -1225,30 +1143,22 @@ object Similarity extends org.apache.spark.internal.Logging {
     * replicated probe with that scoring regime, Left(reason) keeps the
     * distributed orientations. Resident widths per vector: float
     * dim·4+24 (arrays + id + double norm), int8 dim+40 (bytes + id +
-    * long norm), PQ pqM+40 (codes + id; the shared codebook is
-    * driver-small). Regime precedence: forced PQ > the probeInt8 mode
-    * (`auto` tries float first — bench plans unchanged where the float
-    * copy fits — then the quantized copy).
+    * long norm). The probeInt8 mode picks the regime (`auto` tries float
+    * first — bench plans unchanged where the float copy fits — then the
+    * quantized copy).
     */
   private[graft] def replicatedDecision(estRows: BigInt, dim: Int,
-                                        floatWidth: Long, pqM: Int,
+                                        floatWidth: Long,
                                         budget: Long,
                                         broadcastEligible: Boolean,
-                                        int8Mode: String,
-                                        pq: Boolean):
+                                        int8Mode: String):
       Either[String, (String, String)] = {
     val floatBytes = estRows * floatWidth
     val i8Bytes = estRows * (dim.toLong + 40L)
-    val pqBytes = estRows * (pqM.toLong + 40L)
     val b = BigInt(budget)
     if (!broadcastEligible)
       Left("maxBroadcastQueries <= 0 pins the no-broadcast shuffle plan")
-    else if (pq) {
-      if (pqBytes <= b)
-        Right(("pq", s"forced by spark.graft.ann.probePq; est resident " +
-          s"$pqBytes B <= replicate budget $budget B"))
-      else Left(s"PQ resident copy est $pqBytes B exceeds replicate budget $budget B")
-    } else int8Mode match {
+    else int8Mode match {
       case "false" =>
         if (floatBytes <= b)
           Right(("float", s"est resident $floatBytes B <= replicate budget $budget B"))
@@ -1278,23 +1188,11 @@ object Similarity extends org.apache.spark.internal.Logging {
                                   scoring: String, rerank: Boolean): DataFrame = {
     import graft.functions.VectorFunctions
     val spark = queries.sparkSession
-    // The PQ regime with no packed artifact walks the pack job's output
-    // TWICE driver-side (training-sample pass, then the encode pass) —
-    // persist the blobs around those passes so the window + collect_list
-    // pack runs once, not per pass (unpersisted right after encoding).
-    // Every other consumer reads packedDf once (float collect, int8
-    // quantize stream) or scans a persisted artifact (cheap re-read).
-    val cachePacked = scoring == "pq" && index.packed.isEmpty
-    val packedDf = {
-      val base = index.packed match {
-        case Some(pre) => pre.select(col("list_id"), col("block"))
-        case None => packLists(index.assigned, blockRows,
-            index.centroids.length, indexDimOf(index).toLong * 4L + 24L)
-          .select(col("list_id"), col("block"))
-      }
-      if (cachePacked)
-        base.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else base
+    val packedDf = index.packed match {
+      case Some(pre) => pre.select(col("list_id"), col("block"))
+      case None => packLists(index.assigned, blockRows,
+          index.centroids.length, indexDimOf(index).toLong * 4L + 24L)
+        .select(col("list_id"), col("block"))
     }
     val floor = minCosine.getOrElse(Double.NegativeInfinity)
     val qrows = queries.select(col(idCol).as("query_id"),
@@ -1350,10 +1248,10 @@ object Similarity extends org.apache.spark.internal.Logging {
         round(col("cosine"), 4).as("cosine"), col("rk"))
     }
 
-    // ---- approximate-scan regimes (int8 / pq).
+    // ---- approximate-scan regime (int8).
     //
     // rerank = true (conf default): the quantized copy only SELECTS a
-    // shortlist (rerankFactor·k per query, floor relaxed by the regime's
+    // shortlist (rerankFactor·k per query, floor relaxed by the int8
     // quantization margin); scores and the minCosine filter are EXACT via
     // an in-operator float rerank — the same recipe as the PQ search
     // routes, so flipping the regime never changes score semantics, only
@@ -1361,7 +1259,7 @@ object Similarity extends org.apache.spark.internal.Logging {
     //
     // rerank = false (callers that provably rerank exactly downstream,
     // e.g. the q204 composition): emit the approximate scores directly —
-    // int8 ~1e-2 error, ADC coarser — with minCosine applied to the
+    // int8 ~1e-2 error — with minCosine applied to the
     // approximate score. The in-operator rerank would be a redundant
     // second pass there (measured sf20: it cost ~4× the probe kernel
     // before the slim-shortlist/hash-join form below).
@@ -1371,35 +1269,24 @@ object Similarity extends org.apache.spark.internal.Logging {
     // the float index alongside the quantized copy — peak residency is
     // the quantized arrays + one in-flight partition, not the 4–5×
     // replicate-budget footprint a whole-collect would pin at exactly
-    // the scale these regimes target.
+    // the scale this regime targets.
     val rerankFactor = graft.GraftConf.annRerankFactor(spark)
     val kFetch = if (rerank) math.max(k, k * rerankFactor) else k
-    val margin = if (scoring == "pq") graft.GraftConf.annPqFloorMargin(spark)
-                 else Int8FloorMargin
-    val fetchFloor = if (rerank && minCosine.isDefined) floor - margin else floor
-    // DISK-LAZY in-kernel exact rerank (int8 + artifact-with-sidecar
-    // only): the kernel rescores its own shortlist from the winners'
-    // packed float blobs via positioned reads through a per-executor
-    // LRU — zero shortlist exchange, vs the join-form's
-    // corpus_vec-per-shortlist-row shuffle below. Selection semantics
-    // identical (spec-pinned bit-equal to the join-form).
-    if (scoring == "int8" && rerank && index.blobs.nonEmpty &&
-        graft.GraftConf.annRerankDiskLazy(spark))
-      return ivfSearchReplicatedInt8DiskLazy(index, qrows, k, kFetch,
-        floor, fetchFloor, outSchema)
+    val fetchFloor = if (rerank && minCosine.isDefined) floor - Int8FloorMargin
+                     else floor
     // r18 (guide §5 — the driver should do almost no data work): the
-    // int8 quantize and the PQ block encode used to run ON THE DRIVER,
-    // single-threaded, off a toLocalIterator stream of FLOAT blobs (one
-    // sequential job per partition, float-width bytes crossing to the
-    // driver). Both kernels are pure per-block functions, so they now
-    // run on the executors (`rdd.map`): when the estimated QUANTIZED
+    // int8 quantize used to run ON THE DRIVER, single-threaded, off a
+    // toLocalIterator stream of FLOAT blobs (one sequential job per
+    // partition, float-width bytes crossing to the driver). The kernel
+    // is a pure per-block function, so it now runs on the executors
+    // (`rdd.map`): when the estimated QUANTIZED
     // volume fits comfortably under spark.driver.maxResultSize the
     // blocks come back in ONE parallel collect; past that gate the
     // stream form remains, but carrying quantized (≤¼-width) bytes with
     // the decode+quantize work already done executor-side. Outputs are
     // bit-identical either way (same per-block kernel; block order is
     // irrelevant — the probe groups blocks by list); the replicated
-    // int8/PQ equality specs pin the results.
+    // int8 equality specs pin the results.
     def quantizedSideBytes(perRowBytes: Long): (BigInt, Boolean) = {
       val (rows, src) = estRowsHonest(index.assigned,
         indexDimOf(index).toLong * 4L + 24L)
@@ -1441,107 +1328,28 @@ object Similarity extends org.apache.spark.internal.Logging {
         rdd.toLocalIterator.toArray
       }
     }
-    val ranked: DataFrame = scoring match {
-      case "int8" =>
-        val quantized: Array[(Long, VectorFunctions.QuantBlock)] =
-          gatherBlocks("int8 quantize", indexDimOf(index).toLong + 48L, r =>
-            (r.getLong(0), VectorFunctions.quantizeBlock(
-              VectorFunctions.decodeBlock(r.getAs[Array[Byte]](1)))))
-        val bcQ = spark.sparkContext.broadcast(quantized)
-        qrows.mapPartitions { it: Iterator[org.apache.spark.sql.Row] =>
-          val byList = groupByList(bcQ.value)
-          it.flatMap { r =>
-            val qid = r.getLong(0)
-            val qf = r.getSeq[Float](1).toArray
-            val q = graft.functions.VecKernels.quantizeI8(qf, 0, qf.length)
-            val lists = r.getSeq[Long](2)
-            val blocks = lists.iterator.flatMap { l =>
-              val b = byList.get(l)
-              if (b == null) Iterator.empty else b.iterator
-            }
-            val (ids, scores, size) = VectorFunctions.replicatedTopKI8(
-              qid, q, blocks, kFetch, fetchFloor)
-            (0 until size).iterator.map(i =>
-              org.apache.spark.sql.Row(qid, ids(i), scores(i), i + 1))
-          }
-        }(org.apache.spark.sql.Encoders.row(outSchema))
-      case "pq" =>
-        val m = graft.GraftConf.annPqM(spark)
-        val ksub = graft.GraftConf.annPqKsub(spark)
-        require(indexDimOf(index) % m == 0,
-          s"ivfSearch pq scoring: index dim ${indexDimOf(index)} not divisible " +
-            s"into spark.graft.ann.pqM=$m subspaces")
-        // pass 1: a bounded, deterministic training sample off the block
-        // stream (hash-stride on vector id — no RNG, order-independent).
-        // estRows sets the stride so ~PqTrainSample vectors survive.
-        val estRows = estRowsHonest(index.assigned,
-          indexDimOf(index).toLong * 4L + 24L)._1
-        val stride = ((estRows / PqTrainSample) + 1).min(BigInt(Long.MaxValue)).toLong
-        // both driver-side passes under try/finally: a throw mid-sample or
-        // mid-encode must not leak the MEMORY_AND_DISK packed blocks for
-        // the rest of the session (success-path timing unchanged — the
-        // cache drops right after the encode pass, before the broadcast)
-        val (codebooks, encoded) = try {
-          val sample = scala.collection.mutable.ArrayBuffer.empty[Array[Float]]
-          locally {
-            val it = packedDf.toLocalIterator()
-            while (it.hasNext && sample.size < 4 * PqTrainSample) {
-              val blk = VectorFunctions.decodeBlock(
-                it.next().getAs[Array[Byte]](1))
-              var r = 0
-              while (r < blk.n && sample.size < 4 * PqTrainSample) {
-                if (math.floorMod(scala.util.hashing.byteswap64(blk.ids(r)), stride) == 0L)
-                  sample += java.util.Arrays.copyOfRange(
-                    blk.vecs, r * blk.dim, (r + 1) * blk.dim)
-                r += 1
-              }
-            }
-          }
-          require(sample.nonEmpty, "ivfSearch pq scoring: empty training sample")
-          val cbs = pqTrainLocal(sample.toArray, m, ksub, iters = 3)
-          logInfo(s"ivf probe scan: PQ scoring trained m=$m ksub=$ksub codebooks " +
-            s"on ${sample.size} sampled vectors (stride $stride)")
-          // pass 2 (r18, guide §5): the per-block PQ encode runs on the
-          // executors through [[gatherBlocks]] (parallel collect under
-          // the quantized-volume gate, streamed past it) — the driver no
-          // longer decodes and encodes the whole corpus serially. The
-          // training-sample walk above stays a driver stream on purpose:
-          // it EARLY-EXITS after ≤4·PqTrainSample vectors, so it is
-          // bounded regardless of corpus size, and its sample must be
-          // the deterministic partition-order prefix.
-          (cbs, gatherBlocks("pq encode", m.toLong + 32L, r =>
-            (r.getLong(0), VectorFunctions.encodePqRepBlock(
-              VectorFunctions.decodeBlock(r.getAs[Array[Byte]](1)), codebooks = cbs))))
-        } finally {
-          if (cachePacked) packedDf.unpersist(blocking = false)
+    val quantized: Array[(Long, VectorFunctions.QuantBlock)] =
+      gatherBlocks("int8 quantize", indexDimOf(index).toLong + 48L, r =>
+        (r.getLong(0), VectorFunctions.quantizeBlock(
+          VectorFunctions.decodeBlock(r.getAs[Array[Byte]](1)))))
+    val bcQ = spark.sparkContext.broadcast(quantized)
+    val ranked: DataFrame = qrows.mapPartitions { it: Iterator[org.apache.spark.sql.Row] =>
+      val byList = groupByList(bcQ.value)
+      it.flatMap { r =>
+        val qid = r.getLong(0)
+        val qf = r.getSeq[Float](1).toArray
+        val q = graft.functions.VecKernels.quantizeI8(qf, 0, qf.length)
+        val lists = r.getSeq[Long](2)
+        val blocks = lists.iterator.flatMap { l =>
+          val b = byList.get(l)
+          if (b == null) Iterator.empty else b.iterator
         }
-        val bcP = spark.sparkContext.broadcast(encoded)
-        val bcCb = spark.sparkContext.broadcast(codebooks)
-        val normLut = VectorFunctions.pqRepCodeNorms(codebooks)
-        val bcNorm = spark.sparkContext.broadcast(normLut)
-        qrows.mapPartitions { it: Iterator[org.apache.spark.sql.Row] =>
-          val byList = groupByList(bcP.value)
-          val cbs = bcCb.value
-          val nLut = bcNorm.value
-          it.flatMap { r =>
-            val qid = r.getLong(0)
-            val qf = r.getSeq[Float](1).toArray
-            val lut = VectorFunctions.pqRepLut(qf, cbs)
-            val qn = VectorFunctions.pqRepQueryNorm(qf)
-            val lists = r.getSeq[Long](2)
-            val blocks = lists.iterator.flatMap { l =>
-              val b = byList.get(l)
-              if (b == null) Iterator.empty else b.iterator
-            }
-            val (ids, scores, size) = VectorFunctions.replicatedTopKPq(
-              qid, lut, nLut, qn, blocks, kFetch, fetchFloor)
-            (0 until size).iterator.map(i =>
-              org.apache.spark.sql.Row(qid, ids(i), scores(i), i + 1))
-          }
-        }(org.apache.spark.sql.Encoders.row(outSchema))
-      case other =>
-        throw new IllegalArgumentException(s"unknown replicated scoring '$other'")
-    }
+        val (ids, scores, size) = VectorFunctions.replicatedTopKI8(
+          qid, q, blocks, kFetch, fetchFloor)
+        (0 until size).iterator.map(i =>
+          org.apache.spark.sql.Row(qid, ids(i), scores(i), i + 1))
+      }
+    }(org.apache.spark.sql.Encoders.row(outSchema))
     if (!rerank)
       // approximate direct emission (rank BEFORE rounding, like float)
       return ranked.select(col("query_id"), col("neighbor_id"),
@@ -1602,114 +1410,6 @@ object Similarity extends org.apache.spark.internal.Logging {
       .select(col("query_id"), col("neighbor_id"),
         round(col("cosine"), 4).as("cosine"), col("rk").cast("int").as("rk"))
   }
-
-  /** The int8 replicated probe with the DISK-LAZY in-kernel exact rerank
-    * (the r17 design, PLANS.md "The rerank-residual item"): the join-form
-    * rerank moves one corpus float vector PER SHORTLIST ROW through a
-    * shuffle (~28 GB at the adversarial 1M-queries-=-corpus sf20 shape);
-    * here the kernel rescores its own shortlist in place by fetching the
-    * WINNERS' packed float blobs — positioned reads against the
-    * artifact's raw-byte sidecar ([[BlobStore]]), through a per-executor
-    * byte-bounded LRU of decoded blocks — so the only bytes that move
-    * are the ≤ shortlist-blob set, re-read through the OS page cache on
-    * a warm host. The quantized broadcast copy is built from the SAME
-    * sidecar (driver positioned reads replace the toLocalIterator jobs),
-    * and each broadcast block carries its ordinal into the sidecar's ref
-    * array — the kernel tracks each winner's source ordinal through the
-    * top-k insertions ([[graft.functions.VectorFunctions
-    * .replicatedTopKI8Keyed]]), which is what makes the fetch exact
-    * under append-duplicated chunk ids ((list, chunk) is NOT a key
-    * across appends; the ordinal is).
-    *
-    * Scoring parity: the exact rescore reuses the replicated float
-    * kernel's arithmetic (double dot over min-length, precomputed norm
-    * accumulators in blob element order, 0.0 on zero norms), the exact
-    * floor re-applies AFTER rescoring, ordering is (cosine desc, id
-    * asc), and rounding is the half-up scale-4 Spark `round` — the
-    * DiskLazyRerankSpec pins bit-equality against the join-form.
-    */
-  private def ivfSearchReplicatedInt8DiskLazy(
-      index: IvfIndex, qrows: DataFrame, k: Int, kFetch: Int,
-      floor: Double, fetchFloor: Double,
-      outSchema: org.apache.spark.sql.types.StructType): DataFrame = {
-    import graft.functions.{VecKernels, VectorFunctions}
-    val spark = qrows.sparkSession
-    val refs = BlobStore.collectIndexRows(index.blobs.get)
-    require(refs.nonEmpty, "disk-lazy rerank: empty blob sidecar index")
-    val quantized = new Array[(Long, Int, VectorFunctions.QuantBlock)](refs.length)
-    var qi = 0
-    while (qi < refs.length) {
-      val (list, path, off, len) = refs(qi)
-      quantized(qi) = (list, qi,
-        VectorFunctions.quantizeBlock(BlobStore.readBlob(path, off, len)))
-      qi += 1
-    }
-    val bcQ = spark.sparkContext.broadcast(quantized)
-    val bcRef = spark.sparkContext.broadcast(refs)
-    val cacheBudget = graft.GraftConf.annBlobCacheBytes(spark)
-    logInfo(s"ivf probe scan: int8 scoring + DISK-LAZY exact rerank " +
-      s"(${refs.length} sidecar blobs; per-executor decoded-block LRU " +
-      s"budget $cacheBudget B; zero shortlist exchange)")
-    qrows.mapPartitions { it: Iterator[org.apache.spark.sql.Row] =>
-      val byList = new java.util.HashMap[Long, scala.collection.mutable
-        .ArrayBuffer[(Long, Int, VectorFunctions.QuantBlock)]]()
-      bcQ.value.foreach { t =>
-        var b = byList.get(t._1)
-        if (b == null) {
-          b = scala.collection.mutable.ArrayBuffer.empty
-          byList.put(t._1, b)
-        }
-        b += t
-      }
-      it.flatMap { r =>
-        val qid = r.getLong(0)
-        val qf = r.getSeq[Float](1).toArray
-        val q = VecKernels.quantizeI8(qf, 0, qf.length)
-        val lists = r.getSeq[Long](2)
-        val blocks = lists.iterator.flatMap { l =>
-          val b = byList.get(l)
-          if (b == null) Iterator.empty else b.iterator
-        }
-        val (ids, _, _, ords, size) = VectorFunctions
-          .replicatedTopKI8Keyed(qid, q, blocks, kFetch, fetchFloor)
-        val nxFull = VecKernels.normSq(qf, 0, qf.length)
-        val exIds = new Array[Long](size)
-        val exScores = new Array[Double](size)
-        var nOut = 0
-        var j = 0
-        while (j < size) {
-          val (_, path, off, len) = bcRef.value(ords(j))
-          val blk = BlobStore.BlobCache.get(path, off, len, cacheBudget)
-          val row = java.util.Arrays.binarySearch(blk.ids, ids(j))
-          require(row >= 0,
-            s"disk-lazy rerank: id ${ids(j)} missing from its source blob")
-          val dim = blk.dim
-          val m = math.min(qf.length, dim)
-          val dot = VecKernels.dot(qf, 0, blk.vecs, row * dim, m)
-          val nx = if (m == qf.length) nxFull else VecKernels.normSq(qf, 0, m)
-          val ny = if (m == dim) blk.normSq(row)
-                   else VecKernels.normSq(blk.vecs, row * dim, m)
-          val s = if (nx == 0.0 || ny == 0.0) 0.0 else dot / math.sqrt(nx * ny)
-          if (s >= floor) {
-            exIds(nOut) = ids(j); exScores(nOut) = s; nOut += 1
-          }
-          j += 1
-        }
-        val order = Array.range(0, nOut)
-          .sortBy(x => (-exScores(x), exIds(x)))
-        (0 until math.min(k, nOut)).iterator.map { rk =>
-          val x = order(rk)
-          org.apache.spark.sql.Row(qid, exIds(x),
-            java.math.BigDecimal.valueOf(exScores(x))
-              .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue(),
-            rk + 1)
-        }
-      }
-    }(org.apache.spark.sql.Encoders.row(outSchema))
-  }
-
-  /** Bounded driver-side PQ training-sample target (vectors). */
-  private[graft] val PqTrainSample = 16384
 
   private def indexDimOf(index: IvfIndex): Int = index.centroids.head._2.length
 
@@ -2032,118 +1732,6 @@ object Similarity extends org.apache.spark.internal.Logging {
     ivfPqSearch(ivfPqBuild(corpus, numCentroids, m, ksub, trainIters, idCol, vecCol),
       corpus, queries, k, nprobe, rerankFactor, idCol, vecCol)
 
-  // ---- residual IVF-PQ: codebooks over (vector − coarse centroid) ----
-
-  /** Per-list centroid vectors as an inline map literal (list_id → vec). */
-  private def centroidMapLit(cents: Seq[(Long, Array[Float])]) =
-    map_from_arrays(
-      array(cents.map(c => lit(c._1)): _*),
-      array(cents.map(c => typedLit(c._2)): _*))
-
-  /** Residual-encoded IVF-PQ: same index shape as [[ivfPqBuild]], but the
-    * PQ codebooks are trained on and encode r = v − c(list) — residuals
-    * cluster much tighter than raw vectors, so the same m×ksub code budget
-    * reconstructs v = c + r̂ more precisely (the FAISS IVFPQ recipe). The
-    * residual subtraction is a scan-local zip_with against the inlined
-    * centroid map; build stays one pass, no shuffle.
-    */
-  def ivfPqBuildResidual(corpus: DataFrame,
-                         numCentroids: Int = 16, m: Int = 4, ksub: Int = 16,
-                         trainIters: Int = 3,
-                         idCol: String = "vec_id", vecCol: String = "embedding"): IvfPqIndex = {
-    VectorFunctions.register(corpus.sparkSession)
-    val cents = trainCentroidsLocal(corpus, numCentroids, trainIters, idCol, vecCol)
-    val sample = corpus.select(col(vecCol)).limit(1024).collect()
-      .map(_.getSeq[Float](0).toArray)
-    require(sample.nonEmpty, "ivfPqBuildResidual: empty corpus")
-    val dim = sample.head.length
-    // driver-side residuals for codebook training (sample is bounded)
-    def cosLocal(a: Array[Float], b: Array[Float]): Double = {
-      var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) { d += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
-      if (na == 0 || nb == 0) 0.0 else d / math.sqrt(na * nb)
-    }
-    val residSample = sample.map { v =>
-      val c = cents.maxBy { case (cid, cv) => (cosLocal(v, cv), -cid) }._2
-      Array.tabulate(dim)(i => v(i) - c(i))
-    }
-    val codebooks = pqTrainLocal(residSample, m, ksub, trainIters)
-    val sub = dim / m
-    val withList = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__v"),
-      nearestCentroid(col(vecCol), cents).as("list_id"))
-    val resid = zip_with(col("__v"),
-      element_at(centroidMapLit(cents), col("list_id")), (a, b) => a - b)
-    val codes = array((0 until m).map { j =>
-      nearestCode(slice(resid, j * sub + 1, sub), codebooks(j))
-    }: _*)
-    val assigned = withList.select(col("neighbor_id"), col("list_id"), codes.as("codes"))
-    IvfPqIndex(cents, codebooks, assigned, dim)
-  }
-
-  /** Search a residual-encoded index. ADC reconstructs
-    * dot(q, v) ≈ dot(q, c) + Σⱼ LUT[j][codeⱼ] and
-    * ‖v‖² ≈ ‖c‖² + 2·Σⱼ dot(c_subⱼ, cbⱼ[codeⱼ]) + Σⱼ ‖cbⱼ[codeⱼ]‖²;
-    * dot(q, c) is computed per probe row and every per-list constant rides
-    * in as an inline map literal (k·m·ksub doubles — driver-small), so the
-    * compressed scan is still m lookups + a handful of adds per vector,
-    * all scan-local. Exact rerank unchanged.
-    */
-  def ivfPqSearchResidual(index: IvfPqIndex, corpus: DataFrame, queries: DataFrame,
-                          k: Int, nprobe: Int = 4, rerankFactor: Int = 4,
-                          idCol: String = "vec_id", vecCol: String = "embedding",
-                          maxBroadcastQueries: Long = DefaultMaxBroadcastQueries): DataFrame = {
-    VectorFunctions.register(queries.sparkSession)
-    val cMap = centroidMapLit(index.centroids)
-    // per-list ‖c‖² map literal
-    val cNorm2Map = map_from_arrays(
-      array(index.centroids.map(c => lit(c._1)): _*),
-      array(index.centroids.map(c => lit(c._2.map(x => x.toDouble * x).sum)): _*))
-    // per-list, per-subspace, per-code dot(c_sub_j, cb_j[code]) literal:
-    // list_id → array<array<double>> (m × ksub)
-    val sub = index.dim / index.m
-    val cDotMap = map_from_arrays(
-      array(index.centroids.map(c => lit(c._1)): _*),
-      array(index.centroids.map { case (_, cv) =>
-        array(index.codebooks.zipWithIndex.map { case (cb, j) =>
-          typedLit(cb.map { code =>
-            var s = 0.0; var i = 0
-            while (i < sub) { s += cv(j * sub + i).toDouble * code(i); i += 1 }
-            s
-          })
-        }.toIndexedSeq: _*)
-      }: _*))
-    val probes = queries.select(col(idCol).as("query_id"), col(vecCol).as("query_vec"),
-      pqQueryLut(index.codebooks, index.dim, vecCol).as("lut"),
-      queryNorm(vecCol).as("q_norm"),
-      explode(probeLists(col(vecCol), index.centroids, nprobe)).as("list_id"))
-      .withColumn("qc_dot", aggregate(
-        zip_with(col("query_vec"), element_at(cMap, col("list_id")), (a, b) => a * b),
-        lit(0.0d), (acc, x) => acc + x))
-      .withColumn("c_norm2", element_at(cNorm2Map, col("list_id")))
-      .withColumn("c_dots", element_at(cDotMap, col("list_id")))
-    val adcDot = col("qc_dot") + aggregate(
-      zip_with(col("codes"), col("lut"), (c, l) => element_at(l, c + 1)),
-      lit(0.0d), (acc, x) => acc + x)
-    val cDotSum = aggregate(
-      zip_with(col("codes"), col("c_dots"), (c, arr) => element_at(arr, c + 1)),
-      lit(0.0d), (acc, x) => acc + x)
-    val rNorm2 = aggregate(
-      zip_with(col("codes"), pqCodeNorms(index.codebooks), (c, arr) => element_at(arr, c + 1)),
-      lit(0.0d), (acc, x) => acc + x)
-    val vNorm2 = col("c_norm2") + lit(2.0d) * cDotSum + rNorm2
-    val shortlistW = Window.partitionBy(col("query_id"))
-      .orderBy(col("approx_cosine").desc, col("neighbor_id").asc)
-    val shortlist = index.assigned
-      .join(maybeBroadcast(probes, maxBroadcastQueries), Seq("list_id"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("approx_cosine",
-        when(vNorm2 > 0.0d && col("q_norm") > 0.0d,
-          adcDot / (col("q_norm") * sqrt(vNorm2))).otherwise(lit(0.0d)))
-      .withColumn("srk", row_number().over(shortlistW))
-      .filter(col("srk") <= k * math.max(rerankFactor, 1))
-    rerankExact(shortlist, corpus, k, idCol, vecCol)
-  }
-
   // ---- index persistence: build once, query across sessions ----
   //
   // The inverted lists are written PARTITIONED BY list_id, so a loaded
@@ -2292,10 +1880,6 @@ object Similarity extends org.apache.spark.internal.Logging {
     val aligned = alignedForWrite(packLists(index.assigned, blockRows,
       index.centroids.length, indexDimOf(index).toLong * 4L + 24L), "list_id")
     aligned.write.mode("overwrite").partitionBy("list_id").parquet(s"$dir/packed")
-    // raw-byte blob sidecar + offset index: the disk-lazy exact rerank
-    // fetches winner blobs by positioned read instead of joining the
-    // whole corpus's floats onto the shortlist (see BlobStore)
-    BlobStore.write(aligned, s"$dir/blobstore")
   }
 
   def ivfLoad(spark: SparkSession, dir: String): IvfIndex = {
@@ -2309,7 +1893,7 @@ object Similarity extends org.apache.spark.internal.Logging {
           .withColumn("list_id", col("list_id").cast("long")))
       else None
     val idx = IvfIndex(centroidsFromDf(spark.read.parquet(s"$dir/centroids")),
-      assigned, packed, BlobStore.loadIndex(spark, s"$dir/blobstore"))
+      assigned, packed)
     // pre-seed the generic-id audit memo from the artifact stamp: a
     // loaded index whose save-time audit passed never re-pays the
     // full-corpus scan (ivfAppendToSaved deletes the stamp, re-arming it)
@@ -2383,15 +1967,11 @@ object Similarity extends org.apache.spark.internal.Logging {
     val packedPath = new org.apache.hadoop.fs.Path(s"$dir/packed")
     val fs = packedPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(packedPath)) {
-      val alignedBatch = alignedForWrite(
+      alignedForWrite(
         packLists(assignedBatch, DefaultBlockRows, cents.length,
           cents.head._2.length.toLong * 4L + 24L), "list_id")
-      alignedBatch.write.mode("append").partitionBy("list_id")
+        .write.mode("append").partitionBy("list_id")
         .parquet(s"$dir/packed")
-      // keep the blob sidecar coherent with the appended blobs, or the
-      // disk-lazy rerank would miss winners from the new chunks
-      if (fs.exists(new org.apache.hadoop.fs.Path(s"$dir/blobstore/index")))
-        BlobStore.append(alignedBatch, s"$dir/blobstore")
     }
   }
 

@@ -591,4 +591,66 @@ class PlanShapeSpec extends SparkSpec {
       .findFirstIn(aggPlan).isDefined,
       "raw chunk strings crossed the shuffle")
   }
+
+  /** Shuffles of raw edge rows — exchanges whose output is exactly the
+    * (src, dst) edge table — across every query an eager graph operator
+    * runs, read through a QueryExecutionListener (the operators stage
+    * their result, so the returned plan alone shows none of them).
+    * Broadcast joins are disabled so the loop joins keep their
+    * shuffle-join shape, as they do past a broadcast-sized graph.
+    */
+  private def edgeExchangesPerCall(run: => Unit): Int = {
+    object Aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val count = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        count.addAndGet(Aqe.collect(qe.executedPlan) {
+          case x: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+              if x.output.map(_.name) == Seq("src", "dst") => x
+        }.length)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, error: Exception): Unit = ()
+    }
+    val savedThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      run
+      org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+    } finally {
+      spark.listenerManager.unregister(listener)
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", savedThreshold)
+    }
+    count.get()
+  }
+
+  test("PageRank/HITS edge exchanges per call, below and above the pre-partition gate") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(5)
+    val edges = Seq.fill(300)((rnd.nextInt(80).toLong, rnd.nextInt(80).toLong))
+      .filter(e => e._1 != e._2).toDF("src", "dst")
+    def counts(): (Int, Int) = (
+      edgeExchangesPerCall(operators.Graph.pageRank(edges, 3)),
+      edgeExchangesPerCall(operators.Graph.hits(edges, 3)))
+    // under the default 8 MiB gate the loop joins shuffle the edge table
+    // every iteration: one join per PageRank step, two per HITS step
+    assert(counts() == (3, 6))
+    spark.conf.set("spark.graft.graph.prepartitionEdgesBytes", "0")
+    try {
+      // gate forced open, adaptive execution on (Spark's default): the
+      // checkpointed edge tables report UnknownPartitioning, so the loop
+      // joins still exchange them and the up-front repartitions come on
+      // top (plans/r20/graph_prepartition_above_gate_aqe_on.txt)
+      assert(counts() == (4, 8))
+      // without adaptive execution the checkpoints keep their hash
+      // partitioning: one repartition per join key, none in the loop
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      assert(counts() == (1, 2))
+    } finally {
+      spark.conf.unset("spark.sql.adaptive.enabled")
+      spark.conf.unset("spark.graft.graph.prepartitionEdgesBytes")
+    }
+  }
 }

@@ -136,8 +136,8 @@ class IvfBlockTopKSpec extends SparkSpec {
     // r18 swapped the row_number-window + per-(list, chunk) groupBy pack
     // for one groupBy(list_id) + the in-kernel sort-and-slice expression.
     // Every (list_id, chunk, block) row — blob BYTES included — must be
-    // identical: probe kernels, packed artifacts, and the blobstore
-    // sidecar all consume this layout.
+    // identical: probe kernels and packed artifacts both consume this
+    // layout.
     VectorFunctions.register(spark)
     val index = Similarity.ivfBuild(emb, numCentroids = 4, trainIters = 1)
     for (blockRows <- Seq(3, 7, 1 << 20)) {

@@ -172,27 +172,22 @@ class QuantizedProbeSpec extends SparkSpec {
     val rows = BigInt(1000)
     val dim = 64
     val floatW = dim.toLong * 4 + 24
-    def d(budget: Long, mode: String = "auto", pq: Boolean = false,
-          eligible: Boolean = true) =
-      replicatedDecision(rows, dim, floatW, pqM = 8, budget = budget,
-        broadcastEligible = eligible, int8Mode = mode, pq = pq)
+    def d(budget: Long, mode: String = "auto", eligible: Boolean = true) =
+      replicatedDecision(rows, dim, floatW, budget = budget,
+        broadcastEligible = eligible, int8Mode = mode)
     val floatBytes = (rows * floatW).toLong
     val i8Bytes = (rows * (dim + 40)).toLong
-    val pqBytes = (rows * (8 + 40)).toLong
     // auto ladder: float → int8 → distributed
     assert(d(floatBytes) == Right(("float",
       s"est resident $floatBytes B <= replicate budget $floatBytes B")))
     assert(d(i8Bytes).exists(_._1 == "int8"))
-    assert(d(pqBytes).isLeft, "auto must not replicate below the int8 width")
+    assert(d(i8Bytes - 1).isLeft, "auto must not replicate below the int8 width")
     // forced modes
     assert(d(i8Bytes, mode = "true").exists(_._1 == "int8"))
     assert(d(floatBytes, mode = "true").exists(_._1 == "int8"),
       "probeInt8=true quantizes even where float fits (the A/B knob)")
     assert(d(i8Bytes, mode = "false").isLeft,
       "probeInt8=false must never replicate quantized")
-    // pq wins over the int8 mode and has the smallest width
-    assert(d(pqBytes, pq = true).exists(_._1 == "pq"))
-    assert(d(pqBytes - 1, pq = true).isLeft)
     // skip reasons are named (greppable); the former non-long-id skip is
     // RETIRED — generic ids map onto the i64 surrogate before the gate,
     // so the decision no longer depends on the caller's id type
@@ -230,44 +225,6 @@ class QuantizedProbeSpec extends SparkSpec {
     withConf("spark.graft.ann.probeRerank" -> "none") {
       val e = intercept[IllegalArgumentException](graft.GraftConf.annProbeRerank(spark))
       assert(e.getMessage.contains("probeRerank"))
-    }
-  }
-
-  test("pqFloorMargin bounds observed ADC score error on the dense fixture (off-mode)") {
-    // the PQ twin of the int8 off-mode margin pin: the floor relaxation
-    // asserts |approx − exact| ≤ margin for shortlist survivors, so the
-    // margin must dominate the ADC error actually observed — on THIS
-    // dense fixture (ADC error is dataset-dependent; the conf exists so a
-    // coarser corpus can widen it from its own off-mode measurement)
-    VectorFunctions.register(spark)
-    val index = Similarity.ivfBuild(emb, numCentroids = 2, trainIters = 1)
-    val queries = emb.filter(col("vec_id") < 20)
-    val off = withConf("spark.graft.ann.probePq" -> "true",
-      "spark.graft.ann.probeRerank" -> "off",
-      "spark.graft.ann.replicateIndexBytes" -> Long.MaxValue.toString) {
-      rows(Similarity.ivfSearch(index, queries, k = 5, nprobe = 2,
-        minCosine = None))
-    }
-    assert(off.nonEmpty)
-    val q = emb.select(col("vec_id").as("query_id"), col("embedding").as("qa"))
-    val c = emb.select(col("vec_id").as("neighbor_id"), col("embedding").as("qb"))
-    import spark.implicits._
-    val offDf = off.toSeq.toDF("query_id", "neighbor_id", "cosine", "rk")
-    val maxErr = offDf.join(q, "query_id").join(c, "neighbor_id")
-      .select(abs(col("cosine") - expr("cosine_sim(qa, qb)")).as("err"))
-      .agg(max(col("err"))).head().getDouble(0)
-    assert(maxErr <= graft.GraftConf.annPqFloorMargin(spark),
-      f"observed ADC error $maxErr%.4f exceeds pqFloorMargin " +
-        f"${graft.GraftConf.annPqFloorMargin(spark)}%.2f — widen the default " +
-        "or fix the codebooks; the floor relaxation is unsound otherwise")
-    // the margin is a conf (dataset-dependent), validated on read
-    withConf("spark.graft.ann.pqFloorMargin" -> "-0.1") {
-      val e = intercept[IllegalArgumentException](
-        graft.GraftConf.annPqFloorMargin(spark))
-      assert(e.getMessage.contains("pqFloorMargin"))
-    }
-    withConf("spark.graft.ann.pqFloorMargin" -> "0.25") {
-      assert(graft.GraftConf.annPqFloorMargin(spark) == 0.25)
     }
   }
 

@@ -26,32 +26,10 @@ class TextFunctionsSpec extends SparkSpec {
     assert(math.abs(r - 0.5) < 1e-9)
   }
 
-  test("qualityScore is bounded [0,1] and favors fluent text") {
-    val good = one("the quick brown fox and the lazy dog ran to the hill in a storm " * 4)
-      .select(qualityScore($"t")).first().getDouble(0)
-    val bad = one("!!! ??? ...").select(qualityScore($"t")).first().getDouble(0)
-    assert(good > bad)
-    assert(good <= 1.0 && bad >= 0.0)
-  }
-
   test("langId picks the language with most marker hits") {
     assert(one("the cat and the dog is here").select(langId($"t")).first().getString(0) == "en")
     assert(one("el gato y la casa de que").select(langId($"t")).first().getString(0) == "es")
     assert(one("xyzzy plugh").select(langId($"t")).first().getString(0) == "und")
-  }
-
-  test("shingles are distinct k-grams") {
-    val r = one("abcd").select(shinglesOf($"t", 3)).first().getSeq[String](0)
-    assert(r == Seq("abc", "bcd"))
-  }
-
-  test("minhash signature: equal texts equal, different texts differ") {
-    val df = Seq("the same text here", "the same text here", "totally other words")
-      .toDF("t").select(minhashSignature($"t").as("sig"))
-    val sigs = df.collect().map(_.getSeq[Long](0))
-    assert(sigs(0) == sigs(1))
-    assert(sigs(0) != sigs(2))
-    assert(sigs(0).length == 16)
   }
 
   test("rollingFingerprint is deterministic and content-sensitive") {

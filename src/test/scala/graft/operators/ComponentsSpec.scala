@@ -57,17 +57,23 @@ class ComponentsSpec extends SparkSpec {
     // 400 vertices, 300 random edges (self-loops dropped): enough
     // components, chains, and merges to exercise union-by-min-root path
     // compression against the pointer-jumping fixpoint row-for-row.
+    // One null-keyed pair rides along: both regimes drop it before the
+    // split, so neither labels a null id.
     val rnd = new scala.util.Random(42)
-    val pairs = Seq.fill(300)((rnd.nextInt(400).toLong, rnd.nextInt(400).toLong))
-      .filter(p => p._1 != p._2).toDF("id_a", "id_b")
-    val local = Dedup.connectedComponents(pairs, "id_a", "id_b")
-      .as[(Long, Long)].collect().toMap
-    val loop = inRegime("loop") {
-      Dedup.connectedComponents(pairs, "id_a", "id_b")
-        .as[(Long, Long)].collect().toMap
-    }
+    val raw = Seq.fill(300)((rnd.nextInt(400).toLong, rnd.nextInt(400).toLong))
+      .filter(p => p._1 != p._2)
+    val pairs = (raw.map(p => (Option(p._1), Option(p._2))) :+ ((Some(7L), None)))
+      .toDF("id_a", "id_b")
+    def labels(df: org.apache.spark.sql.DataFrame) =
+      Dedup.connectedComponents(df, "id_a", "id_b").collect()
+        .map(r => (r.get(0), r.get(1))).toSet
+    val local = labels(pairs)
+    val loop = inRegime("loop")(labels(pairs))
     assert(local == loop,
-      s"regimes diverged: ${(local.toSet diff loop.toSet).take(5)} / " +
-        s"${(loop.toSet diff local.toSet).take(5)}")
+      s"regimes diverged: ${(local diff loop).take(5)} / " +
+        s"${(loop diff local).take(5)}")
+    assert(!local.exists(t => t._1 == null || t._2 == null), "null id labeled")
+    assert(local == labels(raw.toDF("id_a", "id_b")),
+      "the null-keyed pair changed the labeling")
   }
 }

@@ -82,13 +82,11 @@ class FooterRowsSpec extends SparkSpec {
     val st = index.assigned.queryExecution.optimizedPlan.stats
     val oldEst = st.sizeInBytes / width + 1
     val budget = ((oldEst * width + BigInt(n) * width) / 2).toLong
-    val d = Similarity.replicatedDecision(est, dim, width, pqM = 8,
-      budget = budget, broadcastEligible = true,
-      int8Mode = "false", pq = false)
+    val d = Similarity.replicatedDecision(est, dim, width,
+      budget = budget, broadcastEligible = true, int8Mode = "false")
     assert(d.isLeft, s"gate admitted the float copy on the honest estimate: $d")
-    assert(Similarity.replicatedDecision(oldEst, dim, width, pqM = 8,
-      budget = budget, broadcastEligible = true,
-      int8Mode = "false", pq = false).isRight,
+    assert(Similarity.replicatedDecision(oldEst, dim, width,
+      budget = budget, broadcastEligible = true, int8Mode = "false").isRight,
       "fixture stopped demonstrating the breach (old estimate no longer admits)")
   }
 }

@@ -238,6 +238,19 @@ class GraphSpec extends SparkSpec {
     // the 20-node chain crosses the loop's 8-hop compaction twice
     val chain = (1L until 20L).map(i => (i, i + 1))
     assert(hopsOf(chain, Seq(1L), 25) == inLoopRegime(hopsOf(chain, Seq(1L), 25)))
+    // a null-keyed edge pair and a null source node: both regimes drop
+    // them before the split, so neither emits a null node
+    val nullEdges = (edges.map(e => (Option(e._1), Option(e._2))) ++
+      Seq((None, Some(0L)), (Some(0L), None))).toDF("src", "dst")
+    val nullSources = (sources.map(Option(_)) :+ None).toDF("node")
+    def nullHops() = Graph.bfsHops(nullEdges, nullSources, 3).collect()
+      .map(r => (r.get(0), r.get(1))).toSet
+    val localN = nullHops()
+    val loopN = inLoopRegime(nullHops())
+    assert(localN == loopN, s"null-keyed regimes diverged: " +
+      s"${(localN diff loopN).take(5)} / ${(loopN diff localN).take(5)}")
+    assert(localN == hopsOf(edges, sources, 3).toSet[(Any, Any)],
+      "null-keyed rows changed the hop table")
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
 }

@@ -467,39 +467,6 @@ class OperatorsSpec extends SparkSpec {
     assert(cents.map(_._1).toSet == Set(0L, 1L, 2L, 3L))
   }
 
-  test("int8-quantized top-k: recall@5 >= 0.9 vs float, 4x smaller scan") {
-    VectorFunctions.register(spark)
-    val queries = plantedCorpus.filter($"vec_id" < 20)
-    val exact = Similarity.bruteForceTopK(plantedCorpus, queries, k = 5)
-      .select("query_id", "neighbor_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val quant = Similarity.bruteForceTopKQuantized(plantedCorpus, queries, k = 5)
-      .select("query_id", "neighbor_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val recall = quant.intersect(exact).size.toDouble / exact.size
-    assert(recall >= 0.9, s"recall $recall")
-    // quantized column is 1 byte/dim; cosine of a vector with itself is 1
-    val row = plantedCorpus.select(
-      expr("quantize_i8(embedding)").as("q"),
-      expr("cosine_sim_i8(quantize_i8(embedding), quantize_i8(embedding))").as("self"))
-      .first()
-    assert(row.getAs[Array[Byte]](0).length == 16)
-    assert(math.abs(row.getDouble(1) - 1.0) < 1e-12)
-  }
-
-  test("blocked exact all-pairs equals the broadcast form (no broadcast bound)") {
-    val direct = Similarity.exactCosinePairs(plantedCorpus, 0.9)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val blocked = Similarity.exactCosinePairsBlocked(plantedCorpus, 0.9, blocks = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(direct.nonEmpty)
-    assert(blocked == direct)
-    // and the blocked plan is equi-join shaped — no nested loop anywhere
-    val plan = Similarity.exactCosinePairsBlocked(plantedCorpus, 0.9, blocks = 4)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("NestedLoop") && !plan.contains("CartesianProduct"), plan)
-  }
-
   test("srp candidate volume is a fraction of all-pairs; bits scale with corpus size") {
     val n = plantedCorpus.count()
     val allPairs = n * (n - 1) / 2
@@ -606,38 +573,6 @@ class OperatorsSpec extends SparkSpec {
         Similarity.pqBuild(clustered, m = 8, ksub = 16), clustered, queries, k = 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
     assert(allProbe == plainPq, "nprobe=all must reduce IVF-PQ to plain PQ")
-  }
-
-  test("residual IVF-PQ: ADC-only recall beats raw encoding on clustered data") {
-    val rnd = new scala.util.Random(13)
-    val centers = Array.fill(8)(Array.fill(16)(rnd.nextGaussian()))
-    val clustered = (0 until 400).map { i =>
-      val c = centers(i / 50)
-      (i.toLong, c.map(x => (x + 0.3 * rnd.nextGaussian()).toFloat))
-    }.toDF("vec_id", "embedding")
-    val queries = clustered.filter($"vec_id" % 50 < 2)
-    val exact = Similarity.bruteForceTopK(clustered, queries, k = 5)
-      .select("query_id", "neighbor_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    def recallOf(df: org.apache.spark.sql.DataFrame): Double = {
-      val got = df.select("query_id", "neighbor_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      got.intersect(exact).size.toDouble / exact.size
-    }
-    val raw = Similarity.ivfPqBuild(clustered, numCentroids = 8, m = 8, ksub = 16)
-    val res = Similarity.ivfPqBuildResidual(clustered, numCentroids = 8, m = 8, ksub = 16)
-    // rerankFactor=1 isolates the ADC scan quality: no exact-rerank rescue
-    val rawAdc = recallOf(Similarity.ivfPqSearch(raw, clustered, queries,
-      k = 5, nprobe = 3, rerankFactor = 1))
-    val resAdc = recallOf(Similarity.ivfPqSearchResidual(res, clustered, queries,
-      k = 5, nprobe = 3, rerankFactor = 1))
-    assert(resAdc >= rawAdc - 0.02,
-      s"residual ADC recall $resAdc must not trail raw $rawAdc")
-    assert(resAdc >= 0.5, s"residual ADC-only recall $resAdc")
-    // with the standard rerank the full pipeline clears the usual gate
-    val full = recallOf(Similarity.ivfPqSearchResidual(res, clustered, queries,
-      k = 5, nprobe = 3))
-    assert(full >= 0.8, s"residual IVF-PQ recall $full")
   }
 
   test("lshTopK/ivfSearch shuffle path: identical results, no forced broadcast") {

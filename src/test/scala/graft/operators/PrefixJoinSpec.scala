@@ -293,36 +293,28 @@ class PrefixJoinSpec extends SparkSpec {
     assert(viaBrute.nonEmpty, "corpus has no qualifying pairs; test is vacuous")
   }
 
-  test("r19 blocked brute verify == per-pair NLJ form, bit-for-bit (cosine + jaccard)") {
-    // the blocked kernels (pack_*_block + *_block_pairs) replace the
-    // per-pair broadcast nested-loop rows; the dots/jaccards must be the
-    // EXACT values the per-pair kernels produced (same merge order, same
-    // divisions), across block geometries including degenerate ones.
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    def runCos() = PrefixJoin.weightedCosinePrefixJoin(docs, "doc_id", "text", 0.6)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    def runJac() = PrefixJoin.jaccardPrefixJoin(docs, "doc_id", "text", 0.6, n = 3)
+  test("r19 blocked brute cosine verify == per-pair NLJ form, bit-for-bit") {
+    // the blocked kernels (pack_sparse_vec_block + sorted_dot_block_pairs)
+    // replace the per-pair broadcast nested-loop rows; the dots must be
+    // the EXACT values the per-pair kernel produced (same merge order),
+    // across block geometries including degenerate ones. The near-zero
+    // threshold puts the kernel's pruning floor (threshold - 1e-4) below
+    // zero; clamped to 0, the kernel must still return the NLJ's pairs.
+    val docs = spark.read.parquet(s"$sf0001/documents.parquet")
+    def runCos(t: Double) = PrefixJoin.weightedCosinePrefixJoin(docs, "doc_id", "text", t)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     def withBlockRows[T](n: Int)(f: => T): T = {
-      // cosine defaults blocked-on, jaccard blocked-off — force BOTH so
-      // each geometry exercises both kernels
       spark.conf.set("spark.graft.prefixJoin.bruteBlockRows", n.toString)
-      spark.conf.set("spark.graft.prefixJoin.jaccardBruteBlockRows", n.toString)
-      try f finally {
-        spark.conf.unset("spark.graft.prefixJoin.bruteBlockRows")
-        spark.conf.unset("spark.graft.prefixJoin.jaccardBruteBlockRows")
-      }
+      try f finally spark.conf.unset("spark.graft.prefixJoin.bruteBlockRows")
     }
-    val cosNlj = withBlockRows(0)(runCos())
-    val jacNlj = withBlockRows(0)(runJac())
-    assert(cosNlj.nonEmpty && jacNlj.nonEmpty, "vacuous fixture")
-    for (blockRows <- Seq(1, 7, 1 << 20)) {
-      val cosB = withBlockRows(blockRows)(runCos())
-      assert(cosB == cosNlj, s"cosine blockRows=$blockRows: " +
-        s"missing ${cosNlj.keySet -- cosB.keySet}, extra ${cosB.keySet -- cosNlj.keySet}")
-      val jacB = withBlockRows(blockRows)(runJac())
-      assert(jacB == jacNlj, s"jaccard blockRows=$blockRows: " +
-        s"missing ${jacNlj.keySet -- jacB.keySet}, extra ${jacB.keySet -- jacNlj.keySet}")
+    for (t <- Seq(0.6, 5e-5)) {
+      val cosNlj = withBlockRows(0)(runCos(t))
+      assert(cosNlj.nonEmpty, s"vacuous fixture at threshold $t")
+      for (blockRows <- Seq(1, 7, 1 << 20)) {
+        val cosB = withBlockRows(blockRows)(runCos(t))
+        assert(cosB == cosNlj, s"threshold $t blockRows=$blockRows: " +
+          s"missing ${cosNlj.keySet -- cosB.keySet}, extra ${cosB.keySet -- cosNlj.keySet}")
+      }
     }
   }
 
