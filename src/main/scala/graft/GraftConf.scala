@@ -48,6 +48,28 @@ object GraftConf {
           s"conf $key must be a number, got '$raw'"))
     }.getOrElse(default)
 
+  /** The one byte gate between two physical regimes: `estimate` bytes
+    * against the budget conf `key` (`default` when unset). True picks the
+    * bounded regime (`regimes._1`: local, broadcast, ...), false the
+    * unbounded one. A budget of 0 picks the unbounded regime without
+    * evaluating the estimate, so forcing it runs no estimate job. Every
+    * decision logs one line: operator, regime, estimate and its source,
+    * budget, and whether the key was set.
+    */
+  private[graft] def gate(spark: SparkSession, op: String, regimes: (String, String),
+      key: String, default: => Long, source: String)(estimate: => Long): Boolean = {
+    val budget = long(spark, key, default)
+    require(budget >= 0, s"$key must be >= 0, got $budget")
+    val est = if (budget == 0) None else Some(estimate)
+    val fits = est.exists(_ <= budget)
+    gateLog.info(s"gate $op: ${if (fits) regimes._1 else regimes._2} regime " +
+      s"(estimate ${est.fold("not run")(b => s"$b B from $source")}, budget $budget B, " +
+      s"$key ${if (spark.conf.getOption(key).isDefined) "set" else "default"})")
+    fits
+  }
+
+  private lazy val gateLog = org.slf4j.LoggerFactory.getLogger("graft.gate")
+
   /** Partition count for the fan-out repartition that pins parallelism on
     * explosive self-joins (KB-scale inputs, quadratic output — AQE sizes
     * their exchanges by input bytes and coalesces the real work onto 1–2
@@ -106,27 +128,22 @@ object GraftConf {
     * plan shape across environments.
     */
   def broadcastBytes(spark: SparkSession): Long = {
-    val v = spark.conf.getOption("spark.graft.broadcastBytes") match {
-      case Some(raw) =>
-        scala.util.Try(raw.trim.toLong).getOrElse(
-          throw new IllegalArgumentException(
-            s"conf spark.graft.broadcastBytes must be a long, got '$raw'"))
-      case None =>
-        val driverHeap = Runtime.getRuntime.maxMemory
-        // executor heap if configured ("4g" strings) — min with the driver
-        // heap so neither side of the exchange-vs-broadcast trade can be
-        // sized off the larger JVM. local mode has no executor conf; the
-        // driver heap IS the executor heap there.
-        val execHeap = spark.conf.getOption("spark.executor.memory")
-          .flatMap(parseExecutorMemoryBytes)
-          .getOrElse(driverHeap)
-        val derived =
-          math.max(64L << 20, math.min(1L << 30, math.min(driverHeap, execHeap) / 16))
-        logDerivedOnce(spark, "spark.graft.broadcastBytes",
-          s"$derived B (min(driverHeap=$driverHeap, executorHeap=$execHeap)/16," +
-            " clamped [64 MiB, 1 GiB])")
-        derived
-    }
+    val v = long(spark, "spark.graft.broadcastBytes", {
+      val driverHeap = Runtime.getRuntime.maxMemory
+      // executor heap if configured ("4g" strings) — min with the driver
+      // heap so neither side of the exchange-vs-broadcast trade can be
+      // sized off the larger JVM. local mode has no executor conf; the
+      // driver heap IS the executor heap there.
+      val execHeap = spark.conf.getOption("spark.executor.memory")
+        .flatMap(parseExecutorMemoryBytes)
+        .getOrElse(driverHeap)
+      val derived =
+        math.max(64L << 20, math.min(1L << 30, math.min(driverHeap, execHeap) / 16))
+      logDerivedOnce(spark, "spark.graft.broadcastBytes",
+        s"$derived B (min(driverHeap=$driverHeap, executorHeap=$execHeap)/16," +
+          " clamped [64 MiB, 1 GiB])")
+      derived
+    })
     require(v > 0, s"spark.graft.broadcastBytes must be positive, got $v")
     v
   }

@@ -644,7 +644,7 @@ object Dedup extends org.apache.spark.internal.Logging {
     * turns LSH/verify PAIRS into dedup CLUSTERS so each group keeps one
     * canonical document (min id = the cluster label). Two regimes behind
     * one byte gate (r19): a pair graph whose symmetric edge table fits
-    * `spark.graft.cc.localEdgesBytes` (default 64 MiB ≈ 4M edges) is
+    * `spark.graft.cc.localEdgesBytes` (default 64 MiB ≈ 600k edges) is
     * solved in one driver-side union-find pass — the pair table is the
     * OUTPUT of LSH/verify pruning, typically corpus-tiny, and ~log rounds
     * of Spark jobs on a thousand-edge graph is pure scheduling overhead
@@ -678,54 +678,28 @@ object Dedup extends org.apache.spark.internal.Logging {
     // r19 physical-strategy gate (guide §1.2 step 1 — the same cost-based
     // regime choice as PrefixJoin's brute/index gate and Spark's own
     // broadcast decision): a pair graph small enough to hold on the
-    // driver is solved by ONE union-find pass instead of ~log(diameter)
-    // Spark rounds. A dedup pair table is usually a tiny fraction of the
-    // corpus (it is the OUTPUT of the LSH/verify pruning), so production
-    // runs with bounded near-dup density hit this regime too — the loop
-    // below is the unbounded-size path, not the common case. The gate is
-    // byte-based on the MATERIALIZED edge count (the count materializes
-    // the cache the loop's init aggregation would materialize anyway),
-    // fail-safe in the decline direction, long-id-only (the loop handles
-    // any ordered key type), and the labeling is the identical fixpoint:
-    // union-by-min-root makes every final root the component's min id —
-    // the same answer the loop converges to, integer-exact (no float
-    // summation order to preserve). `spark.graft.cc.localEdgesBytes=0`
-    // forces the distributed loop (spec-pinned equality between both
-    // regimes).
-    val localBudget = graft.GraftConf.long(pairs.sparkSession,
-      "spark.graft.cc.localEdgesBytes", 64L << 20)
-    val longIds = edges.schema.fields.forall(
-      _.dataType == org.apache.spark.sql.types.LongType)
-    if (localBudget > 0 && longIds) {
-      val nEdges = edges.count()
-      if (nEdges * 16L <= localBudget) {
-        logInfo(s"connectedComponents: LOCAL union-find regime " +
-          s"($nEdges symmetric edge rows x 16 B <= $localBudget B budget)")
-        val parent = new java.util.HashMap[Long, Long]()
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.get(r) != r) r = parent.get(r)
-          var c = x
-          while (parent.get(c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
-          r
-        }
-        edges.collect().foreach { row =>
-          val a = row.getLong(0); val b = row.getLong(1)
-          parent.putIfAbsent(a, a); parent.putIfAbsent(b, b)
-          val ra = find(a); val rb = find(b)
-          if (ra < rb) parent.put(rb, ra)
-          else if (rb < ra) parent.put(ra, rb)
-        }
-        val rows = new scala.collection.mutable.ArrayBuffer[(Long, Long)](parent.size)
-        parent.keySet.forEach(id => rows += ((id, find(id))))
-        val spark0 = pairs.sparkSession
-        import spark0.implicits._
-        val out = stage(rows.toSeq.toDF("id", "cluster_id"), "cc-labels")
-        edges.unpersist(blocking = false)
-        return out
-      }
-      logInfo(s"connectedComponents: distributed loop regime " +
-        s"($nEdges symmetric edge rows x 16 B > $localBudget B budget)")
+    // driver is solved by ONE union-find pass ([[LocalGraph]]) instead of
+    // ~log(diameter) Spark rounds. A dedup pair table is usually a tiny
+    // fraction of the corpus (it is the OUTPUT of the LSH/verify
+    // pruning), so production runs with bounded near-dup density hit this
+    // regime too — the loop below is the unbounded-size path, not the
+    // common case. The gate charges [[LocalGraph.BytesPerEdge]] per
+    // MATERIALIZED edge (the count materializes the cache the loop's init
+    // aggregation would materialize anyway), is fail-safe in the decline
+    // direction, long-id-only (the loop handles any ordered key type),
+    // and the labeling is the identical fixpoint: union-by-min-root makes
+    // every final root the component's min id — the same answer the loop
+    // converges to, integer-exact (no float summation order to preserve).
+    // `spark.graft.cc.localEdgesBytes=0` forces the distributed loop
+    // (spec-pinned equality between both regimes).
+    val spark = pairs.sparkSession
+    if (LocalGraph.accepts(edges) && graft.GraftConf.gate(spark, "connectedComponents",
+        ("local", "loop"), "spark.graft.cc.localEdgesBytes", 64L << 20, "count")(
+        edges.count() * LocalGraph.BytesPerEdge)) {
+      val out = LocalGraph.emit(spark, LocalGraph.components(LocalGraph.collect(edges)),
+        ("id", "cluster_id"), "cc-labels")
+      edges.unpersist(blocking = false)
+      return out
     }
     // localCheckpoint (not just persist): each round's plan would otherwise
     // embed every previous round's plan, and Catalyst re-analysis of the
@@ -735,7 +709,6 @@ object Dedup extends org.apache.spark.internal.Logging {
     // `spark.sparkContext.setCheckpointDir` + `.checkpoint()` if executor
     // loss during the loop must be recoverable; the result itself is
     // re-staged to parquet below either way.)
-    val spark = pairs.sparkSession
     // fresh attribute ids per round (createDataFrame over the checkpointed
     // RDD): the loop's plans self-join and re-union the same table, and
     // reusing one attribute lineage across rounds trips Catalyst's Union

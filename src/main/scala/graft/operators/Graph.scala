@@ -21,24 +21,28 @@ import org.apache.spark.sql.functions._
   * driver-side scalars per round (node count once, dangling mass each
   * round) are single aggregate values, never row data.
   */
-object Graph extends org.apache.spark.internal.Logging {
+object Graph {
 
   /** Byte gate for the driver-local small-graph regimes (r19): an
     * integer-exact iterative operator (k-core peel, BFS) whose
     * checkpointed edge table fits this budget is solved in one local
-    * pass instead of ~peel-depth/diameter Spark rounds — the identical
-    * unique fixpoint (both are integer computations with one answer, so
-    * unlike the float operators there is no summation order to
-    * preserve; GraphSpec pins regime equality). 0 forces the
+    * pass ([[LocalGraph]]) instead of ~peel-depth/diameter Spark rounds —
+    * the identical unique fixpoint (both are integer computations with
+    * one answer, so unlike the float operators there is no summation
+    * order to preserve; GraphSpec pins regime equality). 0 forces the
     * distributed loop. Same cost-based-regime design as the CC
     * union-find gate and PrefixJoin's brute/index gate.
     */
-  private def localEdgesBytes(df: DataFrame): Long = graft.GraftConf.long(
-    df.sparkSession, "spark.graft.graph.localEdgesBytes", 64L << 20)
+  private def localRegime(op: String, e: DataFrame, nEdges: => Long): Boolean =
+    LocalGraph.accepts(e) && graft.GraftConf.gate(e.sparkSession, op, ("local", "loop"),
+      "spark.graft.graph.localEdgesBytes", 64L << 20, "count")(nEdges * LocalGraph.BytesPerEdge)
 
-  private def bothLong(df: DataFrame): Boolean =
-    df.schema.fields.forall(_.dataType ==
-      org.apache.spark.sql.types.LongType)
+  /** PageRank/HITS pre-partition gate: true when the edge table (two
+    * longs a row) is past `spark.graft.graph.prepartitionEdgesBytes`. */
+  private def prepartitioned(op: String, e: DataFrame): Boolean =
+    !graft.GraftConf.gate(e.sparkSession, op, ("plain", "prepartitioned"),
+      "spark.graft.graph.prepartitionEdgesBytes", 8L << 20, "count")(
+      e.count() * 2 * java.lang.Long.BYTES)
 
   /** K power-iteration steps of PageRank over `edges(src, dst)`.
     * Multi-edges act as weights (a node's contribution splits over edge
@@ -67,9 +71,7 @@ object Graph extends org.apache.spark.internal.Logging {
     // at sf0.1, 100k edges: q132 1.80 → 1.88 s pre-partitioned; at the
     // sf1 shape, 1M edges: 6.41 → 5.52 s — the crossover sits between
     // ~2 MB and ~16 MB of edges, so the default splits it at 8 MiB).
-    val nE = e.count()
-    val prepartition = nE * 16L > graft.GraftConf.long(e.sparkSession,
-      "spark.graft.graph.prepartitionEdgesBytes", 8L << 20)
+    val prepartition = prepartitioned("pageRank", e)
     val eSrc = if (prepartition) e.repartition(col("src")).localCheckpoint()
                else e
     val nodes = e.select(col("src").as("node"))
@@ -151,9 +153,7 @@ object Graph extends org.apache.spark.internal.Logging {
     // than the tiny exchanges they save (same crossover as pageRank's —
     // measured there at sf0.1 vs the sf1 shape; shared 8 MiB default).
     val e = edges.select(col("src"), col("dst")).localCheckpoint()
-    val nE = e.count()
-    val prepartition = nE * 16L > graft.GraftConf.long(e.sparkSession,
-      "spark.graft.graph.prepartitionEdgesBytes", 8L << 20)
+    val prepartition = prepartitioned("hits", e)
     val eSrc = if (prepartition) e.repartition(col("src")).localCheckpoint()
                else e
     val eDst = if (prepartition) e.repartition(col("dst")).localCheckpoint()
@@ -267,45 +267,12 @@ object Graph extends org.apache.spark.internal.Logging {
     // byte gate walks locally in one pass instead of one join + one
     // count per hop (GraphSpec pins regime equality, incl. across the
     // deep-walk compaction).
-    val budget = localEdgesBytes(e)
-    if (budget > 0 && bothLong(e) &&
-        sources.schema.fields.exists(f => f.name == "node" &&
-          f.dataType == org.apache.spark.sql.types.LongType)) {
-      val nE = e.count()
-      if (nE * 16L <= budget) {
-        logInfo(s"bfsHops: LOCAL walk regime ($nE edge rows x 16 B <= $budget B)")
-        val adj = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[Long]]()
-        e.collect().foreach { r =>
-          var l = adj.get(r.getLong(0))
-          if (l == null) { l = new scala.collection.mutable.ArrayBuffer[Long](); adj.put(r.getLong(0), l) }
-          l += r.getLong(1)
-        }
-        val dist = new java.util.HashMap[Long, Long]()
-        var frontier = new scala.collection.mutable.ArrayBuffer[Long]()
-        srcNodes.distinct().collect().foreach { r =>
-          dist.put(r.getLong(0), 0L); frontier += r.getLong(0)
-        }
-        var hop = 0L
-        while (hop < maxHops && frontier.nonEmpty) {
-          hop += 1
-          val next = new scala.collection.mutable.ArrayBuffer[Long]()
-          frontier.foreach { v =>
-            val l = adj.get(v)
-            if (l != null) l.foreach { u =>
-              if (!dist.containsKey(u)) { dist.put(u, hop); next += u }
-            }
-          }
-          frontier = next
-        }
-        val rows = new scala.collection.mutable.ArrayBuffer[(Long, Long)](dist.size)
-        dist.forEach((v, d) => rows += ((v, d)))
-        val spark0 = e.sparkSession
-        import spark0.implicits._
-        val staged = Dedup.stage(rows.toSeq.toDF("node", "hops"), "bfs_hops")
-        Checkpoints.release(e)
-        return staged
-      }
-      logInfo(s"bfsHops: distributed loop regime ($nE edge rows x 16 B > $budget B)")
+    if (LocalGraph.accepts(srcNodes) && localRegime("bfsHops", e, e.count())) {
+      val sources = LocalGraph.collect(srcNodes.distinct()).flatten
+      val staged = LocalGraph.emit(e.sparkSession,
+        LocalGraph.hops(LocalGraph.collect(e), sources, maxHops), ("node", "hops"), "bfs_hops")
+      Checkpoints.release(e)
+      return staged
     }
     // r18 (guide §1.2 step 1): `visited` is a LAZY union of the
     // checkpointed per-hop frontiers instead of a re-materialized table
@@ -355,19 +322,6 @@ object Graph extends org.apache.spark.internal.Logging {
     out
   }
 
-  /** Degree-oriented triangle count over an undirected edge list
-    * `edges(a, b)` (each unordered pair once, a ≠ b). Every edge is
-    * oriented from its lower-(degree, id) endpoint to its higher one;
-    * wedges are enumerated only out of each edge's SMALLER endpoint and
-    * closed against the oriented edge set, so each triangle is counted
-    * exactly once and the wedge fan-out per node is bounded by its
-    * oriented out-degree ≤ O(√m) — the standard trick that keeps
-    * Σ outdeg² tractable on skewed graphs where Σ deg² explodes
-    * (a hub of degree d contributes d² naive wedges but ~m oriented
-    * ones). Three hash joins on node keys, no driver-side state; the
-    * orientation rank is compared as the (deg, id) tuple, never packed
-    * into one integer, so arbitrary 64-bit node ids can't overflow.
-    */
   /** The k-core of an undirected graph `edges(a, b)` (each unordered
     * pair once): iteratively peel nodes of degree < k until fixpoint —
     * the maximal subgraph with minimum degree ≥ k. The standard
@@ -388,51 +342,20 @@ object Graph extends org.apache.spark.internal.Logging {
     */
   def kCore(edges: DataFrame, k: Int, maxRounds: Int = 64): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    var e = edges.select(col("a"), col("b")).localCheckpoint()
+    // Null-endpoint edges are dropped once, before the regime split (a
+    // narrow filter, no extra job): a null node has no degree in either
+    // regime, so neither needs a per-row null check.
+    var e = edges.select(col("a"), col("b"))
+      .filter(col("a").isNotNull && col("b").isNotNull).localCheckpoint()
     var n = e.count()
     // r19 local regime: the k-core is the UNIQUE maximal subgraph of min
     // degree ≥ k — any peel order converges to it, so a driver-side
     // queue peel returns exactly the loop's answer (node, core-degree),
     // integer-exact. Multi-edge degrees are preserved (adjacency is a
     // multiset, matching the loop's count(1) over edge rows).
-    val budget = localEdgesBytes(e)
-    if (budget > 0 && bothLong(e) && n * 16L <= budget) {
-      logInfo(s"kCore: LOCAL peel regime ($n edge rows x 16 B <= $budget B)")
-      val adj = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[Long]]()
-      def nbrs(v: Long) = {
-        var l = adj.get(v)
-        if (l == null) { l = new scala.collection.mutable.ArrayBuffer[Long](); adj.put(v, l) }
-        l
-      }
-      e.collect().foreach { r =>
-        if (!r.isNullAt(0) && !r.isNullAt(1)) {
-          val a = r.getLong(0); val b = r.getLong(1)
-          nbrs(a) += b; nbrs(b) += a
-        }
-      }
-      val deg = new java.util.HashMap[Long, Long]()
-      adj.forEach((v, l) => deg.put(v, l.length.toLong))
-      val queue = new java.util.ArrayDeque[Long]()
-      deg.forEach((v, d) => if (d < k) queue.add(v))
-      val dead = new java.util.HashSet[Long]()
-      while (!queue.isEmpty) {
-        val v = queue.poll()
-        if (!dead.contains(v) && deg.get(v) < k) {
-          dead.add(v)
-          nbrs(v).foreach { u =>
-            if (!dead.contains(u)) {
-              val du = deg.get(u) - 1L
-              deg.put(u, du)
-              if (du < k) queue.add(u)
-            }
-          }
-        }
-      }
-      val rows = new scala.collection.mutable.ArrayBuffer[(Long, Long)]()
-      deg.forEach((v, d) => if (!dead.contains(v)) rows += ((v, d)))
-      val spark0 = e.sparkSession
-      import spark0.implicits._
-      val staged = Dedup.stage(rows.toSeq.toDF("v", "deg"), "kcore")
+    if (localRegime("kCore", e, n)) {
+      val staged = LocalGraph.emit(e.sparkSession,
+        LocalGraph.core(LocalGraph.collect(e), k), ("v", "deg"), "kcore")
       Checkpoints.release(e)
       return staged
     }
@@ -465,6 +388,19 @@ object Graph extends org.apache.spark.internal.Logging {
     staged
   }
 
+  /** Degree-oriented triangle count over an undirected edge list
+    * `edges(a, b)` (each unordered pair once, a ≠ b). Every edge is
+    * oriented from its lower-(degree, id) endpoint to its higher one;
+    * wedges are enumerated only out of each edge's SMALLER endpoint and
+    * closed against the oriented edge set, so each triangle is counted
+    * exactly once and the wedge fan-out per node is bounded by its
+    * oriented out-degree ≤ O(√m) — the standard trick that keeps
+    * Σ outdeg² tractable on skewed graphs where Σ deg² explodes
+    * (a hub of degree d contributes d² naive wedges but ~m oriented
+    * ones). Three hash joins on node keys, no driver-side state; the
+    * orientation rank is compared as the (deg, id) tuple, never packed
+    * into one integer, so arbitrary 64-bit node ids can't overflow.
+    */
   def triangleStats(edges: DataFrame): DataFrame = {
     // The edge frame feeds the degree aggregate, the orientation join,
     // and the edge count — and `oriented` feeds both wedge sides plus

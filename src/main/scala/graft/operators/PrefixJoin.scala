@@ -39,21 +39,8 @@ import org.apache.spark.sql.functions._
   * BEFORE it once the verify joins must shuffle.
   */
 object PrefixJoin {
-  // not the Logging trait: its `log` member shadows functions.log used in
-  // the tf-idf weighting below
-  private val logger = org.slf4j.LoggerFactory.getLogger(getClass)
-
-  /** Gate override with a validating parse: a typo'd value fails with a
-    * message naming the conf key, not a bare NumberFormatException.
-    */
-  private def bruteMaxDocs(docs: DataFrame): Long = {
-    val key = "spark.graft.prefixJoin.bruteMaxDocs"
-    docs.sparkSession.conf.getOption(key).map { raw =>
-      scala.util.Try(raw.trim.toLong).getOrElse(
-        throw new IllegalArgumentException(
-          s"conf $key must be an integer, got '$raw'"))
-    }.getOrElse(20000L)
-  }
+  private def bruteMaxDocs(docs: DataFrame): Long =
+    graft.GraftConf.long(docs.sparkSession, "spark.graft.prefixJoin.bruteMaxDocs", 20000L)
 
   /** Rows per packed block in the brute regime's blocked all-pairs verify
     * (r19). 0 disables blocking (the r18 per-pair nested-loop join —
@@ -62,14 +49,8 @@ object PrefixJoin {
     * the gate's 20k-doc ceiling it yields ~625 blocks ≈ 195k block pairs,
     * each one ~32² fused merge loops.
     */
-  private def bruteBlockRows(docs: DataFrame): Int = {
-    val key = "spark.graft.prefixJoin.bruteBlockRows"
-    docs.sparkSession.conf.getOption(key).map { raw =>
-      scala.util.Try(raw.trim.toInt).getOrElse(
-        throw new IllegalArgumentException(
-          s"conf $key must be an integer, got '$raw'"))
-    }.getOrElse(32)
-  }
+  private def bruteBlockRows(docs: DataFrame): Int =
+    graft.GraftConf.int(docs.sparkSession, "spark.graft.prefixJoin.bruteBlockRows", 32)
 
   /** Assign each row a deterministic block id (hash of `id`, never RNG —
     * retried tasks must reproduce the assignment) targeting `blockRows`
@@ -124,16 +105,14 @@ object PrefixJoin {
     // push a 200k-row table to GBs. `sets` is already staged, so this agg
     // is a cheap parquet scan; the posting table is strictly smaller than
     // `sets`, so one measurement gates both broadcasts.
-    val setsBytes = sets.agg(coalesce(sum(col("sz")), lit(0L)))
-      .head.getLong(0) * 8L + nSets * 32L
-    val fitsBroadcast = setsBytes <= graft.GraftConf.broadcastBytes(docs.sparkSession)
-    // log the regime like every other byte gate: the sf20 tier crossed
-    // this one NATURALLY (1M docs pushed the gram table past the 1 GiB
-    // heap-derived cap) and the 3.6x step was undiagnosable from a
-    // silent flip
-    logger.info(s"jaccardPrefixJoin verify: ${if (fitsBroadcast) "BROADCAST" else "SHUFFLE"}" +
-      s" regime (set table ~$setsBytes B vs gate " +
-      s"${graft.GraftConf.broadcastBytes(docs.sparkSession)} B, $nSets docs)")
+    // The gate logs its regime like every other byte gate: the sf20 tier
+    // crossed this one NATURALLY (1M docs pushed the gram table past the
+    // 1 GiB heap-derived cap) and the 3.6x step was undiagnosable from a
+    // silent flip.
+    val budget = graft.GraftConf.broadcastBytes(docs.sparkSession)
+    val fitsBroadcast = graft.GraftConf.gate(docs.sparkSession, "jaccardPrefixJoin verify",
+      ("broadcast", "shuffle"), "spark.graft.broadcastBytes", budget, "aggregate")(
+      sets.agg(coalesce(sum(col("sz")), lit(0L))).head.getLong(0) * 8L + nSets * 32L)
     val rawPairs = (
       if (fitsBroadcast)
         prefix.repartition(fanout, col("id")).as("a").join(broadcast(prefix).as("b"),
@@ -376,14 +355,13 @@ object PrefixJoin {
     // verify vectors carry one (long, double) entry per distinct term
     // per doc — so gate on measured volume, not document count. `tails`
     // is staged parquet, so the count is metadata-cheap; the posting
-    // table is a tail-filtered subset of the same rows.
-    val nTerms = tails.count()
-    val fitsBroadcast = nTerms * 16L + nDocs.toLong * 32L <=
-      graft.GraftConf.broadcastBytes(docs.sparkSession)
-    logger.info(s"weightedCosinePrefixJoin verify: " +
-      s"${if (fitsBroadcast) "BROADCAST" else "SHUFFLE"} regime " +
-      s"(vector table ~${nTerms * 16L + nDocs.toLong * 32L} B vs gate " +
-      s"${graft.GraftConf.broadcastBytes(docs.sparkSession)} B, $nDocs docs)")
+    // table is a tail-filtered subset of the same rows. Each term entry
+    // is a (long, double); each doc is charged 32 B more.
+    val budget = graft.GraftConf.broadcastBytes(docs.sparkSession)
+    val fitsBroadcast = graft.GraftConf.gate(docs.sparkSession,
+      "weightedCosinePrefixJoin verify", ("broadcast", "shuffle"),
+      "spark.graft.broadcastBytes", budget, "count")(
+      tails.count() * (java.lang.Long.BYTES + java.lang.Double.BYTES) + nDocs.toLong * 32L)
     val rawPairs = (
       if (fitsBroadcast)
         posting.repartition(fanout, col("id")).as("a").join(broadcast(posting).as("b"),

@@ -653,4 +653,52 @@ class PlanShapeSpec extends SparkSpec {
       spark.conf.unset("spark.graft.graph.prepartitionEdgesBytes")
     }
   }
+
+  /** Spark jobs `run` starts, counted by a listener once the bus drains. */
+  private def jobsPerCall(run: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      run
+      org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get()
+  }
+
+  test("driver-local graph regimes: Spark jobs per call") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(5)
+    val raw = Seq.fill(300)((rnd.nextInt(80).toLong, rnd.nextInt(80).toLong))
+      .filter(e => e._1 != e._2)
+    // the counts the boxed-map kernels ran: the gate count, the edge
+    // collect (BFS also collects its sources), localCheckpoint for
+    // BFS/k-core and the staged write with its read-back
+    assert(jobsPerCall(operators.Dedup.connectedComponents(
+      raw.toDF("id_a", "id_b"), "id_a", "id_b")) == 6)
+    assert(jobsPerCall(operators.Graph.bfsHops(
+      raw.toDF("src", "dst"), Seq(0L, 13L).toDF("node"), 3)) == 8)
+    assert(jobsPerCall(operators.Graph.kCore(raw.toDF("a", "b"), 2)) == 6)
+  }
+
+  test("gate: budget 0 runs no estimate job; a negative budget names its key") {
+    val key = "spark.graft.cc.localEdgesBytes"
+    def gate(): Boolean = GraftConf.gate(spark, "probe", ("local", "loop"), key,
+      64L << 20, "count")(spark.range(10).count())
+    var fits = false
+    assert(jobsPerCall { fits = gate() } > 0)
+    assert(fits)
+    spark.conf.set(key, "0")
+    try {
+      assert(jobsPerCall { fits = gate() } == 0)
+      assert(!fits)
+      spark.conf.set(key, "-1")
+      val err = intercept[IllegalArgumentException](gate())
+      assert(err.getMessage.contains(key), err.getMessage)
+    } finally spark.conf.unset(key)
+  }
 }

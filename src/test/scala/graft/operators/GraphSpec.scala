@@ -214,6 +214,17 @@ class GraphSpec extends SparkSpec {
       val loop = inLoopRegime(core(edges, k))
       assert(local == loop, s"k=$k regimes diverged")
     }
+    // a null-keyed pair and a half-null pair: both regimes drop them
+    // before the split, so the core is the null-free one
+    val nullEdges = (edges.map(e => (Option(e._1), Option(e._2))) ++
+      Seq((None, None), (Some(edges.head._1), None))).toDF("a", "b")
+    def nullCore(k: Int) = Graph.kCore(nullEdges, k).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    for (k <- Seq(2, 3)) {
+      assert(nullCore(k) == core(edges, k), s"k=$k local regime saw a null endpoint")
+      assert(inLoopRegime(nullCore(k)) == core(edges, k), s"k=$k loop regime saw a null endpoint")
+    }
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
 
   test("kCore loop regime: behavioral pins still hold") {
