@@ -7,8 +7,8 @@ import org.apache.spark.sql.SparkSession
   * Every knob the engine reads at plan-build time lives here so (a) a
   * typo'd value fails with a message NAMING the conf key, not a bare
   * NumberFormatException from deep inside the planner, and (b) the full
-  * key inventory is greppable in one place (the README table is generated
-  * from this list).
+  * key inventory is greppable (ConfDocSpec checks that README's conf
+  * table lists exactly the `spark.graft.*` keys read under `src/main`).
   */
 object GraftConf {
 
@@ -48,13 +48,13 @@ object GraftConf {
           s"conf $key must be a number, got '$raw'"))
     }.getOrElse(default)
 
-  /** The one byte gate between two physical regimes: `estimate` bytes
-    * against the budget conf `key` (`default` when unset). True picks the
-    * bounded regime (`regimes._1`: local, broadcast, ...), false the
-    * unbounded one. A budget of 0 picks the unbounded regime without
-    * evaluating the estimate, so forcing it runs no estimate job. Every
-    * decision logs one line: operator, regime, estimate and its source,
-    * budget, and whether the key was set.
+  /** The one size gate between two physical regimes: `estimate` against
+    * the budget conf `key` (`default` when unset), in the unit the key
+    * names (bytes or rows). True picks the bounded regime (`regimes._1`:
+    * local, broadcast, ...), false the unbounded one. A budget of 0 picks
+    * the unbounded regime without evaluating the estimate, so forcing it
+    * runs no estimate job. Every decision logs one line: operator,
+    * regime, estimate and its source, budget, and whether the key was set.
     */
   private[graft] def gate(spark: SparkSession, op: String, regimes: (String, String),
       key: String, default: => Long, source: String)(estimate: => Long): Boolean = {
@@ -63,7 +63,7 @@ object GraftConf {
     val est = if (budget == 0) None else Some(estimate)
     val fits = est.exists(_ <= budget)
     gateLog.info(s"gate $op: ${if (fits) regimes._1 else regimes._2} regime " +
-      s"(estimate ${est.fold("not run")(b => s"$b B from $source")}, budget $budget B, " +
+      s"(estimate ${est.fold("not run")(e => s"$e from $source")}, budget $budget, " +
       s"$key ${if (spark.conf.getOption(key).isDefined) "set" else "default"})")
     fits
   }
@@ -86,23 +86,6 @@ object GraftConf {
     val v = int(spark, "spark.graft.explosiveJoin.fanout",
       4 * spark.sparkContext.defaultParallelism)
     require(v > 0, s"spark.graft.explosiveJoin.fanout must be positive, got $v")
-    v
-  }
-
-  /** Row budget below which an LSH band table (minhash/simhash/SRP
-    * (table, bucket) rows — fixed-width, one row per doc per band) is
-    * broadcast as the build side of its candidate self-join. Above it the
-    * join shuffles — with BOTH sides explicitly repartitioned on the join
-    * keys, because AQE still cannot see the quadratic output (measured at
-    * 250k docs on the prefix join: 3/32 cores busy unpinned). Row-gating
-    * is sound here, unlike the verify-side tables, because band rows are
-    * fixed-width (two longs); 2M rows ≈ tens of MB.
-    * `spark.graft.bandJoin.broadcastRows` overrides (0 forces the shuffle
-    * regime — used by plan-shape specs and scale measurements).
-    */
-  def bandBroadcastRows(spark: SparkSession): Long = {
-    val v = long(spark, "spark.graft.bandJoin.broadcastRows", 2000000L)
-    require(v >= 0, s"spark.graft.bandJoin.broadcastRows must be >= 0, got $v")
     v
   }
 
@@ -289,19 +272,6 @@ object GraftConf {
   def srpRouteK(spark: SparkSession): Int = {
     val v = int(spark, "spark.graft.srp.routeK", 64)
     require(v > 0, s"spark.graft.srp.routeK must be positive, got $v")
-    v
-  }
-
-  /** Profile row cap under which BPE merge training collects the
-    * (vocabulary-sized) word profile and runs the merge loop driver-
-    * locally — zero per-merge Spark jobs, bit-identical merge sequence
-    * (spec-pinned). The distributed per-merge loop remains the fallback
-    * above it. ~10⁶ words × tens of bytes is MBs of driver heap; the cap
-    * guards the pathological all-unique-words profile.
-    */
-  def bpeLocalVocabRows(spark: SparkSession): Long = {
-    val v = long(spark, "spark.graft.bpe.localVocabRows", 2000000L)
-    require(v >= 0, s"spark.graft.bpe.localVocabRows must be >= 0, got $v")
     v
   }
 

@@ -54,11 +54,8 @@ object PrefixDiag {
       .select(col("id"), col("tok"), col("tail"))
     timed("posting count")(println(s"posting_rows=${posting.count()}"))
 
-    val fanout = graft.GraftConf.explosiveFanout(spark)
-    val rawPairs = posting.repartition(fanout, col("id")).as("a").join(broadcast(posting).as("b"),
-        col("a.tok") === col("b.tok") && col("a.id") < col("b.id") &&
-          col("a.tail") * col("b.tail") >= threshold - 1e-9)
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+    val rawPairs = graft.operators.CandidatePairs.keyPairs(posting, Seq("tok"),
+      broadcastSide = true, on = col("a.tail") * col("b.tail") >= threshold - 1e-9)
     timed("rawPairs count (join only)")(println(s"raw_pairs=${rawPairs.count()}"))
 
     val vecs = timed("vecs groupBy+stage") {
@@ -68,14 +65,14 @@ object PrefixDiag {
           transform(col("kv"), x => x.getField("tok")).as("ks"),
           transform(col("kv"), x => x.getField("u")).as("vs")))
     }
-    val verifiedRaw = rawPairs
-      .join(broadcast(vecs.select(col("id").as("id_a"), col("ks").as("ka"), col("vs").as("va"))), "id_a")
-      .join(broadcast(vecs.select(col("id").as("id_b"), col("ks").as("kb"), col("vs").as("vb"))), "id_b")
-      .withColumn("cosine", round(expr("sorted_dot(ka, va, kb, vb)"), 4))
+    val verifiedRaw = graft.operators.CandidatePairs
+      .attachSides(rawPairs, vecs, Seq("ks", "vs"), Some("broadcast"))
+      .withColumn("cosine", round(expr("sorted_dot(ks_a, vs_a, ks_b, vs_b)"), 4))
       .filter(col("cosine") >= threshold)
     timed("verify raw (no dedup) count")(println(s"qualifying_raw=${verifiedRaw.count()}"))
     timed("verify + final dedup count") {
-      println(s"qualifying_pairs=${verifiedRaw.dropDuplicates("id_a", "id_b").count()}")
+      println(s"qualifying_pairs=${graft.operators.CandidatePairs
+        .distinctPairs(verifiedRaw, pinned = false).count()}")
     }
     spark.stop()
   }

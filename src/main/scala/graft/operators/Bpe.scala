@@ -82,17 +82,21 @@ object Bpe {
     * scan in [[wordProfile]]), while a real tokenizer needs k ≈ 32 000
     * merges. The distributed loop pays one driver-coordinated Spark job
     * PER MERGE — 32 000 sequential job schedulings dominated by latency,
-    * not work — so below `spark.graft.bpe.localVocabRows` the trainer
+    * not work — so below `spark.graft.bpe.localVocabRows` profile rows
+    * (default 2M: ~10⁶ words × tens of bytes is MBs of driver heap; the
+    * cap guards the pathological all-unique-words profile) the trainer
     * collects the profile ONCE and runs the merge loop driver-locally
     * ([[trainMergesLocal]]): identical algorithm, bit-identical merge
     * sequence (spec-pinned against the distributed loop, including the
     * ≥5-run two-pass edge), zero per-merge jobs. The distributed loop
-    * remains the fallback for a profile too large to collect.
+    * remains the fallback for a profile too large to collect; a cap of 0
+    * forces it without counting the profile.
     */
   def trainMerges(profile: DataFrame, numMerges: Int): Seq[BpeMerge] = {
     require(numMerges > 0, "numMerges must be positive")
-    val localCap = graft.GraftConf.bpeLocalVocabRows(profile.sparkSession)
-    if (profile.count() <= localCap) trainMergesLocal(profile, numMerges)
+    if (graft.GraftConf.gate(profile.sparkSession, "trainMerges", ("local", "distributed"),
+        "spark.graft.bpe.localVocabRows", 2000000L, "count")(profile.count()))
+      trainMergesLocal(profile, numMerges)
     else trainMergesDistributed(profile, numMerges)
   }
 

@@ -203,46 +203,9 @@ object Dedup extends org.apache.spark.internal.Logging {
           xxhash64((0 until rowsPerBand).map(r => col("sig").getItem(b * rowsPerBand + r)): _*)
         }: _*)).as(Seq("band", "band_hash")))
 
-      // The band table is tiny but its self-join output is O(Σ bucket²)
-      // — the explosive-join shape where AQE, sizing by input bytes,
-      // coalesces the work onto 1–2 tasks (the prefix-join measurement).
-      // While the band table fits a broadcast, fan the stream side out
-      // BY ID: explicit repartitions are exempt from AQE coalescing,
-      // and id-partitioning co-locates a pair's duplicate rows (one per
-      // matching band) so the dedup's partial aggregation collapses
-      // them map-side — only distinct pairs reach its exchange. Dedup
-      // stays BEFORE the verify here: the merge-Jaccard over ~shingle-
-      // count arrays is the expensive step, so duplicated verifies cost
-      // more than the (now output-sized) dedup shuffle.
-      val fanout = graft.GraftConf.explosiveFanout(docs.sparkSession)
-      val bandBroadcast =
-        nDocs * bands <= graft.GraftConf.bandBroadcastRows(docs.sparkSession)
-      val rawPairs =
-        if (bandBroadcast)
-          banded.repartition(fanout, col("id")).as("l")
-            .join(broadcast(banded).as("r"), Seq("band", "band_hash"))
-        else
-          // shuffle regime: the pin is still required — AQE sizes the
-          // exchange by the band table's (small) input bytes, not the
-          // O(Σ bucket²) output (measured on the prefix join at 250k
-          // docs: 3/32 cores). Both sides repartitioned on the join
-          // keys: co-partitioned, exempt from AQE coalescing.
-          banded.repartition(fanout, col("band"), col("band_hash")).as("l")
-            .join(banded.repartition(fanout, col("band"), col("band_hash")).as("r"),
-              Seq("band", "band_hash"))
-      val collisions = rawPairs
-        .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
-        .filter(col("id_a") < col("id_b"))
-      // In the broadcast regime the stream side is partitioned by id, so
-      // a pair's duplicate rows co-locate and the dedup's partial
-      // aggregation collapses them map-side — dropDuplicates alone is
-      // output-sized. In the shuffle regime the collisions come out
-      // partitioned by band keys (duplicates scattered), so pin the
-      // dedup's own exchange to the fan-out width: a bare dropDuplicates
-      // would exchange the raw collision stream at
-      // spark.sql.shuffle.partitions, and the oversized per-task hash
-      // maps fall back to sorts that spill the whole stream (measured
-      // fatal on the prefix join at the 250k-doc shape).
+      // Dedup stays BEFORE the verify in both regimes: the merge-Jaccard
+      // over ~shingle-count arrays is the expensive step, so duplicated
+      // verifies cost more than the (output-sized) dedup shuffle.
       // NOTE (r17, measured negative): applying the q80 recipe here —
       // repartitioning raw collisions on the pair key at a bytes-budgeted
       // width before the dedup — was tried and REVERTED: at the q36 sf20
@@ -253,10 +216,11 @@ object Dedup extends org.apache.spark.internal.Logging {
       // streaming at this shape; q36's decade superlinearity is the
       // verify-broadcast → grid REGIME boundary plus the grid's
       // documented 2P·bytes replication, not this dedup (PLANS.md r17).
-      val candidates =
-        (if (bandBroadcast) collisions
-         else collisions.repartition(fanout, col("id_a"), col("id_b")))
-          .dropDuplicates("id_a", "id_b")
+      val spark = docs.sparkSession
+      val bandFits = CandidatePairs.bandGate(spark, "minhashCandidatePairs band", nDocs * bands)
+      val candidates = CandidatePairs.distinctPairs(
+        CandidatePairs.keyPairs(banded, Seq("band", "band_hash"), bandFits),
+        pinned = !bandFits)
 
       // verify: fetch each side's shingle set once; merge-join Jaccard over
       // the sorted hash arrays (O(|a|+|b|) per pair). While the shingle
@@ -264,24 +228,17 @@ object Dedup extends org.apache.spark.internal.Logging {
       // shuffle with fat arrays attached. The gate is BYTE-based, not
       // row-count-based: the payload is one long per shingle, so a
       // long-document corpus can push 100k rows to GBs — measure the
-      // actual array volume (one cheap agg over the already-cached sig)
-      // against `spark.graft.broadcastBytes`.
+      // actual array volume (one cheap agg over the already-cached sig).
+      // PAST the gate the verify is chosen by a measured cost model
+      // between the two shuffle shapes — see [[shuffleVerify]].
       val sets = sig.select(col("id"), col("sh"))
       val setBytes = sig.agg(coalesce(sum(size(col("sh"))), lit(0L)))
         .head.getLong(0) * 8L + nDocs * 32L
-      // While the shingle table fits the byte gate, two broadcast hash
-      // joins verify map-side. PAST the gate the verify is chosen by a
-      // measured cost model between the two shuffle shapes — see
-      // [[shuffleVerify]].
-      val broadcastOk =
-        setBytes <= graft.GraftConf.broadcastBytes(docs.sparkSession)
+      val budget = graft.GraftConf.broadcastBytes(spark)
       val verified =
-        if (broadcastOk)
-          candidates
-            .join(broadcast(sets.select(col("id").as("id_a"), col("sh").as("sh_a"))), "id_a")
-            .join(broadcast(sets.select(col("id").as("id_b"), col("sh").as("sh_b"))), "id_b")
-            .select(col("id_a"), col("id_b"),
-              expr("jaccard_sorted(sh_a, sh_b)").as("jaccard"))
+        if (graft.GraftConf.gate(spark, "minhashCandidatePairs verify",
+              ("broadcast", "shuffle"), "spark.graft.broadcastBytes", budget, "aggregate")(setBytes))
+          jaccardOf(CandidatePairs.attachSides(candidates, sets, Seq("sh"), Some("broadcast")))
         else shuffleVerify(banded, candidates, sets, setBytes, nDocs)
       if (minJaccard < 0) verified
       else verified.filter(col("jaccard") >= lit(minJaccard))
@@ -323,9 +280,9 @@ object Dedup extends org.apache.spark.internal.Logging {
                                        sets: DataFrame, setBytes: Long,
                                        nDocs: Long): DataFrame = {
     val spark = candidates.sparkSession
-    val estPairs = CandidateStats.rawCollisions(
+    val estPairs = CandidatePairs.rawCollisions(
       banded, Seq("band", "band_hash"), "minhash shuffleVerify")
-    val degree = CandidateStats.pairDegree(estPairs, nDocs)
+    val degree = CandidatePairs.pairDegree(estPairs, nDocs)
     val pUncapped = gridFragmentsUncapped(spark, setBytes)
     val maxP = graft.GraftConf.gridVerifyMaxFragments(spark)
     val p = gridFragments(spark, setBytes)
@@ -352,21 +309,16 @@ object Dedup extends org.apache.spark.internal.Logging {
     }
   }
 
-  /** The sort-free join-form shuffle verify: hint SHUFFLE_HASH so the
-    * shingle table is the (small) build side and the candidate stream is
-    * never SORTED — a sort-merge join would sort the candidates, and on
-    * the id_b join the stream already carries the id_a-side arrays, so
-    * the sort spill would be candidates × arrays (the r13 disk-fatal
-    * shape).
+  /** The sort-free join-form shuffle verify: the shingle sets attach by
+    * SHUFFLE_HASH joins (see [[CandidatePairs.attachSides]]).
     */
   private def joinFormVerify(candidates: DataFrame, sets: DataFrame): DataFrame =
-    candidates
-      .join(sets.select(col("id").as("id_a"), col("sh").as("sh_a"))
-        .hint("shuffle_hash"), "id_a")
-      .join(sets.select(col("id").as("id_b"), col("sh").as("sh_b"))
-        .hint("shuffle_hash"), "id_b")
-      .select(col("id_a"), col("id_b"),
-        expr("jaccard_sorted(sh_a, sh_b)").as("jaccard"))
+    jaccardOf(CandidatePairs.attachSides(candidates, sets, Seq("sh"), Some("shuffle_hash")))
+
+  /** (id_a, id_b, jaccard) over pairs with both shingle sets attached. */
+  private def jaccardOf(attached: DataFrame): DataFrame =
+    attached.select(col("id_a"), col("id_b"),
+      expr("jaccard_sorted(sh_a, sh_b)").as("jaccard"))
 
   /** Verify candidate pairs against their full sorted shingle-hash sets
     * WITHOUT attaching an array per pair — the fragment-and-replicate
@@ -554,43 +506,15 @@ object Dedup extends org.apache.spark.internal.Logging {
         posexplode(array((0 until 4).map { c =>
           shiftrightunsigned(col("sh"), c * 16).bitwiseAND(lit(0xFFFFL))
         }: _*)).as(Seq("chunk", "chunk_val")))
-      // same explosive-join parallelism pin + map-side-collapsing dedup
-      // as [[minhashCandidatePairs]] (the chunk table is 4 fixed-width
-      // rows per doc; its self-join output is O(Σ bucket²))
-      val fanout = graft.GraftConf.explosiveFanout(docs.sparkSession)
-      val chunkBroadcast =
-        nDocs * 4 <= graft.GraftConf.bandBroadcastRows(docs.sparkSession)
-      val rawPairs =
-        if (chunkBroadcast)
-          chunked.repartition(fanout, col("id")).as("l")
-            .join(broadcast(chunked).as("r"), Seq("chunk", "chunk_val"))
-        else
-          // shuffle regime: pin both sides on the join keys (see
-          // [[minhashCandidatePairs]] — AQE cannot see the quadratic
-          // output from the KB-scale chunk-table input)
-          chunked.repartition(fanout, col("chunk"), col("chunk_val")).as("l")
-            .join(chunked.repartition(fanout, col("chunk"), col("chunk_val")).as("r"),
-              Seq("chunk", "chunk_val"))
-      val collisions = rawPairs
-        .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
-        .filter(col("id_a") < col("id_b"))
-      // shuffle regime: pin the dedup exchange to the fan-out width too
-      // (see [[minhashCandidatePairs]] — a bare dropDuplicates exchanges
-      // the raw collision stream at spark.sql.shuffle.partitions and the
-      // oversized aggregate tasks sort-spill the whole stream)
-      val candidates =
-        (if (chunkBroadcast) collisions
-         else collisions.repartition(fanout, col("id_a"), col("id_b")))
-          .dropDuplicates("id_a", "id_b")
+      val bandFits = CandidatePairs.bandGate(docs.sparkSession, "simhashNearDups band", nDocs * 4)
+      val candidates = CandidatePairs.distinctPairs(
+        CandidatePairs.keyPairs(chunked, Seq("chunk", "chunk_val"), bandFits),
+        pinned = !bandFits)
       // the signature table is 16 bytes/doc — broadcast the verify at
       // any corpus size a single executor can hold; above that, hash
-      // joins with the signature table as build side (never sort the
-      // candidate stream)
-      val hint: DataFrame => DataFrame =
-        if (nDocs <= 10000000L) broadcast(_) else _.hint("shuffle_hash")
-      candidates
-        .join(hint(sig.select(col("id").as("id_a"), col("sh").as("sh_a"))), "id_a")
-        .join(hint(sig.select(col("id").as("id_b"), col("sh").as("sh_b"))), "id_b")
+      // joins with the signature table as build side
+      CandidatePairs.attachSides(candidates, sig, Seq("sh"),
+          Some(if (nDocs <= 10000000L) "broadcast" else "shuffle_hash"))
         .select(col("id_a"), col("id_b"),
           hammingDistance(col("sh_a"), col("sh_b")).as("hamming"))
         .filter(col("hamming") <= maxHamming)
@@ -1122,9 +1046,7 @@ object Dedup extends org.apache.spark.internal.Logging {
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
                         pairs: DataFrame, n: Int = 3): DataFrame = {
     val grams = docs.select(col(idCol).as("id"), wordNgrams(col(textCol), n).as("grams"))
-    pairs
-      .join(grams.withColumnRenamed("id", "id_a").withColumnRenamed("grams", "grams_a"), "id_a")
-      .join(grams.withColumnRenamed("id", "id_b").withColumnRenamed("grams", "grams_b"), "id_b")
+    CandidatePairs.attachSides(pairs, grams, Seq("grams"), None)
       .select(col("id_a"), col("id_b"), jaccard(col("grams_a"), col("grams_b")).as("ngram_jaccard"))
   }
 }

@@ -92,71 +92,27 @@ object PrefixJoin {
         .select(col("id_a"), col("id_b"), col("jaccard"))
     }
     val prefix = prefixPostings(sets, threshold)
-    // same explosive-join parallelism pin as [[weightedCosinePrefixJoin]]:
-    // AQE sizes this join by its (tiny) posting inputs, not its O(Σ df²)
-    // output — fan the stream side out explicitly while the build side
-    // fits a broadcast
-    // fan out BY ID so pair duplicates co-locate and the post-verify
-    // dedup collapses them in its partial aggregation (see the weighted
-    // variant for the measurement)
-    val fanout = graft.GraftConf.explosiveFanout(docs.sparkSession)
     // Broadcast gate on BYTES, not row count: the verify side carries the
     // full gram arrays (one long per gram), so a long-document corpus can
     // push a 200k-row table to GBs. `sets` is already staged, so this agg
     // is a cheap parquet scan; the posting table is strictly smaller than
-    // `sets`, so one measurement gates both broadcasts.
-    // The gate logs its regime like every other byte gate: the sf20 tier
-    // crossed this one NATURALLY (1M docs pushed the gram table past the
-    // 1 GiB heap-derived cap) and the 3.6x step was undiagnosable from a
-    // silent flip.
+    // `sets`, so one measurement gates both broadcasts. The sf20 tier
+    // crossed this gate NATURALLY (1M docs pushed the gram table past the
+    // 1 GiB heap-derived cap).
     val budget = graft.GraftConf.broadcastBytes(docs.sparkSession)
     val fitsBroadcast = graft.GraftConf.gate(docs.sparkSession, "jaccardPrefixJoin verify",
       ("broadcast", "shuffle"), "spark.graft.broadcastBytes", budget, "aggregate")(
       sets.agg(coalesce(sum(col("sz")), lit(0L))).head.getLong(0) * 8L + nSets * 32L)
-    val rawPairs = (
-      if (fitsBroadcast)
-        prefix.repartition(fanout, col("id")).as("a").join(broadcast(prefix).as("b"),
-          col("a.ptok") === col("b.ptok") && col("a.id") < col("b.id"))
-      else
-        // Shuffle regime: the pin is STILL required (measured at 250k
-        // docs: the posting input is ~50 MB, so AQE coalesced the join
-        // exchange onto 1–2 tasks while the output exploded — 3/32
-        // cores busy). Repartition BOTH sides on the join key with the
-        // pinned fan-out: co-partitioned, so the join adds no further
-        // exchange, and user repartitions are exempt from AQE
-        // coalescing. Per-key skew is bounded by the prefix filter
-        // itself (only a doc's rarest grams are indexed).
-        prefix.repartition(fanout, col("ptok")).as("a")
-          .join(prefix.repartition(fanout, col("ptok")).as("b"),
-            col("a.ptok") === col("b.ptok") && col("a.id") < col("b.id"))
-      ).select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-    def verified(cands: DataFrame, hint: DataFrame => DataFrame): DataFrame = cands
-      .join(hint(sets.select(col("id").as("id_a"), col("toks").as("ta"), col("sz").as("sza"))), "id_a")
-      .join(hint(sets.select(col("id").as("id_b"), col("toks").as("tb"), col("sz").as("szb"))), "id_b")
-      .withColumn("inter", size(array_intersect(col("ta"), col("tb"))))
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("sza") + col("szb") - col("inter")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-    // Same two-regime verify as [[weightedCosinePrefixJoin]]: while the
-    // set table broadcasts, duplicated raw pairs (one per shared prefix
-    // gram) cost an extra in-pipeline intersect each, so dedup AFTER the
-    // map-side verify where only output-sized rows shuffle; past the
-    // cutoff the verify joins shuffle anyway — dedup the pair stream
-    // first so duplicates never ride an exchange. The dedup's own
-    // exchange is pinned to the fan-out width (a plain dropDuplicates
-    // exchanges the raw stream at spark.sql.shuffle.partitions — at the
-    // 250k-doc shape that put ~10⁸ rows per aggregate task, whose hash
-    // map fell back to a sort that spilled the whole stream to disk),
-    // and the set-table joins are hinted SHUFFLE_HASH: a sort-merge join
-    // would SORT the candidate stream (and, on the second join, the
-    // gram arrays attached by the first) — the build side is the small
-    // set table, so hash joins stream the candidates sort-free.
-    if (fitsBroadcast) verified(rawPairs, broadcast(_)).dropDuplicates("id_a", "id_b")
-    else verified(
-      rawPairs.repartition(fanout, col("id_a"), col("id_b"))
-        .dropDuplicates("id_a", "id_b"),
-      _.hint("shuffle_hash"))
+    // one raw pair per shared prefix gram, deduplicated after the
+    // in-pipeline intersect while the sets broadcast
+    val rawPairs = CandidatePairs.keyPairs(prefix, Seq("ptok"), fitsBroadcast)
+    CandidatePairs.verifiedPairs(rawPairs, sets, Seq("toks", "sz"), fitsBroadcast) {
+      _.withColumn("inter", size(array_intersect(col("toks_a"), col("toks_b"))))
+        .withColumn("jaccard",
+          col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")))
+        .filter(col("jaccard") >= threshold)
+        .select(col("id_a"), col("id_b"), col("jaccard"))
+    }
   }
 
   /** Candidate-pair counts of the prefix index vs the full inverted index
@@ -166,15 +122,10 @@ object PrefixJoin {
   def candidateCounts(docs: DataFrame, idCol: String, textCol: String,
                       threshold: Double, n: Int = 3): (Long, Long) = {
     val sets = Dedup.stage(orderedSets(docs, idCol, textCol, n), "prefixjoin-cand")
-    val full = sets.select(col("id"), explode(col("toks")).as("tok"))
-    val fullCount = full.as("a").join(full.as("b"),
-        col("a.tok") === col("b.tok") && col("a.id") < col("b.id"))
-      .select(col("a.id"), col("b.id")).dropDuplicates().count()
-    val prefix = prefixPostings(sets, threshold)
-    val prunedCount = prefix.as("a").join(prefix.as("b"),
-        col("a.ptok") === col("b.ptok") && col("a.id") < col("b.id"))
-      .select(col("a.id"), col("b.id")).dropDuplicates().count()
-    (prunedCount, fullCount)
+    def distinct(postings: DataFrame, key: String): Long = CandidatePairs.distinctPairs(
+      CandidatePairs.keyPairs(postings, Seq(key), broadcastSide = false), pinned = false).count()
+    (distinct(prefixPostings(sets, threshold), "ptok"),
+      distinct(sets.select(col("id"), explode(col("toks")).as("tok")), "tok"))
   }
 
   /** (id, toks, sz): each document's distinct gram hashes ordered by
@@ -331,25 +282,6 @@ object PrefixJoin {
       "wprefixjoin-tails")
     val posting = tails.filter(col("tail") >= threshold)
       .select(col("id"), col("tok"), col("tail"))
-    // one raw row per SHARED PREFIX TERM of a pair (position-filtered in
-    // the join condition) — deliberately NOT deduped here; see below.
-    // PARALLELISM, not volume, is the trap on this join: the posting
-    // table is tiny (9 rows/doc — ~11 MB at 50k docs) but its self-join
-    // output is O(Σ df²) — AQE sees only the input bytes, so it either
-    // coalesces the exchange or scans the staged file in one task and
-    // the 10⁸-row explosion runs on 1–2 cores. While the posting table
-    // fits a broadcast, pin the physical shape ourselves: explicit
-    // round-robin fan-out of the stream side (user repartitions are
-    // exempt from AQE coalescing) against a broadcast build side. Past
-    // the broadcast gate the join must shuffle — but the pin is still
-    // required there (measured at 250k docs, see the branch below).
-    // Fan out BY ID, not round-robin: every duplicate of a pair (a, b)
-    // is generated from one of a's posting rows, so hash-partitioning
-    // the stream side on id co-locates them — the final dedup's partial
-    // aggregation then collapses duplicates map-side and only
-    // output-sized distinct pairs ever reach its exchange (measured at
-    // t=0.7/50k docs: 254M verified rows, 33M distinct).
-    val fanout = graft.GraftConf.explosiveFanout(docs.sparkSession)
     // Byte-based broadcast gate (shared by the posting join and the
     // verify below): the broadcast payloads are variable-width — the
     // verify vectors carry one (long, double) entry per distinct term
@@ -362,28 +294,17 @@ object PrefixJoin {
       "weightedCosinePrefixJoin verify", ("broadcast", "shuffle"),
       "spark.graft.broadcastBytes", budget, "count")(
       tails.count() * (java.lang.Long.BYTES + java.lang.Double.BYTES) + nDocs.toLong * 32L)
-    val rawPairs = (
-      if (fitsBroadcast)
-        posting.repartition(fanout, col("id")).as("a").join(broadcast(posting).as("b"),
-          col("a.tok") === col("b.tok") && col("a.id") < col("b.id") &&
-            col("a.tail") * col("b.tail") >= threshold - 1e-9)
-      else
-        // Shuffle regime: the pin is STILL required. The r12 assumption
-        // ("past the gate the posting table carries real bytes and AQE
-        // sizes the exchange correctly") was MEASURED FALSE at 250k
-        // docs: the posting input is ~35 MB — AQE coalesced the join
-        // exchange to 1–2 partitions and the ~10⁹-row explosion ran on
-        // 3/32 cores (killed after 12 min; pinned it completes in
-        // ~2 min). Repartition BOTH sides on the join key with the
-        // pinned fan-out: co-partitioned (no extra exchange for the
-        // join) and exempt from AQE coalescing. Per-token skew is
-        // bounded by the prefix filter (tail ≥ t keeps only each doc's
-        // rarest terms, so df_prefix per token stays small by design).
-        posting.repartition(fanout, col("tok")).as("a")
-          .join(posting.repartition(fanout, col("tok")).as("b"),
-            col("a.tok") === col("b.tok") && col("a.id") < col("b.id") &&
-              col("a.tail") * col("b.tail") >= threshold - 1e-9)
-      ).select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+    // one raw row per SHARED PREFIX TERM of a pair, position-filtered in
+    // the join condition and deliberately NOT deduped before the verify
+    // while the vectors broadcast: on the template-dense 50k-doc corpus
+    // a duplicate (~5.8 raw rows per pair) costs one extra in-pipeline
+    // dot, where deduping first shuffled the whole raw stream (717M
+    // rows, 132 of 250 s). The id fan-out then collapses duplicates
+    // map-side (t=0.7: 254M verified rows, 33M distinct). The posting
+    // table is tiny (9 rows/doc — ~11 MB at 50k docs) but its self-join
+    // output is O(Σ df²).
+    val rawPairs = CandidatePairs.keyPairs(posting, Seq("tok"), fitsBroadcast,
+      on = col("a.tail") * col("b.tail") >= threshold - 1e-9)
     // verify vectors as (sorted key array, aligned value array): the
     // native merge-join dot is O(|a|+|b|) per pair where a map column is
     // O(|a|·|b|) (Catalyst map lookup is a linear scan) — at 10⁷
@@ -396,51 +317,14 @@ object PrefixJoin {
           transform(col("kv"), x => x.getField("tok")).as("ks"),
           transform(col("kv"), x => x.getField("u")).as("vs")),
       "wprefixjoin-vecs")
-    if (fitsBroadcast) {
-      // VERIFY-THEN-DEDUP: while the vector table fits an executor, the
-      // whole verify is map-side (two broadcast hash joins + the
-      // codegen'd merge-dot), so a duplicated candidate costs one extra
-      // in-pipeline dot — ~5.8 raw rows/pair measured on the
-      // template-dense 50k-doc corpus — while deduping FIRST costs a
-      // full shuffle + hash-agg of the raw pair stream (717M rows,
-      // 132 of 250 s at that scale). Only qualifying pairs (output-
-      // sized, every duplicate row bit-identical since the dot depends
-      // only on the pair) reach the final dedup exchange.
-      rawPairs
-        .join(broadcast(vecs.select(col("id").as("id_a"), col("ks").as("ka"), col("vs").as("va"))), "id_a")
-        .join(broadcast(vecs.select(col("id").as("id_b"), col("ks").as("kb"), col("vs").as("vb"))), "id_b")
-        .withColumn("cosine", round(expr("sorted_dot(ka, va, kb, vb)"), 4))
+    // past the gate the one unavoidable cost is the id_b exchange
+    // carrying the attached id_a (ks, vs) arrays (~2.4 KB/row at the
+    // 250k-doc shape) — linear in candidates and spread across the
+    // cluster
+    CandidatePairs.verifiedPairs(rawPairs, vecs, Seq("ks", "vs"), fitsBroadcast) {
+      _.withColumn("cosine", round(expr("sorted_dot(ks_a, vs_a, ks_b, vs_b)"), 4))
         .filter(col("cosine") >= threshold)
-        .dropDuplicates("id_a", "id_b")
-        .select(col("id_a"), col("id_b"), col("cosine"))
-    } else {
-      // Past the broadcast cutoff the verify joins shuffle the candidate
-      // rows anyway, so duplicates would ride (and pay for) every
-      // exchange twice — dedup first, then shuffle-join the vectors.
-      // Two plan pins, both measured fatal without them at the 250k-doc
-      // shape: (1) the dedup exchange is repartitioned to the fan-out
-      // width — at spark.sql.shuffle.partitions=32 each aggregate task
-      // got ~10⁸ raw rows, the hash map fell back to sort-based
-      // aggregation and spilled the entire raw stream; (2) the vector
-      // joins are hinted SHUFFLE_HASH — sort-merge joins SORT the
-      // candidate stream, and on the id_b join the stream already
-      // carries the id_a-side (ks, vs) arrays (~2.4 KB/row), so the
-      // sort spill is candidates × vector-bytes. With hash joins the
-      // small vector table is the build side and the fat stream is
-      // never sorted; the one unavoidable cost above the gate is the
-      // id_b exchange carrying the attached arrays — linear in
-      // candidates and spread across the cluster, vs. quadratic sort
-      // spill on whichever task sorts.
-      rawPairs.repartition(fanout, col("id_a"), col("id_b"))
-        .dropDuplicates("id_a", "id_b")
-        .join(vecs.select(col("id").as("id_a"), col("ks").as("ka"), col("vs").as("va"))
-          .hint("shuffle_hash"), "id_a")
-        .join(vecs.select(col("id").as("id_b"), col("ks").as("kb"), col("vs").as("vb"))
-          .hint("shuffle_hash"), "id_b")
-        .withColumn("cosine", round(expr("sorted_dot(ka, va, kb, vb)"), 4))
-        .filter(col("cosine") >= threshold)
-        .select(col("id_a"), col("id_b"), col("cosine"))
-    }
+    }.select(col("id_a"), col("id_b"), col("cosine"))
   }
 
   /** (id, tok, df, u): each document's L2-unit tf-idf weights over

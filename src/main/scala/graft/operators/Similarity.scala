@@ -131,21 +131,6 @@ object Similarity extends org.apache.spark.internal.Logging {
                 maxTables: Int = MaxSrpTables): Int =
     math.min(maxTables, tablesForUncapped(threshold, bits, recallTarget))
 
-  /** Raw within-bucket SRP pairs, one row per (pair, table) collision —
-    * NOT deduplicated across tables. The banded table is tiny (N×T rows
-    * of three fixed-width columns) but its self-join output is
-    * O(Σ bucket²), so — exactly like the prefix join's posting self-join —
-    * AQE sizes the exchange by the INPUT bytes and would run the
-    * explosion on 1–2 tasks. While the banded table fits a broadcast,
-    * pin the shape: fan the stream side out BY ID (explicit repartitions
-    * are exempt from AQE coalescing, and id-partitioning co-locates all
-    * of a pair's duplicate rows, so a downstream dedup's partial
-    * aggregation collapses them map-side) against a broadcast build
-    * side. Past the gate the join must shuffle — but the pin is STILL
-    * required: a 250k-doc corpus's banded table is only tens of MB, so
-    * AQE still coalesces the exchange while the output explodes (both
-    * sides are therefore repartitioned on the join keys).
-    */
   /** The SRP band table: one (id, tbl, bucket) row per vector per table. */
   private def srpBanded(corpus: DataFrame, numTables: Int, bits: Int,
                         idCol: String, vecCol: String, seed: Long): DataFrame = {
@@ -156,58 +141,20 @@ object Similarity extends org.apache.spark.internal.Logging {
       .select(col("id"), posexplode(col("buckets")).as(Seq("tbl", "bucket")))
   }
 
-  private def srpRawPairs(corpus: DataFrame, numTables: Int, bits: Int,
-                          idCol: String, vecCol: String, seed: Long,
-                          corpusRows: Long): DataFrame =
-    srpRawPairsFromBanded(
-      srpBanded(corpus, numTables, bits, idCol, vecCol, seed),
-      corpus.sparkSession, numTables, corpusRows)
-
-  private def srpRawPairsFromBanded(banded: DataFrame, spark: SparkSession,
-                                    numTables: Int, corpusRows: Long): DataFrame = {
-    val pairs =
-      if (corpusRows >= 0 && corpusRows * numTables <=
-            graft.GraftConf.bandBroadcastRows(spark)) {
-        val fanout = graft.GraftConf.explosiveFanout(spark)
-        banded.repartition(fanout, col("id")).as("l")
-          .join(broadcast(banded).as("r"), Seq("tbl", "bucket"))
-      } else {
-        // shuffle regime: the pin is still required — AQE sizes the
-        // exchange by the banded table's (small) input bytes, not the
-        // O(Σ bucket²) output (the 250k-doc prefix-join measurement:
-        // 3/32 cores busy). Both sides repartitioned on the join keys:
-        // co-partitioned, exempt from AQE coalescing.
-        val fanout = graft.GraftConf.explosiveFanout(spark)
-        banded.repartition(fanout, col("tbl"), col("bucket")).as("l")
-          .join(banded.repartition(fanout, col("tbl"), col("bucket")).as("r"),
-            Seq("tbl", "bucket"))
-      }
-    pairs.select(col("l.id").as("id_a"), col("r.id").as("id_b"))
-      .filter(col("id_a") < col("id_b"))
-  }
-
   /** Banded-SRP candidate pairs: each vector lands in `numTables` buckets
     * (one per independent b-bit table); candidates are within-bucket pairs,
     * deduplicated across tables BEFORE any verification. Exposed separately
-    * from [[cosineNearDupPairs]] so candidate volume is testable. The
-    * dedup collapses map-side: [[srpRawPairs]] co-locates a pair's
-    * duplicates by id, so only distinct pairs reach the exchange.
+    * from [[cosineNearDupPairs]] so candidate volume is testable.
     */
   def srpCandidatePairs(corpus: DataFrame, numTables: Int, bits: Int,
                         idCol: String = "vec_id", vecCol: String = "embedding",
                         seed: Long = 42L): DataFrame = {
     val nRows = corpus.count()
-    val raw = srpRawPairs(corpus, numTables, bits, idCol, vecCol, seed, nRows)
-    // broadcast regime: the stream side is id-partitioned, so pair
-    // duplicates collapse map-side and dropDuplicates is output-sized;
-    // shuffle regime: pin the dedup exchange to the fan-out width (see
-    // [[cosineNearDupPairs]])
-    val spark = corpus.sparkSession
-    val pinned =
-      if (nRows * numTables <= graft.GraftConf.bandBroadcastRows(spark)) raw
-      else raw.repartition(graft.GraftConf.explosiveFanout(spark),
-        col("id_a"), col("id_b"))
-    pinned.dropDuplicates("id_a", "id_b")
+    val bandFits = CandidatePairs.bandGate(corpus.sparkSession,
+      "srpCandidatePairs band", nRows * numTables)
+    CandidatePairs.distinctPairs(CandidatePairs.keyPairs(
+      srpBanded(corpus, numTables, bits, idCol, vecCol, seed), Seq("tbl", "bucket"), bandFits),
+      pinned = !bandFits)
   }
 
   /** All-pairs above a cosine threshold via banded SRP-LSH (embedding-cosine
@@ -294,7 +241,7 @@ object Similarity extends org.apache.spark.internal.Logging {
       } else {
         val banded = graft.operators.Dedup.stage(
           srpBanded(corpus, tables, bits, idCol, vecCol, seed), "srp-banded")
-        val est = CandidateStats.rawCollisions(banded, Seq("tbl", "bucket"),
+        val est = CandidatePairs.rawCollisions(banded, Seq("tbl", "bucket"),
           "cosineNearDupPairs")
         (est > routeGate, est, Some(banded))
       }
@@ -310,69 +257,40 @@ object Similarity extends org.apache.spark.internal.Logging {
       val (nLists, nprobe) = ivfAutoGeometry(spark, nRows)
       val index = ivfBuild(emb, numCentroids = nLists,
         trainIters = graft.GraftConf.int(spark, "spark.graft.ann.trainIters", 1))
-      ivfSearch(index, emb, k = routeK, nprobe = nprobe,
+      CandidatePairs.distinctPairs(ivfSearch(index, emb, k = routeK, nprobe = nprobe,
           minCosine = Some(threshold))
         .filter(col("query_id") =!= col("neighbor_id"))
         .select(least(col("query_id"), col("neighbor_id")).as("id_a"),
           greatest(col("query_id"), col("neighbor_id")).as("id_b"),
-          col("cosine"))
-        .dropDuplicates("id_a", "id_b")
+          col("cosine")), pinned = false)
     } else {
-    if (estCollisions >= 0)
-      logInfo(s"cosineNearDupPairs: BANDED route ($estCollisions est raw band " +
-        s"collisions <= gate $routeGate)")
-    val vecs = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
-    val raw = stagedBanded match {
-      case Some(banded) => srpRawPairsFromBanded(banded, spark, tables, nRows)
-      case None => srpRawPairs(corpus, tables, bits, idCol, vecCol, seed, nRows)
-    }
-    // Byte-based verify-broadcast gate (vectors are fixed-width, so
-    // rows × (dim × 4B + row overhead) is exact — a row-count gate is
-    // wrong at high dim: 200k rows is 51 MB at dim 64 but 820 MB at
-    // dim 1024). The dim probe is one head() on the (tiny) plan.
-    val dim = if (nRows == 0) 0
-              else corpus.select(size(col(vecCol))).head.getInt(0)
-    val vecBytes = nRows * (dim.toLong * 4L + 32L)
-    if (vecBytes <= graft.GraftConf.broadcastBytes(corpus.sparkSession)) {
-      // VERIFY-THEN-DEDUP (the weighted-prefix-join measurement): while
-      // the vector table fits a broadcast, the verify is entirely
-      // map-side — two broadcast hash joins + the codegen'd cosine — so
-      // a pair duplicated across T tables costs T−1 extra in-pipeline
-      // dots, where deduping FIRST costs a full shuffle + hash-agg of
-      // the raw collision stream (hundreds of millions of rows on a
+      if (estCollisions >= 0)
+        logInfo(s"cosineNearDupPairs: BANDED route ($estCollisions est raw band " +
+          s"collisions <= gate $routeGate)")
+      val bandFits = CandidatePairs.bandGate(spark, "cosineNearDupPairs band", nRows * tables)
+      val raw = CandidatePairs.keyPairs(
+        stagedBanded.getOrElse(srpBanded(corpus, tables, bits, idCol, vecCol, seed)),
+        Seq("tbl", "bucket"), bandFits)
+      // Byte-based verify-broadcast gate (vectors are fixed-width, so
+      // rows × (dim × 4B + row overhead) is exact — a row-count gate is
+      // wrong at high dim: 200k rows is 51 MB at dim 64 but 820 MB at
+      // dim 1024). The dim probe is one head() on the (tiny) plan. While
+      // the vectors broadcast, a pair duplicated across T tables costs
+      // T−1 extra in-pipeline dots — cheaper than deduping the raw
+      // collision stream (hundreds of millions of rows on a
       // low-threshold corpus where the buckets barely discriminate).
-      // Duplicate rows are bit-identical (the cosine depends only on
-      // the pair), so deduping after the threshold filter is exact and
-      // only qualifying pairs ever reach an exchange.
-      raw
-        .join(broadcast(vecs.select(col("id").as("id_a"), col("v").as("v_a"))), "id_a")
-        .join(broadcast(vecs.select(col("id").as("id_b"), col("v").as("v_b"))), "id_b")
-        .withColumn("cosine", VectorFunctions.cosine("v_a", "v_b"))
-        .filter(col("cosine") >= threshold)
-        .dropDuplicates("id_a", "id_b")
-        .select(col("id_a"), col("id_b"), round(col("cosine"), 4).as("cosine"))
-    } else {
-      // past the broadcast cutoff the verify joins shuffle candidate
-      // rows anyway — dedup first so duplicates never ride an exchange.
-      // Pin the dedup exchange to the fan-out width (a bare
-      // dropDuplicates exchanges the raw collision stream at
-      // spark.sql.shuffle.partitions; the oversized aggregate tasks
-      // fall back to sorts that spill the whole stream — measured fatal
-      // on the prefix join at the 250k-doc shape) and hint the vector
-      // joins SHUFFLE_HASH so the candidate stream — which carries v_a
-      // into the second join — is never sorted; the small vector table
-      // is the hash build side.
-      val fanout = graft.GraftConf.explosiveFanout(corpus.sparkSession)
-      raw.repartition(fanout, col("id_a"), col("id_b"))
-        .dropDuplicates("id_a", "id_b")
-        .join(vecs.select(col("id").as("id_a"), col("v").as("v_a"))
-          .hint("shuffle_hash"), "id_a")
-        .join(vecs.select(col("id").as("id_b"), col("v").as("v_b"))
-          .hint("shuffle_hash"), "id_b")
-        .withColumn("cosine", VectorFunctions.cosine("v_a", "v_b"))
-        .filter(col("cosine") >= threshold)
-        .select(col("id_a"), col("id_b"), round(col("cosine"), 4).as("cosine"))
-    }
+      val budget = graft.GraftConf.broadcastBytes(spark)
+      val verifyFits = graft.GraftConf.gate(spark, "cosineNearDupPairs verify",
+          ("broadcast", "shuffle"), "spark.graft.broadcastBytes", budget, "count") {
+        val dim = if (nRows == 0) 0
+                  else corpus.select(size(col(vecCol))).head.getInt(0)
+        nRows * (dim.toLong * 4L + 32L)
+      }
+      CandidatePairs.verifiedPairs(raw,
+          corpus.select(col(idCol).as("id"), col(vecCol).as("v")), Seq("v"), verifyFits) {
+        _.withColumn("cosine", VectorFunctions.cosine("v_a", "v_b"))
+          .filter(col("cosine") >= threshold)
+      }.select(col("id_a"), col("id_b"), round(col("cosine"), 4).as("cosine"))
     }
   }
 

@@ -321,6 +321,68 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
+  test("jaccard prefix join's shuffle regime: key-pinned self-join, pinned dedup, no candidate sort") {
+    // the index regime past the verify-broadcast gate: the same gate
+    // decides the posting self-join, so both of its sides repartition on
+    // the prefix gram, and the pair dedup exchange is pinned on (id_a, id_b)
+    withConf("spark.graft.prefixJoin.bruteMaxDocs" -> "0",
+        "spark.graft.broadcastBytes" -> "1",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val df = operators.PrefixJoin.jaccardPrefixJoin(docs, "doc_id", "text", 0.6)
+      df.collect()
+      val plan = df.queryExecution.executedPlan.toString
+      val pins = "Exchange hashpartitioning\\(ptok".r.findAllIn(plan).length
+      assert(pins >= 2 || (pins >= 1 &&
+          (plan.contains("ReusedExchange") || plan.contains("ReusedQueryStage"))),
+        s"expected both posting self-join sides pinned on ptok, saw $pins in:\n$plan")
+      assert(plan.contains("Exchange hashpartitioning(id_a"),
+        s"pair dedup must repartition on (id_a, id_b):\n$plan")
+      assert(!plan.contains("Sort [id_a") && !plan.contains("Sort [id_b"),
+        s"a join sorted the candidate stream:\n$plan")
+      assert(!plan.contains("BroadcastHashJoin"),
+        s"gate=1 byte must force the shuffle self-join and verify:\n$plan")
+    }
+  }
+
+  test("simhash band shuffle regime: key-pinned self-join, pinned dedup, broadcast verify") {
+    // SimHash's verify keeps its fixed 10M-doc broadcast; only the chunk
+    // self-join and the pair dedup take the shuffle regime. The result is
+    // staged, so the plan is read from the staging write.
+    val plans = new java.util.concurrent.CopyOnWriteArrayList[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    withConf("spark.graft.bandJoin.broadcastRows" -> "0",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+      spark.listenerManager.register(listener)
+      try {
+        operators.Dedup.simhashNearDups(docs, "doc_id", "text").collect()
+        org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+      } finally spark.listenerManager.unregister(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    val found = plans.asScala.find(_.contains("hashpartitioning(chunk"))
+    assert(found.nonEmpty, s"no captured plan holds the chunk self-join (${plans.size()} plans)")
+    val plan = found.get
+    val pins = "Exchange hashpartitioning\\(chunk".r.findAllIn(plan).length
+    assert(pins >= 2 || (pins >= 1 &&
+        (plan.contains("ReusedExchange") || plan.contains("ReusedQueryStage"))),
+      s"expected both chunk self-join sides pinned on (chunk, chunk_val), saw $pins in:\n$plan")
+    assert(plan.contains("Exchange hashpartitioning(id_a"),
+      s"pair dedup must repartition on (id_a, id_b):\n$plan")
+    assert(!plan.contains("Sort [id_a") && !plan.contains("Sort [id_b"),
+      s"a join sorted the candidate stream:\n$plan")
+    assert(!"BroadcastHashJoin \\[chunk".r.findFirstIn(plan).isDefined,
+      s"band gate 0 must force the shuffle self-join:\n$plan")
+    assert(plan.contains("BroadcastHashJoin [id_a"),
+      s"the signature verify keeps its broadcast:\n$plan")
+  }
+
   test("q55 IVF route (forced): probes the index, never bands, never cartesian") {
     // the collision-gate route for loose-threshold near-dup search: the
     // plan must be the q204 probe shape (codebook scan + block kernel),

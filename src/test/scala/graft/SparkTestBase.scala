@@ -25,4 +25,15 @@ object SparkTestBase {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.spark
   val sf0001 = "/root/testdata/sf0.001"
+
+  /** Run `body` with the given session confs set, restoring each key's
+    * previous value (or unsetting it) afterwards. */
+  def withConf[A](pairs: (String, String)*)(body: => A): A = {
+    val saved = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

@@ -30,11 +30,6 @@ class QuantizedProbeSpec extends SparkSpec {
 
   private def emb: DataFrame = graft.Tables(spark, sf0001, "embeddings")
 
-  private def withConf[A](pairs: (String, String)*)(body: => A): A = {
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally pairs.foreach { case (k, _) => spark.conf.unset(k) }
-  }
-
   private def rows(df: DataFrame): Set[(Long, Long, Double, Int)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
 

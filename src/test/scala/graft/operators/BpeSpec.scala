@@ -117,6 +117,14 @@ class BpeSpec extends SparkSpec {
       val dist = Bpe.trainMergesDistributed(profile, k)
       assert(local == dist, s"$tag: local $local != distributed $dist")
     }
+    // the gate forced to the distributed loop: same sequence, and the
+    // decision is logged without counting the profile
+    val (forced, logs) = withConf("spark.graft.bpe.localVocabRows" -> "0") {
+      graft.LogCapture("graft.gate")(Bpe.trainMerges(runEdge, 8))
+    }
+    assert(forced == Bpe.trainMergesLocal(runEdge, 8))
+    assert(logs.exists(l => l.startsWith("gate trainMerges: distributed regime") &&
+      l.contains("estimate not run")), s"no forced trainMerges decision in $logs")
   }
 
   test("k=2000 merges train driver-locally in seconds, without one job per merge") {

@@ -15,11 +15,6 @@ import org.apache.spark.sql.functions._
   */
 class GenericIdAnnSpec extends SparkSpec {
 
-  private def withConf[A](pairs: (String, String)*)(body: => A): A = {
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally pairs.foreach { case (k, _) => spark.conf.unset(k) }
-  }
-
   // the long-id fixture re-keyed with string document ids
   private lazy val corpus: DataFrame =
     graft.Tables(spark, sf0001, "embeddings")
