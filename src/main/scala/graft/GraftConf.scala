@@ -28,8 +28,8 @@ object GraftConf {
           s"conf $key must be a long, got '$raw'"))
     }.getOrElse(default)
 
-  /** Boolean conf with a strict parse (only literal true|false; the
-    * same no-silent-fallthrough posture as the mode-string confs). */
+  /** Boolean conf with a strict parse: only literal true|false, never a
+    * silent fall-through to the default. */
   def bool(spark: SparkSession, key: String, default: => Boolean): Boolean =
     spark.conf.getOption(key).map { raw =>
       raw.trim.toLowerCase match {
@@ -107,7 +107,7 @@ object GraftConf {
     * push GiB-scale broadcasts into small executors on clusters where
     * executors < driver/16. The derived default is logged once per key
     * per session so a heap-dependent regime flip is greppable, exactly
-    * like the IVF orientation log; set the conf explicitly to pin the
+    * like the `graft.gate` decision lines; set the conf explicitly to pin the
     * plan shape across environments.
     */
   def broadcastBytes(spark: SparkSession): Long = {
@@ -161,56 +161,6 @@ object GraftConf {
     v
   }
 
-  /** Corpus-byte budget under which [[graft.operators.Similarity.ivfSearch]]
-    * REPLICATES the decoded packed index to every executor (one torrent
-    * broadcast of primitive arrays) and probes entirely map-side: no
-    * probe-stream exchange (the per-(list, salt) query pack moved
-    * ~nprobe × queryBytes — 73 GB at the 1M-doc corpus-as-queries shape)
-    * and no global top-k window shuffle (each query's final top-k is
-    * computed where its row already sits). This is the standard
-    * replicated-small-index ANN tier; past the budget the existing
-    * per-query / cross-block orientations remain the distributed path.
-    * Defaults to [[broadcastBytes]] (the same executor-heap-derived
-    * budget — the decoded arrays live on every executor). `0` disables.
-    */
-  def annReplicateIndexBytes(spark: SparkSession): Long = {
-    val v = long(spark, "spark.graft.ann.replicateIndexBytes", broadcastBytes(spark))
-    require(v >= 0, s"spark.graft.ann.replicateIndexBytes must be >= 0, got $v")
-    v
-  }
-
-  /** Scoring regime of the REPLICATED probe orientation
-    * (`spark.graft.ann.probeInt8` = true | false | auto, default AUTO):
-    * whether the broadcast index copy is int8-quantized (the
-    * scalar-quantizer scan: 4× smaller resident index, 16-lane integer
-    * SIMD dot). Cosine is per-vector scale-invariant, so each vector
-    * quantizes independently (`quantize_i8` math exactly). The quantized
-    * scan selects a SHORTLIST only (`rerankFactor`·k per query, floor
-    * relaxed by the quantization margin); the emitted scores and the
-    * `minCosine` filter are EXACT — an in-operator float rerank of the
-    * shortlist, same recipe as the PQ routes. Approximation therefore
-    * lives only in shortlist membership (recall spec-gated ≥ its float
-    * twin's gate).
-    *
-    *   - `auto` (default): replicate the float copy while it fits the
-    *     resident budget (bench/driver plans unchanged — bit-identical
-    *     float path); when only the int8 copy fits, replicate quantized
-    *     instead of falling to the distributed orientations (measured
-    *     3.2× faster at equal recall, sf20 AND sf40).
-    *   - `true`: always score the replicated probe quantized (the A/B
-    *     knob the scale measurements use).
-    *   - `false`: never quantize — float-or-distributed only.
-    */
-  def annProbeInt8Mode(spark: SparkSession): String =
-    spark.conf.getOption("spark.graft.ann.probeInt8") match {
-      case None => "auto"
-      case Some(raw) => raw.trim.toLowerCase match {
-        case m @ ("true" | "false" | "auto") => m
-        case other => throw new IllegalArgumentException(
-          s"conf spark.graft.ann.probeInt8 must be true|false|auto, got '$other'")
-      }
-    }
-
   /** Per-search generic-id corpus audit
     * (`spark.graft.ann.auditGenericIdsPerSearch`, default false): the
     * corpus-side surrogate-collision audit (countDistinct(surrogate) ==
@@ -223,34 +173,6 @@ object GraftConf {
     */
   def annAuditGenericIdsPerSearch(spark: SparkSession): Boolean =
     bool(spark, "spark.graft.ann.auditGenericIdsPerSearch", default = false)
-
-  /** What the int8 replicated probe EMITS
-    * (`spark.graft.ann.probeRerank` = exact | off, default exact):
-    *
-    *   - `exact`: the approximate scan only selects a shortlist
-    *     (`rerankFactor`·k, floor relaxed by the quantization margin);
-    *     an in-operator float rerank re-scores it, so emitted cosines
-    *     and the `minCosine` filter are exact. Costs one corpus-join
-    *     pass over the shortlist (~rerankFactor·k rows/query).
-    *   - `off`: emit the approximate scores directly (~1e-2 error)
-    *     with `minCosine` applied to the APPROXIMATE
-    *     score — the right mode when the caller reranks exactly
-    *     downstream anyway (the q204 composition), where the in-operator
-    *     rerank would be a redundant second pass.
-    *
-    * Callers that provably rerank downstream pass the decision in code
-    * (`ivfSearch(quantizedRerank = Some(false))`), which wins over this
-    * conf.
-    */
-  def annProbeRerank(spark: SparkSession): String =
-    spark.conf.getOption("spark.graft.ann.probeRerank") match {
-      case None => "exact"
-      case Some(raw) => raw.trim.toLowerCase match {
-        case m @ ("exact" | "off") => m
-        case other => throw new IllegalArgumentException(
-          s"conf spark.graft.ann.probeRerank must be exact|off, got '$other'")
-      }
-    }
 
   /** Shortlist overfetch of the int8 replicated probe: the
     * approximate scan keeps `rerankFactor`·k candidates per query for the

@@ -2460,56 +2460,14 @@ object Queries {
     // distortion slack: candidates whose hashed cosine is below it are
     // essentially never true ≥0.8 pairs, so the index prunes them
     // before ranking (the recall gate in spec is the safety net)
-    // IVF geometry scales with the corpus: ~sqrt(n) centroids (the
-    // standard IVF sizing — 22 lists at sf0.01's 500 docs, 71 at
-    // sf0.1's 5 000), so nprobe=8 scans ~1/9 of the corpus at sf0.1
-    // instead of the 1/2 a fixed 16-list codebook forces, and a small
-    // corpus is never oversharded into lists too thin to recall from.
     // the QUERY side needs the same fan-out as the build side: the
     // staged embedding parquet reads back as one partition, and the
     // per-query probe-list expression (interpreted HOF over the inlined
     // codebook) would otherwise evaluate in a single task (~3 s here)
-    val nVecs = emb.count()
-    val nLists = math.max(4, math.round(math.sqrt(nVecs.toDouble)).toInt)
-    // nprobe sized for the recall gate ON THIS CORPUS: template-dense
-    // near-dup text spreads true ≥0.8 neighbors across lists, so the
-    // gate needs a substantial probe fraction — but the fraction SHRINKS
-    // as the geometry gets finer (the standard IVF scaling story: at a
-    // fixed nprobe/nLists ratio, more lists localize each neighborhood
-    // better, so recall at 2/8 rises with corpus size). Measured on this
-    // corpus: 22 lists (500 docs) → recall 0.943 @ 3/8, 0.924 @ 2/8;
-    // 71 lists (5 000 docs) → 0.985 @ 3/8, 0.969 @ 2/8. Policy: 2/8
-    // once the geometry is fine enough (≥32 lists ⇒ ≥1 024 vectors),
-    // 3/8 below it — every SF holds the 0.9 spec gate with margin, and
-    // the probe scan (the dominant stage) drops by a third at bench
-    // scale. Extra Lloyd iterations do NOT buy recall here (measured
-    // 0.924 @ 1 iter → 0.908 @ 5: tighter centroids split near-dup
-    // neighborhoods across list boundaries), so training stays at 1.
-    // `spark.graft.ann.nprobeNum` overrides the numerator (probe
-    // nprobeNum/8 of the lists) for corpora with different dispersion.
-    val nprobeNum = confInt(spark, "spark.graft.ann.nprobeNum",
-      if (nLists >= 32) 2 else 3)
-    // the fraction policy alone (nprobeNum/8 of the lists) holds the
-    // probe FRACTION constant — probe work per query would grow linearly
-    // with the corpus and the whole search quadratically, which the
-    // sf1-shape decade measurement exposed. Past ~2.2·√nLists the count
-    // caps, so probed lists grow ~√nLists while list width grows
-    // ~√n/√nLists: probe work per query ≈ O(√n·√√n), total ~n^1.25 —
-    // the standard IVF story (finer geometry localizes neighborhoods, so
-    // the recall-holding fraction SHRINKS). Measured on this corpus:
-    // recall 0.95+ at every SF the fraction rule governs (≤71 lists,
-    // where the cap is not binding) and 0.9512 at the sf1 shape (224
-    // lists, capped at 33 probes = 15% of lists vs 25% uncapped).
-    // `spark.graft.ann.nprobeCapFactor` is the cap's multiplier (default
-    // 1.1): measured recall at the sf1 shape is 0.9512 against the 0.9
-    // spec gate — a thin margin that tightens at larger, unmeasured SFs
-    // since the cap shrinks the probed FRACTION as the corpus grows.
-    // Raise it (no code change) if a recall check at the next SF tier
-    // dips toward the gate.
-    val capFactor = graft.GraftConf.double(spark,
-      "spark.graft.ann.nprobeCapFactor", 1.1)
-    val nprobe = math.max(8, math.min((nprobeNum * nLists + 7) / 8,
-      math.ceil(capFactor * nprobeNum * math.sqrt(nLists.toDouble)).toInt))
+    val (nLists, nprobe) = graft.operators.Similarity.ivfAutoGeometry(spark, emb.count())
+    // extra Lloyd iterations do NOT buy recall here (measured 0.924 @ 1
+    // iter → 0.908 @ 5: tighter centroids split near-dup neighborhoods
+    // across list boundaries), so training stays at 1
     val shortlist = graft.operators.Similarity
       .ivfSearch(graft.operators.Similarity
           .ivfBuild(emb.repartition(fanout), numCentroids = nLists,

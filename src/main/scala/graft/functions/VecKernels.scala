@@ -54,7 +54,7 @@ object VecKernels {
 
   /** Normalized + validated mode resolution: `OFF`/` Off ` count as `off`
     * (an env-var typo must not silently re-enable SIMD — the same strict
-    * posture as `spark.graft.ann.probeInt8`), and anything outside
+    * posture as [[graft.GraftConf.bool]]), and anything outside
     * {auto, off, scalar} fails fast at class-load with the valid set
     * named rather than falling through to the auto path. */
   private[graft] def resolveMode(raw: String): String = {

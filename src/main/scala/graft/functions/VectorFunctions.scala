@@ -752,7 +752,7 @@ object VectorFunctions {
 
   /** Global top-`k` of one query against MANY decoded chunks — the
     * replicated-index probe kernel ([[graft.operators.Similarity]]'s
-    * REPLICATED orientation). Arithmetic is EXACTLY [[blockTopK]]'s
+    * replicated float probe). Arithmetic is EXACTLY [[blockTopK]]'s
     * (double accumulation, min-length, 0.0 on zero norms, self-match
     * excluded, floor inside the scan). The insertion order is the full
     * (cosine desc, id asc) total order — the id tie-break is explicit
@@ -805,9 +805,9 @@ object VectorFunctions {
     (topIds, topScores, size)
   }
 
-  /** A [[DecodedBlock]] quantized to int8 — the REPLICATED orientation's
-    * optional scalar-quantizer index copy (spark.graft.ann.probeInt8):
-    * 4× smaller resident arrays, 16-lane integer SIMD dots. Each vector
+  /** A [[DecodedBlock]] quantized to int8 — the replicated probe's
+    * scalar-quantizer index copy, taken when only the int8 copy fits the
+    * replicate budget (spark.graft.ann.replicateIndexBytes): 4× smaller resident arrays, 16-lane integer SIMD dots. Each vector
     * quantizes independently with the `quantize_i8` expression's exact
     * math (cosine is per-vector scale-invariant); norms precompute at
     * quantize time like [[decodeBlock]]'s.

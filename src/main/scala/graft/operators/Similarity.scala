@@ -294,13 +294,35 @@ object Similarity extends org.apache.spark.internal.Logging {
     }
   }
 
-  /** √n IVF geometry with the capped probe fraction — the policy measured
-    * and documented at the q204 call site ([[graft.Queries.annTopkTfidf]]):
-    * ~√n lists (never oversharding a small corpus below 4); probe
-    * `spark.graft.ann.nprobeNum`/8 of them (2/8 once the geometry is fine
-    * enough, 3/8 below ≥32 lists), capped at
-    * ~`nprobeCapFactor`·nprobeNum·√nLists so probed work per query stays
-    * sublinear as the corpus grows.
+  /** √n IVF geometry with the capped probe fraction, measured on q204's
+    * corpus ([[graft.Queries.annTopkTfidf]]: template-dense near-dup
+    * text, hashed tf-idf vectors, 0.9 recall gate in spec).
+    *
+    *   - ~√n lists (the standard IVF sizing — 22 lists at sf0.01's 500
+    *     docs, 71 at sf0.1's 5 000), never oversharding a small corpus
+    *     below 4 lists too thin to recall from.
+    *   - Probe `spark.graft.ann.nprobeNum`/8 of them: 2/8 once the
+    *     geometry is fine enough (≥32 lists ⇒ ≥1 024 vectors), 3/8
+    *     below it. Near-dup text spreads true ≥0.8 neighbors across
+    *     lists, so the gate needs a substantial probe fraction — but the
+    *     fraction SHRINKS as the geometry gets finer (more lists localize
+    *     each neighborhood better). Measured: 22 lists → recall 0.943 @
+    *     3/8, 0.924 @ 2/8; 71 lists → 0.985 @ 3/8, 0.969 @ 2/8. Every SF
+    *     holds the gate with margin, and the probe scan (the dominant
+    *     stage) drops by a third at bench scale.
+    *   - Cap at ~`nprobeCapFactor`·nprobeNum·√nLists (default 1.1). The
+    *     fraction rule alone holds the probe FRACTION constant, so probe
+    *     work per query would grow linearly with the corpus and the whole
+    *     search quadratically (the sf1-shape decade measurement exposed
+    *     it). Capped, probed lists grow ~√nLists while list width grows
+    *     ~√n/√nLists: per-query work ≈ O(√n·√√n), total ~n^1.25.
+    *     Measured: recall 0.95+ wherever the fraction rule governs (≤71
+    *     lists, cap not binding) and 0.9512 at the sf1 shape (224 lists,
+    *     capped at 33 probes = 15% of lists vs 25% uncapped) — a thin
+    *     margin that tightens at larger, unmeasured SFs since the cap
+    *     shrinks the probed fraction as the corpus grows. Raise the factor
+    *     (no code change) if a recall check at the next SF tier dips
+    *     toward the gate.
     */
   def ivfAutoGeometry(spark: SparkSession, nVecs: Long): (Int, Int) = {
     val nLists = math.max(4, math.round(math.sqrt(nVecs.toDouble)).toInt)
@@ -679,50 +701,36 @@ object Similarity extends org.apache.spark.internal.Logging {
       .otherwise(raise_error(concat(
         lit("ivfSearch: query vector length "), size(col(vecCol)).cast("string"),
         lit(s" != index dim $indexDim"))))
-    // REPLICATED orientation: while the decoded index fits the
+    // Replicated probe: while the decoded index fits the
     // executor-heap-derived budget, broadcast it whole and probe entirely
     // map-side — no probe-stream exchange (the cross-block query pack
     // moves ~nprobe × queryBytes: 73 GB at the 1M-doc corpus-as-queries
     // shape) and no global top-k window shuffle (each query's final
     // top-k is computed where its row sits, by the same total order).
-    // Stats-estimated corpus bytes, BigInt like the copy gate: an
-    // unknown-stats plan reads as huge and lands on the distributed
-    // path — the safe direction. Ids are i64 HERE by construction: the
-    // generic-id branch above mapped any other id type onto the xxhash64
-    // surrogate, so the former non-long-id skip is retired — every
-    // orientation is id-type-agnostic from the caller's seat.
+    // The budget gates what RESIDES on every executor, one rung per
+    // scoring: the float arrays (dim·4B + id + double norm per vector),
+    // then the int8 copy (dim·1B + id + long norm — a corpus up to ~4×
+    // over the float budget still replicates quantized). Estimates clamp
+    // at Long.MaxValue, so an unknown-stats plan reads as huge and lands
+    // on the distributed path — the safe direction.
     val spark = queries.sparkSession
-    val vecWidth = index.centroids.head._2.length.toLong * 4L + 24L
-    def estRows(df: DataFrame): BigInt = estRowsHonest(df, vecWidth)._1
-    val replicateBytes = graft.GraftConf.annReplicateIndexBytes(spark)
-    // the budget gates what RESIDES on every executor: the float arrays
-    // (dim·4B + id + norm per vector), the int8 copy (dim·1B + id + long
-    // norm — a corpus up to ~4× over the float budget still replicates
-    // quantized). estRows keeps the FLOAT width (it estimates rows from
-    // float-table bytes). The decision itself is a pure function
-    // ([[replicatedDecision]]) so every branch — including the skips —
-    // is unit-testable, and EVERY outcome logs (the greppability rule:
-    // a silent regime flip cost a diagnosis session at sf20).
-    val (corpusRowsEst, corpusRowsSrc) = estRowsHonest(index.assigned, vecWidth)
-    logInfo(s"ivf probe scan: corpus rows ~ $corpusRowsEst via $corpusRowsSrc")
-    replicatedDecision(
-      estRows = corpusRowsEst, dim = indexDim, floatWidth = vecWidth,
-      budget = replicateBytes,
-      broadcastEligible = maxBroadcastQueries > 0L,
-      int8Mode = graft.GraftConf.annProbeInt8Mode(spark)) match {
-      case Right((scoring, why)) =>
-        val rerank = quantizedRerank.getOrElse(
-          graft.GraftConf.annProbeRerank(spark) == "exact")
-        logInfo(s"ivf probe scan: REPLICATED orientation, $scoring scoring ($why; " +
-          "index broadcast whole, zero probe exchange" +
-          (if (scoring == "float") ""
-           else if (rerank) "; exact shortlist rerank"
-           else "; APPROXIMATE scores, rerank off") + ")")
-        return ivfSearchReplicated(index, queries, checkedVec, k, nprobe,
-          idCol, vecCol, minCosine, blockRows, scoring, rerank)
-      case Left(reason) =>
-        logInfo(s"ivf probe scan: distributed orientations ($reason)")
-    }
+    val vecWidth = indexDim.toLong * 4L + 24L
+    val (corpusRows, corpusSrc) = estRowsHonest(index.assigned, vecWidth)
+    def replicate(scoring: String, width: Long, regimes: (String, String)): Boolean =
+      graft.GraftConf.gate(spark, s"ivfSearch replicate $scoring", regimes,
+          "spark.graft.ann.replicateIndexBytes", graft.GraftConf.broadcastBytes(spark),
+          corpusSrc)((corpusRows * width).min(Long.MaxValue).toLong)
+    if (maxBroadcastQueries <= 0L)
+      logInfo("ivf probe scan: replicate ladder skipped " +
+        "(maxBroadcastQueries <= 0 pins the no-broadcast shuffle plan)")
+    else if (replicate("float", vecWidth, ("replicated", "declined")))
+      return ivfSearchReplicated(index, queries, checkedVec, k, nprobe,
+        idCol, vecCol, minCosine, blockRows, corpusRows, corpusSrc,
+        int8 = false, rerank = false)
+    else if (replicate("int8", indexDim + 40L, ("replicated", "distributed")))
+      return ivfSearchReplicated(index, queries, checkedVec, k, nprobe,
+        idCol, vecCol, minCosine, blockRows, corpusRows, corpusSrc,
+        int8 = true, rerank = quantizedRerank.getOrElse(true))
 
     // per query: the nprobe nearest centroid lists (scan-local as well).
     val probes = queries.select(col(idCol).as("query_id"), checkedVec.as("query_vec"),
@@ -761,7 +769,7 @@ object Similarity extends org.apache.spark.internal.Logging {
         // partitioning (clustering on a superset of the partition keys
         // adds no exchange).
         packLists(pruneToProbed(index.assigned), blockRows,
-            index.centroids.length, indexDimOf(index).toLong * 4L + 24L)
+            index.centroids.length, vecWidth)
           .select(col("list_id"), col("block"))
     }
 
@@ -771,8 +779,7 @@ object Similarity extends org.apache.spark.internal.Logging {
     // block plan is the packed index, not the query batch.
     val packedSide =
       if (maxBroadcastQueries <= 0L) packed
-      else maybeBroadcastBytes(packed, index.assigned,
-        index.centroids.head._2.length)
+      else maybeBroadcastBytes(packed, index.assigned, indexDim)
     // Two probe-scan orientations, gated on the BLOB-COPY volume.
     // Catalyst BinaryType access COPIES the blob out of its (broadcast)
     // row on EVERY evaluation (UnsafeRow.getBinary), so the one-row-per-
@@ -784,45 +791,38 @@ object Similarity extends org.apache.spark.internal.Logging {
     // NOT fix it — every access yields a fresh array, so it never hits;
     // measured 2.9× worse.)
     //
-    // CROSS-BLOCK orientation: pack the PROBING QUERIES per (list,
+    // The cross-block probe: pack the PROBING QUERIES per (list,
     // salt) and join packed-queries × packed-chunks — each row decodes
     // two blobs once and scores |qblock| × |chunk| pairs per copy, so
     // the scan is compute-bound (sf5 shape: 300 s → 114 s, identical
     // rows). Its cost is one explicit exchange of the probe stream
     // (fan-out-pinned, AQE-exempt — the band-join lesson) plus the pack
     // aggregation, a fixed ~1 s that the small-scale path should not
-    // pay: below the copy-bytes gate the per-query orientation stays.
+    // pay: below the copy-bytes gate the per-query probe stays.
     // The salt bounds one cross row's work so a dense list cannot
     // serialize the scan. Kernel arithmetic and ordering are EXACTLY
     // the flat join's in both orientations (spec-pinned bit-identical),
     // so the per-chunk → global-window cascade is unchanged.
-    // expected probe rows from Catalyst stats (no job). The arithmetic
-    // stays in BigInt end-to-end: when a plan has no stats Catalyst
-    // reports sizeInBytes = defaultSizeInBytes (effectively Long.MaxValue),
-    // so estQueryRows ≈ 2e15 and a Long product estProbeRows × estListRows
-    // × vecWidth WRAPS past Long.MaxValue to an arbitrary-sign value —
-    // silently flipping this gate to the per-query (copy-amplified)
-    // orientation at exactly the largest scales. BigInt cannot wrap, and
-    // an unknown-stats plan then lands on the cross-block side — the
+    // Expected probe rows come from Catalyst stats (no job). The
+    // arithmetic stays in BigInt until the gate clamps it: when a plan
+    // has no stats Catalyst reports sizeInBytes = defaultSizeInBytes
+    // (effectively Long.MaxValue), so estQueryRows ≈ 2e15 and a Long
+    // product estProbeRows × estListRows × vecWidth would WRAP to an
+    // arbitrary-sign value — silently picking the per-query
+    // (copy-amplified) orientation at exactly the largest scales. An
+    // unknown-stats plan lands on the cross-block side instead — the
     // direction that is safe to be wrong in (a fixed ~1 s exchange+pack
     // overhead, vs TBs of memcpy the other way).
-    val estQueryRows = estRows(queries)
+    val (estQueryRows, querySrc) = estRowsHonest(queries, vecWidth)
     val nLists = math.max(1, index.centroids.size)
-    val estListRows = (corpusRowsEst / nLists + 1).min(BigInt(blockRows.toLong))
     val estProbeRows = estQueryRows * nprobe
-    val estCopyBytes = estProbeRows * estListRows * vecWidth
-    val copyGate = graft.GraftConf.long(spark,
-      "spark.graft.ann.probeCopyBytes", 16L << 30)
-    // log the orientation like the packed-side broadcast decision: a
-    // silently wrong stats estimate would otherwise flip the plan with
-    // nothing to grep for
-    if (estCopyBytes <= copyGate)
-      logInfo(s"ivf probe scan: PER-QUERY orientation (est copy ${estCopyBytes} B" +
-        s" <= gate ${copyGate} B; ~$estProbeRows probe rows × $estListRows-row chunks)")
-    else
-      logInfo(s"ivf probe scan: CROSS-BLOCK orientation (est copy ${estCopyBytes} B" +
-        s" > gate ${copyGate} B; ~$estProbeRows probe rows × $estListRows-row chunks)")
-    val perChunk = if (estCopyBytes <= copyGate) {
+    val perQuery = graft.GraftConf.gate(spark, "ivfSearch probe", ("per-query", "cross-block"),
+        "spark.graft.ann.probeCopyBytes", 16L << 30,
+        s"query rows from $querySrc × corpus rows from $corpusSrc") {
+      val estListRows = (corpusRows / nLists + 1).min(BigInt(blockRows.toLong))
+      (estProbeRows * estListRows * vecWidth).min(Long.MaxValue).toLong
+    }
+    val perChunk = if (perQuery) {
       probes
         .join(packedSide, Seq("list_id"))
         .select(col("query_id"),
@@ -947,22 +947,6 @@ object Similarity extends org.apache.spark.internal.Logging {
         col("cosine"), col("rk"))
   }
 
-  /** The REPLICATED probe orientation: the whole packed index, decoded
-    * ONCE driver-side into primitive arrays, rides a torrent broadcast;
-    * each query row probes its nprobe lists against the broadcast map in
-    * place. Zero exchanges downstream of the query scan: no probe
-    * fan-out, no query pack, no packed-side join, no global top-k window
-    * — the per-query global top-k is computed locally under the exact
-    * (cosine desc, neighbor_id asc) total order the window used
-    * ([[graft.functions.VectorFunctions.replicatedTopK]], arithmetic
-    * bit-identical to the block kernels; equality spec-pinned including
-    * exact-tie ranks). Gated by [[graft.GraftConf.annReplicateIndexBytes]]
-    * — the decoded arrays live on every executor, so the budget is the
-    * same heap-derived broadcast budget; TB-scale indexes keep the
-    * distributed orientations. The blobs come from the persisted packed
-    * artifact when the index carries one (zero pack work per search) and
-    * from one pack pass otherwise.
-    */
   /** Floor relaxation of the int8 shortlist scan: a candidate whose TRUE
     * cosine clears `minCosine` may score up to this much lower under the
     * int8 arithmetic, so the scan keeps everything above
@@ -1056,60 +1040,49 @@ object Similarity extends org.apache.spark.internal.Logging {
     Some(total)
   }.toOption.flatten
 
-  /** The replicated-orientation decision, pure so every branch is
-    * unit-testable (SimilarityGateSpec) — Right((scoring, why)) picks the
-    * replicated probe with that scoring regime, Left(reason) keeps the
-    * distributed orientations. Resident widths per vector: float
-    * dim·4+24 (arrays + id + double norm), int8 dim+40 (bytes + id +
-    * long norm). The probeInt8 mode picks the regime (`auto` tries float
-    * first — bench plans unchanged where the float copy fits — then the
-    * quantized copy).
+  /** The replicated probe: the whole packed index, decoded (float) or
+    * decoded and quantized (int8) ON THE EXECUTORS into primitive arrays,
+    * gathered to the driver and sent out in one torrent broadcast; each
+    * query row probes its nprobe lists against the broadcast map in
+    * place. Zero exchanges downstream of the query scan: no probe
+    * fan-out, no query pack, no packed-side join, no global top-k window
+    * — the per-query global top-k is computed locally under the exact
+    * (cosine desc, neighbor_id asc) total order the window used
+    * ([[graft.functions.VectorFunctions.replicatedTopK]], arithmetic
+    * bit-identical to the block kernels; equality spec-pinned including
+    * exact-tie ranks). [[ivfSearchLongCore]]'s replicate ladder picks the
+    * scoring: the decoded arrays live on every executor, so the budget is
+    * the heap-derived broadcast budget; TB-scale indexes keep the
+    * distributed orientations. The blobs come from the persisted packed
+    * artifact when the index carries one (zero pack work per search) and
+    * from one pack pass otherwise.
+    *
+    * int8 scoring with `rerank` (the default): the quantized copy only
+    * SELECTS a shortlist (rerankFactor·k per query, floor relaxed by the
+    * int8 quantization margin); scores and the minCosine filter are EXACT
+    * via an in-operator float rerank — the same recipe as the PQ search
+    * routes, so taking the int8 rung never changes score semantics, only
+    * shortlist membership (recall spec-gated). Without `rerank` (callers
+    * that provably rerank exactly downstream, e.g. the q204 composition)
+    * the approximate scores — int8 ~1e-2 error — are emitted directly,
+    * with minCosine applied to the approximate score; the in-operator
+    * rerank would be a redundant second pass there (measured sf20: it cost
+    * ~4× the probe kernel before the slim-shortlist/hash-join form below).
     */
-  private[graft] def replicatedDecision(estRows: BigInt, dim: Int,
-                                        floatWidth: Long,
-                                        budget: Long,
-                                        broadcastEligible: Boolean,
-                                        int8Mode: String):
-      Either[String, (String, String)] = {
-    val floatBytes = estRows * floatWidth
-    val i8Bytes = estRows * (dim.toLong + 40L)
-    val b = BigInt(budget)
-    if (!broadcastEligible)
-      Left("maxBroadcastQueries <= 0 pins the no-broadcast shuffle plan")
-    else int8Mode match {
-      case "false" =>
-        if (floatBytes <= b)
-          Right(("float", s"est resident $floatBytes B <= replicate budget $budget B"))
-        else Left(s"float copy est $floatBytes B exceeds replicate budget " +
-          s"$budget B and int8 scoring is disabled (probeInt8=false)")
-      case "true" =>
-        if (i8Bytes <= b)
-          Right(("int8", s"forced by spark.graft.ann.probeInt8=true; est resident " +
-            s"$i8Bytes B <= replicate budget $budget B"))
-        else Left(s"int8 resident copy est $i8Bytes B exceeds replicate budget $budget B")
-      case _ => // auto
-        if (floatBytes <= b)
-          Right(("float", s"est resident $floatBytes B <= replicate budget $budget B"))
-        else if (i8Bytes <= b)
-          Right(("int8", s"auto regime: float copy est $floatBytes B over budget " +
-            s"$budget B but int8 copy est $i8Bytes B fits"))
-        else Left(s"neither float ($floatBytes B) nor int8 ($i8Bytes B) resident " +
-          s"copy fits replicate budget $budget B")
-    }
-  }
-
   private def ivfSearchReplicated(index: IvfIndex, queries: DataFrame,
                                   checkedVec: org.apache.spark.sql.Column,
                                   k: Int, nprobe: Int, idCol: String,
                                   vecCol: String, minCosine: Option[Double],
-                                  blockRows: Int,
-                                  scoring: String, rerank: Boolean): DataFrame = {
+                                  blockRows: Int, corpusRows: BigInt,
+                                  corpusSrc: String,
+                                  int8: Boolean, rerank: Boolean): DataFrame = {
     import graft.functions.VectorFunctions
     val spark = queries.sparkSession
+    val dim = indexDimOf(index).toLong
     val packedDf = index.packed match {
       case Some(pre) => pre.select(col("list_id"), col("block"))
       case None => packLists(index.assigned, blockRows,
-          index.centroids.length, indexDimOf(index).toLong * 4L + 24L)
+          index.centroids.length, dim * 4L + 24L)
         .select(col("list_id"), col("block"))
     }
     val floor = minCosine.getOrElse(Double.NegativeInfinity)
@@ -1138,91 +1111,28 @@ object Similarity extends org.apache.spark.internal.Logging {
       }
       byList
     }
-    if (scoring == "float") {
-      val decoded: Array[(Long, VectorFunctions.DecodedBlock)] =
-        packedDf.collect().map { r =>
-          (r.getLong(0), VectorFunctions.decodeBlock(r.getAs[Array[Byte]](1)))
-        }
-      val bc = spark.sparkContext.broadcast(decoded)
-      val ranked = qrows.mapPartitions { it: Iterator[org.apache.spark.sql.Row] =>
-        val byList = groupByList(bc.value)
-        it.flatMap { r =>
-          val qid = r.getLong(0)
-          val q = r.getSeq[Float](1).toArray
-          val lists = r.getSeq[Long](2)
-          val blocks = lists.iterator.flatMap { l =>
-            val b = byList.get(l)
-            if (b == null) Iterator.empty else b.iterator
-          }
-          val (ids, scores, size) = VectorFunctions.replicatedTopK(
-            qid, q, blocks, k, floor)
-          (0 until size).iterator.map(i =>
-            org.apache.spark.sql.Row(qid, ids(i), scores(i), i + 1))
-        }
-      }(org.apache.spark.sql.Encoders.row(outSchema))
-      // the same final projection as the window path: rank BEFORE
-      // rounding, Catalyst round so the emitted doubles are bit-identical
-      return ranked.select(col("query_id"), col("neighbor_id"),
-        round(col("cosine"), 4).as("cosine"), col("rk"))
-    }
-
-    // ---- approximate-scan regime (int8).
-    //
-    // rerank = true (conf default): the quantized copy only SELECTS a
-    // shortlist (rerankFactor·k per query, floor relaxed by the int8
-    // quantization margin); scores and the minCosine filter are EXACT via
-    // an in-operator float rerank — the same recipe as the PQ search
-    // routes, so flipping the regime never changes score semantics, only
-    // shortlist membership (recall spec-gated).
-    //
-    // rerank = false (callers that provably rerank exactly downstream,
-    // e.g. the q204 composition): emit the approximate scores directly —
-    // int8 ~1e-2 error — with minCosine applied to the
-    // approximate score. The in-operator rerank would be a redundant
-    // second pass there (measured sf20: it cost ~4× the probe kernel
-    // before the slim-shortlist/hash-join form below).
-    //
-    // Driver residency: the float blocks are decoded and re-encoded ONE
-    // AT A TIME off a toLocalIterator stream, so the driver never holds
-    // the float index alongside the quantized copy — peak residency is
-    // the quantized arrays + one in-flight partition, not the 4–5×
-    // replicate-budget footprint a whole-collect would pin at exactly
-    // the scale this regime targets.
-    val rerankFactor = graft.GraftConf.annRerankFactor(spark)
-    val kFetch = if (rerank) math.max(k, k * rerankFactor) else k
-    val fetchFloor = if (rerank && minCosine.isDefined) floor - Int8FloorMargin
-                     else floor
     // r18 (guide §5 — the driver should do almost no data work): the
-    // int8 quantize used to run ON THE DRIVER, single-threaded, off a
-    // toLocalIterator stream of FLOAT blobs (one sequential job per
-    // partition, float-width bytes crossing to the driver). The kernel
-    // is a pure per-block function, so it now runs on the executors
-    // (`rdd.map`): when the estimated QUANTIZED
-    // volume fits comfortably under spark.driver.maxResultSize the
-    // blocks come back in ONE parallel collect; past that gate the
-    // stream form remains, but carrying quantized (≤¼-width) bytes with
-    // the decode+quantize work already done executor-side. Outputs are
-    // bit-identical either way (same per-block kernel; block order is
-    // irrelevant — the probe groups blocks by list); the replicated
-    // int8 equality specs pin the results.
-    def quantizedSideBytes(perRowBytes: Long): (BigInt, Boolean) = {
-      val (rows, src) = estRowsHonest(index.assigned,
-        indexDimOf(index).toLong * 4L + 24L)
-      // the last-resort sizeInBytes branch UNDER-reads rows on compressed
-      // data (its own message says so) — an undercount here would select
-      // the single collect and abort on spark.driver.maxResultSize, where
-      // the stream branch always completes (r18 ADVICE). Only the two
-      // exact sources may choose the collect.
-      (rows * perRowBytes, src.startsWith("sizeInBytes"))
-    }
-    def maxResultBytes: Long = org.apache.spark.network.util.JavaUtils
-      .byteStringAsBytes(spark.conf.get("spark.driver.maxResultSize", "1g"))
+    // per-block decode (and int8 quantize) is a pure function, so it runs
+    // on the executors (`rdd.map`), never single-threaded on the driver.
+    // When the estimated gathered volume fits comfortably under
+    // spark.driver.maxResultSize the blocks come back in ONE parallel
+    // collect; past that gate they stream per partition, so the driver
+    // never holds more than the gathered arrays + one in-flight partition.
+    // Outputs are bit-identical either way (same per-block kernel; block
+    // order is irrelevant — the probe groups blocks by list). The
+    // last-resort sizeInBytes row source UNDER-reads rows on compressed
+    // data (its own message says so) — an undercount would select the
+    // single collect and abort on spark.driver.maxResultSize, where the
+    // stream always completes (r18 ADVICE), so only the two exact sources
+    // may choose the collect.
     def gatherBlocks[B: scala.reflect.ClassTag](
         what: String, perRowBytes: Long,
-        f: org.apache.spark.sql.Row => (Long, B)): Array[(Long, B)] = {
-      val rdd = packedDf.select(col("list_id"), col("block")).rdd.map(f)
-      val (est, heuristic) = quantizedSideBytes(perRowBytes)
-      val gate = maxResultBytes / 2
+        f: Array[Byte] => B): Array[(Long, B)] = {
+      val rdd = packedDf.rdd.map(r => (r.getLong(0), f(r.getAs[Array[Byte]](1))))
+      val est = corpusRows * perRowBytes
+      val heuristic = corpusSrc.startsWith("sizeInBytes")
+      val gate = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.driver.maxResultSize", "1g")) / 2
       if (est <= gate && !heuristic) {
         logInfo(s"ivf probe scan: $what on executors, single parallel collect " +
           s"(est $est B <= ${gate} B = maxResultSize/2)")
@@ -1230,8 +1140,7 @@ object Similarity extends org.apache.spark.internal.Logging {
         catch {
           // belt over the gate: if the exact-source estimate still missed
           // (e.g. stride-sampled footers on irregular files), fall back to
-          // the streamed form rather than failing the search — block order
-          // is irrelevant downstream (the probe groups blocks by list)
+          // the streamed form rather than failing the search
           case e: org.apache.spark.SparkException
               if String.valueOf(e.getMessage).contains("maxResultSize") =>
             logWarning(s"ivf probe scan: $what single collect exceeded " +
@@ -1246,30 +1155,47 @@ object Similarity extends org.apache.spark.internal.Logging {
         rdd.toLocalIterator.toArray
       }
     }
-    val quantized: Array[(Long, VectorFunctions.QuantBlock)] =
-      gatherBlocks("int8 quantize", indexDimOf(index).toLong + 48L, r =>
-        (r.getLong(0), VectorFunctions.quantizeBlock(
-          VectorFunctions.decodeBlock(r.getAs[Array[Byte]](1)))))
-    val bcQ = spark.sparkContext.broadcast(quantized)
-    val ranked: DataFrame = qrows.mapPartitions { it: Iterator[org.apache.spark.sql.Row] =>
-      val byList = groupByList(bcQ.value)
-      it.flatMap { r =>
-        val qid = r.getLong(0)
-        val qf = r.getSeq[Float](1).toArray
-        val q = graft.functions.VecKernels.quantizeI8(qf, 0, qf.length)
-        val lists = r.getSeq[Long](2)
-        val blocks = lists.iterator.flatMap { l =>
-          val b = byList.get(l)
-          if (b == null) Iterator.empty else b.iterator
+    // the one probe loop: broadcast the gathered blocks, then score each
+    // query row's probed lists with the scoring's per-query kernel
+    def probe[B: scala.reflect.ClassTag](what: String, perRowBytes: Long,
+        f: Array[Byte] => B)(
+        topK: (Long, Array[Float], Iterator[B]) => (Array[Long], Array[Double], Int)
+        ): DataFrame = {
+      val bc = spark.sparkContext.broadcast(gatherBlocks(what, perRowBytes, f))
+      qrows.mapPartitions { it: Iterator[org.apache.spark.sql.Row] =>
+        val byList = groupByList(bc.value)
+        it.flatMap { r =>
+          val qid = r.getLong(0)
+          val q = r.getSeq[Float](1).toArray
+          val blocks = r.getSeq[Long](2).iterator.flatMap { l =>
+            val b = byList.get(l)
+            if (b == null) Iterator.empty else b.iterator
+          }
+          val (ids, scores, size) = topK(qid, q, blocks)
+          (0 until size).iterator.map(i =>
+            org.apache.spark.sql.Row(qid, ids(i), scores(i), i + 1))
         }
-        val (ids, scores, size) = VectorFunctions.replicatedTopKI8(
-          qid, q, blocks, kFetch, fetchFloor)
-        (0 until size).iterator.map(i =>
-          org.apache.spark.sql.Row(qid, ids(i), scores(i), i + 1))
+      }(org.apache.spark.sql.Encoders.row(outSchema))
+    }
+    val ranked =
+      if (!int8)
+        probe("float decode", dim * 4L + 24L, VectorFunctions.decodeBlock) {
+          (qid, q, blocks) => VectorFunctions.replicatedTopK(qid, q, blocks, k, floor)
+        }
+      else {
+        val kFetch =
+          if (rerank) math.max(k, k * graft.GraftConf.annRerankFactor(spark)) else k
+        val fetchFloor = if (rerank && minCosine.isDefined) floor - Int8FloorMargin
+                         else floor
+        probe("int8 quantize", dim + 48L,
+            b => VectorFunctions.quantizeBlock(VectorFunctions.decodeBlock(b))) {
+          (qid, q, blocks) => VectorFunctions.replicatedTopKI8(qid,
+            graft.functions.VecKernels.quantizeI8(q, 0, q.length), blocks, kFetch, fetchFloor)
+        }
       }
-    }(org.apache.spark.sql.Encoders.row(outSchema))
-    if (!rerank)
-      // approximate direct emission (rank BEFORE rounding, like float)
+    if (!int8 || !rerank)
+      // the same final projection as the window path: rank BEFORE
+      // rounding, Catalyst round so the emitted doubles are bit-identical
       return ranked.select(col("query_id"), col("neighbor_id"),
         round(col("cosine"), 4).as("cosine"), col("rk"))
     // Exact rerank of the SLIM shortlist: (query_id, neighbor_id) rows

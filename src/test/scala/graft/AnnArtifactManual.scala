@@ -29,9 +29,12 @@ import org.apache.spark.sql.expressions.Window
   *   build <sfDir> <artDir>  — tf-idf vector table → <artDir>/vecs,
   *                             IVF index + packed chunk blobs →
   *                             <artDir>/ivf (timed, amortized cost)
-  *   probe <artDir>          — ivfLoad + search + exact rerank + top-k
+  *   probe <artDir> [rerank-off]
+  *                           — ivfLoad + search + exact rerank + top-k
   *                             (timed; THE number — what a steady-state
-  *                             query batch pays), recall vs /exact
+  *                             query batch pays), recall vs /exact;
+  *                             `rerank-off` passes annTopkTfidf's
+  *                             quantizedRerank = Some(false)
   *
   * Geometry mirrors Queries.annTopkTfidf exactly (same ~√n lists, same
   * nprobe policy, same 0.6 hashed floor / 0.8 exact rerank / top-5), so
@@ -50,7 +53,9 @@ object AnnArtifactManual {
     spark.sparkContext.setLogLevel(
       sys.env.getOrElse("SPARK_GRAFT_LOG_LEVEL", "WARN"))
     // same regime injection as graft.Bench (tools/scale_run.md §2) — e.g.
-    // SPARK_GRAFT_CONF="spark.graft.ann.probeInt8=true" for the int8 probe
+    // SPARK_GRAFT_CONF="spark.graft.ann.replicateIndexBytes=<n>" with n
+    // between the int8 and float estimates the graft.gate lines print
+    // for the int8 probe
     sys.env.get("SPARK_GRAFT_CONF").foreach(Bench.parseConfPairs(_).foreach {
       case (k, v) =>
         spark.conf.set(k, v)
@@ -142,13 +147,14 @@ object AnnArtifactManual {
         val nVecs = emb.count()
         val (_, nprobe) = graft.operators.Similarity.ivfAutoGeometry(spark, nVecs)
         val sparse = vecs.select(col("id"), col("ks"), col("vs"))
-        // quantizedRerank stays conf-driven here (default exact) so the
-        // in-operator rerank cost is measurable; the q204 DEPLOYMENT
-        // number mirrors annTopkTfidf's in-code Some(false) by pinning
-        // SPARK_GRAFT_CONF="spark.graft.ann.probeRerank=off" — this
-        // harness reranks exactly at 0.8 over true tf-idf vectors below
+        // the in-operator rerank stays on by default so its cost is
+        // measurable; the q204 DEPLOYMENT number mirrors annTopkTfidf's
+        // in-code Some(false) with `rerank-off` — this harness reranks
+        // exactly at 0.8 over true tf-idf vectors below
+        val rerank = if (args.lift(2).contains("rerank-off")) Some(false) else None
         val shortlist = graft.operators.Similarity
-          .ivfSearch(index, emb, k = 25, nprobe = nprobe, minCosine = Some(0.6))
+          .ivfSearch(index, emb, k = 25, nprobe = nprobe, minCosine = Some(0.6),
+            quantizedRerank = rerank)
           .select(col("query_id").as("doc_id"), col("neighbor_id").as("nbr_id"))
         val reranked = shortlist
           .join(broadcast(sparse.select(col("id").as("doc_id"),

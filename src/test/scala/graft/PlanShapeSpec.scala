@@ -763,4 +763,27 @@ class PlanShapeSpec extends SparkSpec {
       assert(err.getMessage.contains(key), err.getMessage)
     } finally spark.conf.unset(key)
   }
+
+  test("replicated IVF probe: no exchange in the result plan, Spark jobs per call") {
+    val vecs = spark.read.parquet(s"$sf0001/embeddings.parquet")
+    val index = operators.Similarity.ivfBuild(vecs, numCentroids = 4, trainIters = 0)
+    val queries = vecs.filter(col("vec_id") < 20)
+    // (jobs the ivfSearch call starts, jobs its result's action starts)
+    def probe(budget: Long, rerank: Option[Boolean]): (Int, Int) =
+      withConf("spark.graft.ann.replicateIndexBytes" -> budget.toString) {
+        var df: org.apache.spark.sql.DataFrame = null
+        val call = jobsPerCall {
+          df = operators.Similarity.ivfSearch(index, queries, k = 5, nprobe = 2,
+            quantizedRerank = rerank)
+        }
+        val action = jobsPerCall(df.collect())
+        val plan = df.queryExecution.executedPlan.toString
+        assert(!plan.contains("Exchange"), plan)
+        (call, action)
+      }
+    // the call packs the lists and gathers the blocks (the pack's shuffle
+    // stage and the gather collect); the action is the one map-side scan
+    assert(probe(Long.MaxValue, None) == (2, 1), "replicated float")
+    assert(probe(int8OnlyBudget(index), Some(false)) == (2, 1), "replicated int8, rerank off")
+  }
 }

@@ -36,4 +36,14 @@ abstract class SparkSpec extends AnyFunSuite {
       case (k, None) => spark.conf.unset(k)
     }
   }
+
+  /** A `spark.graft.ann.replicateIndexBytes` budget halfway between the
+    * int8 and float resident estimates of `index`'s copy, from the same
+    * row estimate the replicate gate acts on: the float rung declines and
+    * the int8 rung replicates. */
+  def int8OnlyBudget(index: graft.operators.Similarity.IvfIndex): Long = {
+    val dim = index.centroids.head._2.length.toLong
+    val rows = graft.operators.Similarity.estRowsHonest(index.assigned, 4 * dim + 24)._1
+    ((rows * (dim + 40) + rows * (4 * dim + 24)) / 2).toLong
+  }
 }

@@ -426,4 +426,45 @@ class IvfBlockTopKSpec extends SparkSpec {
     // degenerate target cannot divide by zero
     assert(Similarity.crossPackWidth(BigInt(1) << 30, 0L, 16) >= 16)
   }
+
+  test("every ivfSearch regime returns the flat join's rows and logs the gates it took") {
+    val index = Similarity.ivfBuild(emb, numCentroids = 6, trainIters = 1)
+    val queries = emb.filter(col("vec_id") < 30)
+    val n = emb.count()
+    val rep = "spark.graft.ann.replicateIndexBytes"
+    val bq = Similarity.DefaultMaxBroadcastQueries
+    val float = "gate ivfSearch replicate float: "
+    val int8 = "gate ivfSearch replicate int8: "
+    val probe = "gate ivfSearch probe: "
+    // (regime, confs, maxBroadcastQueries, nprobe, the graft.gate lines
+    // it logs, each up to its estimate)
+    val regimes = Seq(
+      ("replicated float", Seq(rep -> Long.MaxValue.toString), bq, 3,
+        Seq(float + "replicated regime (estimate ")),
+      ("per-query", Seq(rep -> "0"), bq, 3,
+        Seq(float + "declined regime (estimate not run",
+          int8 + "distributed regime (estimate not run",
+          probe + "per-query regime (estimate ")),
+      ("cross-block", Seq(rep -> "0", "spark.graft.ann.probeCopyBytes" -> "0"), bq, 3,
+        Seq(float + "declined regime (estimate not run",
+          int8 + "distributed regime (estimate not run",
+          probe + "cross-block regime (estimate not run")),
+      ("no-broadcast", Nil, 0L, 3, Seq(probe + "per-query regime (estimate ")),
+      ("replicated int8", Seq(rep -> int8OnlyBudget(index).toString,
+        "spark.graft.ann.rerankFactor" -> n.toString), bq, 6,
+        Seq(float + "declined regime (estimate ", int8 + "replicated regime (estimate ")))
+    for ((regime, confs, maxBq, nprobe, gates) <- regimes; floor <- Seq(None, Some(0.2))) {
+      val (got, logs) = withConf(confs: _*) {
+        graft.LogCapture("graft.gate") {
+          resultSet(Similarity.ivfSearch(index, queries, k = 5, nprobe = nprobe,
+            maxBroadcastQueries = maxBq, minCosine = floor))
+        }
+      }
+      val flat = resultSet(flatIvfSearch(index, queries, k = 5, nprobe = nprobe,
+        minCosine = floor))
+      assert(got.nonEmpty && got == flat, s"$regime, floor=$floor")
+      assert(logs.size == gates.size && logs.zip(gates).forall { case (l, g) => l.startsWith(g) },
+        s"$regime, floor=$floor: expected gate lines $gates, got $logs")
+    }
+  }
 }

@@ -5,16 +5,18 @@ import graft.operators.Similarity
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The int8-scored replicated probe (spark.graft.ann.probeInt8): the
-  * scalar-quantizer index copy — 4× smaller resident arrays, 16-lane
-  * integer SIMD dots — used to SELECT a shortlist that an in-operator
-  * float rerank rescores exactly. Contracts pinned here:
+/** The int8-scored replicated probe: the scalar-quantizer index copy —
+  * 4× smaller resident arrays, 16-lane integer SIMD dots — used to
+  * SELECT a shortlist that an in-operator float rerank rescores exactly.
+  * Specs reach it with a replicate budget between the int8 and float
+  * resident estimates ([[graft.SparkSpec.int8OnlyBudget]]). Contracts
+  * pinned here:
   *
-  *   - Default is AUTO: with the conf unset and the float copy inside
-  *     the replicate budget, the probe is the bit-identical float path
-  *     (the orientation-equality specs pin that); when only the int8
-  *     copy fits, auto replicates quantized instead of falling to the
-  *     distributed orientations.
+  *   - The replicate ladder: with the float copy inside the replicate
+  *     budget, the probe is the bit-identical float path (the
+  *     regime-equality specs pin that); when only the int8 copy fits, it
+  *     replicates quantized instead of falling to the distributed
+  *     orientations.
   *   - Same output contract (schema, rank 1..k, self-exclusion).
   *   - Deterministic: two int8 runs return identical rows.
   *   - Emitted scores are EXACT (the rerank): every score equals the
@@ -23,8 +25,6 @@ import org.apache.spark.sql.functions._
   *     membership only.
   *   - Quantization error is bounded IN EFFECT: nprobe=all int8 top-k
   *     recalls ≥ 0.8 of the float top-k per query on the real fixture.
-  *   - The pure gate function ([[Similarity.replicatedDecision]])
-  *     covers every branch (the former non-long-id skip is retired: generic ids surrogate-encode before the gate).
   */
 class QuantizedProbeSpec extends SparkSpec {
 
@@ -36,8 +36,7 @@ class QuantizedProbeSpec extends SparkSpec {
   test("int8 probe: same contract, deterministic, self-excluded") {
     val index = Similarity.ivfBuild(emb, numCentroids = 4, trainIters = 1)
     val queries = emb.filter(col("vec_id") < 40)
-    withConf("spark.graft.ann.probeInt8" -> "true",
-             "spark.graft.ann.replicateIndexBytes" -> Long.MaxValue.toString) {
+    withConf("spark.graft.ann.replicateIndexBytes" -> int8OnlyBudget(index).toString) {
       val a = Similarity.ivfSearch(index, queries, k = 5, nprobe = 4, minCosine = None)
       assert(a.columns.toSeq == Seq("query_id", "neighbor_id", "cosine", "rk"))
       val r1 = rows(a)
@@ -61,8 +60,8 @@ class QuantizedProbeSpec extends SparkSpec {
       rows(Similarity.ivfSearch(index, queries, k = 5, nprobe = 4, minCosine = None))
         .map(t => (t._1, t._2))
     }
-    val int8 = withConf("spark.graft.ann.probeInt8" -> "true",
-      "spark.graft.ann.replicateIndexBytes" -> Long.MaxValue.toString) {
+    val int8 = withConf(
+      "spark.graft.ann.replicateIndexBytes" -> int8OnlyBudget(index).toString) {
       rows(Similarity.ivfSearch(index, queries, k = 5, nprobe = 4, minCosine = None))
         .map(t => (t._1, t._2))
     }
@@ -75,8 +74,8 @@ class QuantizedProbeSpec extends SparkSpec {
     VectorFunctions.register(spark)
     val index = Similarity.ivfBuild(emb, numCentroids = 2, trainIters = 1)
     val queries = emb.filter(col("vec_id") < 10)
-    val probe = withConf("spark.graft.ann.probeInt8" -> "true",
-      "spark.graft.ann.replicateIndexBytes" -> Long.MaxValue.toString) {
+    val probe = withConf(
+      "spark.graft.ann.replicateIndexBytes" -> int8OnlyBudget(index).toString) {
       Similarity.ivfSearch(index, queries, k = 3, nprobe = 2, minCosine = None)
     }
     // recompute each emitted score with the exact expression; the probe
@@ -104,9 +103,8 @@ class QuantizedProbeSpec extends SparkSpec {
       rows(Similarity.ivfSearch(index, queries, k = 5, nprobe = 2,
         minCosine = Some(0.2)))
     }
-    val int8 = withConf("spark.graft.ann.probeInt8" -> "true",
-      "spark.graft.ann.rerankFactor" -> n.toString,
-      "spark.graft.ann.replicateIndexBytes" -> Long.MaxValue.toString) {
+    val int8 = withConf("spark.graft.ann.rerankFactor" -> n.toString,
+      "spark.graft.ann.replicateIndexBytes" -> int8OnlyBudget(index).toString) {
       rows(Similarity.ivfSearch(index, queries, k = 5, nprobe = 2,
         minCosine = Some(0.2)))
     }
@@ -123,38 +121,28 @@ class QuantizedProbeSpec extends SparkSpec {
     // the same honest estimate the gate itself acts on (r17: footer row
     // counts, not compressed sizeInBytes / decoded width)
     val rows = Similarity.estRowsHonest(index.assigned, vecWidth)._1
-    // a budget BETWEEN the int8 and float resident estimates
-    val budget = ((rows * i8Width + rows * vecWidth) / 2).toString
-    def planOf(mode: String): String = {
-      val confs = Seq("spark.graft.ann.replicateIndexBytes" -> budget,
-        "spark.graft.ann.probeInt8" -> mode)
-      withConf(confs: _*) {
+    def planOf(budget: BigInt): String =
+      withConf("spark.graft.ann.replicateIndexBytes" -> budget.toString) {
         val df = Similarity.ivfSearch(index, queries, k = 3, nprobe = 2, minCosine = None)
         df.collect()
         df.queryExecution.executedPlan.toString
       }
-    }
-    val distributed = planOf("false")
+    // below the int8 resident estimate neither copy fits
+    val distributed = planOf(rows * i8Width - 1)
     assert(distributed.contains("ivf_block_topk") || distributed.contains("block_cross_topk"),
-      "probeInt8=false over the float budget should land on a distributed orientation")
-    val replicated = planOf("true")
+      "a budget under both resident copies should land on a distributed orientation")
+    // a budget BETWEEN the int8 and float resident estimates
+    val replicated = planOf(int8OnlyBudget(index))
     assert(!replicated.contains("ivf_block_topk") && !replicated.contains("block_cross_topk"),
       "int8 resident copy fits the same budget and must replicate")
-    // AUTO takes the int8 replication in the same spot — and returns the
-    // same rows as the forced regime
-    val auto = planOf("auto")
-    assert(!auto.contains("ivf_block_topk") && !auto.contains("block_cross_topk"),
-      "auto regime must replicate quantized when only the int8 copy fits")
   }
 
   test("auto regime keeps the float path where the float copy fits") {
     val index = Similarity.ivfBuild(emb, numCentroids = 4, trainIters = 1)
     val queries = emb.filter(col("vec_id") < 20)
-    val unset = withConf(
-      "spark.graft.ann.replicateIndexBytes" -> Long.MaxValue.toString) {
-      rows(Similarity.ivfSearch(index, queries, k = 5, nprobe = 4, minCosine = None))
-    }
-    val float = withConf("spark.graft.ann.probeInt8" -> "false",
+    // the default replicate budget fits this corpus's float copy
+    val unset = rows(Similarity.ivfSearch(index, queries, k = 5, nprobe = 4, minCosine = None))
+    val float = withConf(
       "spark.graft.ann.replicateIndexBytes" -> Long.MaxValue.toString) {
       rows(Similarity.ivfSearch(index, queries, k = 5, nprobe = 4, minCosine = None))
     }
@@ -162,46 +150,16 @@ class QuantizedProbeSpec extends SparkSpec {
       "default (auto) drifted from the float path despite the float copy fitting")
   }
 
-  test("the pure gate covers every branch; the non-long-id skip is retired") {
-    import Similarity.replicatedDecision
-    val rows = BigInt(1000)
-    val dim = 64
-    val floatW = dim.toLong * 4 + 24
-    def d(budget: Long, mode: String = "auto", eligible: Boolean = true) =
-      replicatedDecision(rows, dim, floatW, budget = budget,
-        broadcastEligible = eligible, int8Mode = mode)
-    val floatBytes = (rows * floatW).toLong
-    val i8Bytes = (rows * (dim + 40)).toLong
-    // auto ladder: float → int8 → distributed
-    assert(d(floatBytes) == Right(("float",
-      s"est resident $floatBytes B <= replicate budget $floatBytes B")))
-    assert(d(i8Bytes).exists(_._1 == "int8"))
-    assert(d(i8Bytes - 1).isLeft, "auto must not replicate below the int8 width")
-    // forced modes
-    assert(d(i8Bytes, mode = "true").exists(_._1 == "int8"))
-    assert(d(floatBytes, mode = "true").exists(_._1 == "int8"),
-      "probeInt8=true quantizes even where float fits (the A/B knob)")
-    assert(d(i8Bytes, mode = "false").isLeft,
-      "probeInt8=false must never replicate quantized")
-    // skip reasons are named (greppable); the former non-long-id skip is
-    // RETIRED — generic ids map onto the i64 surrogate before the gate,
-    // so the decision no longer depends on the caller's id type
-    val noBc = d(floatBytes, eligible = false)
-    assert(noBc.isLeft && noBc.swap.exists(_.contains("maxBroadcastQueries")))
-  }
-
-  test("probeRerank=off emits approximate scores deterministically (the q204 contract)") {
+  test("rerank off emits approximate scores deterministically (the q204 contract)") {
     VectorFunctions.register(spark)
     val index = Similarity.ivfBuild(emb, numCentroids = 2, trainIters = 1)
     val queries = emb.filter(col("vec_id") < 20)
-    assert(graft.GraftConf.annProbeRerank(spark) == "exact", "default must stay exact")
-    val off = withConf("spark.graft.ann.probeInt8" -> "true",
-      "spark.graft.ann.probeRerank" -> "off",
-      "spark.graft.ann.replicateIndexBytes" -> Long.MaxValue.toString) {
+    val off = withConf(
+      "spark.graft.ann.replicateIndexBytes" -> int8OnlyBudget(index).toString) {
       val r1 = rows(Similarity.ivfSearch(index, queries, k = 5, nprobe = 2,
-        minCosine = None))
+        minCosine = None, quantizedRerank = Some(false)))
       val r2 = rows(Similarity.ivfSearch(index, queries, k = 5, nprobe = 2,
-        minCosine = None))
+        minCosine = None, quantizedRerank = Some(false)))
       assert(r1 == r2, "off-mode probe is not deterministic")
       r1
     }
@@ -216,19 +174,9 @@ class QuantizedProbeSpec extends SparkSpec {
       .agg(max(col("err"))).head().getDouble(0)
     assert(maxErr <= Similarity.Int8FloorMargin,
       f"off-mode score error $maxErr%.4f exceeds the documented margin")
-    // a malformed value fails naming the conf
-    withConf("spark.graft.ann.probeRerank" -> "none") {
-      val e = intercept[IllegalArgumentException](graft.GraftConf.annProbeRerank(spark))
-      assert(e.getMessage.contains("probeRerank"))
-    }
   }
 
-  test("conf default is auto and a malformed value fails naming the conf") {
-    assert(graft.GraftConf.annProbeInt8Mode(spark) == "auto")
-    withConf("spark.graft.ann.probeInt8" -> "yes") {
-      val e = intercept[IllegalArgumentException](graft.GraftConf.annProbeInt8Mode(spark))
-      assert(e.getMessage.contains("spark.graft.ann.probeInt8"))
-    }
+  test("a malformed rerankFactor fails naming the conf") {
     withConf("spark.graft.ann.rerankFactor" -> "0") {
       val e = intercept[IllegalArgumentException](graft.GraftConf.annRerankFactor(spark))
       assert(e.getMessage.contains("rerankFactor"))

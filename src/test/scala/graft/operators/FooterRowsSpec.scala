@@ -82,11 +82,16 @@ class FooterRowsSpec extends SparkSpec {
     val st = index.assigned.queryExecution.optimizedPlan.stats
     val oldEst = st.sizeInBytes / width + 1
     val budget = ((oldEst * width + BigInt(n) * width) / 2).toLong
-    val d = Similarity.replicatedDecision(est, dim, width,
-      budget = budget, broadcastEligible = true, int8Mode = "false")
-    assert(d.isLeft, s"gate admitted the float copy on the honest estimate: $d")
-    assert(Similarity.replicatedDecision(oldEst, dim, width,
-      budget = budget, broadcastEligible = true, int8Mode = "false").isRight,
+    val (_, logs) = withConf("spark.graft.ann.replicateIndexBytes" -> budget.toString) {
+      graft.LogCapture("graft.gate") {
+        Similarity.ivfSearch(index, corpus.filter(col("vec_id") < 5), k = 3, nprobe = 2)
+      }
+    }
+    val float = logs.filter(_.startsWith("gate ivfSearch replicate float:"))
+    assert(float.size == 1 && float.head.contains("declined regime") &&
+      float.head.contains(s"estimate ${est * width} from $src"),
+      s"gate admitted the float copy on the honest estimate: $logs")
+    assert(oldEst * width <= budget,
       "fixture stopped demonstrating the breach (old estimate no longer admits)")
   }
 }

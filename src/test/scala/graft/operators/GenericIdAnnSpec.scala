@@ -52,8 +52,8 @@ class GenericIdAnnSpec extends SparkSpec {
   test("string-id corpus: the int8 regime (the old skip) is green, deterministic, exact-scored") {
     graft.functions.VectorFunctions.register(spark)
     val index = Similarity.ivfBuild(corpus, numCentroids = 2, trainIters = 1)
-    val probe = withConf("spark.graft.ann.probeInt8" -> "true",
-      "spark.graft.ann.replicateIndexBytes" -> Long.MaxValue.toString) {
+    val probe = withConf(
+      "spark.graft.ann.replicateIndexBytes" -> int8OnlyBudget(index).toString) {
       val r1 = rows(Similarity.ivfSearch(index, queries, k = 3, nprobe = 2))
       val r2 = rows(Similarity.ivfSearch(index, queries, k = 3, nprobe = 2))
       assert(r1 == r2, "int8 probe on string ids is not deterministic")

@@ -225,6 +225,28 @@ class PrefixJoinSpec extends SparkSpec {
     assert(recall >= 0.9, f"ANN recall $recall%.4f < 0.9 at sf0.1 (|exact|=${exact.size}, |ann|=${ann.size})")
   }
 
+  test("q204's IVF geometry is ivfAutoGeometry: same lists and probes as its former inline policy") {
+    // the reference: annTopkTfidf's inline geometry before it called
+    // Similarity.ivfAutoGeometry, verbatim (its private confInt is
+    // GraftConf.int)
+    def inline(nVecs: Long): (Int, Int) = {
+      val nLists = math.max(4, math.round(math.sqrt(nVecs.toDouble)).toInt)
+      val nprobeNum = graft.GraftConf.int(spark, "spark.graft.ann.nprobeNum",
+        if (nLists >= 32) 2 else 3)
+      val capFactor = graft.GraftConf.double(spark,
+        "spark.graft.ann.nprobeCapFactor", 1.1)
+      val nprobe = math.max(8, math.min((nprobeNum * nLists + 7) / 8,
+        math.ceil(capFactor * nprobeNum * math.sqrt(nLists.toDouble)).toInt))
+      (nLists, nprobe)
+    }
+    for (sf <- Seq("sf0.001", "sf0.01", "sf0.1")) {
+      val nVecs = spark.read.parquet(s"/root/testdata/$sf/documents.parquet").count()
+      assert(Similarity.ivfAutoGeometry(spark, nVecs) == inline(nVecs), s"$sf: $nVecs vectors")
+    }
+    for (nVecs <- Seq(0L, 1L, 15L, 500L, 1023L, 1024L, 5000L, 50000L, 1000000L))
+      assert(Similarity.ivfAutoGeometry(spark, nVecs) == inline(nVecs), s"$nVecs vectors")
+  }
+
   test("sparse_to_dense accumulates repeated slots (and matches the pre-summed path)") {
     graft.functions.VectorFunctions.register(spark)
     // repeated slot 1 must SUM (0.5 + 0.25), not last-write-win
