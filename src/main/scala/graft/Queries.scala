@@ -4175,16 +4175,16 @@ object Queries {
 
   /** Q205 — opt-in lenient date inference end-to-end (the dateutil-parity
     * gap: reference load_tables_daily.py:104–116 defers to
-    * `dateutil.parser.parse`; the strict pinned list deliberately types
+    * `dateutil.parser.parse`; the strict temporal grammar deliberately types
     * free-form shapes as text). Render o_orderdate into four word-month
     * styles a clinical extract might carry — "March 4th, 2020",
     * "4 of march 2020", "Wed, Mar 4, 2020", "March 4 2020 7:30 pm" —
     * then run the rendered strings through the REAL opt-in path: the
-    * lenient type vote (`LenientTypeVoteAggregator`) followed by
+    * lenient type vote (`inferColumnTypes(lenient = true)`) followed by
     * `TypeInference.narrow(lenient = true)`, whose codegen'd
     * `lenient_temporal_norm` canonicalizes scan-locally before the same
-    * strict cascade. The oracle is round-trip identity (DuckDB reads
-    * o_orderdate directly), so any grammar or cascade failure surfaces
+    * strict grammar. The oracle is round-trip identity (DuckDB reads
+    * o_orderdate directly), so any grammar failure surfaces
     * as a null/hash mismatch rather than a weaker rows-only check. The
     * voted type is date or timestamp depending on which styles the
     * bounded sample saw; both narrow through the identical parse and

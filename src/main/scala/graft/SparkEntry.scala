@@ -3184,7 +3184,7 @@ object SparkEntry {
 
     // q205: the Spark side renders o_orderdate into free-form word-month
     // strings and recovers the day through the lenient grammar + strict
-    // cascade; the oracle is the round-trip identity on the source column
+    // grammar; the oracle is the round-trip identity on the source column
     "q205_lenient_dates" ->
       """SELECT o_orderkey, CAST(o_orderdate AS DATE) AS parsed_day
         |FROM orders ORDER BY o_orderkey""".stripMargin

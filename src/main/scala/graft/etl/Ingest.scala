@@ -2,6 +2,7 @@ package graft.etl
 
 import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
@@ -33,12 +34,43 @@ object Ingest {
     * An explicit schema (rather than inferSchema) keeps this a single pass
     * and defers typing to [[TypeInference.inferAndNarrow]], whose rules
     * (leading-zero IDs, smallint thresholds) differ from Spark's inference.
+    *
+    * The scan is split across the cores: Spark never cuts a file into
+    * splits smaller than `spark.sql.files.openCostInBytes` (4 MiB), so a
+    * daily extract of a few MB would otherwise load as one task. Spark
+    * sizes splits from the conf of the session that built the file
+    * relation, so the relation is built under a private session carrying
+    * a copy of the caller's SQL conf plus a split size of ⌈bytes / cores⌉
+    * (at least [[MinSplitBytes]], at most the caller's
+    * `spark.sql.files.maxPartitionBytes`), and the frame wraps it in the
+    * caller's session: the caller's conf is untouched, and everything
+    * downstream of the scan runs as before. Splitting is safe because the
+    * reader is line-based (no `multiLine`): each split starts at a line
+    * boundary and only the first drops the header.
     */
   def readCsvAllText(spark: SparkSession, path: String): DataFrame = {
     val header = spark.read.option("header", "true").csv(path).schema
     val allText = StructType(header.map(f => StructField(f.name, StringType, nullable = true)))
-    spark.read.option("header", "true").schema(allText).csv(path)
+    val scanSession = spark.newSession()
+    spark.conf.getAll.foreach { case (k, v) => if (scanSession.conf.isModifiable(k)) scanSession.conf.set(k, v) }
+    val relation = scanSession.read.option("header", "true").schema(allText).csv(path)
+      .queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.relation }.get
+    val bytes = relation.asInstanceOf[HadoopFsRelation].location.sizeInBytes
+    val cores = spark.sparkContext.defaultParallelism
+    val maxSplit = scanSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf.filesMaxPartitionBytes
+    scanSession.conf.set("spark.sql.files.maxPartitionBytes",
+      math.min(maxSplit, math.max(MinSplitBytes, (bytes + cores - 1) / cores)))
+    // Spark's split size is min(maxPartitionBytes, max(openCost, (bytes +
+    // files × openCost) / cores)): an open cost of one byte per core keeps
+    // the second term at or above ⌈bytes / cores⌉, and files still pack by size
+    scanSession.conf.set("spark.sql.files.openCostInBytes", cores.toLong)
+    spark.baseRelationToDataFrame(relation)
   }
+
+  /** Smallest split [[readCsvAllText]] cuts: below it a task's fixed cost
+    * outweighs the rows it would parse. */
+  private val MinSplitBytes: Long = 256L * 1024
 
   /** F4 — `load_time` audit column (vertica_upload.py:114,132–134). */
   def withLoadTime(df: DataFrame): DataFrame =

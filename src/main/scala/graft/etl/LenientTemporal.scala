@@ -2,14 +2,14 @@ package graft.etl
 
 /** Deterministic free-form date canonicalizer — the opt-in stand-in for
   * the reference's `dateutil.parser.parse` leniency
-  * (load_tables_daily.py:104–116) beyond the pinned strict format list.
+  * (load_tables_daily.py:104–116) beyond the strict [[TemporalGrammar]].
   *
   * dateutil accepts open-ended word-order shapes ("March 4th, 2020",
-  * "Wed, 4 of March 2020 10:30 PM"); the pinned strict list deliberately
+  * "Wed, 4 of March 2020 10:30 PM"); the strict [[TemporalGrammar]] deliberately
   * does not (SURVEY.md §7 hard-part 1: inference must be deterministic).
   * This closes the gap WITHOUT giving up determinism: a fixed token
   * grammar rewrites the free-form shapes into one canonical form that the
-  * existing strict cascade already parses ("M/d/yyyy[ H:mm:ss]"), and
+  * strict grammar already parses ("M/d/yyyy[ H:mm:ss]"), and
   * anything the grammar does not recognize is returned verbatim (so it
   * types as text exactly as before). Normalization is a pure per-value
   * function — scan-local on the Spark side (see `lenient_temporal_norm`
@@ -21,7 +21,7 @@ package graft.etl
   *   - exactly one month word (full or 3-letter, optional trailing '.')
   *   - day: ordinal ("4th") or bare 1–2-digit number, 1–31
   *   - year: one 4-digit number, or a remaining 2-digit number once the
-  *     day is taken (2000-based, matching the strict list's "M/d/uu")
+  *     day is taken (2000-based, matching the strict grammar's "M/d/yy")
   *   - time: "H:mm[:ss]" with optional attached or standalone am/pm, or
   *     a bare "Ham"/"H pm" hour
   *
@@ -29,7 +29,7 @@ package graft.etl
   * missing fields from `default`, i.e. "today", which makes inference
   * time-dependent): a month+year string without a day ("March 2020") and
   * a bare day without a year are NOT temporal here; numeric-only shapes
-  * ("3/4/2020") are untouched — the strict list already owns them and
+  * ("3/4/2020") are untouched — the strict grammar already owns them and
   * their month-first convention.
   */
 object LenientTemporal {
@@ -59,7 +59,7 @@ object LenientTemporal {
     */
   def normalize(raw: String): String = {
     val s = raw.trim
-    // pure-numeric shapes belong to the strict list; a letter is the cheap
+    // pure-numeric shapes belong to the strict grammar; a letter is the cheap
     // gate for "might be a word-month form" before any tokenization
     if (s.isEmpty || !s.exists(_.isLetter)) return raw
 
@@ -97,7 +97,7 @@ object LenientTemporal {
             if (d.length != 4 || year > 0) return raw
             year = v
           } else if (day < 0) day = v
-          else if (year < 0) year = 2000 + v // strict list's "M/d/uu" base
+          else if (year < 0) year = 2000 + v // strict grammar's "M/d/yy" base
           else return raw
         case _ => return raw // unknown word ⇒ not a date
       }
@@ -113,7 +113,7 @@ object LenientTemporal {
     if (hour > 23 || minute > 59 || second > 59) return raw
 
     val date = s"$month/$day/$year"
-    // strict-cascade canonical form; calendar validity (Feb 30) is still
+    // the strict grammar's form; calendar validity (Feb 30) is still
     // the strict parser's call, exactly as for native "M/d/yyyy" input
     if (hour < 0) date else f"$date $hour%d:$minute%02d:$second%02d"
   }

@@ -4,9 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import java.time.LocalTime
-import java.time.format.{DateTimeFormatter, ResolverStyle}
-import java.time.temporal.TemporalQueries
 import scala.util.Try
 
 /** Inferred logical column types — the reference's PG type vocabulary.
@@ -50,56 +47,38 @@ object DType {
 object TypeInference {
   import DType._
 
-  /** Pinned date/timestamp formats standing in for dateutil's lenient parser
-    * (reference load_tables_daily.py:104–116). dateutil accepts open-ended
-    * shapes; this pinned list covers every format the reference's 22
-    * clinical extracts use plus the common interchange shapes dateutil would
-    * also take (word months, European dots, offset timestamps, 2-digit
-    * years), and being pinned makes inference deterministic (SURVEY.md §7
-    * hard-part 1). KEEP IN LOCKSTEP with [[sparkTemporalFormats]] — every
-    * format accepted here must be parseable by [[narrow]]'s cast path.
-    */
-  private val dateTimeFormats: Seq[DateTimeFormatter] = Seq(
-    "uuuu-MM-dd['T'][' ']HH:mm:ss[.SSSSSS][.SSS]",
-    "uuuu-MM-dd['T'][' ']HH:mm:ss[.SSS]XXX", // offset timestamps (ISO)
-    "uuuu-MM-dd",
-    "uuuu/MM/dd",
-    "uuuu.MM.dd",
-    "M/d/uuuu[ H:mm[:ss]]",
-    "M/d/uu",                                // 2-digit year (dateutil default)
-    "M-d-uuuu",
-    "d.M.uuuu",                              // European dotted
-    "MMM d, uuuu",
-    "MMMM d, uuuu",                          // full month name
-    "d MMM uuuu",
-    "uuuuMMdd'T'HHmmss"
-  ).map(p => DateTimeFormatter.ofPattern(p).withResolverStyle(ResolverStyle.STRICT))
-
-  /** Parse attempt → Some(isMidnight). None = not temporal. Offset-bearing
-    * strings are always timestamps: "midnight" in some zone is not a date
-    * once normalized to the session zone.
-    */
-  private def parseTemporal(s: String): Option[Boolean] =
-    dateTimeFormats.iterator.flatMap { f =>
-      Try {
-        val parsed = f.parse(s)
-        val hasOffset = Option(parsed.query(TemporalQueries.offset())).isDefined
-        val time = Option(parsed.query(TemporalQueries.localTime()))
-        !hasOffset && time.forall(_ == LocalTime.MIDNIGHT)
-      }.toOption
-    }.nextOption()
-
   def isBool(s: String): Boolean =
     Set("true", "false", "t", "f").contains(s.toLowerCase)
 
   def isNumeric(s: String): Boolean =
-    Try(s.trim.toDouble).toOption.exists(d => !d.isNaN && !d.isInfinite) &&
-      // Python float() rejects hex/underscores; Scala toDouble rejects them
-      // too, but accepts trailing 'd'/'f' suffixes — exclude those.
-      !s.exists(c => c.isLetter && c != 'e' && c != 'E')
+    decimalSyntax(s) && { val d = s.trim.toDouble; !d.isNaN && !d.isInfinite }
 
   def isInteger(s: String): Boolean =
     Try(s.trim.toDouble).toOption.exists(d => d == Math.floor(d) && !d.isInfinite)
+
+  /** The syntax `toDouble` accepts minus its letters (NaN, Infinity, hex,
+    * the `d`/`f` suffixes): [sign] digits [. digits] [e [sign] digits],
+    * surrounding whitespace allowed. Checked before `toDouble`, so a
+    * non-numeric value costs no exception. */
+  private def decimalSyntax(raw: String): Boolean = {
+    val s = raw.trim
+    val n = s.length
+    def digitsFrom(i: Int): Int = { var j = i; while (j < n && s.charAt(j) >= '0' && s.charAt(j) <= '9') j += 1; j }
+    var i = if (n > 0 && (s.charAt(0) == '+' || s.charAt(0) == '-')) 1 else 0
+    var j = digitsFrom(i)
+    var mantissa = j - i
+    i = j
+    if (i < n && s.charAt(i) == '.') { j = digitsFrom(i + 1); mantissa += j - i - 1; i = j }
+    if (mantissa == 0) return false
+    if (i < n && (s.charAt(i) == 'e' || s.charAt(i) == 'E')) {
+      i += 1
+      if (i < n && (s.charAt(i) == '+' || s.charAt(i) == '-')) i += 1
+      j = digitsFrom(i)
+      if (j == i) return false
+      i = j
+    }
+    i == n
+  }
 
   /** Per-value classifier — rule-for-rule mirror of guess_type
     * (load_tables_daily.py:118–152):
@@ -111,7 +90,8 @@ object TypeInference {
     *   - other integer → bigint      (:136)
     *   - non-integer   → numeric     (:138)
     *   - true/false/t/f→ boolean     (:141–142)
-    *   - temporal, midnight → date, else timestamp (:144–150)
+    *   - temporal, midnight → date, else timestamp (:144–150), by the
+    *     shapes of [[TemporalGrammar]]
     */
   def guessType(raw: String): DType = guessType(raw, lenient = false)
 
@@ -143,11 +123,7 @@ object TypeInference {
         else Text
       } else Num
     } else if (isBool(s)) Bool
-    else parseTemporal(s) match {
-      case Some(true)  => DateD
-      case Some(false) => Timestamp
-      case None        => Text
-    }
+    else TemporalGrammar.classify(s)
   }
 
   /** Pairwise widening — a proper join-semilattice (top = Text).
@@ -191,61 +167,101 @@ object TypeInference {
     else if (recordCount > 1000) 500
     else recordCount.toInt
 
-  /** Bounded row-count probe for sample sizing: the thresholds only need
-    * to distinguish ≤1000 / ≤10000 / more, so `limit(10001).count()` reads
-    * at most 10 001 rows — versus the reference's full `count(*)`
-    * (load_tables_daily.py:258), which at 100 TB is a full scan spent on
-    * picking a sample size.
-    */
-  def boundedCount(df: DataFrame): Long = df.limit(10001).count()
+  /** Rows the sample-size probe counts at most: [[sampleSizeFor]] only
+    * tells ≤1000 / ≤10000 / more apart — versus the reference's full
+    * `count(*)` (load_tables_daily.py:258), which at 100 TB is a full scan
+    * spent on picking a sample size. */
+  private val CountCap = 10001
 
-  /** Sampled per-column inference (Q1/Q2/Q5/Q6/T3): take a bounded row
-    * sample and vote every column in ONE aggregation job —
-    * `df.limit(n).agg(vote(c1), vote(c2), …)` with [[TypeVoteAggregator]]
-    * doing the per-value guess → widen reduction distributively (the lattice
-    * is commutative/associative, so map-side partial votes are sound).
+  /** The samples [[sampleSizeFor]] can pick once the count is past 1 000. */
+  private val SamplePrefixes = Seq(500, 1000)
+
+  /** Sampled per-column inference (Q1/Q2/Q5/Q6/T3) in ONE Spark job: each
+    * partition counts its rows (up to 10 001) and votes every column over
+    * its first rows, guess → widen per value; the caller then picks the
+    * sample size from the count and combines the partitions' votes over
+    * the file's first n rows. The sample is the first n rows in partition
+    * order, so a scan split across cores votes the same rows as one split.
+    *
+    * A partition reports its running vote only where it widened (at most
+    * five steps per column on the lattice), so the vote over any prefix is
+    * the widening of each earlier partition's whole vote and one
+    * partition's vote at a row index.
     *
     * The reference runs one `SELECT col WHERE col IS NOT NULL LIMIT n` per
     * column (load_tables_daily.py:287); a naive port launches one Spark job
     * per column — 500 job rounds on a 500-column extract, and each
     * `IS NOT NULL … LIMIT` probe can scan arbitrarily deep on a
-    * mostly-null column. One bounded-sample job reads O(n) rows total
+    * mostly-null column. This job reads at most 10 001 rows per partition
     * regardless of table size or column count. Null values inside the
     * sample are skipped by the vote (an all-null column stays text,
-    * matching the reference's all-text default).
+    * matching the reference's all-text default). `sampleRows` fixes n and
+    * skips the count.
     */
   def inferColumnTypes(df: DataFrame, sampleRows: Option[Int] = None,
                        lenient: Boolean = false): Map[String, DType] = {
     if (df.columns.isEmpty) return Map.empty
-    val n = sampleRows.getOrElse(sampleSizeFor(boundedCount(df)))
-    val vote = udaf(if (lenient) LenientTypeVoteAggregator else TypeVoteAggregator)
-    val aggCols = df.columns.map(c => vote(col(c).cast(StringType)).as(c))
-    val row = df.limit(n).agg(aggCols.head, aggCols.tail.toSeq: _*).first()
-    df.columns.zipWithIndex.map { case (c, i) =>
-      c -> DType.fromName(row.getString(i))
-    }.toMap
+    val prefixes = sampleRows.fold(SamplePrefixes)(Seq(_))
+    val (rows, votes) = prefixVotes(df, prefixes, sampleRows.fold(CountCap)(_ => 0), lenient)
+    val n = sampleRows.getOrElse(sampleSizeFor(rows))
+    // n ≤ 1000: with n = rows every prefix at or past it holds all rows
+    val vote = votes(prefixes.find(_ >= n).getOrElse(prefixes.last))
+    df.columns.zip(vote).map { case (c, v) => c -> (if (v < 0) Text else DType.all(v)) }.toMap
   }
 
-  /** The pinned format list of [[parseTemporal]] re-expressed in Spark's
-    * datetime pattern syntax, for the narrowing cast. ISO shapes (incl. 'T'
-    * separators, fractional seconds, and zone offsets) are covered by the
-    * default `try_to_timestamp` parse; the rest are explicit. Single-letter
-    * fields are width-lenient, matching the java.time patterns.
-    */
-  private val sparkTemporalFormats: Seq[String] = Seq(
-    "yyyy/M/d", "yyyy.M.d",
-    "M/d/yyyy H:mm:ss", "M/d/yyyy H:mm", "M/d/yyyy", "M/d/yy",
-    "M-d-yyyy", "d.M.yyyy",
-    "MMM d, yyyy", "MMMM d, yyyy", "d MMM yyyy",
-    "yyyyMMdd'T'HHmmss")
+  private val widenCode: Array[Array[Int]] =
+    Array.tabulate(DType.all.size, DType.all.size)((a, b) =>
+      DType.all.indexOf(widen(DType.all(a), DType.all(b))))
 
-  /** First successful parse across the pinned formats, null if none match —
-    * the Spark-side mirror of [[parseTemporal]], so every string `guessType`
-    * classifies as date/timestamp narrows without an ANSI cast error.
-    */
-  private def temporalParse(c: Column): Column =
-    coalesce((try_to_timestamp(c) +:
-      sparkTemporalFormats.map(f => try_to_timestamp(c, lit(f)))).toSeq: _*)
+  /** The row count (each partition counting up to `countCap`) and, per
+    * prefix length, the vote of every column over the first that many
+    * rows as an index into [[DType.all]] (-1: no non-null value). */
+  private def prefixVotes(df: DataFrame, prefixes: Seq[Int], countCap: Int,
+                          lenient: Boolean): (Long, Map[Int, Array[Int]]) = {
+    val width = df.columns.length
+    val depth = prefixes.max
+    val reads = math.max(depth, countCap)
+    val join = widenCode
+    val text = df.select(df.columns.map(c => col(c).cast(StringType)).toSeq: _*)
+    // (partition, rows, per column the (row, vote) steps packed as row << 4 | vote)
+    val parts = text.queryExecution.toRdd.mapPartitionsWithIndex { (p, it) =>
+      val vote = Array.fill(width)(-1)
+      val steps = Array.fill(width)(new scala.collection.mutable.ArrayBuilder.ofLong)
+      var n = 0
+      while (n < reads && it.hasNext) {
+        val r = it.next()
+        if (n < depth) {
+          var c = 0
+          while (c < width) {
+            if (!r.isNullAt(c)) {
+              val g = DType.all.indexOf(guessType(r.getUTF8String(c).toString, lenient))
+              val w = if (vote(c) < 0) g else join(vote(c))(g)
+              if (w != vote(c)) { vote(c) = w; steps(c) += (n.toLong << 4 | w) }
+            }
+            c += 1
+          }
+        }
+        n += 1
+      }
+      Iterator.single((p, n, steps.map(_.result())))
+    }.collect().sortBy(_._1)
+    def voteOver(prefix: Int): Array[Int] = Array.tabulate(width) { c =>
+      var acc = -1
+      var left = prefix
+      for ((_, n, steps) <- parts if left > 0) {
+        val seen = math.min(left, n)
+        // the partition's running vote after its first `seen` rows
+        val last = steps(c).lastIndexWhere(s => (s >> 4) < seen)
+        if (last >= 0) {
+          val v = (steps(c)(last) & 15).toInt
+          acc = if (acc < 0) v else join(acc)(v)
+        }
+        left -= seen
+      }
+      acc
+    }
+    (parts.map(_._2.toLong).sum, prefixes.map(p => p -> voteOver(p)).toMap)
+  }
 
   /** D3 equivalent: one-shot functional cast rewrite instead of per-column
     * `ALTER COLUMN TYPE` mutations (load_tables_daily.py:296–305,422–426).
@@ -258,14 +274,16 @@ object TypeInference {
     * which a direct ANSI `CAST` would reject at runtime. Integral targets
     * therefore route through a decimal intermediate (ANSI decimal→integral
     * truncates the fraction and only errors on overflow, which inference's
-    * range rules already exclude) and temporals through the same pinned
-    * format list inference used. `try_cast` semantics throughout: a value
+    * range rules already exclude) and temporals through `temporal_parse`,
+    * the codegen'd form of the [[TemporalGrammar]] the vote used, so a
+    * temporal value narrows exactly when the vote would have accepted it.
+    * `try_cast` semantics throughout: a value
     * the sample never saw degrades to null instead of failing the load —
     * the sampled-inference contract (SURVEY §7 hard-part 1).
     */
   def narrow(df: DataFrame, types: Map[String, DType],
              lenient: Boolean = false): DataFrame = {
-    if (lenient) graft.functions.NativeTextExpressions.register(df.sparkSession)
+    graft.functions.NativeTextExpressions.register(df.sparkSession)
     val cols: Seq[Column] = df.columns.toSeq.map { c =>
       types.get(c) match {
         case Some(t) if t != Text => narrowColumn(col(c), t, lenient).as(c)
@@ -277,10 +295,10 @@ object TypeInference {
 
   private def narrowColumn(c: Column, t: DType, lenient: Boolean): Column = {
     // lenient narrowing canonicalizes free-form shapes scan-locally (the
-    // codegen'd `lenient_temporal_norm`) before the same strict cascade —
+    // codegen'd `lenient_temporal_norm`) before the same strict grammar —
     // so the cast path accepts exactly what lenient inference voted DATE
-    def temporal(col: Column) =
-      temporalParse(if (lenient) call_function("lenient_temporal_norm", col) else col)
+    def temporal(col: Column) = call_function("temporal_parse",
+      if (lenient) call_function("lenient_temporal_norm", col) else col)
     t match {
       case SmallInt | Int32 | Int64 =>
         c.try_cast(DecimalType(38, 18)).try_cast(DType.toSpark(t))

@@ -12,8 +12,7 @@ import org.apache.spark.sql.expressions.Aggregator
   * map-side combine is sound), then merge. Buffer is the lattice element's
   * name; "" = bottom (no values seen).
   */
-sealed class TypeVoteAggregator(lenient: Boolean)
-  extends Aggregator[String, String, String] {
+object TypeVoteAggregator extends Aggregator[String, String, String] {
   override def zero: String = ""
 
   private def widenNames(a: String, b: String): String =
@@ -23,7 +22,7 @@ sealed class TypeVoteAggregator(lenient: Boolean)
 
   override def reduce(buf: String, value: String): String =
     if (value == null) buf
-    else widenNames(buf, TypeInference.guessType(value.trim, lenient).name)
+    else widenNames(buf, TypeInference.guessType(value.trim).name)
 
   override def merge(b1: String, b2: String): String = widenNames(b1, b2)
 
@@ -33,11 +32,3 @@ sealed class TypeVoteAggregator(lenient: Boolean)
   override def bufferEncoder: Encoder[String] = Encoders.STRING
   override def outputEncoder: Encoder[String] = Encoders.STRING
 }
-
-object TypeVoteAggregator extends TypeVoteAggregator(lenient = false)
-
-/** The vote with the opt-in free-form date grammar (see
-  * [[LenientTemporal]]) — same lattice, same reduction; only the
-  * per-value temporal classifier widens.
-  */
-object LenientTypeVoteAggregator extends TypeVoteAggregator(lenient = true)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, TimeZoneAwareExpression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -984,7 +984,7 @@ object NativeTextExpressions {
   /** [[graft.etl.LenientTemporal.normalize]] as a native expression — the
     * scan-local canonicalization step of opt-in lenient date narrowing
     * (TypeInference.narrow(lenient = true)). Free-form word-month shapes
-    * rewrite to the strict cascade's "M/d/yyyy[ H:mm:ss]"; anything else
+    * rewrite to the strict grammar's "M/d/yyyy[ H:mm:ss]"; anything else
     * passes through verbatim. The narrowing projection is per-row-hot on
     * a bulk load, so codegen is one static call inside the fused stage,
     * not an interpreted dispatch per value.
@@ -1013,6 +1013,51 @@ object NativeTextExpressions {
       copy(child = newChild)
   }
 
+  /** [[graft.etl.TemporalGrammar]] as a native expression: the value as a
+    * session-zone timestamp if it has one of the grammar's shapes, else
+    * null. It is the narrowing cast of date and timestamp columns
+    * (TypeInference.narrow), one parse per value, and it accepts exactly
+    * the strings the type vote calls temporal. Codegen keeps one reusable
+    * field holder per task, so a value parses without allocating or
+    * throwing.
+    */
+  case class TemporalParse(child: Expression, timeZoneId: Option[String] = None)
+    extends UnaryExpression with TimeZoneAwareExpression {
+    override def dataType: DataType = TimestampType
+    override def nullable: Boolean = true
+    override def prettyName: String = "temporal_parse"
+    override def checkInputDataTypes(): TypeCheckResult =
+      if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
+      else TypeCheckResult.TypeCheckFailure(
+        s"temporal_parse expects string, got ${child.dataType.simpleString}")
+    override def withTimeZone(timeZoneId: String): TimeZoneAwareExpression =
+      copy(timeZoneId = Option(timeZoneId))
+
+    @transient private lazy val fields = new graft.etl.TemporalFields
+
+    override def nullSafeEval(input: Any): Any =
+      if (graft.etl.TemporalGrammar.parse(input.asInstanceOf[UTF8String].toString, fields))
+        graft.etl.TemporalGrammar.toMicros(fields, zoneId)
+      else null
+
+    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val holder = classOf[graft.etl.TemporalFields].getName
+      val f = ctx.addMutableState(holder, "temporalFields", v => s"$v = new $holder();")
+      val zone = ctx.addReferenceObj("zoneId", zoneId, classOf[java.time.ZoneId].getName)
+      nullSafeCodeGen(ctx, ev, c =>
+        s"""
+           |if (graft.etl.TemporalGrammar.parse($c.toString(), $f)) {
+           |  ${ev.value} = graft.etl.TemporalGrammar.toMicros($f, $zone);
+           |} else {
+           |  ${ev.isNull} = true;
+           |}
+         """.stripMargin)
+    }
+
+    override protected def withNewChildInternal(newChild: Expression): Expression =
+      copy(child = newChild)
+  }
+
   /** (name → builder) for every native function — the single source both
     * registration paths consume: session-level [[register]] and the
     * cluster-level `GraftExtensions` injection (so a function added here
@@ -1033,6 +1078,7 @@ object NativeTextExpressions {
     "deflate_len" -> (c => DeflateLen(c.head, litInt(c(1), "level"))),
     "canon_text" -> (c => CanonText(c.head)),
     "lenient_temporal_norm" -> (c => LenientTemporalNorm(c.head)),
+    "temporal_parse" -> (c => TemporalParse(c.head)),
     "sorted_dot" -> (c => SortedDot(c)),
     "pack_sparse_vec_block" -> (c => PackSparseVecBlock(c.head)),
     "sorted_dot_block_pairs" -> (c =>

@@ -254,9 +254,12 @@ object PrefixJoin {
         // 1e-4: tf-idf weights are non-negative, so a negative floor
         // prunes nothing, and the interpolated literal stays unsigned.
         val minDot = math.max(0.0, threshold - 1e-4)
-        val blocks = withBlockId(vecs, nDocs.toLong, blockRows)
+        // staged once: both sides of the self-join read the same packed
+        // blocks instead of each re-running the pack aggregation
+        val blocks = Dedup.stage(withBlockId(vecs, nDocs.toLong, blockRows)
           .groupBy(col("bid"))
-          .agg(expr("pack_sparse_vec_block(collect_list(struct(id, ks, vs)))").as("blob"))
+          .agg(expr("pack_sparse_vec_block(collect_list(struct(id, ks, vs)))").as("blob")),
+          "wprefixjoin-blocks")
         return blocks.repartition(fanout).as("a")
           .join(broadcast(blocks).as("b"), col("a.bid") <= col("b.bid"))
           .select(explode(expr(
