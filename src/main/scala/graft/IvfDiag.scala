@@ -74,7 +74,7 @@ object IvfDiag {
       // max/partition grouping is the straggler bound
       val probes = emb.repartition(fanout).select(col("vec_id").as("query_id"),
         explode(call_function("nearest_centroids", col("embedding"),
-          lit(graft.functions.NearestCentroids.pack(index.centroids)),
+          lit(graft.functions.VectorFunctions.packBlock(index.centroids)),
           lit(nprobe))).as("list_id"))
       val q = probes.groupBy("list_id").agg(count(lit(1)).as("nq"))
       val s = assigned.groupBy("list_id").agg(count(lit(1)).as("ns"))
@@ -91,7 +91,7 @@ object IvfDiag {
       val probesDf = emb.repartition(fanout).select(col("vec_id").as("query_id"),
         col("embedding").as("query_vec"),
         explode(call_function("nearest_centroids", col("embedding"),
-          lit(graft.functions.NearestCentroids.pack(index.centroids)),
+          lit(graft.functions.VectorFunctions.packBlock(index.centroids)),
           lit(nprobe))).as("list_id"))
       val floored = assigned.join(broadcast(probesDf), Seq("list_id"))
         .filter(col("neighbor_id") =!= col("query_id"))

@@ -1,7 +1,7 @@
 package graft.etl
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** Small-file compaction — the lake-maintenance operator every long-lived
   * ingest pipeline needs: streaming sinks and per-batch writes accumulate
@@ -68,12 +68,6 @@ object Compaction extends org.apache.spark.internal.Logging {
     }
     fs.delete(old, true)
     Report(dir, before.size, dataFiles(spark, dir).size, totalBytes, rows)
-  }
-
-  /** [[compactParquet]] as a 1-row DataFrame for pipeline composition. */
-  def compactReport(spark: SparkSession, dir: String, targetBytes: Long): DataFrame = {
-    import spark.implicits._
-    Seq(compactParquet(spark, dir, targetBytes)).toDS().toDF()
   }
 
   /** Report of one delete run. */

@@ -1,9 +1,12 @@
 package graft.etl
 
+import com.univocity.parsers.csv.CsvParser
 import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import java.time.LocalDate
@@ -47,20 +50,24 @@ object Ingest {
     * downstream of the scan runs as before. Splitting is safe because the
     * reader is line-based (no `multiLine`): each split starts at a line
     * boundary and only the first drops the header.
+    *
+    * The column names come from [[headerNames]], which reads the header
+    * line itself, so a load lists its files once and runs no Spark job
+    * before the scan.
     */
   def readCsvAllText(spark: SparkSession, path: String): DataFrame = {
-    val header = spark.read.option("header", "true").csv(path).schema
-    val allText = StructType(header.map(f => StructField(f.name, StringType, nullable = true)))
     val scanSession = spark.newSession()
     spark.conf.getAll.foreach { case (k, v) => if (scanSession.conf.isModifiable(k)) scanSession.conf.set(k, v) }
-    val relation = scanSession.read.option("header", "true").schema(allText).csv(path)
+    val listed = scanSession.read.option("header", "true").schema(new StructType()).csv(path)
       .queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.relation }.get
-    val bytes = relation.asInstanceOf[HadoopFsRelation].location.sizeInBytes
+      .asInstanceOf[HadoopFsRelation]
+    val conf = scanSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf
+    val allText = StructType(headerNames(listed, conf).map(StructField(_, StringType, nullable = true)))
+    val relation = listed.copy(dataSchema = allText)(listed.sparkSession)
+    val bytes = relation.location.sizeInBytes
     val cores = spark.sparkContext.defaultParallelism
-    val maxSplit = scanSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.conf.filesMaxPartitionBytes
     scanSession.conf.set("spark.sql.files.maxPartitionBytes",
-      math.min(maxSplit, math.max(MinSplitBytes, (bytes + cores - 1) / cores)))
+      math.min(conf.filesMaxPartitionBytes, math.max(MinSplitBytes, (bytes + cores - 1) / cores)))
     // Spark's split size is min(maxPartitionBytes, max(openCost, (bytes +
     // files × openCost) / cores)): an open cost of one byte per core keeps
     // the second term at or above ⌈bytes / cores⌉, and files still pack by size
@@ -68,13 +75,28 @@ object Ingest {
     spark.baseRelationToDataFrame(relation)
   }
 
+  /** The column names `spark.read.option("header", "true").csv(path)`
+    * infers, read directly instead of by a Spark job: the first
+    * non-empty, non-comment line of the largest file (the line Spark's
+    * inference scan meets first), parsed by univocity with the read's
+    * CSV options and made unique and non-empty by
+    * `CSVUtils.makeSafeHeader`. No such line, no columns.
+    */
+  private def headerNames(relation: HadoopFsRelation, conf: SQLConf): Seq[String] = {
+    val options = new CSVOptions(relation.options, conf.csvColumnPruning,
+      conf.sessionLocalTimeZone, conf.columnNameOfCorruptRecord)
+    val hadoopConf = relation.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.newHadoopConfWithOptions(relation.options)
+    val files = relation.location.listFiles(Nil, Nil).flatMap(_.files).sortBy(-_.getLen)
+    files.iterator.flatMap(f => CSVUtils.readHeaderLine(f.getPath, options, hadoopConf))
+      .nextOption()
+      .flatMap(line => Option(new CsvParser(options.asParserSettings).parseLine(line)))
+      .fold(Seq.empty[String])(CSVUtils.makeSafeHeader(_, conf.caseSensitiveAnalysis, options).toSeq)
+  }
+
   /** Smallest split [[readCsvAllText]] cuts: below it a task's fixed cost
     * outweighs the rows it would parse. */
   private val MinSplitBytes: Long = 256L * 1024
-
-  /** F4 — `load_time` audit column (vertica_upload.py:114,132–134). */
-  def withLoadTime(df: DataFrame): DataFrame =
-    df.withColumn("load_time", current_timestamp())
 
   /** F1 — raw-zone backup: copy source files to `history/upload_{date}/`
     * before load (load_tables_daily.py:205–215,329–338). Uses the Hadoop

@@ -17,6 +17,7 @@ object TableLifecycle {
 
   def buildName(table: String): String = s"${table}_build"
   def historyName(table: String): String = s"${table}_history"
+  private[graft] def prevName(table: String): String = s"${table}_prev"
 
   /** D1/S3 — stage a DataFrame as the `_build` table. */
   def stageBuild(df: DataFrame, table: String): Unit =
@@ -36,13 +37,21 @@ object TableLifecycle {
   def dropIfExists(spark: SparkSession, table: String): Unit =
     spark.sql(s"DROP TABLE IF EXISTS `$table`")
 
-  /** D4 — the reference's explicit swap: drop prod, rename build → prod
-    * (load_tables_daily.py:227–244). Rename on the session catalog is a
-    * metadata-only operation — no data movement at any scale.
+  /** D4 — the reference's explicit swap (load_tables_daily.py:227–244),
+    * ordered so a crash at any point leaves a complete copy: prod →
+    * `<t>_prev`, build → prod, drop `<t>_prev`. The reference's drop
+    * prod + rename build would leave no prod table if it stopped between
+    * the two. A `<t>_prev` left by an earlier crash is dropped before
+    * prod takes its name. Renames on the session catalog move no data.
     */
   def swap(spark: SparkSession, table: String): Unit = {
-    dropIfExists(spark, table)
+    val prev = prevName(table)
+    if (tableExists(spark, table)) {
+      dropIfExists(spark, prev)
+      spark.sql(s"ALTER TABLE `$table` RENAME TO `$prev`")
+    }
     spark.sql(s"ALTER TABLE `${buildName(table)}` RENAME TO `$table`")
+    dropIfExists(spark, prev)
   }
 
   /** Preferred publish path: a single overwrite-save whose atomicity comes

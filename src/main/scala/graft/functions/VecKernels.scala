@@ -4,13 +4,15 @@ import graft.simd.{LaneSplitScalarVecOps, ScalarVecOps, VecOps}
 import org.apache.spark.sql.catalyst.util.ArrayData
 
 /** The ONE float-vector arithmetic provider for every cosine/dot hot
-  * path: the `cosine_sim` expression (eval AND codegen), the IVF
-  * centroid scorer, and the packed block kernels ([[VectorFunctions]]'s
-  * `blockTopK` / `replicatedTopK` / `blockCrossTopK` / `decodeBlock`
-  * norms). Routing every site through one statically-chosen [[VecOps]]
-  * keeps scores bit-identical ACROSS physical routes whichever
-  * implementation a JVM ends up with — the property the cross-route
-  * equality specs pin (flat join vs block cascade vs replicated probe).
+  * path: the `cosine_sim` expression (eval AND codegen) and the packed
+  * block kernels — [[VectorFunctions]]'s float scan (behind
+  * `blockTopK` / `replicatedTopK` / `blockCrossTopK`), its int8 scan
+  * (behind `replicatedTopKI8`), the `nearestCentroids` selection and
+  * the `decodeBlock` / `quantizeBlock` norms. Routing every site
+  * through one statically-chosen [[VecOps]] keeps scores bit-identical
+  * ACROSS physical routes whichever implementation a JVM ends up with —
+  * the property the cross-route equality specs pin (flat join vs block
+  * cascade vs replicated probe).
   *
   * Selection, once per JVM (logged, greppable like the regime gates):
   *   - `graft.simd` system property / `GRAFT_SIMD` env = `off` → the

@@ -3,8 +3,8 @@ package graft.functions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, GenericInternalRow}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
@@ -75,7 +75,6 @@ case class CosineSimilarity(left: Expression, right: Expression)
 case class SrpBuckets(child: Expression, numTables: Int, bits: Int, seed: Long)
   extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
   with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-  import org.apache.spark.sql.catalyst.util.GenericArrayData
 
   override def dataType: DataType = ArrayType(org.apache.spark.sql.types.LongType, containsNull = false)
   override def prettyName: String = "srp_buckets"
@@ -193,30 +192,20 @@ case class QuantizedCosine(left: Expression, right: Expression)
   * on the two per-row-hot IVF paths — list ASSIGNMENT over the full
   * corpus (`nprobe = 1`) and probe-list selection over the full query
   * side of a corpus-vs-corpus search — so it gets the same treatment as
-  * the q148 verify kernels: one fused Java loop inside whole-stage
-  * codegen, zero allocations beyond the k-double score buffer.
+  * [[IvfBlockTopK]]: eval and codegen make one static call into
+  * [[VectorFunctions.nearestCentroids]].
   *
-  * The codebook rides the plan as ONE packed binary literal (k·dim
-  * floats — small by definition, the FAISS coarse-quantizer shape), not
-  * as a k-element array-of-struct literal: the array-literal form costs
-  * a per-row traversal of Catalyst struct wrappers, and its plan string
-  * renders k×dim float literals. `doGenCode` ships the UNPACKED
-  * `float[][]` with the generated class via `addReferenceObj` — decoded
-  * once per executor, not per row.
-  *
-  * Score math is the exact fused loop of [[CosineSimilarity]] (double
-  * accumulation, min-length, 0.0 on zero norm), so scores are
-  * bit-identical to the HOF-wrapped `cosine_sim` it replaces. Selection
-  * is nprobe max-passes with strict `>` over ids in ascending order —
-  * the same order `array_sort` on `(-score, cid)` produces, except that
-  * a -0.0/+0.0 score pair ties to the lower cid here (array_sort orders
-  * -0.0 first); distinct centroids cannot score distinguishable zeros
-  * against the same query, so the tie-break is observationally
-  * equivalent.
+  * The codebook rides the plan as ONE packed-vector blob literal
+  * ([[VectorFunctions.packBlock]]; k·dim floats — small by definition,
+  * the FAISS coarse-quantizer shape), not as a k-element array-of-struct
+  * literal: the array-literal form costs a per-row traversal of Catalyst
+  * struct wrappers, and its plan string renders k×dim float literals.
+  * The blob is decoded once per plan and `doGenCode` ships the decoded
+  * block with the generated class via `addReferenceObj` — once per
+  * executor, not per row.
   */
 case class NearestCentroids(left: Expression, right: Expression, nprobe: Int)
   extends BinaryExpression {
-  import org.apache.spark.sql.catalyst.util.GenericArrayData
 
   override def dataType: DataType = ArrayType(org.apache.spark.sql.types.LongType, containsNull = false)
   override def prettyName: String = "nearest_centroids"
@@ -230,107 +219,37 @@ case class NearestCentroids(left: Expression, right: Expression, nprobe: Int)
         s"(${l.simpleString}, ${r.simpleString})")
   }
 
-  // the packed codebook is a foldable literal: unpack ONCE per JVM/plan,
-  // not per row (interpreted path) — codegen references the same arrays.
-  @transient private lazy val (cids, cents): (Array[Long], Array[Array[Float]]) =
-    NearestCentroids.unpack(right.eval(null).asInstanceOf[Array[Byte]])
+  // the packed codebook is a foldable literal: decode ONCE per JVM/plan,
+  // not per row (interpreted path) — codegen references the same block
+  @transient private lazy val codebook: VectorFunctions.DecodedBlock =
+    VectorFunctions.decodeBlock(right.eval(null).asInstanceOf[Array[Byte]])
 
-  override def nullSafeEval(v: Any, ignored: Any): Any = {
-    // one copy per row, scored against every centroid via the shared
-    // VecKernels arithmetic (bit-identical to cosine_sim by construction)
-    val xa = v.asInstanceOf[ArrayData].toFloatArray()
-    val k = cents.length
-    val scores = new Array[Double](k)
-    var c = 0
-    while (c < k) {
-      scores(c) = VecKernels.cosineFF(xa, cents(c))
-      c += 1
-    }
-    val outLen = math.min(k, nprobe)
-    val taken = new Array[Boolean](k)
-    val out = new Array[Long](outLen)
-    var s = 0
-    while (s < outLen) {
-      var best = -1; var bs = Double.NegativeInfinity; var j = 0
-      while (j < k) {
-        if (!taken(j) && (best < 0 || scores(j) > bs)) { best = j; bs = scores(j) }
-        j += 1
-      }
-      taken(best) = true; out(s) = cids(best); s += 1
-    }
-    new GenericArrayData(out)
-  }
+  override def nullSafeEval(v: Any, ignored: Any): Any =
+    VectorFunctions.nearestCentroids(v.asInstanceOf[ArrayData].toFloatArray(),
+      codebook, nprobe)
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (x, _) => {
-      val cRef = ctx.addReferenceObj("cents", cents, "float[][]")
-      val idRef = ctx.addReferenceObj("cids", cids, "long[]")
-      val k = ctx.freshName("k"); val sc = ctx.freshName("sc")
-      val c = ctx.freshName("c"); val xa = ctx.freshName("xa")
-      val outLen = ctx.freshName("outLen")
-      val taken = ctx.freshName("taken"); val out = ctx.freshName("out")
-      val s = ctx.freshName("s"); val best = ctx.freshName("best")
-      val bs = ctx.freshName("bs"); val j = ctx.freshName("j")
-      s"""
-         |int $k = $cRef.length;
-         |float[] $xa = $x.toFloatArray();
-         |double[] $sc = new double[$k];
-         |for (int $c = 0; $c < $k; $c++) {
-         |  $sc[$c] = graft.functions.VecKernels.cosineFF($xa, $cRef[$c]);
-         |}
-         |int $outLen = java.lang.Math.min($k, $nprobe);
-         |boolean[] $taken = new boolean[$k];
-         |long[] $out = new long[$outLen];
-         |for (int $s = 0; $s < $outLen; $s++) {
-         |  int $best = -1; double $bs = java.lang.Double.NEGATIVE_INFINITY;
-         |  for (int $j = 0; $j < $k; $j++) {
-         |    if (!$taken[$j] && ($best < 0 || $sc[$j] > $bs)) { $best = $j; $bs = $sc[$j]; }
-         |  }
-         |  $taken[$best] = true; $out[$s] = $idRef[$best];
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
+      val cb = ctx.addReferenceObj("codebook", codebook,
+        classOf[VectorFunctions.DecodedBlock].getName)
+      s"${ev.value} = graft.functions.VectorFunctions.nearestCentroids(" +
+        s"$x.toFloatArray(), $cb, $nprobe);"
     })
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
 }
 
-object NearestCentroids {
-  /** Codebook → one binary literal: i32 k, i32 dim, k×i64 cids (ascending —
-    * the packing pins the tie-break order), k×dim×f32 centroid components.
-    */
-  def pack(cents: Seq[(Long, Array[Float])]): Array[Byte] = {
-    val sorted = cents.sortBy(_._1)
-    val dim = if (sorted.isEmpty) 0 else sorted.head._2.length
-    require(sorted.forall(_._2.length == dim), "ragged codebook")
-    val buf = java.nio.ByteBuffer.allocate(8 + sorted.length * (8 + dim * 4))
-    buf.putInt(sorted.length).putInt(dim)
-    sorted.foreach { case (cid, _) => buf.putLong(cid) }
-    sorted.foreach { case (_, v) => v.foreach(buf.putFloat) }
-    buf.array()
-  }
-
-  def unpack(bytes: Array[Byte]): (Array[Long], Array[Array[Float]]) = {
-    val buf = java.nio.ByteBuffer.wrap(bytes)
-    val k = buf.getInt(); val dim = buf.getInt()
-    val cids = Array.fill(k)(buf.getLong())
-    val cents = Array.fill(k)(Array.fill(dim)(buf.getFloat()))
-    (cids, cents)
-  }
-}
-
 /** Pack a collected inverted-list chunk — `array<struct<id:long,
-  * vec:array<float>>>` — into ONE binary blob: i32 n, i32 dim, n×i64 ids
-  * (ascending), n×dim×f32 components. The blob is the unit the IVF block
+  * vec:array<float>>>` — into ONE packed-vector blob
+  * ([[VectorFunctions.packBlock]]). The blob is the unit the IVF block
   * scan ([[IvfBlockTopK]]) consumes: one row per (list, chunk) instead of
   * one row per corpus vector, so the probe join materializes O(lists)
   * fat rows once instead of O(scored pairs) vector-pair rows — the pair
   * materialization was measured at sf1-shape as ~1.3 TB of row-assembly
   * traffic (666 M joined rows × 2 KB of vectors) dwarfing the actual
-  * float math. Ids sort ascending inside the blob so packing is
-  * deterministic under `collect_list`'s nondeterministic order and the
-  * scan's equal-score tie-break (lowest id) falls out of scan order.
+  * float math. Ids sort ascending inside the blob, so packing is
+  * deterministic under `collect_list`'s nondeterministic order.
   * Interpreted eval (CodegenFallback) is fine: one eval per chunk, never
   * per corpus row or per pair.
   */
@@ -339,33 +258,11 @@ case class PackVecBlock(child: Expression)
   with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
   override def dataType: DataType = org.apache.spark.sql.types.BinaryType
   override def prettyName: String = "pack_vec_block"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(s: org.apache.spark.sql.types.StructType, _)
-      if s.length == 2 && s(0).dataType == org.apache.spark.sql.types.LongType &&
-        (s(1).dataType match {
-          case ArrayType(FloatType, _) => true
-          case _ => false
-        }) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"pack_vec_block expects array<struct<id:long,vec:array<float>>>, got ${other.simpleString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    VectorFunctions.checkEntries(prettyName, child.dataType)
 
-  override def nullSafeEval(input: Any): Any = {
-    val entries = input.asInstanceOf[ArrayData]
-    val n = entries.numElements()
-    val rows = Array.tabulate(n) { i =>
-      val e = entries.getStruct(i, 2)
-      (e.getLong(0), e.getArray(1).toFloatArray())
-    }.sortBy(_._1)
-    val dim = if (n == 0) 0 else rows.head._2.length
-    require(rows.forall(_._2.length == dim),
-      s"pack_vec_block: ragged vectors in one block (expected dim $dim)")
-    val buf = java.nio.ByteBuffer.allocate(8 + n * (8 + dim * 4))
-    buf.putInt(n).putInt(dim)
-    rows.foreach { case (id, _) => buf.putLong(id) }
-    rows.foreach { case (_, v) => v.foreach(buf.putFloat) }
-    buf.array()
-  }
+  override def nullSafeEval(input: Any): Any =
+    VectorFunctions.packBlock(VectorFunctions.entryRows(input.asInstanceOf[ArrayData]))
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -373,18 +270,18 @@ case class PackVecBlock(child: Expression)
 
 /** ALL of one inverted list's [[PackVecBlock]] chunk blobs from one
   * collected entry array — sort by id once, slice every `blockRows`
-  * rows, pack each slice (r18, guide §2.4). Replaces the
-  * row_number-window + per-(list, chunk) groupBy pack: the window form
-  * paid a full sort pass of the corpus between the list exchange and
-  * the pack aggregation; here ONE groupBy(list_id) feeds this
-  * expression and posexplode emits (chunk, block) scan-locally. Blob
-  * BYTES are identical to the window form's by construction (ids
-  * ascend within a list either way; chunk i = rows [i·blockRows,
-  * (i+1)·blockRows) of that order), so every downstream consumer —
-  * probe kernels and packed artifacts — sees the
-  * exact same (list_id, chunk, block) rows. Memory posture unchanged:
-  * the window form's pack task also held all of a list's chunks in its
-  * aggregation map at once.
+  * rows, pack each slice ([[VectorFunctions.packBlocks]]; r18, guide
+  * §2.4). Replaces the row_number-window + per-(list, chunk) groupBy
+  * pack: the window form paid a full sort pass of the corpus between the
+  * list exchange and the pack aggregation; here ONE groupBy(list_id)
+  * feeds this expression and posexplode emits (chunk, block)
+  * scan-locally. Blob BYTES are identical to the window form's by
+  * construction (ids ascend within a list either way; chunk i = rows
+  * [i·blockRows, (i+1)·blockRows) of that order), so every downstream
+  * consumer — probe kernels and packed artifacts — sees the exact same
+  * (list_id, chunk, block) rows. Memory posture unchanged: the window
+  * form's pack task also held all of a list's chunks in its aggregation
+  * map at once.
   */
 case class PackVecBlocks(child: Expression, blockRows: Int)
   extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
@@ -393,37 +290,12 @@ case class PackVecBlocks(child: Expression, blockRows: Int)
   override def dataType: DataType =
     ArrayType(org.apache.spark.sql.types.BinaryType, containsNull = false)
   override def prettyName: String = "pack_vec_blocks"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(s: org.apache.spark.sql.types.StructType, _)
-      if s.length == 2 && s(0).dataType == org.apache.spark.sql.types.LongType &&
-        (s(1).dataType match {
-          case ArrayType(FloatType, _) => true
-          case _ => false
-        }) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"pack_vec_blocks expects array<struct<id:long,vec:array<float>>>, got ${other.simpleString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    VectorFunctions.checkEntries(prettyName, child.dataType)
 
-  override def nullSafeEval(input: Any): Any = {
-    val entries = input.asInstanceOf[ArrayData]
-    val n = entries.numElements()
-    val rows = Array.tabulate(n) { i =>
-      val e = entries.getStruct(i, 2)
-      (e.getLong(0), e.getArray(1).toFloatArray())
-    }.sortBy(_._1)
-    val dim = if (n == 0) 0 else rows.head._2.length
-    require(rows.forall(_._2.length == dim),
-      s"pack_vec_blocks: ragged vectors in one list (expected dim $dim)")
-    val blobs = rows.grouped(blockRows).map { chunk =>
-      val m = chunk.length
-      val buf = java.nio.ByteBuffer.allocate(8 + m * (8 + dim * 4))
-      buf.putInt(m).putInt(dim)
-      chunk.foreach { case (id, _) => buf.putLong(id) }
-      chunk.foreach { case (_, v) => v.foreach(buf.putFloat) }
-      buf.array()
-    }.toArray[Any]
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(blobs)
-  }
+  override def nullSafeEval(input: Any): Any =
+    new GenericArrayData(VectorFunctions.packBlocks(
+      VectorFunctions.entryRows(input.asInstanceOf[ArrayData]), blockRows).toArray[Any])
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -441,11 +313,12 @@ case class PackVecBlocks(child: Expression, blockRows: Int)
   * the global top-k window, which collapses its input from every
   * above-floor pair (139 M rows at sf1-shape) to ≤ nprobe·k per query.
   *
-  * Score math is the exact [[CosineSimilarity]] loop (double
-  * accumulation, min-length, 0.0 on zero norms), so a per-chunk-top-k →
-  * global-top-k cascade selects EXACTLY the rows the flat pair join +
-  * one global window selected: every global winner is necessarily a
-  * winner of its own chunk under the same (score desc, id asc) order.
+  * Scoring is the float scan and selection the ranked top-k buffer of
+  * [[VectorFunctions]] (cosine bit-identical to [[CosineSimilarity]]),
+  * so a per-chunk-top-k → global-top-k cascade selects EXACTLY the rows
+  * the flat pair join + one global window selected: every global winner
+  * is necessarily a winner of its own chunk under the same (score desc,
+  * id asc) order.
   */
 case class IvfBlockTopK(first: Expression, second: Expression, third: Expression,
                         k: Int, floor: Double)
@@ -505,7 +378,7 @@ case class IvfBlockTopK(first: Expression, second: Expression, third: Expression
   * 250k-doc shape, ~all of the probe scan's 300 s. With queries packed
   * per (list, salt), one row's two copies amortize over
   * |qblock| × |chunk| scored pairs and the scan is compute-bound.
-  * Arithmetic and ordering are EXACTLY [[IvfBlockTopK]]'s, so the
+  * Same float scan and top-k buffer as [[IvfBlockTopK]], so the
   * per-chunk → global-window cascade still selects the flat join's rows.
   */
 case class BlockCrossTopK(left: Expression, right: Expression,
@@ -566,7 +439,6 @@ case class BlockCrossTopK(left: Expression, right: Expression,
 case class SparseToDense(child: Expression, dim: Int)
   extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
   with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-  import org.apache.spark.sql.catalyst.util.GenericArrayData
 
   override def dataType: DataType = ArrayType(FloatType, containsNull = false)
   override def prettyName: String = "sparse_to_dense"
@@ -652,16 +524,67 @@ object VectorFunctions {
     case other => throw new IllegalArgumentException(s"$what must be a numeric literal, got $other")
   }
 
-  /** The [[IvfBlockTopK]] scan kernel, shared verbatim by interpreted
-    * eval and codegen: walk a [[PackVecBlock]] blob once, score every
-    * non-self vector with the exact [[CosineSimilarity]] arithmetic,
-    * keep the top `k` by (cosine desc, id asc) with `cosine >= floor`
-    * in a bounded insertion buffer. Ids in the blob ascend, so equal
-    * scores keep lowest-id-first without comparing ids.
+  // ---- the packed-vector block: one codec, one ranked buffer, two scans ----
+
+  /** The packed-vector blob, the one layout every IVF kernel, the
+    * persisted packed-index artifact and the `nearest_centroids`
+    * codebook literal share: i32 n, i32 dim, n×i64 ids ascending,
+    * n×dim×f32 components, big-endian. [[packBlock]] / [[packBlocks]]
+    * are its only writers and [[decodeBlock]] its only reader. Ids sort
+    * stably, so a block is deterministic under `collect_list`'s
+    * nondeterministic order; every vector must have the block's dim.
     */
-  /** A [[PackVecBlock]] blob decoded into contiguous arrays plus each
+  private[graft] def packBlock(rows: Seq[(Long, Array[Float])]): Array[Byte] =
+    writeBlock(sortedRows(rows))
+
+  /** [[packBlock]] over consecutive `blockRows`-row slices of the
+    * id-sorted rows — chunk i holds rows [i·blockRows, (i+1)·blockRows);
+    * no rows, no blobs. */
+  private[graft] def packBlocks(rows: Seq[(Long, Array[Float])],
+                                blockRows: Int): Array[Array[Byte]] =
+    sortedRows(rows).grouped(blockRows).map(writeBlock).toArray
+
+  private def sortedRows(rows: Seq[(Long, Array[Float])]): IndexedSeq[(Long, Array[Float])] = {
+    val sorted = rows.toIndexedSeq.sortBy(_._1)
+    val dim = if (sorted.isEmpty) 0 else sorted.head._2.length
+    require(sorted.forall(_._2.length == dim),
+      s"packed vector block: ragged vectors (expected dim $dim)")
+    sorted
+  }
+
+  private def writeBlock(rows: IndexedSeq[(Long, Array[Float])]): Array[Byte] = {
+    val n = rows.length
+    val dim = if (n == 0) 0 else rows.head._2.length
+    val buf = java.nio.ByteBuffer.allocate(8 + n * (8 + dim * 4))
+    buf.putInt(n).putInt(dim)
+    rows.foreach { case (id, _) => buf.putLong(id) }
+    val floats = buf.asFloatBuffer()
+    rows.foreach { case (_, v) => floats.put(v) }
+    buf.array()
+  }
+
+  /** The (id, vector) rows of a collected `array<struct<id:long,
+    * vec:array<float>>>` — the pack expressions' input. */
+  private[graft] def entryRows(entries: ArrayData): Array[(Long, Array[Float])] =
+    Array.tabulate(entries.numElements()) { i =>
+      val e = entries.getStruct(i, 2)
+      (e.getLong(0), e.getArray(1).toFloatArray())
+    }
+
+  private[graft] def checkEntries(name: String, dt: DataType): TypeCheckResult = dt match {
+    case ArrayType(s: org.apache.spark.sql.types.StructType, _)
+      if s.length == 2 && s(0).dataType == org.apache.spark.sql.types.LongType &&
+        (s(1).dataType match {
+          case ArrayType(FloatType, _) => true
+          case _ => false
+        }) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"$name expects array<struct<id:long,vec:array<float>>>, got ${other.simpleString}")
+  }
+
+  /** A packed-vector blob decoded into contiguous arrays plus each
     * vector's precomputed norm accumulator (Σ y², double, SAME summation
-    * order as the fused loops it feeds — scores stay bit-identical).
+    * order as the dot it is paired with — scores stay bit-identical).
     * Decoded LOCALLY per expression call: one bulk pass replaces the
     * four-byte-loads-plus-swap `ByteBuffer.getFloat` per element per
     * pair, and the norm is computed once per vector instead of once per
@@ -695,121 +618,12 @@ object VectorFunctions {
     new DecodedBlock(n, dim, ids, vecs, normSq)
   }
 
-  def blockTopK(qid: Long, q: Array[Float], blob: Array[Byte], k: Int,
-                floor: Double): ArrayData = {
-    import org.apache.spark.sql.catalyst.util.GenericArrayData
-    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-    val blk = decodeBlock(blob)
-    val n = blk.n
-    val dim = blk.dim
-    val vecs = blk.vecs
-    val m = math.min(q.length, dim)
-    // EXACT CosineSimilarity arithmetic: double accumulation over the min
-    // length, 0.0 on zero norms — the block cascade must select the same
-    // rows the flat join selected. The query norm accumulates once per
-    // (query, chunk) row; each candidate's norm comes precomputed from
-    // the decode (identical summation order, so identical doubles).
-    // NOTE on m < dim: the fused loop accumulated ny over only the first
-    // m candidate elements; the precomputed norm covers all dim. Queries
-    // and corpus vectors share one fixed dim in every caller (the packer
-    // enforces one dim per block), so m == min(q.length, dim) == dim on
-    // real plans; guard the degenerate mismatch by falling back to the
-    // per-pair loop.
-    val nx = VecKernels.normSq(q, 0, m)
-    val topIds = new Array[Long](k)
-    val topScores = new Array[Double](k)
-    var size = 0
-    var r = 0
-    while (r < n) {
-      val id = blk.ids(r)
-      if (id != qid) {
-        val dot = VecKernels.dot(q, 0, vecs, r * dim, m)
-        val ny =
-          if (m == dim) blk.normSq(r)
-          else VecKernels.normSq(vecs, r * dim, m)
-        val s = if (nx == 0.0 || ny == 0.0) 0.0 else dot / math.sqrt(nx * ny)
-        if (s >= floor && (size < k || s > topScores(size - 1))) {
-          // insertion position: strictly-greater scores stay ahead; equal
-          // scores stay ahead too (earlier = lower id within the blob)
-          var p = if (size < k) size else k - 1
-          while (p > 0 && topScores(p - 1) < s) {
-            topIds(p) = topIds(p - 1); topScores(p) = topScores(p - 1); p -= 1
-          }
-          topIds(p) = id; topScores(p) = s
-          if (size < k) size += 1
-        }
-      }
-      r += 1
-    }
-    val out = new Array[Any](size)
-    var x = 0
-    while (x < size) {
-      out(x) = new GenericInternalRow(Array[Any](topIds(x), topScores(x)))
-      x += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  /** Global top-`k` of one query against MANY decoded chunks — the
-    * replicated-index probe kernel ([[graft.operators.Similarity]]'s
-    * replicated float probe). Arithmetic is EXACTLY [[blockTopK]]'s
-    * (double accumulation, min-length, 0.0 on zero norms, self-match
-    * excluded, floor inside the scan). The insertion order is the full
-    * (cosine desc, id asc) total order — the id tie-break is explicit
-    * here because chunks arrive in arbitrary list order, where
-    * [[blockTopK]] gets it implicitly from the blob's ascending ids —
-    * so the result is the SAME rows and ranks the per-chunk → global
-    * window cascade selects (spec-pinned).
-    *
-    * Returns (ids, scores, size): the caller emits rows ranked 1..size.
-    */
-  private[graft] def replicatedTopK(qid: Long, q: Array[Float],
-                                    blocks: Iterator[DecodedBlock],
-                                    k: Int, floor: Double):
-      (Array[Long], Array[Double], Int) = {
-    val nx = VecKernels.normSq(q, 0, q.length)
-    val topIds = new Array[Long](k)
-    val topScores = new Array[Double](k)
-    var size = 0
-    while (blocks.hasNext) {
-      val blk = blocks.next()
-      val dim = blk.dim
-      val vecs = blk.vecs
-      val m = math.min(q.length, dim)
-      var r = 0
-      while (r < blk.n) {
-        val id = blk.ids(r)
-        if (id != qid) {
-          val dot = VecKernels.dot(q, 0, vecs, r * dim, m)
-          // q-norm over min-length when ragged, like blockTopK's guard
-          val nxm = if (m == q.length) nx else VecKernels.normSq(q, 0, m)
-          val ny =
-            if (m == dim) blk.normSq(r)
-            else VecKernels.normSq(vecs, r * dim, m)
-          val sc = if (nxm == 0.0 || ny == 0.0) 0.0 else dot / math.sqrt(nxm * ny)
-          val last = size - 1
-          if (sc >= floor && (size < k || sc > topScores(last) ||
-              (sc == topScores(last) && id < topIds(last)))) {
-            var p = if (size < k) size else k - 1
-            while (p > 0 && (topScores(p - 1) < sc ||
-                (topScores(p - 1) == sc && topIds(p - 1) > id))) {
-              topIds(p) = topIds(p - 1); topScores(p) = topScores(p - 1); p -= 1
-            }
-            topIds(p) = id; topScores(p) = sc
-            if (size < k) size += 1
-          }
-        }
-        r += 1
-      }
-    }
-    (topIds, topScores, size)
-  }
-
   /** A [[DecodedBlock]] quantized to int8 — the replicated probe's
     * scalar-quantizer index copy, taken when only the int8 copy fits the
-    * replicate budget (spark.graft.ann.replicateIndexBytes): 4× smaller resident arrays, 16-lane integer SIMD dots. Each vector
-    * quantizes independently with the `quantize_i8` expression's exact
-    * math (cosine is per-vector scale-invariant); norms precompute at
+    * replicate budget (spark.graft.ann.replicateIndexBytes): 4× smaller
+    * resident arrays, 16-lane integer SIMD dots. Each vector quantizes
+    * independently with the `quantize_i8` expression's exact math
+    * (cosine is per-vector scale-invariant); norms precompute at
     * quantize time like [[decodeBlock]]'s.
     */
   private[graft] final class QuantBlock(val n: Int, val dim: Int,
@@ -832,114 +646,181 @@ object VectorFunctions {
     new QuantBlock(n, dim, blk.ids, qvecs, normSq)
   }
 
-  /** [[replicatedTopK]] over int8-quantized blocks: IDENTICAL selection
-    * semantics (floor inside the scan, self-match excluded, full
-    * (cosine desc, id asc) insertion order) with `cosine_sim_i8` score
-    * arithmetic — long dot / sqrt(long norms), 0.0 on zero norms. The
-    * scores are approximations of the float cosine to ~1e-2; callers
-    * rerank the shortlist exactly downstream.
+  /** The one ranked top-`k` buffer every probe kernel selects through:
+    * bounded insertion under the full (score desc, id asc) total order,
+    * the id tie-break explicit (blocks may arrive in any list order), and
+    * `score >= floor` on entry — so a NaN score never enters. `ids` and
+    * `scores` hold the ranked entries in [0, size).
+    */
+  private[graft] final class TopK(k: Int, floor: Double) {
+    val ids = new Array[Long](k)
+    val scores = new Array[Double](k)
+    var size = 0
+
+    def offer(id: Long, s: Double): Unit = {
+      val last = size - 1
+      if (s >= floor && (size < k || s > scores(last) ||
+          (s == scores(last) && id < ids(last)))) {
+        var p = if (size < k) size else last
+        while (p > 0 && (scores(p - 1) < s || (scores(p - 1) == s && ids(p - 1) > id))) {
+          ids(p) = ids(p - 1); scores(p) = scores(p - 1); p -= 1
+        }
+        ids(p) = id; scores(p) = s
+        if (size < k) size += 1
+      }
+    }
+  }
+
+  /** The float cosine of q[qOff, qOff + m) against row `r` of `blk` —
+    * the `cosine_sim` arithmetic ([[VecKernels.cosineFF]]: double
+    * accumulation over the min-length prefix `m`, 0.0 on a zero norm)
+    * with the query norm `nx` over `m` supplied by the caller and the
+    * row's norm taken from the decode when `m` covers the whole row.
+    * Real plans pack one dim on both sides, so the per-pair norm is only
+    * the degenerate ragged case.
+    */
+  private def cosineRow(q: Array[Float], qOff: Int, m: Int, nx: Double,
+                        blk: DecodedBlock, r: Int): Double = {
+    val off = r * blk.dim
+    val dot = VecKernels.dot(q, qOff, blk.vecs, off, m)
+    val ny = if (m == blk.dim) blk.normSq(r) else VecKernels.normSq(blk.vecs, off, m)
+    if (nx == 0.0 || ny == 0.0) 0.0 else dot / math.sqrt(nx * ny)
+  }
+
+  /** The float scan: offer every row of `blk` except the query itself
+    * (`id == qid`) to `top`, scored by [[cosineRow]] against
+    * q[qOff, qOff + qLen), whose full-length Σ q² is `qNorm`. */
+  private def scanFloat(qid: Long, q: Array[Float], qOff: Int, qLen: Int,
+                        qNorm: Double, blk: DecodedBlock, top: TopK): Unit = {
+    val m = math.min(qLen, blk.dim)
+    val nx = if (m == qLen) qNorm else VecKernels.normSq(q, qOff, m)
+    var r = 0
+    while (r < blk.n) {
+      val id = blk.ids(r)
+      if (id != qid) top.offer(id, cosineRow(q, qOff, m, nx, blk, r))
+      r += 1
+    }
+  }
+
+  /** The int8 scan: [[scanFloat]] with the `cosine_sim_i8` arithmetic —
+    * long dot over the min-length prefix, long norms (the row's from the
+    * quantize when the prefix covers it), 0.0 on a zero norm. */
+  private def scanI8(qid: Long, q: Array[Byte], qNorm: Long, blk: QuantBlock,
+                     top: TopK): Unit = {
+    val m = math.min(q.length, blk.dim)
+    val nx = if (m == q.length) qNorm else VecKernels.normSqI8(q, 0, m)
+    var r = 0
+    while (r < blk.n) {
+      val id = blk.ids(r)
+      if (id != qid) {
+        val off = r * blk.dim
+        val dot = VecKernels.dotI8(q, 0, blk.qvecs, off, m)
+        val ny = if (m == blk.dim) blk.normSq(r) else VecKernels.normSqI8(blk.qvecs, off, m)
+        top.offer(id,
+          if (nx == 0L || ny == 0L) 0.0
+          else dot.toDouble / math.sqrt(nx.toDouble * ny.toDouble))
+      }
+      r += 1
+    }
+  }
+
+  /** The [[IvfBlockTopK]] kernel (interpreted eval and codegen): the
+    * top `k` of one query within one packed blob, as
+    * `(neighbor_id, cosine)` rows in rank order. */
+  def blockTopK(qid: Long, q: Array[Float], blob: Array[Byte], k: Int,
+                floor: Double): ArrayData = {
+    val top = new TopK(k, floor)
+    scanFloat(qid, q, 0, q.length, VecKernels.normSq(q, 0, q.length), decodeBlock(blob), top)
+    new GenericArrayData(Array.tabulate[Any](top.size)(i =>
+      new GenericInternalRow(Array[Any](top.ids(i), top.scores(i)))))
+  }
+
+  /** Global top-`k` of one query against MANY decoded chunks — the
+    * replicated float probe of [[graft.operators.Similarity]]. One
+    * buffer across every chunk, so the result is the SAME rows and ranks
+    * the per-chunk → global window cascade selects (spec-pinned).
+    * Returns (ids, scores, size): the caller emits rows ranked 1..size.
+    */
+  private[graft] def replicatedTopK(qid: Long, q: Array[Float],
+                                    blocks: Iterator[DecodedBlock],
+                                    k: Int, floor: Double):
+      (Array[Long], Array[Double], Int) = {
+    val top = new TopK(k, floor)
+    val qNorm = VecKernels.normSq(q, 0, q.length)
+    blocks.foreach(scanFloat(qid, q, 0, q.length, qNorm, _, top))
+    (top.ids, top.scores, top.size)
+  }
+
+  /** [[replicatedTopK]] over int8-quantized blocks (the int8 scan). The
+    * scores approximate the float cosine to ~1e-2; callers rerank the
+    * shortlist exactly downstream.
     */
   private[graft] def replicatedTopKI8(qid: Long, q: Array[Byte],
                                       blocks: Iterator[QuantBlock],
                                       k: Int, floor: Double):
       (Array[Long], Array[Double], Int) = {
-    val nxFull = VecKernels.normSqI8(q, 0, q.length)
-    val topIds = new Array[Long](k)
-    val topScores = new Array[Double](k)
-    var size = 0
-    while (blocks.hasNext) {
-      val blk = blocks.next()
-      val dim = blk.dim
-      val qvecs = blk.qvecs
-      val m = math.min(q.length, dim)
-      var r = 0
-      while (r < blk.n) {
-        val id = blk.ids(r)
-        if (id != qid) {
-          val dot = VecKernels.dotI8(q, 0, qvecs, r * dim, m)
-          val nx = if (m == q.length) nxFull else VecKernels.normSqI8(q, 0, m)
-          val ny =
-            if (m == dim) blk.normSq(r)
-            else VecKernels.normSqI8(qvecs, r * dim, m)
-          val sc =
-            if (nx == 0L || ny == 0L) 0.0
-            else dot.toDouble / math.sqrt(nx.toDouble * ny.toDouble)
-          val last = size - 1
-          if (sc >= floor && (size < k || sc > topScores(last) ||
-              (sc == topScores(last) && id < topIds(last)))) {
-            var p = if (size < k) size else k - 1
-            while (p > 0 && (topScores(p - 1) < sc ||
-                (topScores(p - 1) == sc && topIds(p - 1) > id))) {
-              topIds(p) = topIds(p - 1); topScores(p) = topScores(p - 1); p -= 1
-            }
-            topIds(p) = id; topScores(p) = sc
-            if (size < k) size += 1
-          }
-        }
-        r += 1
-      }
-    }
-    (topIds, topScores, size)
+    val top = new TopK(k, floor)
+    val qNorm = VecKernels.normSqI8(q, 0, q.length)
+    blocks.foreach(scanI8(qid, q, qNorm, _, top))
+    (top.ids, top.scores, top.size)
   }
 
-  /** Top-`k` per query of one packed QUERY block against one packed
-    * corpus chunk — the [[BlockCrossTopK]] kernel. Same exact arithmetic
-    * and (cosine desc, id asc) order as [[blockTopK]]: double
-    * accumulation, norms in blob element order, 0.0 on zero norms,
-    * self-match (`id == qid`) excluded, floor applied inside the scan.
-    * Returns the concatenation of every query's ranked entries.
-    */
+  /** The [[BlockCrossTopK]] kernel: the top `k` of EVERY query of one
+    * packed query block within one packed corpus chunk, as the
+    * concatenation of each query's `(query_id, neighbor_id, cosine)`
+    * rows in rank order. */
   def blockCrossTopK(qblob: Array[Byte], cblob: Array[Byte], k: Int,
                      floor: Double): ArrayData = {
-    import org.apache.spark.sql.catalyst.util.GenericArrayData
-    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
     val qb = decodeBlock(qblob)
     val cb = decodeBlock(cblob)
-    if (qb.n == 0 || cb.n == 0) return new GenericArrayData(Array.empty[Any])
-    val dim = cb.dim
-    // real plans pack one fixed dim on both sides; the mismatched case
-    // keeps the fused loop's min-length semantics via per-pair norms
-    val exact = qb.dim == dim
-    val m = math.min(qb.dim, dim)
     val out = new java.util.ArrayList[Any](qb.n * math.min(k, cb.n))
-    val topIds = new Array[Long](k)
-    val topScores = new Array[Double](k)
+    val top = new TopK(k, floor)
     var qi = 0
     while (qi < qb.n) {
       val qid = qb.ids(qi)
-      val qBase = qi * qb.dim
-      val nx =
-        if (exact) qb.normSq(qi)
-        else VecKernels.normSq(qb.vecs, qBase, m)
-      var size = 0
-      var r = 0
-      while (r < cb.n) {
-        val id = cb.ids(r)
-        if (id != qid) {
-          val dot = VecKernels.dot(qb.vecs, qBase, cb.vecs, r * dim, m)
-          val ny =
-            if (exact) cb.normSq(r)
-            else VecKernels.normSq(cb.vecs, r * dim, m)
-          val s = if (nx == 0.0 || ny == 0.0) 0.0 else dot / math.sqrt(nx * ny)
-          if (s >= floor && (size < k || s > topScores(size - 1))) {
-            var p = if (size < k) size else k - 1
-            while (p > 0 && topScores(p - 1) < s) {
-              topIds(p) = topIds(p - 1); topScores(p) = topScores(p - 1); p -= 1
-            }
-            topIds(p) = id; topScores(p) = s
-            if (size < k) size += 1
-          }
-        }
-        r += 1
-      }
+      top.size = 0
+      scanFloat(qid, qb.vecs, qi * qb.dim, qb.dim, qb.normSq(qi), cb, top)
       var x = 0
-      while (x < size) {
-        out.add(new GenericInternalRow(Array[Any](qid, topIds(x), topScores(x))))
+      while (x < top.size) {
+        out.add(new GenericInternalRow(Array[Any](qid, top.ids(x), top.scores(x))))
         x += 1
       }
       qi += 1
     }
     new GenericArrayData(out.toArray)
+  }
+
+  /** The [[NearestCentroids]] selection (interpreted eval and codegen):
+    * the `min(k, nprobe)` codebook ids nearest `q` by the float cosine
+    * ([[cosineRow]], bit-identical to `cosine_sim`), nearest first.
+    * nprobe max-passes with strict `>` over the ascending ids, so equal
+    * scores tie to the lowest id — the order `array_sort` on
+    * `(-score, cid)` produces, except that a -0.0/+0.0 pair ties to the
+    * lower id (distinct centroids cannot score distinguishable zeros
+    * against one query). A NaN score wins a pass only as the first
+    * untaken id, which is why this is not the [[TopK]] buffer (that one
+    * drops NaN).
+    */
+  def nearestCentroids(q: Array[Float], codebook: DecodedBlock, nprobe: Int): ArrayData = {
+    val k = codebook.n
+    val m = math.min(q.length, codebook.dim)
+    val nx = VecKernels.normSq(q, 0, m)
+    val scores = new Array[Double](k)
+    var c = 0
+    while (c < k) { scores(c) = cosineRow(q, 0, m, nx, codebook, c); c += 1 }
+    val outLen = math.min(k, nprobe)
+    val taken = new Array[Boolean](k)
+    val out = new Array[Long](outLen)
+    var s = 0
+    while (s < outLen) {
+      var best = -1; var bs = Double.NegativeInfinity; var j = 0
+      while (j < k) {
+        if (!taken(j) && (best < 0 || scores(j) > bs)) { best = j; bs = scores(j) }
+        j += 1
+      }
+      taken(best) = true; out(s) = codebook.ids(best); s += 1
+    }
+    new GenericArrayData(out)
   }
 
   /** Codegen'd native cosine (requires [[register]] on the session). */
@@ -962,6 +843,4 @@ object VectorFunctions {
     aggregate(
       zip_with(a, b, (p, q) => p.cast("double") * q.cast("double")),
       lit(0.0), (acc, v) => acc + v)
-
-  def l2Norm(a: Column): Column = sqrt(dotHof(a, a))
 }

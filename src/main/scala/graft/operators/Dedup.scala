@@ -87,10 +87,6 @@ object Dedup extends org.apache.spark.internal.Logging {
       .agg(min(col(idCol)).as(idCol), count(lit(1)).as("dup_cnt"))
       .drop("__h1", "__h2")
 
-  /** Exact dedup, row-preserving form (`dropDuplicates`). */
-  def exactRows(docs: DataFrame, keys: Seq[String]): DataFrame =
-    docs.dropDuplicates(keys)
-
   /** Exact suppression against a reference corpus: drop rows of `df`
     * whose content appears verbatim in `reference` — the exact sibling of
     * [[suppressNearDups]] (same anti-join shape, 128-bit content keys

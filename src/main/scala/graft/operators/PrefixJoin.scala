@@ -371,16 +371,6 @@ object PrefixJoin {
     unitTfidfTerms(docs, idCol, textCol, docs.count().toDouble)
   }
 
-  /** (id, ks, vs) sorted sparse vectors from a [[unitTfidfTable]] —
-    * the `sorted_dot` input format the exact verify paths use.
-    */
-  def sortedVectorsFromUnit(unit: DataFrame): DataFrame =
-    unit.groupBy(col("id"))
-      .agg(sort_array(collect_list(struct(col("tok"), col("u")))).as("kv"))
-      .select(col("id"),
-        transform(col("kv"), x => x.getField("tok")).as("ks"),
-        transform(col("kv"), x => x.getField("u")).as("vs"))
-
   /** Feature-hashed dense embeddings of the tf-idf unit vectors —
     * the bridge from the exact sparse pair joins to the ANN family
     * ([[Similarity.ivfTopK]] etc.), which needs fixed-dimension

@@ -428,7 +428,7 @@ object Similarity extends org.apache.spark.internal.Logging {
                                   cents: Seq[(Long, Array[Float])],
                                   nprobe: Int): org.apache.spark.sql.Column =
     call_function("nearest_centroids", vec,
-      lit(graft.functions.NearestCentroids.pack(cents)), lit(nprobe))
+      lit(graft.functions.VectorFunctions.packBlock(cents)), lit(nprobe))
 
   /** Nearest-centroid id for a vector column (argmax cosine over the
     * plan-shipped codebook; ties → lowest centroid id).

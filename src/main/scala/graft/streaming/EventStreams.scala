@@ -422,7 +422,7 @@ object EventStreams {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
-        val (build, prev) = (s"${table}_build", s"${table}_prev")
+        val prev = graft.etl.TableLifecycle.prevName(table)
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("k")).orderBy(col("seq").desc, col("op").desc, col("v").desc)
         val latest = batch
@@ -453,14 +453,8 @@ object EventStreams {
                 when(takeIncoming, col("op") =!= "D").otherwise(col("calive")).as("alive"),
                 when(takeIncoming, col("bv")).otherwise(col("cv")).as("v"))
         }
-        merged.write.mode("overwrite").saveAsTable(build)
-        if (spark.catalog.tableExists(table)) {
-          spark.sql(s"DROP TABLE IF EXISTS `$prev`")
-          spark.sql(s"ALTER TABLE `$table` RENAME TO `$prev`")
-        }
-        spark.sql(s"ALTER TABLE `$build` RENAME TO `$table`")
-        spark.sql(s"DROP TABLE IF EXISTS `$prev`")
-        ()
+        graft.etl.TableLifecycle.stageBuild(merged, table)
+        graft.etl.TableLifecycle.swap(spark, table)
       }
 
   /** File-source streaming read of an events-shaped parquet directory —

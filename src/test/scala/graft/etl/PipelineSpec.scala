@@ -83,6 +83,34 @@ class PipelineSpec extends SparkSpec {
     assert(clone.schema == spark.table(t).schema)
   }
 
+  test("swap leaves no _prev table, and a _prev left by a crash does not break the next swap") {
+    import spark.implicits._
+    val t = "lc_swap"
+    val prev = s"${t}_prev"
+    Seq(t, prev, TableLifecycle.buildName(t)).foreach(TableLifecycle.dropIfExists(spark, _))
+    TableLifecycle.stageBuild(Seq(1, 2).toDF("id"), t)
+    TableLifecycle.swap(spark, t)
+    assert(!TableLifecycle.tableExists(spark, prev))
+    TableLifecycle.stageBuild(Seq(1, 2, 3).toDF("id"), t)
+    TableLifecycle.swap(spark, t)
+    assert(TableLifecycle.recordCount(spark, t) == 3)
+    assert(!TableLifecycle.tableExists(spark, prev))
+    // a crash after prod → _prev and before build → prod left prod as
+    // _prev; the next load stages a build and swaps in over it
+    spark.sql(s"ALTER TABLE `$t` RENAME TO `$prev`")
+    TableLifecycle.stageBuild(Seq(1, 2, 3, 4).toDF("id"), t)
+    TableLifecycle.swap(spark, t)
+    assert(TableLifecycle.recordCount(spark, t) == 4)
+    assert(!TableLifecycle.tableExists(spark, prev))
+    // a _prev left beside prod (a crash before its final drop) is replaced
+    Seq(9).toDF("id").write.saveAsTable(prev)
+    TableLifecycle.stageBuild(Seq(5).toDF("id"), t)
+    TableLifecycle.swap(spark, t)
+    assert(spark.table(t).as[Int].collect().toSeq == Seq(5))
+    assert(!TableLifecycle.tableExists(spark, prev))
+    TableLifecycle.dropIfExists(spark, t)
+  }
+
   test("inference runs ONE job regardless of column count") {
     import spark.implicits._
     // 20-column all-text frame: the naive per-column probe would launch 20+

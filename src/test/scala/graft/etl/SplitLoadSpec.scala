@@ -118,14 +118,32 @@ class SplitLoadSpec extends SparkSpec {
     assert(spark.conf.getAll == all)
   }
 
-  test("runDaily loads a table in at most 7 jobs, and its stage write runs on every core") {
+  test("the all-text read names columns as Spark's header read does, and runs no job") {
+    val dir = Files.createTempDirectory("split-header")
+    val files = Seq(
+      "quoted.csv" -> "id,\"last, first\",\"q\"\"x\"\n1,\"a, b\",c\n",
+      "dups.csv" -> "id,name,Name,id,name\n1,2,3,4,5\n",
+      "empty_name.csv" -> "id,,note\n1,2,3\n",
+      "header_only.csv" -> "a,b,c\n",
+      "empty.csv" -> "")
+    files.foreach { case (name, text) =>
+      val f = Files.writeString(dir.resolve(name), text).toString
+      val expected = spark.read.option("header", "true").csv(f).schema.map(_.name)
+      val (df, jobs, _) = jobsOf(Ingest.readCsvAllText(spark, f))
+      assert(df.schema.map(_.name) == expected, name)
+      assert(jobs.isEmpty, s"$name: the header read ran ${jobs.size} jobs")
+      assert(df.collect().toSeq == oneSplit(f).collect().toSeq, name)
+    }
+  }
+
+  test("runDaily loads a table in at most 5 jobs, and its stage write runs on every core") {
     val history = Files.createTempDirectory("split-history").toString
     val dir = Files.createTempDirectory("split-day")
     val f = Files.copy(Path.of(extract), dir.resolve("Split_Extract.csv")).toString
     Pipeline.runDaily(spark, Seq(f), history, withHistory = true) // warm the catalog
     val (report, jobs, _) = jobsOf(Pipeline.runDaily(spark, Seq(f), history, withHistory = true))
     assert(report.tables.map(_.rows) == Seq(12000L))
-    assert(jobs.size <= 7, s"one table load ran ${jobs.size} jobs")
+    assert(jobs.size <= 5, s"one table load ran ${jobs.size} jobs")
     // the steps one at a time: the stage write of the 1.2 MB extract
     val typed = TypeInference.inferAndNarrow(Ingest.readCsvAllText(spark, f))
     val (_, writeJobs, writeTasks) = jobsOf(TableLifecycle.stageBuild(typed, "split_extract"))

@@ -32,7 +32,7 @@ class IvfBlockTopKSpec extends SparkSpec {
     val probes = queries.select(col("vec_id").as("query_id"),
       col("embedding").as("query_vec"),
       explode(call_function("nearest_centroids", col("embedding"),
-        lit(NearestCentroids.pack(index.centroids)), lit(nprobe))).as("list_id"))
+        lit(VectorFunctions.packBlock(index.centroids)), lit(nprobe))).as("list_id"))
     val scored = index.assigned.join(probes, Seq("list_id"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("cosine", VectorFunctions.cosine("query_vec", "corpus_vec"))
@@ -291,10 +291,13 @@ class IvfBlockTopKSpec extends SparkSpec {
 
   test("generative: cross kernel == per-query kernel over random blocks (dims, k, floor, zero vectors)") {
     // Raw ScalaCheck driven from ScalaTest (TypeDetectorPropertySpec
-    // idiom): random query/corpus blocks — including zero vectors, ties
-    // from duplicated vectors, k larger than the block, and floors that
-    // kill everything — must give identical (query, neighbor, cosine)
-    // sets from blockCrossTopK and per-query blockTopK.
+    // idiom): random query/corpus blocks — including zero vectors, exact
+    // ties (the same vector under different ids, the first query's
+    // vector among them), k larger than the block, and floors that kill
+    // everything — must give identical (query, neighbor, cosine) sets
+    // from blockCrossTopK and per-query blockTopK, and the identical
+    // RANKED list from replicatedTopK fed the corpus as several blocks in
+    // reverse id order (so its id tie-break cannot come from scan order).
     import org.scalacheck.{Gen, Prop, Test => ScTest}
     val vecGen = (dim: Int) => Gen.oneOf(
       Gen.listOfN(dim, Gen.chooseNum(-3f, 3f)).map(_.toArray),
@@ -308,17 +311,18 @@ class IvfBlockTopKSpec extends SparkSpec {
       dup <- Gen.oneOf(true, false) // force score ties via duplicate vectors
       k <- Gen.chooseNum(1, 20)
       floor <- Gen.oneOf(Double.NegativeInfinity, -0.5, 0.0, 0.5, 2.0)
+      parts <- Gen.chooseNum(1, 4)
     } yield (dim, qvs.zipWithIndex.map { case (v, i) => (i.toLong, v) },
-      (if (dup && cvs.length > 1) (cvs.head :: cvs.tail.init) :+ cvs.head
+      (if (dup) cvs.head :: cvs ++ List(qvs.head, qvs.head, cvs.head)
        else cvs).zipWithIndex.map { case (v, i) => (100L + i, v) },
-      k, floor)
+      k, floor, parts)
     def pack(rows: Seq[(Long, Array[Float])]): Array[Byte] = {
       import spark.implicits._
       rows.toDF("id", "vec")
         .agg(packCol(collect_list(struct(col("id"), col("vec")))).as("b"))
         .head.getAs[Array[Byte]](0)
     }
-    val prop = Prop.forAll(caseGen) { case (_, qrows, crows, k, floor) =>
+    val prop = Prop.forAll(caseGen) { case (_, qrows, crows, k, floor, parts) =>
       val qblob = pack(qrows)
       val cblob = pack(crows)
       val cross = {
@@ -328,17 +332,24 @@ class IvfBlockTopKSpec extends SparkSpec {
           (r.getLong(0), r.getLong(1), r.getDouble(2))
         }.toSet
       }
-      val perQuery = qrows.flatMap { case (qid, qv) =>
+      val perQuery = qrows.map { case (qid, qv) =>
         val arr = VectorFunctions.blockTopK(qid, qv, cblob, k, floor)
         (0 until arr.numElements()).map { i =>
           val r = arr.getStruct(i, 2)
           (qid, r.getLong(0), r.getDouble(1))
         }
-      }.toSet
-      cross == perQuery
+      }
+      val blocks = crows.grouped((crows.length + parts - 1) / parts).toSeq.reverse
+        .map(b => VectorFunctions.decodeBlock(VectorFunctions.packBlock(b)))
+      val replicated = qrows.map { case (qid, qv) =>
+        val (ids, scores, size) =
+          VectorFunctions.replicatedTopK(qid, qv, blocks.iterator, k, floor)
+        (0 until size).map(i => (qid, ids(i), scores(i)))
+      }
+      cross == perQuery.flatten.toSet && replicated == perQuery
     }
     val res = ScTest.check(ScTest.Parameters.default.withMinSuccessfulTests(60), prop)
-    assert(res.passed, s"cross/per-query kernel divergence: $res")
+    assert(res.passed, s"cross/replicated/per-query kernel divergence: $res")
   }
 
   test("scores are bit-identical to cosine_sim (no arithmetic drift in the kernel)") {

@@ -17,7 +17,7 @@ class NearestCentroidsSpec extends SparkSpec {
   private def ncCol(vec: Column, cents: Seq[(Long, Array[Float])], nprobe: Int): Column = {
     VectorFunctions.register(spark)
     call_function("nearest_centroids", vec,
-      lit(NearestCentroids.pack(cents)), lit(nprobe))
+      lit(VectorFunctions.packBlock(cents)), lit(nprobe))
   }
 
   /** The replaced HOF formulation, reconstructed verbatim as the oracle:
@@ -89,10 +89,9 @@ class NearestCentroidsSpec extends SparkSpec {
   test("null vectors yield null, and the packed codebook round-trips") {
     import spark.implicits._
     val cents = Seq(0L -> Array(1f, 0f), 7L -> Array(0f, 1f))
-    val packed = NearestCentroids.pack(cents)
-    val (ids, vecs) = NearestCentroids.unpack(packed)
-    assert(ids.toSeq == Seq(0L, 7L))
-    assert(vecs.map(_.toSeq).toSeq == Seq(Seq(1f, 0f), Seq(0f, 1f)))
+    val packed = VectorFunctions.decodeBlock(VectorFunctions.packBlock(cents))
+    assert(packed.ids.toSeq == Seq(0L, 7L))
+    assert(packed.vecs.toSeq == Seq(1f, 0f, 0f, 1f))
     val rows = Seq((1L, Some(Array(1f, 1f))), (2L, None))
       .toDF("id", "embedding")
       .select(col("id"), ncCol(col("embedding"), cents, 1).as("lists"))
@@ -101,10 +100,33 @@ class NearestCentroidsSpec extends SparkSpec {
     assert(rows(1).isNullAt(1))
   }
 
+  test("packed-vector blob bytes are pinned: codebook literal, pack_vec_block, pack_vec_blocks") {
+    import spark.implicits._
+    // i32 n, i32 dim, n×i64 ids ascending, n×dim×f32, big-endian — the
+    // layout persisted packed-index artifacts hold, so a writer change
+    // that moves one byte fails here
+    def hex(b: Array[Byte]): String = b.map("%02x".format(_)).mkString
+    assert(hex(VectorFunctions.packBlock(Seq(7L -> Array(0f, 1f), 0L -> Array(1f, 0f)))) ==
+      "0000000200000002" + "00000000000000000000000000000007" +
+        "3f80000000000000000000003f800000")
+    VectorFunctions.register(spark)
+    val entries = Seq((5L, Array(1f, -2.5f)), (1L, Array(0.5f, 0f)), (3L, Array(3f, 0.25f)))
+      .toDF("id", "vec").agg(collect_list(struct(col("id"), col("vec"))).as("e"))
+    val row = entries.select(call_function("pack_vec_block", col("e")),
+      call_function("pack_vec_blocks", col("e"), lit(2))).head
+    assert(hex(row.getAs[Array[Byte]](0)) ==
+      "0000000300000002" + "000000000000000100000000000000030000000000000005" +
+        "3f00000000000000404000003e8000003f800000c0200000")
+    assert(row.getSeq[Array[Byte]](1).map(hex) == Seq(
+      "0000000200000002" + "00000000000000010000000000000003" +
+        "3f00000000000000404000003e800000",
+      "00000001000000020000000000000005" + "3f800000c0200000"))
+  }
+
   test("registered SQL surface agrees with the programmatic column") {
     VectorFunctions.register(spark)
     val cents = someCentroids(4)
-    val packedHex = NearestCentroids.pack(cents).map("%02x".format(_)).mkString
+    val packedHex = VectorFunctions.packBlock(cents).map("%02x".format(_)).mkString
     val viaSql = emb.selectExpr(
         "vec_id", s"nearest_centroids(embedding, unhex('$packedHex'), 2) AS lists")
     val viaCol = emb.select(col("vec_id"),
