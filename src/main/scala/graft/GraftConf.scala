@@ -184,19 +184,6 @@ object GraftConf {
     v
   }
 
-  /** Per-node neighbor budget for the routed
-    * [[graft.operators.Similarity.cosineNearDupPairs]]: the IVF route
-    * emits the symmetric top-`routeK` neighbor EDGES above the threshold
-    * (a k-NN graph), not the exhaustive pair set — the contract the
-    * recall gate measures. Raise when the corpus has above-threshold
-    * degrees routinely exceeding the budget.
-    */
-  def srpRouteK(spark: SparkSession): Int = {
-    val v = int(spark, "spark.graft.srp.routeK", 64)
-    require(v > 0, s"spark.graft.srp.routeK must be positive, got $v")
-    v
-  }
-
   /** Per-cell array-byte budget of the grid (fragment-and-replicate)
     * verify ([[graft.operators.Dedup.gridJaccardVerify]]): the fragment
     * count P is the smallest whose per-cell array volume

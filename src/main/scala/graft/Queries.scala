@@ -33,20 +33,6 @@ object Queries {
     new java.io.File(System.getProperty("java.io.tmpdir"),
       s"graft-$tag-${spark.sparkContext.applicationId}").getAbsolutePath
 
-  /** Materialize `df` once under [[scratch]] and read it back — the
-    * multi-consumer staging idiom: Spark does no CSE across DataFrame
-    * references, so each downstream ref would re-execute the whole
-    * subtree. The dir is registered for deletion on JVM exit so staged
-    * parquet doesn't accumulate in tmp across application runs.
-    */
-  private def stageScratch(spark: SparkSession, tag: String, df: DataFrame): DataFrame = {
-    val dir = scratch(spark, tag)
-    df.write.mode("overwrite").parquet(dir)
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).deleteOnExit(p)
-    spark.read.parquet(dir)
-  }
-
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
     Tables(spark, dir, name)
 
@@ -836,8 +822,8 @@ object Queries {
     // document frequency is derivable FROM tf (its rows are exactly the
     // distinct (doc, tok) pairs), so stage the narrow tf aggregate once
     // and the corpus is tokenized once instead of twice
-    val tf = stageScratch(spark, "tfidf-tf",
-      toks.groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf")))
+    val tf = Dedup.stage(
+      toks.groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf")), "tfidf-tf")
     val dfreq = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     val n = docs.agg(count(lit(1)).as("n"))
     val score = col("tf").cast("double") * col("n") / col("df")
@@ -1192,9 +1178,9 @@ object Queries {
     // explode would write a corpus-sized table to save a corpus-sized
     // read, a wash at best; two scans total (was three) is the floor
     // without that trade
-    val dl = stageScratch(spark, "bm25-dl",
+    val dl = Dedup.stage(
       docs.select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
-        .groupBy(col("doc_id")).agg(count(lit(1)).as("dl")))
+        .groupBy(col("doc_id")).agg(count(lit(1)).as("dl")), "bm25-dl")
     val stats = dl.agg(count(lit(1)).as("n"), avg(col("dl")).as("avgdl"))
     val toks = docs.select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
     val tf = toks.filter(col("tok").isin(terms: _*))
@@ -1405,9 +1391,9 @@ object Queries {
     // three consumers (LM counts, total, per-doc join): stage the
     // narrow token table so the corpus is scanned and tokenized once —
     // the q162 single-scan rule
-    val toks = stageScratch(spark, "unigram-toks",
+    val toks = Dedup.stage(
       t(spark, dir, "documents")
-        .select(col("doc_id"), explode(tokens(col("text"))).as("tok")))
+        .select(col("doc_id"), explode(tokens(col("text"))).as("tok")), "unigram-toks")
     val lm = toks.groupBy(col("tok")).agg(count(lit(1)).as("c"))
     val total = toks.agg(count(lit(1)).as("n"))
     toks.join(broadcast(lm), "tok")
@@ -2347,10 +2333,10 @@ object Queries {
     // consumed three times (norms + both sides of the term self-join):
     // stage the narrow weight table once or the explode/tf/df pipeline
     // re-executes per consumer
-    val w = stageScratch(spark, "tfidf-w",
+    val w = Dedup.stage(
       tf.join(dfT, "term").crossJoin(broadcast(nRow))
         .select(col("doc_id"), col("term"),
-          (col("tf") * log(col("n_docs").cast("double") / col("df"))).as("w")))
+          (col("tf") * log(col("n_docs").cast("double") / col("df"))).as("w")), "tfidf-w")
     val norms = w.groupBy(col("doc_id")).agg(sqrt(sum(col("w") * col("w"))).as("nrm"))
     val dots = w.as("a").join(w.as("b"),
         col("a.term") === col("b.term") && col("a.doc_id") < col("b.doc_id"))
@@ -2403,9 +2389,9 @@ object Queries {
     // union references it TWICE (no CSE across DataFrame refs — each
     // ref would re-generate and re-verify every candidate); stage the
     // narrow pair set once and union the cheap staged scan
-    val pairs = stageScratch(spark, "prefixtopk-pairs",
+    val pairs = Dedup.stage(
       graft.operators.PrefixJoin.weightedCosinePrefixJoin(
-        t(spark, dir, "documents"), "doc_id", "text", 0.8))
+        t(spark, dir, "documents"), "doc_id", "text", 0.8), "prefixtopk-pairs")
     val sym = pairs
       .select(col("id_a").as("doc_id"), col("id_b").as("nbr_id"), col("cosine"))
       .unionAll(pairs
@@ -2441,10 +2427,10 @@ object Queries {
     // reuse) and the hashed dense embeddings (consumed by build + query
     // sides). Column pruning means each consumer reads only its columns
     // from the staged parquet; the tf-idf pipeline executes once.
-    val vecs = stageScratch(spark, "ann-tfidf-vecs",
+    val vecs = Dedup.stage(
       graft.operators.PrefixJoin.vectorTableFromUnit(
         graft.operators.PrefixJoin.unitTfidfTable(
-          t(spark, dir, "documents"), "doc_id", "text"), dim = 256))
+          t(spark, dir, "documents"), "doc_id", "text"), dim = 256), "ann-tfidf-vecs")
     val emb = vecs.select(col("id").as("vec_id"), col("embedding"))
     val sparse = vecs.select(col("id"), col("ks"), col("vs"))
     // hashed index → 25-candidate shortlist; EXACT sparse rerank picks
@@ -2872,9 +2858,9 @@ object Queries {
     // the marginals and the grand total are derivable FROM the
     // contingency table — roll them up from the staged |langs|×|sources|
     // aggregate instead of re-scanning the corpus three more times
-    val obs = stageScratch(spark, "chi2-obs",
+    val obs = Dedup.stage(
       docs.groupBy(col("lang"), col("source"))
-        .agg(count(lit(1)).cast("double").as("o")))
+        .agg(count(lit(1)).cast("double").as("o")), "chi2-obs")
     val rowTot = obs.groupBy(col("lang")).agg(sum(col("o")).as("rl"))
     val colTot = obs.groupBy(col("source")).agg(sum(col("o")).as("cs"))
     val n = obs.agg(sum(col("o")).as("n"))
@@ -2955,11 +2941,11 @@ object Queries {
     // four consumers (N_b, both marginals, the pair counts) would each
     // re-scan and re-explode the corpus (no CSE across DataFrame refs);
     // stage the narrow bigram table once so the text is read ONCE
-    val big = stageScratch(spark, "pmi-bigrams",
+    val big = Dedup.stage(
       toks.select(explode(arrays_zip(
           slice(col("t"), lit(1), size(col("t")) - 1).as("w1"),
           slice(col("t"), lit(2), size(col("t")) - 1).as("w2"))).as("bg"))
-        .select(col("bg.w1").as("w1"), col("bg.w2").as("w2")))
+        .select(col("bg.w1").as("w1"), col("bg.w2").as("w2")), "pmi-bigrams")
     val nb = big.agg(count(lit(1)).cast("double").as("nb"))
     val cl = big.groupBy(col("w1")).agg(count(lit(1)).cast("double").as("c_l"))
     val cr = big.groupBy(col("w2")).agg(count(lit(1)).cast("double").as("c_r"))
@@ -3037,9 +3023,9 @@ object Queries {
     // from this aggregate — unstaged, the corpus explode would re-run
     // once per reference chain (~8×); staged, it runs once and the
     // re-reads are scans of a |vocab|×|langs| table
-    val counts = stageScratch(spark, "jsd-counts",
+    val counts = Dedup.stage(
       toks.groupBy(col("lang"), col("tok"))
-        .agg(count(lit(1)).cast("double").as("c")))
+        .agg(count(lit(1)).cast("double").as("c")), "jsd-counts")
     val totals = counts.groupBy(col("lang")).agg(sum(col("c")).as("tot"))
     val probs = counts.join(broadcast(totals), "lang")
       .select(col("lang"), col("tok"), (col("c") / col("tot")).as("p"))
@@ -3252,10 +3238,10 @@ object Queries {
     // three consumers (sizes + both sides of the overlap self-join):
     // stage the per-source vocabulary so the corpus explode + distinct
     // shuffle run once (q162 single-scan rule)
-    val vocab = stageScratch(spark, "vocab-overlap",
+    val vocab = Dedup.stage(
       t(spark, dir, "documents")
         .select(col("source"), explode(tokens(col("text"))).as("tok"))
-        .distinct())
+        .distinct(), "vocab-overlap")
     val sizes = vocab.groupBy(col("source")).agg(count(lit(1)).as("vsize"))
     val inter = vocab.select(col("source").as("src_a"), col("tok"))
       .join(vocab.select(col("source").as("src_b"), col("tok")), "tok")
@@ -3573,10 +3559,10 @@ object Queries {
     // (basket, pair) multiset, so identical n_pair; the old form paid a
     // distinct exchange plus two join-side exchanges before the pair
     // count — this pays one basket exchange.
-    val baskets = stageScratch(spark, "assoc-baskets",
+    val baskets = Dedup.stage(
       t(spark, dir, "lineitem")
         .groupBy(col("l_orderkey").as("basket"))
-        .agg(sort_array(collect_set(col("l_partkey"))).as("items")))
+        .agg(sort_array(collect_set(col("l_partkey"))).as("items")), "assoc-baskets")
     val nBaskets = baskets.count().toDouble
     val itemCnt = baskets.select(explode(col("items")).as("item"))
       .groupBy(col("item")).agg(count(lit(1)).as("cnt"))
@@ -3675,12 +3661,12 @@ object Queries {
       .filter(size(col("t")) >= 2)
     // three consumers (bigram counts, left-marginal counts, per-doc
     // join): stage the narrow bigram table — one corpus scan (q162 rule)
-    val big = stageScratch(spark, "bixent-bigrams",
+    val big = Dedup.stage(
       toks.select(col("doc_id"),
           explode(arrays_zip(
             slice(col("t"), lit(1), size(col("t")) - 1).as("w1"),
             slice(col("t"), lit(2), size(col("t")) - 1).as("w2"))).as("bg"))
-        .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2")))
+        .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2")), "bixent-bigrams")
     val c12 = big.groupBy(col("w1"), col("w2"))
       .agg(count(lit(1)).cast("double").as("c12"))
     val c1 = big.groupBy(col("w1")).agg(count(lit(1)).cast("double").as("c1"))
@@ -3762,11 +3748,11 @@ object Queries {
   def dailyAcf(spark: SparkSession, dir: String): DataFrame = {
     // the series joins itself (current vs lagged) — stage the tiny
     // days×types table so the event scan + aggregate run once
-    val daily = stageScratch(spark, "acf-daily",
+    val daily = Dedup.stage(
       t(spark, dir, "events")
         .groupBy(col("event_type"),
           datediff(to_date(col("ts")), lit("2024-01-01").cast("date")).as("day"))
-        .agg(count(lit(1)).as("c")))
+        .agg(count(lit(1)).as("c")), "acf-daily")
     val sprayed = daily
       .withColumn("lag", explode(array(lit(1), lit(2), lit(3), lit(7))))
     val prev = daily.select(col("event_type").as("ptype"),
@@ -3803,11 +3789,11 @@ object Queries {
   def cusumChangepoint(spark: SparkSession, dir: String): DataFrame = {
     // consumed by the per-type stats AND the cumulative walk — stage
     // the tiny days×types series so the event scan runs once
-    val daily = stageScratch(spark, "cusum-daily",
+    val daily = Dedup.stage(
       t(spark, dir, "events")
         .groupBy(col("event_type"),
           datediff(to_date(col("ts")), lit("2024-01-01").cast("date")).as("day"))
-        .agg(count(lit(1)).as("c")))
+        .agg(count(lit(1)).as("c")), "cusum-daily")
     val stats = daily.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("c")).as("tot"),
         sum(col("c") * col("c")).as("sqtot"))
@@ -3961,11 +3947,11 @@ object Queries {
   def dowAnova(spark: SparkSession, dir: String): DataFrame = {
     // consumed by both the per-dow and per-type aggregates — stage the
     // tiny days×types series so the event scan runs once (q190 rule)
-    val daily = stageScratch(spark, "anova-daily",
+    val daily = Dedup.stage(
       t(spark, dir, "events")
         .groupBy(col("event_type"), to_date(col("ts")).as("day"))
         .agg(count(lit(1)).as("c"))
-        .withColumn("dow", dayofweek(col("day"))))
+        .withColumn("dow", dayofweek(col("day"))), "anova-daily")
     val perDow = daily.groupBy(col("event_type"), col("dow"))
       .agg(count(lit(1)).as("nd"), sum(col("c")).as("sd"))
     val perType = daily.groupBy(col("event_type"))
@@ -4182,15 +4168,15 @@ object Queries {
     * then run the rendered strings through the REAL opt-in path: the
     * lenient type vote (`inferColumnTypes(lenient = true)`) followed by
     * `TypeInference.narrow(lenient = true)`, whose codegen'd
-    * `lenient_temporal_norm` canonicalizes scan-locally before the same
-    * strict grammar. The oracle is round-trip identity (DuckDB reads
+    * `temporal_parse(s, true)` reads the word-order shapes scan-locally
+    * through the same grammar the vote used. The oracle is round-trip identity (DuckDB reads
     * o_orderdate directly), so any grammar failure surfaces
     * as a null/hash mismatch rather than a weaker rows-only check. The
     * voted type is date or timestamp depending on which styles the
     * bounded sample saw; both narrow through the identical parse and
     * cast to the same civil day, so the output is vote-invariant.
     * Scale shape: one orders scan, one fused codegen projection
-    * (render → normalize → parse), no shuffle before the final sort.
+    * (render → parse), no shuffle before the final sort.
     */
   def lenientDates(spark: SparkSession, dir: String): DataFrame = {
     import graft.etl.{DType, TypeInference}
@@ -4213,11 +4199,11 @@ object Queries {
     val mer = when(col("o_orderkey") % 2 === 0, lit("am")).otherwise(lit("pm"))
     val style3 = concat(date_format(d, "MMMM "), dayS, lit(" "), yearS,
       lit(" "), hour12, lit(":30 "), mer)
-    val rendered = stageScratch(spark, "q205-render", orders.select(col("o_orderkey"),
+    val rendered = Dedup.stage(orders.select(col("o_orderkey"),
       when(col("o_orderkey") % 4 === 0, style0)
         .when(col("o_orderkey") % 4 === 1, style1)
         .when(col("o_orderkey") % 4 === 2, style2)
-        .otherwise(style3).as("raw_date")))
+        .otherwise(style3).as("raw_date")), "q205-render")
     val voted = TypeInference.inferColumnTypes(
       rendered.select(col("raw_date")), lenient = true)
     require(Set[DType](DType.DateD, DType.Timestamp)(voted("raw_date")),

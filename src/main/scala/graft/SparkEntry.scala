@@ -3183,8 +3183,8 @@ object SparkEntry {
         |FROM ranked WHERE rnk <= 5 ORDER BY doc_id, rnk""".stripMargin,
 
     // q205: the Spark side renders o_orderdate into free-form word-month
-    // strings and recovers the day through the lenient grammar + strict
-    // grammar; the oracle is the round-trip identity on the source column
+    // strings and recovers the day through the lenient temporal grammar;
+    // the oracle is the round-trip identity on the source column
     "q205_lenient_dates" ->
       """SELECT o_orderkey, CAST(o_orderdate AS DATE) AS parsed_day
         |FROM orders ORDER BY o_orderkey""".stripMargin

@@ -1,7 +1,7 @@
 package graft.etl
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Small-file compaction — the lake-maintenance operator every long-lived
   * ingest pipeline needs: streaming sinks and per-batch writes accumulate
@@ -52,21 +52,8 @@ object Compaction extends org.apache.spark.internal.Logging {
       logInfo(s"compact: $dir already at ${before.size} files (target $want); no-op")
       return Report(dir, before.size, before.size, totalBytes, df.count())
     }
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(p.getParent, p.getName + ".compact")
     // rows counted from the REWRITTEN data (a lost row must show up here)
-    spark.read.parquet(dir).repartition(want)
-      .write.mode("overwrite").parquet(tmp.toString)
-    val rows = spark.read.parquet(tmp.toString).count()
-    val old = new Path(p.getParent, p.getName + ".precompact")
-    if (fs.exists(old)) fs.delete(old, true)
-    if (!fs.rename(p, old)) throw new java.io.IOException(s"compact: cannot stage $p")
-    if (!fs.rename(tmp, p)) {
-      fs.rename(old, p) // roll back; original data untouched
-      throw new java.io.IOException(s"compact: cannot swap $tmp into place")
-    }
-    fs.delete(old, true)
+    val rows = swapIn(spark, dir, "compact", df.repartition(want))
     Report(dir, before.size, dataFiles(spark, dir).size, totalBytes, rows)
   }
 
@@ -83,23 +70,34 @@ object Compaction extends org.apache.spark.internal.Logging {
     * directory is the unit for the same reason.
     */
   def deleteWhere(spark: SparkSession, dir: String, predicate: String): DeleteReport = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val total = spark.read.parquet(dir).count()
-    val tmp = new Path(p.getParent, p.getName + ".delete")
     // delete ONLY rows where the predicate is TRUE: a NULL predicate must
     // keep the row (bare NOT(pred) would silently delete null-valued rows)
-    spark.read.parquet(dir).filter(s"NOT coalesce(($predicate), false)")
-      .write.mode("overwrite").parquet(tmp.toString)
-    val remaining = spark.read.parquet(tmp.toString).count()
-    val old = new Path(p.getParent, p.getName + ".predelete")
+    val remaining = swapIn(spark, dir, "delete",
+      spark.read.parquet(dir).filter(s"NOT coalesce(($predicate), false)"))
+    DeleteReport(dir, total - remaining, remaining)
+  }
+
+  /** Writes `df` to the sibling `<dir>.<verb>`, counts its rows, and swaps
+    * it in: `dir` moves aside to `<dir>.pre<verb>`, the new directory
+    * takes its name (on failure the old one moves back, untouched), and
+    * the old one is deleted. `verb` names the directories and the errors.
+    * Returns the rewritten row count.
+    */
+  private def swapIn(spark: SparkSession, dir: String, verb: String, df: DataFrame): Long = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tmp = new Path(p.getParent, s"${p.getName}.$verb")
+    df.write.mode("overwrite").parquet(tmp.toString)
+    val rows = spark.read.parquet(tmp.toString).count()
+    val old = new Path(p.getParent, s"${p.getName}.pre$verb")
     if (fs.exists(old)) fs.delete(old, true)
-    if (!fs.rename(p, old)) throw new java.io.IOException(s"delete: cannot stage $p")
+    if (!fs.rename(p, old)) throw new java.io.IOException(s"$verb: cannot stage $p")
     if (!fs.rename(tmp, p)) {
-      fs.rename(old, p)
-      throw new java.io.IOException(s"delete: cannot swap $tmp into place")
+      fs.rename(old, p) // roll back; original data untouched
+      throw new java.io.IOException(s"$verb: cannot swap $tmp into place")
     }
     fs.delete(old, true)
-    DeleteReport(dir, total - remaining, remaining)
+    rows
   }
 }

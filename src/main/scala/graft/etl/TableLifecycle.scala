@@ -107,7 +107,9 @@ object TableLifecycle {
     * partition. Streaming/incremental ingest accumulates small files that
     * degrade scan parallelism bookkeeping; periodic compaction is the
     * standard fix. Sorting within partitions clusters the layout for
-    * min/max skipping on the sort key.
+    * min/max skipping on the sort key. The rewrite is staged as the
+    * `_build` table and published by [[swap]], so a crash at any point
+    * leaves a complete copy.
     */
   def compact(spark: SparkSession, table: String, targetFiles: Int,
               sortCols: Seq[String] = Nil): Unit = {
@@ -116,10 +118,8 @@ object TableLifecycle {
       if (sortCols.nonEmpty)
         df.repartition(targetFiles).sortWithinPartitions(sortCols.map(col): _*)
       else df.repartition(targetFiles)
-    val tmp = s"${table}_compacting"
-    arranged.write.mode("overwrite").saveAsTable(tmp)
-    dropIfExists(spark, table)
-    spark.sql(s"ALTER TABLE `$tmp` RENAME TO `$table`")
+    stageBuild(arranged, table)
+    swap(spark, table)
   }
 
   /** D5 — schema-only clone (`CREATE TABLE new AS SELECT * FROM old WHERE

@@ -43,6 +43,7 @@ final class TemporalFields {
   * | `Mon d, yyyy`, `Month d, yyyy`             | `Jan 15, 2024`              |
   * | `d Mon yyyy`                               | `15 Jan 2024`               |
   * | `yyyyMMdd'T'HHmmss`                        | `20240115T103000`           |
+  * | lenient only: word order, below            | `Wed, 4 of March 2020 10:30 PM` |
   *
   * sep is `T`, one space, `T` and a space, or nothing; frac is `.` and 3
   * or 6 digits; offset is `Z` or `±HH:MM` (at most ±18:00). Month words
@@ -50,6 +51,32 @@ final class TemporalFields {
   * `January`…`December`; `d Mon yyyy` takes only the short form). Fields
   * are range-checked with STRICT calendar rules (no 29 February outside
   * leap years, no hour 24, no second 60).
+  *
+  * With `lenient = true` (the opt-in stand-in for dateutil's free word
+  * order, `inferColumnTypes(lenient = true)` and `temporal_parse(s, true)`)
+  * a value is first read as word-order tokens, split on commas and the
+  * regex `\s` class, each token losing one trailing `.`:
+  *
+  * | token                                           | reads as                       |
+  * |-------------------------------------------------|--------------------------------|
+  * | weekday (`monday`…, `mon`…, `tues`, `thur`, `thurs`), `of`, `the` | dropped      |
+  * | month word (`january`…, `jan`…, `sept`)         | the month, once                |
+  * | `d` + `st`/`nd`/`rd`/`th`                       | the day, once                  |
+  * | `H:mm` [`:ss`] [`am`/`pm`]                      | the time, once                 |
+  * | `H` + `am`/`pm`                                 | the hour, once                 |
+  * | `am`/`pm` after a time                          | its meridiem                   |
+  * | `yyyy`                                          | the year                       |
+  * | `d`, then `yy` (2000 base)                      | the day, then the year         |
+  *
+  * case-insensitively (ASCII). A value with another token, no month, day
+  * or year, a day outside 1–31, or an hour, minute or second out of range
+  * is not of this grammar and goes on to the strict shapes. Otherwise its
+  * fields are checked as the strict `M/d/yyyy[ H:mm:ss]` they render to
+  * (calendar rules as above), so a year that renders with fewer than 4
+  * digits is not temporal, except 10–99 without a time, which reads as
+  * `M/d/yy`. Deliberately not dateutil: a value without a day or a year
+  * ("March 2020") is not temporal, since filling it from today's date
+  * would make inference depend on the day it runs.
   *
   * Midnight without an offset is a date; anything else is a timestamp.
   */
@@ -60,22 +87,31 @@ object TemporalGrammar {
   private val FullMonths = Array("January", "February", "March", "April", "May", "June", "July",
     "August", "September", "October", "November", "December")
   private val MonthDays = Array(31, 28, 31, 30, 31, 30, 31, 31, 30, 31, 30, 31)
+  /** The lenient month words: index k is month k % 12 + 1, "sept" is 9. */
+  private val MonthWords = (FullMonths ++ ShortMonths).map(_.toLowerCase) :+ "sept"
+  private val Fillers = Array("monday", "tuesday", "wednesday", "thursday", "friday", "saturday",
+    "sunday", "mon", "tue", "wed", "thu", "fri", "sat", "sun", "tues", "thur", "thurs", "of", "the")
+  private val Ordinals = Array("st", "nd", "rd", "th")
+  private val Meridiems = Array("am", "pm")
 
   /** [[DType.DateD]], [[DType.Timestamp]], or [[DType.Text]] if `s` has
     * none of the shapes. */
-  def classify(s: String): DType = {
+  def classify(s: String, lenient: Boolean = false): DType = {
     val f = new TemporalFields
-    if (!parse(s, f)) DType.Text else if (f.isDate) DType.DateD else DType.Timestamp
+    if (!parse(s, f, lenient)) DType.Text else if (f.isDate) DType.DateD else DType.Timestamp
   }
 
-  /** Fills `f` from `s` and returns true if `s` has one of the shapes. */
-  def parse(s: String, f: TemporalFields): Boolean = {
+  /** Fills `f` from `s` and returns true if `s` has one of the shapes,
+    * the lenient word-order ones too when `lenient` is set. */
+  def parse(s: String, f: TemporalFields, lenient: Boolean = false): Boolean = {
     var b = 0
     var e = s.length
     while (b < e && s.charAt(b) <= ' ') b += 1
     while (e > b && s.charAt(e - 1) <= ' ') e -= 1
     f.hour = 0; f.minute = 0; f.second = 0; f.nanos = 0; f.hasOffset = false; f.offsetSeconds = 0
-    if (e - b < 6) false
+    val w = if (lenient) wordOrder(s, b, e, f) else NotWords
+    if (w != NotWords) w == Accepted
+    else if (e - b < 6) false
     else if (isDigit(s.charAt(b))) numeric(s, b, e, f)
     else monthFirst(s, b, e, f)
   }
@@ -245,5 +281,100 @@ object TemporalGrammar {
         digits(s, p + 2, e) != 4 || p + 6 != e) return false
     f.month = k + 1; f.day = num(s, j + 1, n); f.year = num(s, p + 2, 4)
     validDate(f)
+  }
+
+  private final val NotWords = -1
+  private final val Rejected = 0
+  private final val Accepted = 1
+
+  private def isWordSep(c: Char): Boolean = c == ',' || c == ' ' || (c >= '\t' && c <= '\r')
+
+  /** Index of the token `s[i, e)` in `table` (lowercase ASCII words),
+    * compared ASCII-case-insensitively, or -1. */
+  private def wordIndex(s: String, i: Int, e: Int, table: Array[String]): Int = {
+    var k = 0
+    while (k < table.length) {
+      val w = table(k)
+      if (w.length == e - i) {
+        var j = 0
+        while (j < w.length && (s.charAt(i + j) | 0x20) == w.charAt(j)) j += 1
+        if (j == w.length) return k
+      }
+      k += 1
+    }
+    -1
+  }
+
+  /** The lenient word-order grammar over `s[b, e)` (see the table above):
+    * [[NotWords]] when the value is not of it, else [[Accepted]] with `f`
+    * filled, or [[Rejected]] when its fields fail the calendar checks. */
+  private def wordOrder(s: String, b: Int, e: Int, f: TemporalFields): Int = {
+    var month = -1; var day = -1; var year = -1
+    var hour = -1; var minute = -1; var second = -1
+    var meridiem = -1 // index in Meridiems
+    var p = b
+    while (p < e) {
+      while (p < e && isWordSep(s.charAt(p))) p += 1
+      var q = p
+      while (q < e && !isWordSep(s.charAt(q))) q += 1
+      if (q > p) {
+        val z = if (q - p > 1 && s.charAt(q - 1) == '.') q - 1 else q
+        val d = digits(s, p, z)
+        val r = p + d // the token's rest after its digits
+        if (d == 0) {
+          val m = wordIndex(s, p, z, MonthWords)
+          val mer = wordIndex(s, p, z, Meridiems)
+          if (m >= 0) {
+            if (month > 0) return NotWords
+            month = if (m < 24) m % 12 + 1 else 9
+          } else if (mer >= 0) {
+            if (hour < 0 || meridiem >= 0) return NotWords
+            meridiem = mer
+          } else if (wordIndex(s, p, z, Fillers) < 0) return NotWords
+        } else if (r == z) {
+          // a number: yyyy, else the day, else a 2-digit year
+          if (d > 4) return NotWords
+          val v = num(s, p, d)
+          if (d >= 3) {
+            if (d != 4 || year > 0) return NotWords
+            year = v
+          } else if (day < 0) day = v
+          else if (year < 0) year = 2000 + v
+          else return NotWords
+        } else if (d <= 2) {
+          val mer = wordIndex(s, r, z, Meridiems)
+          if (wordIndex(s, r, z, Ordinals) >= 0) {
+            if (day > 0) return NotWords
+            day = num(s, p, d)
+          } else if (mer >= 0) {
+            if (hour >= 0) return NotWords
+            hour = num(s, p, d); minute = 0; second = 0; meridiem = mer
+          } else if (at(s, r, z, ':') && digits(s, r + 1, z) == 2) {
+            // H:mm[:ss][am|pm]
+            var t = r + 3
+            val sec = if (at(s, t, z, ':') && digits(s, t + 1, z) == 2) { t += 3; num(s, t - 2, 2) } else 0
+            val tm = wordIndex(s, t, z, Meridiems)
+            if ((t != z && tm < 0) || hour >= 0) return NotWords
+            hour = num(s, p, d); minute = num(s, r + 1, 2); second = sec
+            if (tm >= 0) meridiem = tm
+          } else return NotWords
+        } else return NotWords
+      }
+      p = q
+    }
+    if (month < 1 || day < 1 || day > 31 || year < 0) return NotWords
+    if (meridiem >= 0) {
+      if (hour < 1 || hour > 12) return NotWords
+      if (meridiem == 0) { if (hour == 12) hour = 0 }
+      else if (hour != 12) hour += 12
+    }
+    if (hour > 23 || minute > 59 || second > 59) return NotWords
+    // the fields as the strict `M/d/yyyy[ H:mm:ss]` (or `M/d/yy`) they render to
+    f.month = month; f.day = day
+    if (year >= 1000) f.year = year
+    else if (year >= 10 && year <= 99 && hour < 0) f.year = 2000 + year
+    else return Rejected
+    if (hour >= 0) { f.hour = hour; f.minute = minute; f.second = second }
+    if (validDate(f) && validTime(f)) Accepted else Rejected
   }
 }

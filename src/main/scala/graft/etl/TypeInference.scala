@@ -96,15 +96,13 @@ object TypeInference {
   def guessType(raw: String): DType = guessType(raw, lenient = false)
 
   /** [[guessType]] with the opt-in free-form date grammar: `lenient = true`
-    * first canonicalizes word-month shapes ("March 4th, 2020") through
-    * [[LenientTemporal.normalize]] — the deterministic stand-in for the
-    * reference's dateutil leniency — and then classifies exactly as the
-    * strict path does. Non-temporal values are untouched by normalize, so
-    * every strict verdict is preserved.
+    * also takes [[TemporalGrammar]]'s word-order shapes ("March 4th,
+    * 2020") — the deterministic stand-in for the reference's dateutil
+    * leniency. A value of those shapes has a month word, so it is never
+    * numeric or boolean: every non-temporal verdict is the strict one.
     */
   def guessType(raw: String, lenient: Boolean): DType = {
-    val s0 = raw.trim
-    val s = if (lenient) LenientTemporal.normalize(s0) else s0
+    val s = raw.trim
     if (s.isEmpty) return Text
     if (isNumeric(s)) {
       if (isInteger(s)) {
@@ -123,7 +121,7 @@ object TypeInference {
         else Text
       } else Num
     } else if (isBool(s)) Bool
-    else TemporalGrammar.classify(s)
+    else TemporalGrammar.classify(s, lenient)
   }
 
   /** Pairwise widening — a proper join-semilattice (top = Text).
@@ -294,11 +292,9 @@ object TypeInference {
   }
 
   private def narrowColumn(c: Column, t: DType, lenient: Boolean): Column = {
-    // lenient narrowing canonicalizes free-form shapes scan-locally (the
-    // codegen'd `lenient_temporal_norm`) before the same strict grammar —
-    // so the cast path accepts exactly what lenient inference voted DATE
-    def temporal(col: Column) = call_function("temporal_parse",
-      if (lenient) call_function("lenient_temporal_norm", col) else col)
+    // the vote's grammar, lenient shapes included when the vote took them,
+    // so the cast path accepts exactly what inference voted temporal
+    def temporal(col: Column) = call_function("temporal_parse", col, lit(lenient))
     t match {
       case SmallInt | Int32 | Int64 =>
         c.try_cast(DecimalType(38, 18)).try_cast(DType.toSpark(t))

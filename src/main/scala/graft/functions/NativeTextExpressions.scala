@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, TimeZoneAwareExpression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native (single-eval-per-row) expressions for the dedup hot path.
@@ -27,8 +28,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * run 10⁷+ times per query inside a join's inner loop, where the
   * fallback's per-call row adaptor and boxed eval dominated the whole
   * query (measured 41 µs/pair on the q148 verify — ~400× the merge loop
-  * itself). Those two implement `doGenCode`, so the merge stays inside
-  * whole-stage codegen.
+  * itself). Those two implement `doGenCode` as one call into their merge
+  * kernel ([[jaccardSorted]], [[sortedDot]]), which their eval also
+  * calls, so the merge stays inside whole-stage codegen.
   */
 object NativeTextExpressions {
 
@@ -37,12 +39,9 @@ object NativeTextExpressions {
     * canonical and enables merge-join Jaccard).
     */
   case class ShingleHashes(child: Expression, k: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with StringInput with CodegenFallback {
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def prettyName: String = "shingle_hashes"
-    override def checkInputDataTypes(): TypeCheckResult =
-      if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure(s"shingle_hashes expects string, got ${child.dataType.simpleString}")
 
     override def nullSafeEval(input: Any): Any = {
       // r18 (guide §1.2 step 2): the original loop called
@@ -65,8 +64,7 @@ object NativeTextExpressions {
       var b = 0
       while (b < nBytes) {
         offs(ci) = b
-        b += UTF8String.numBytesForFirstByte(
-          org.apache.spark.unsafe.Platform.getByte(base, off + b))
+        b += UTF8String.numBytesForFirstByte(Platform.getByte(base, off + b))
         ci += 1
       }
       offs(nChars) = nBytes
@@ -79,15 +77,7 @@ object NativeTextExpressions {
         hs(i) = XXH64.hashUnsafeBytes(base, off + from, until - from, 42L)
         i += 1
       }
-      java.util.Arrays.sort(hs)
-      var w = 0
-      var r = 1
-      while (r < hs.length) {
-        if (hs(r) != hs(w)) { w += 1; hs(w) = hs(r) }
-        r += 1
-      }
-      val arr = java.util.Arrays.copyOf(hs, w + 1)
-      new GenericArrayData(arr)
+      new GenericArrayData(sortedDistinct(hs, hs.length))
     }
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -105,13 +95,9 @@ object NativeTextExpressions {
     * and window min is an interpreted expression-tree walk.
     */
   case class WinnowHashes(child: Expression, k: Int, w: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with StringInput with CodegenFallback {
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def prettyName: String = "winnow_hashes"
-    override def checkInputDataTypes(): TypeCheckResult =
-      if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure(
-        s"winnow_hashes expects string, got ${child.dataType.simpleString}")
 
     override def nullSafeEval(input: Any): Any = {
       val cps = input.asInstanceOf[UTF8String].toString
@@ -128,21 +114,16 @@ object NativeTextExpressions {
         hashes(i) = h
         i += 1
       }
-      val set = new java.util.HashSet[java.lang.Long](math.max(nh / w, 16))
+      val mins = new Array[Long](nh - w + 1)
       var s = 0
       while (s <= nh - w) {
         var m = hashes(s)
         var j = 1
         while (j < w) { if (hashes(s + j) < m) m = hashes(s + j); j += 1 }
-        set.add(m)
+        mins(s) = m
         s += 1
       }
-      val arr = new Array[Long](set.size)
-      val it = set.iterator()
-      var p = 0
-      while (it.hasNext) { arr(p) = it.next(); p += 1 }
-      java.util.Arrays.sort(arr)
-      new GenericArrayData(arr)
+      new GenericArrayData(sortedDistinct(mins, mins.length))
     }
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -158,13 +139,9 @@ object NativeTextExpressions {
     * top, so the DuckDB oracle replay is unchanged.
     */
   case class CdcCuts(child: Expression, w: Int, mask: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with StringInput with CodegenFallback {
     override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
     override def prettyName: String = "cdc_cuts"
-    override def checkInputDataTypes(): TypeCheckResult =
-      if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure(
-        s"cdc_cuts expects string, got ${child.dataType.simpleString}")
 
     override def nullSafeEval(input: Any): Any = {
       val cps = input.asInstanceOf[UTF8String].toString
@@ -224,7 +201,8 @@ object NativeTextExpressions {
 
   /** Jaccard similarity of two SORTED long arrays via a single merge pass —
     * O(|a|+|b|) with no per-element boxing (vs hash-set based
-    * array_intersect/array_union).
+    * array_intersect/array_union). Eval and codegen both call
+    * [[jaccardSorted]].
     */
   case class SortedLongJaccard(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -239,43 +217,34 @@ object NativeTextExpressions {
       else TypeCheckResult.TypeCheckFailure("jaccard_sorted expects two array<bigint>")
     }
 
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]; val y = b.asInstanceOf[ArrayData]
-      val nx = x.numElements(); val ny = y.numElements()
-      var i = 0; var j = 0; var inter = 0L
-      while (i < nx && j < ny) {
-        val xv = x.getLong(i); val yv = y.getLong(j)
-        if (xv == yv) { inter += 1; i += 1; j += 1 }
-        else if (xv < yv) i += 1
-        else j += 1
-      }
-      val union = nx.toLong + ny - inter
-      if (union == 0L) 0.0 else inter.toDouble / union
-    }
+    override def nullSafeEval(a: Any, b: Any): Any =
+      jaccardSorted(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (x, y) => {
-        val nx = ctx.freshName("nx"); val ny = ctx.freshName("ny")
-        val i = ctx.freshName("i"); val j = ctx.freshName("j")
-        val xv = ctx.freshName("xv"); val yv = ctx.freshName("yv")
-        val inter = ctx.freshName("inter"); val union = ctx.freshName("union")
-        s"""
-           |int $nx = $x.numElements();
-           |int $ny = $y.numElements();
-           |int $i = 0; int $j = 0; long $inter = 0L;
-           |while ($i < $nx && $j < $ny) {
-           |  long $xv = $x.getLong($i);
-           |  long $yv = $y.getLong($j);
-           |  if ($xv == $yv) { $inter++; $i++; $j++; }
-           |  else if ($xv < $yv) { $i++; } else { $j++; }
-           |}
-           |long $union = (long) $nx + (long) $ny - $inter;
-           |${ev.value} = ($union == 0L) ? 0.0d : (double) $inter / (double) $union;
-         """.stripMargin
-      })
+      nullSafeCodeGen(ctx, ev, (x, y) =>
+        s"${ev.value} = graft.functions.NativeTextExpressions.jaccardSorted($x, $y);")
 
     override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
       copy(left = newLeft, right = newRight)
+  }
+
+  /** The merge-pass Jaccard of two ascending long sets: |x ∩ y| / |x ∪ y|
+    * in long counts, 0.0 when both are empty. The one kernel of
+    * `jaccard_sorted` (eval and generated code) and of the grid verify
+    * ([[graft.operators.Dedup.gridJaccardVerify]]), so every verify route
+    * gives the same doubles.
+    */
+  def jaccardSorted(x: ArrayData, y: ArrayData): Double = {
+    val nx = x.numElements(); val ny = y.numElements()
+    var i = 0; var j = 0; var inter = 0L
+    while (i < nx && j < ny) {
+      val xv = x.getLong(i); val yv = y.getLong(j)
+      if (xv == yv) { inter += 1; i += 1; j += 1 }
+      else if (xv < yv) i += 1
+      else j += 1
+    }
+    val union = nx.toLong + ny - inter
+    if (union == 0L) 0.0 else inter.toDouble / union
   }
 
   /** Sparse dot product over two vectors stored as (sorted key array,
@@ -285,6 +254,7 @@ object NativeTextExpressions {
     * Catalyst map lookup is a linear scan, which turned the verify into
     * the bottleneck at 10⁷ candidates. Keys MUST be sorted ascending
     * (the builder sorts by (df, tok) then re-sorts by tok for this).
+    * Eval and codegen both call [[sortedDot]].
     */
   case class SortedDot(children: Seq[Expression])
     extends Expression {
@@ -307,27 +277,12 @@ object NativeTextExpressions {
       val ka = children(0).eval(input); val va = children(1).eval(input)
       val kb = children(2).eval(input); val vb = children(3).eval(input)
       if (ka == null || va == null || kb == null || vb == null) null
-      else {
-        val xk = ka.asInstanceOf[ArrayData]; val xv = va.asInstanceOf[ArrayData]
-        val yk = kb.asInstanceOf[ArrayData]; val yv = vb.asInstanceOf[ArrayData]
-        val nx = xk.numElements(); val ny = yk.numElements()
-        var i = 0; var j = 0; var dot = 0.0d
-        while (i < nx && j < ny) {
-          val a = xk.getLong(i); val b = yk.getLong(j)
-          if (a == b) { dot += xv.getDouble(i) * yv.getDouble(j); i += 1; j += 1 }
-          else if (a < b) i += 1
-          else j += 1
-        }
-        dot
-      }
+      else sortedDot(ka.asInstanceOf[ArrayData], va.asInstanceOf[ArrayData],
+        kb.asInstanceOf[ArrayData], vb.asInstanceOf[ArrayData])
     }
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
       val gs = children.map(_.genCode(ctx))
-      val nx = ctx.freshName("nx"); val ny = ctx.freshName("ny")
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val a = ctx.freshName("a"); val b = ctx.freshName("b")
-      val dot = ctx.freshName("dot")
       val resultCode =
         code"""
           |${gs(0).code}
@@ -338,18 +293,8 @@ object NativeTextExpressions {
           |  ${gs(2).isNull} || ${gs(3).isNull};
           |double ${ev.value} = 0.0d;
           |if (!${ev.isNull}) {
-          |  int $nx = ${gs(0).value}.numElements();
-          |  int $ny = ${gs(2).value}.numElements();
-          |  int $i = 0; int $j = 0; double $dot = 0.0d;
-          |  while ($i < $nx && $j < $ny) {
-          |    long $a = ${gs(0).value}.getLong($i);
-          |    long $b = ${gs(2).value}.getLong($j);
-          |    if ($a == $b) {
-          |      $dot += ${gs(1).value}.getDouble($i) * ${gs(3).value}.getDouble($j);
-          |      $i++; $j++;
-          |    } else if ($a < $b) { $i++; } else { $j++; }
-          |  }
-          |  ${ev.value} = $dot;
+          |  ${ev.value} = graft.functions.NativeTextExpressions.sortedDot(
+          |    ${gs(0).value}, ${gs(1).value}, ${gs(2).value}, ${gs(3).value});
           |}
         """.stripMargin
       ev.copy(code = resultCode)
@@ -357,6 +302,22 @@ object NativeTextExpressions {
 
     override protected def withNewChildrenInternal(
         newChildren: IndexedSeq[Expression]): Expression = copy(children = newChildren)
+  }
+
+  /** The merge-pass dot product of two sparse vectors (ascending keys,
+    * aligned values), accumulated in key order: the one kernel of
+    * `sorted_dot`'s eval and generated code.
+    */
+  def sortedDot(xk: ArrayData, xv: ArrayData, yk: ArrayData, yv: ArrayData): Double = {
+    val nx = xk.numElements(); val ny = yk.numElements()
+    var i = 0; var j = 0; var dot = 0.0d
+    while (i < nx && j < ny) {
+      val a = xk.getLong(i); val b = yk.getLong(j)
+      if (a == b) { dot += xv.getDouble(i) * yv.getDouble(j); i += 1; j += 1 }
+      else if (a < b) i += 1
+      else j += 1
+    }
+    dot
   }
 
   /** Membership probe against a serialized `spark.util.sketch`
@@ -411,15 +372,15 @@ object NativeTextExpressions {
 
   /** 64-bit SimHash over whitespace tokens of the lowercased input — one
     * pass, no intermediate arrays. Same semantics as
-    * [[TextFunctions.simhash64]] modulo hash family internals.
+    * [[TextFunctions.simhash64]] modulo hash family internals. It splits
+    * on `Character.isWhitespace`, which also takes unicode separators, so
+    * it keeps its own char walk rather than the regex-`\s` [[Tokens]]
+    * cursor of the other word-level expressions.
     */
   case class SimHash(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with StringInput with CodegenFallback {
     override def dataType: DataType = LongType
     override def prettyName: String = "simhash64_native"
-    override def checkInputDataTypes(): TypeCheckResult =
-      if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure(s"simhash64_native expects string, got ${child.dataType.simpleString}")
 
     override def nullSafeEval(input: Any): Any = {
       val s = input.asInstanceOf[UTF8String].toLowerCase.toString
@@ -452,63 +413,101 @@ object NativeTextExpressions {
       copy(child = newChild)
   }
 
-  /** Matches Java regex `\s` — the charset Spark's `split(col, "\\s+")`
-    * tokenizes on (NOT Character.isWhitespace, which also matches unicode
-    * separators): identical token boundaries to the HOF formulation.
+  /** The one word tokenizer of the word-level expressions: a cursor over
+    * the tokens `split(s, "\\s+")` gives minus its empty strings, i.e. the
+    * maximal runs outside the regex `\s` class (space, `\t`, `\n`,
+    * `\u000B`, `\f`, `\r` — not Character.isWhitespace, which also takes
+    * unicode separators). The separators are ASCII and every byte of a
+    * multibyte UTF-8 character has its high bit set, so walking the bytes
+    * finds the same boundaries as walking the chars. A token is never
+    * copied: after `next()` returns true it is the bytes
+    * `[start, end)` of `s`.
     */
-  @inline private def isJavaSpace(c: Char): Boolean =
-    c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
+  private[graft] final class Tokens(s: UTF8String) {
+    private val base = s.getBaseObject
+    private val off = s.getBaseOffset
+    private val n = s.numBytes
+    var start = 0
+    var end = 0
+
+    /** Moves to the next token; false once there is none. */
+    def next(): Boolean = {
+      var i = end
+      while (i < n && isSpace(i)) i += 1
+      if (i == n) return false
+      start = i
+      while (i < n && !isSpace(i)) i += 1
+      end = i
+      true
+    }
+
+    // ' ' or one of \t \n \u000B \f \r (0x09–0x0D)
+    private def isSpace(i: Int): Boolean = {
+      val b = Platform.getByte(base, off + i)
+      b == ' ' || (b >= '\t' && b <= '\r')
+    }
+
+    /** XXH64 (seed 42, Catalyst's `xxhash64`) of the token's bytes. */
+    def hash: Long = XXH64.hashUnsafeBytes(base, off + start, end - start, 42L)
+
+    /** The token as a view on `s`'s bytes. */
+    def token: UTF8String = UTF8String.fromAddress(base, off + start, end - start)
+
+    /** The token's `String.length`: one UTF-16 unit per character, two
+      * for a character outside the BMP (a 4-byte UTF-8 sequence). */
+    def utf16Length: Int = {
+      var units = 0
+      var i = start
+      while (i < end) {
+        val b = Platform.getByte(base, off + i)
+        if ((b & 0xC0) != 0x80) units += (if ((b & 0xF8) == 0xF0) 2 else 1)
+        i += 1
+      }
+      units
+    }
+  }
+
+  /** The distinct values of `hs[0, n)`, sorted — in place, then trimmed. */
+  private def sortedDistinct(hs: Array[Long], n: Int): Array[Long] = {
+    if (n == 0) return Array.emptyLongArray
+    java.util.Arrays.sort(hs, 0, n)
+    var w = 0
+    var r = 1
+    while (r < n) {
+      if (hs(r) != hs(w)) { w += 1; hs(w) = hs(r) }
+      r += 1
+    }
+    java.util.Arrays.copyOf(hs, w + 1)
+  }
 
   /** Per-document term frequencies in ONE scan-local pass (r18, guide
     * §2.3 "aggregate before you shuffle"): lowercases like `lower()`
-    * (the same UTF8String.toLowerCase), tokenizes on the exact regex-\s
-    * class `split(…, "\\s+")` uses, XXH64-hashes each token's byte
-    * slice in place (seed 42 = Catalyst's `xxhash64`), and run-length
-    * encodes the sorted hashes into `array<struct<tok:long, tf:long>>`.
-    * Term frequency is a PER-DOCUMENT quantity, so the
-    * explode → groupBy(id, term) formulation paid a full exchange of
-    * every term occurrence to compute it; exploding this array instead
-    * yields the identical (id, tok, tf) rows with zero shuffle —
-    * hashes, tokens, and counts bit-identical to the relational form
-    * (spec-pinned on random unicode). Separators are ASCII bytes, so
-    * the byte walk needs no char-offset pass (UTF-8 continuation bytes
-    * have the high bit set and cannot collide with them).
+    * (the same UTF8String.toLowerCase), tokenizes with [[Tokens]],
+    * XXH64-hashes each token's bytes in place (seed 42 = Catalyst's
+    * `xxhash64`), and run-length encodes the sorted hashes into
+    * `array<struct<tok:long, tf:long>>`. Term frequency is a
+    * PER-DOCUMENT quantity, so the explode → groupBy(id, term)
+    * formulation paid a full exchange of every term occurrence to
+    * compute it; exploding this array instead yields the identical
+    * (id, tok, tf) rows with zero shuffle — hashes, tokens, and counts
+    * bit-identical to the relational form (spec-pinned on random
+    * unicode).
     */
   case class WordTfEntries(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with StringInput with CodegenFallback {
     override def dataType: DataType = ArrayType(StructType(Seq(
       StructField("tok", LongType, nullable = false),
       StructField("tf", LongType, nullable = false))), containsNull = false)
     override def prettyName: String = "word_tf_entries"
-    override def checkInputDataTypes(): TypeCheckResult =
-      if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure(
-        s"word_tf_entries expects string, got ${child.dataType.simpleString}")
 
     override def nullSafeEval(input: Any): Any = {
-      val s = input.asInstanceOf[UTF8String].toLowerCase
-      val base = s.getBaseObject
-      val off = s.getBaseOffset
-      val n = s.numBytes
+      val cur = new Tokens(input.asInstanceOf[UTF8String].toLowerCase)
       var hs = new Array[Long](16)
       var cnt = 0
-      var start = 0
-      var i = 0
-      while (i <= n) {
-        val isSep = i == n || {
-          val b = org.apache.spark.unsafe.Platform.getByte(base, off + i)
-          b == ' '.toByte || b == '\t'.toByte || b == '\n'.toByte ||
-            b == 0x0B.toByte || b == '\f'.toByte || b == '\r'.toByte
-        }
-        if (isSep) {
-          if (i > start) {
-            if (cnt == hs.length) hs = java.util.Arrays.copyOf(hs, cnt * 2)
-            hs(cnt) = XXH64.hashUnsafeBytes(base, off + start, i - start, 42L)
-            cnt += 1
-          }
-          start = i + 1
-        }
-        i += 1
+      while (cur.next()) {
+        if (cnt == hs.length) hs = java.util.Arrays.copyOf(hs, cnt * 2)
+        hs(cnt) = cur.hash
+        cnt += 1
       }
       if (cnt == 0) return new GenericArrayData(Array.empty[Any])
       java.util.Arrays.sort(hs, 0, cnt)
@@ -533,25 +532,17 @@ object NativeTextExpressions {
     * `size(filter(split(lower(text), "\\s+"), t => length(t) > 0))`
     * ([[TextFunctions.tokenCount]]) at one scan-local loop per row; the
     * filter/quality hot path (q32/q34) runs this per document.
+    * Lowercasing changes no separator, so the count skips it.
     */
   case class TokenCount(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with StringInput with CodegenFallback {
     override def dataType: DataType = IntegerType
     override def prettyName: String = "token_count_native"
-    override def checkInputDataTypes(): TypeCheckResult =
-      if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure(s"token_count_native expects string, got ${child.dataType.simpleString}")
 
     override def nullSafeEval(input: Any): Any = {
-      val s = input.asInstanceOf[UTF8String].toString
+      val cur = new Tokens(input.asInstanceOf[UTF8String])
       var count = 0
-      var inTok = false
-      var i = 0
-      while (i < s.length) {
-        if (isJavaSpace(s.charAt(i))) inTok = false
-        else if (!inTok) { count += 1; inTok = true }
-        i += 1
-      }
+      while (cur.next()) count += 1
       count
     }
 
@@ -560,29 +551,18 @@ object NativeTextExpressions {
   }
 
   /** Count of lowercased tokens that are stopwords (the q32 quality
-    * signal) — single pass, set membership per token, no arrays.
+    * signal) — single pass, one set probe per token by its bytes, no
+    * arrays.
     */
   case class StopwordCount(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with StringInput with CodegenFallback {
     override def dataType: DataType = IntegerType
     override def prettyName: String = "stopword_count_native"
-    override def checkInputDataTypes(): TypeCheckResult =
-      if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure(s"stopword_count_native expects string, got ${child.dataType.simpleString}")
 
     override def nullSafeEval(input: Any): Any = {
-      val s = input.asInstanceOf[UTF8String].toLowerCase.toString
+      val cur = new Tokens(input.asInstanceOf[UTF8String].toLowerCase)
       var count = 0
-      var start = 0
-      var i = 0
-      while (i <= s.length) {
-        if (i == s.length || isJavaSpace(s.charAt(i))) {
-          if (i > start && NativeTextExpressions.stopwordSet.contains(s.substring(start, i)))
-            count += 1
-          start = i + 1
-        }
-        i += 1
-      }
+      while (cur.next()) if (stopwordSet.contains(cur.token)) count += 1
       count
     }
 
@@ -596,53 +576,40 @@ object NativeTextExpressions {
     * whole-document gram for docs shorter than n and the "" gram for empty
     * docs), in one loop per row instead of per-element interpreted HOF
     * lambdas. The decontamination hot path: only hashes ever leave the
-    * scan, gram strings die inside this eval.
+    * scan; each gram's bytes are joined in one reused buffer.
     */
   case class WordNgramHashes(child: Expression, n: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with StringInput with CodegenFallback {
     require(n > 0, "n must be positive")
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def prettyName: String = "word_ngram_hashes"
-    override def checkInputDataTypes(): TypeCheckResult =
-      if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure(s"word_ngram_hashes expects string, got ${child.dataType.simpleString}")
 
     override def nullSafeEval(input: Any): Any = {
-      val s = input.asInstanceOf[UTF8String].toLowerCase.toString
-      val toks = new java.util.ArrayList[String]()
-      var start = 0
-      var i = 0
-      while (i <= s.length) {
-        if (i == s.length || isJavaSpace(s.charAt(i))) {
-          if (i > start) toks.add(s.substring(start, i))
-          start = i + 1
-        }
-        i += 1
-      }
+      val cur = new Tokens(input.asInstanceOf[UTF8String].toLowerCase)
+      val toks = new java.util.ArrayList[UTF8String]()
+      while (cur.next()) toks.add(cur.token)
       val t = toks.size
       val lastStart = math.max(t - n, 0)
-      val set = new java.util.HashSet[java.lang.Long](math.max((lastStart + 1) * 2, 16))
-      val sb = new java.lang.StringBuilder
+      val hs = new Array[Long](lastStart + 1)
+      var buf = new Array[Byte](64)
       var st = 0
       while (st <= lastStart) {
-        sb.setLength(0)
+        var len = 0
         var j = st
         val end = math.min(st + n, t)
         while (j < end) {
-          if (j > st) sb.append(' ')
-          sb.append(toks.get(j))
+          val tok = toks.get(j)
+          val need = len + 1 + tok.numBytes
+          if (need > buf.length) buf = java.util.Arrays.copyOf(buf, math.max(need, buf.length * 2))
+          if (j > st) { buf(len) = ' '; len += 1 }
+          tok.writeToMemory(buf, Platform.BYTE_ARRAY_OFFSET + len)
+          len += tok.numBytes
           j += 1
         }
-        val g = UTF8String.fromString(sb.toString)
-        set.add(XXH64.hashUnsafeBytes(g.getBaseObject, g.getBaseOffset, g.numBytes, 42L))
+        hs(st) = XXH64.hashUnsafeBytes(buf, Platform.BYTE_ARRAY_OFFSET, len, 42L)
         st += 1
       }
-      val arr = new Array[Long](set.size)
-      val it = set.iterator()
-      var k = 0
-      while (it.hasNext) { arr(k) = it.next(); k += 1 }
-      java.util.Arrays.sort(arr)
-      new GenericArrayData(arr)
+      new GenericArrayData(sortedDistinct(hs, hs.length))
     }
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -650,55 +617,43 @@ object NativeTextExpressions {
   }
 
   /** All four repetition/diversity signals in one token walk per document:
-    * token count, distinct-token count, total token length, and the count
-    * of the most frequent adjacent bigram. Replaces a 2-scan + 2-shuffle +
-    * join relational formulation in QualityRules with a single scan-local
+    * token count, distinct-token count, total token length (in UTF-16
+    * units, as `String.length` counts), and the count of the most
+    * frequent adjacent bigram. Replaces a 2-scan + 2-shuffle + join
+    * relational formulation in QualityRules with a single scan-local
     * eval — the quantity is per-document, so nothing about it needs to
-    * leave the row. (Tokens cannot contain spaces, so `prev + ' ' + tok`
-    * is an unambiguous bigram key.)
+    * leave the row. Tokens are keyed by their bytes; a bigram is the
+    * pair of its tokens' first-seen ordinals.
     */
   case class TokenProfile(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with StringInput with CodegenFallback {
     override def dataType: DataType = StructType(Seq(
       StructField("n_tokens", IntegerType, nullable = false),
       StructField("distinct_tokens", IntegerType, nullable = false),
       StructField("sum_token_len", LongType, nullable = false),
       StructField("top_bigram_count", IntegerType, nullable = false)))
     override def prettyName: String = "token_profile"
-    override def checkInputDataTypes(): TypeCheckResult =
-      if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure(s"token_profile expects string, got ${child.dataType.simpleString}")
 
     override def nullSafeEval(input: Any): Any = {
-      val s = input.asInstanceOf[UTF8String].toLowerCase.toString
-      val distinct = new java.util.HashSet[String]()
-      val bigrams = new java.util.HashMap[String, Int]()
+      val cur = new Tokens(input.asInstanceOf[UTF8String].toLowerCase)
+      val ids = new java.util.HashMap[UTF8String, Int]()
+      val bigrams = new java.util.HashMap[Long, Int]()
       var n = 0
       var sumLen = 0L
       var top = 0
-      var prev: String = null
-      var start = 0
-      var i = 0
-      while (i <= s.length) {
-        if (i == s.length || isJavaSpace(s.charAt(i))) {
-          if (i > start) {
-            val tok = s.substring(start, i)
-            n += 1
-            sumLen += tok.length
-            distinct.add(tok)
-            if (prev != null) {
-              val key = prev + " " + tok
-              val c = bigrams.merge(key, 1, Integer.sum)
-              if (c > top) top = c
-            }
-            prev = tok
-          }
-          start = i + 1
+      var prev = -1L
+      while (cur.next()) {
+        n += 1
+        sumLen += cur.utf16Length
+        val id = ids.computeIfAbsent(cur.token, _ => ids.size)
+        if (prev >= 0) {
+          val c = bigrams.merge((prev << 32) | id, 1, Integer.sum)
+          if (c > top) top = c
         }
-        i += 1
+        prev = id
       }
       new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-        Array[Any](n, distinct.size, sumLen, top))
+        Array[Any](n, ids.size, sumLen, top))
     }
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -710,12 +665,9 @@ object NativeTextExpressions {
     * regex engine per row.
     */
   case class PunctRatio(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with StringInput with CodegenFallback {
     override def dataType: DataType = DoubleType
     override def prettyName: String = "punct_ratio_native"
-    override def checkInputDataTypes(): TypeCheckResult =
-      if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure(s"punct_ratio_native expects string, got ${child.dataType.simpleString}")
 
     override def nullSafeEval(input: Any): Any = {
       val s = input.asInstanceOf[UTF8String].toString
@@ -748,12 +700,9 @@ object NativeTextExpressions {
     * input bytes and level, so the signal is deterministic and cacheable.
     */
   case class DeflateLen(child: Expression, level: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with StringInput with CodegenFallback {
     override def dataType: DataType = IntegerType
     override def prettyName: String = "deflate_len"
-    override def checkInputDataTypes(): TypeCheckResult =
-      if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure(s"deflate_len expects string, got ${child.dataType.simpleString}")
 
     @transient private lazy val deflater: ThreadLocal[java.util.zip.Deflater] =
       ThreadLocal.withInitial(() => new java.util.zip.Deflater(level, true))
@@ -776,15 +725,29 @@ object NativeTextExpressions {
       copy(child = newChild)
   }
 
-  private[graft] val stopwordSet: java.util.Set[String] = {
-    val s = new java.util.HashSet[String]()
-    TextFunctions.stopwords.foreach(s.add)
+  private val stopwordSet: java.util.Set[UTF8String] = {
+    val s = new java.util.HashSet[UTF8String]()
+    TextFunctions.stopwords.foreach(w => s.add(UTF8String.fromString(w)))
     s
+  }
+
+  /** The type check of the expressions over one string: `StringType`
+    * only, failing as "<name> expects string, got <type>". */
+  private[graft] trait StringInput extends UnaryExpression {
+    override def checkInputDataTypes(): TypeCheckResult =
+      if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
+      else TypeCheckResult.TypeCheckFailure(
+        s"$prettyName expects string, got ${child.dataType.simpleString}")
   }
 
   private def litInt(e: Expression, what: String): Int = e match {
     case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) => v
     case other => throw new IllegalArgumentException(s"$what must be an integer literal, got $other")
+  }
+
+  private def litBool(e: Expression, what: String): Boolean = e match {
+    case org.apache.spark.sql.catalyst.expressions.Literal(v: Boolean, BooleanType) => v
+    case other => throw new IllegalArgumentException(s"$what must be a boolean literal, got $other")
   }
 
   private def litDbl(e: Expression, what: String): Double = e match {
@@ -907,6 +870,9 @@ object NativeTextExpressions {
         val ps = aOffs(i); val pe = aOffs(i + 1); val ida = aIds(i)
         var j = if (same) i + 1 else 0
         while (j < nb) {
+          // [[sortedDot]]'s merge, over ranges of the decoded arrays: the
+          // ArrayData kernel would need a copy per pair, or a branch on
+          // which caller it serves
           var p = ps
           var q = bOffs(j); val qe = bOffs(j + 1)
           var dot = 0.0d
@@ -943,12 +909,9 @@ object NativeTextExpressions {
     * without it "Café  Noir!" and "cafe noir" land in different buckets.
     */
   case class CanonText(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with StringInput with CodegenFallback {
     override def dataType: DataType = StringType
     override def prettyName: String = "canon_text"
-    override def checkInputDataTypes(): TypeCheckResult =
-      if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure(s"canon_text expects string, got ${child.dataType.simpleString}")
 
     override def nullSafeEval(input: Any): Any = {
       // NFKD BEFORE lowercasing: compatibility forms can decompose to
@@ -981,62 +944,28 @@ object NativeTextExpressions {
       copy(child = newChild)
   }
 
-  /** [[graft.etl.LenientTemporal.normalize]] as a native expression — the
-    * scan-local canonicalization step of opt-in lenient date narrowing
-    * (TypeInference.narrow(lenient = true)). Free-form word-month shapes
-    * rewrite to the strict grammar's "M/d/yyyy[ H:mm:ss]"; anything else
-    * passes through verbatim. The narrowing projection is per-row-hot on
-    * a bulk load, so codegen is one static call inside the fused stage,
-    * not an interpreted dispatch per value.
-    */
-  case class LenientTemporalNorm(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = StringType
-    override def prettyName: String = "lenient_temporal_norm"
-    override def checkInputDataTypes(): TypeCheckResult =
-      if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure(
-        s"lenient_temporal_norm expects string, got ${child.dataType.simpleString}")
-
-    override def nullSafeEval(input: Any): Any =
-      UTF8String.fromString(
-        graft.etl.LenientTemporal.normalize(input.asInstanceOf[UTF8String].toString))
-
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c => {
-        s"""
-           |${ev.value} = org.apache.spark.unsafe.types.UTF8String.fromString(
-           |  graft.etl.LenientTemporal.normalize($c.toString()));
-         """.stripMargin
-      })
-
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
   /** [[graft.etl.TemporalGrammar]] as a native expression: the value as a
     * session-zone timestamp if it has one of the grammar's shapes, else
     * null. It is the narrowing cast of date and timestamp columns
     * (TypeInference.narrow), one parse per value, and it accepts exactly
-    * the strings the type vote calls temporal. Codegen keeps one reusable
-    * field holder per task, so a value parses without allocating or
-    * throwing.
+    * the strings the type vote calls temporal; `temporal_parse(s, true)`
+    * adds the lenient word-order shapes, as the lenient vote does. Codegen
+    * keeps one reusable field holder per task, so a value parses without
+    * allocating or throwing.
     */
-  case class TemporalParse(child: Expression, timeZoneId: Option[String] = None)
-    extends UnaryExpression with TimeZoneAwareExpression {
+  case class TemporalParse(child: Expression, lenient: Boolean = false,
+                           timeZoneId: Option[String] = None)
+    extends UnaryExpression with StringInput with TimeZoneAwareExpression {
     override def dataType: DataType = TimestampType
     override def nullable: Boolean = true
     override def prettyName: String = "temporal_parse"
-    override def checkInputDataTypes(): TypeCheckResult =
-      if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure(
-        s"temporal_parse expects string, got ${child.dataType.simpleString}")
     override def withTimeZone(timeZoneId: String): TimeZoneAwareExpression =
       copy(timeZoneId = Option(timeZoneId))
 
     @transient private lazy val fields = new graft.etl.TemporalFields
 
     override def nullSafeEval(input: Any): Any =
-      if (graft.etl.TemporalGrammar.parse(input.asInstanceOf[UTF8String].toString, fields))
+      if (graft.etl.TemporalGrammar.parse(input.asInstanceOf[UTF8String].toString, fields, lenient))
         graft.etl.TemporalGrammar.toMicros(fields, zoneId)
       else null
 
@@ -1046,7 +975,7 @@ object NativeTextExpressions {
       val zone = ctx.addReferenceObj("zoneId", zoneId, classOf[java.time.ZoneId].getName)
       nullSafeCodeGen(ctx, ev, c =>
         s"""
-           |if (graft.etl.TemporalGrammar.parse($c.toString(), $f)) {
+           |if (graft.etl.TemporalGrammar.parse($c.toString(), $f, $lenient)) {
            |  ${ev.value} = graft.etl.TemporalGrammar.toMicros($f, $zone);
            |} else {
            |  ${ev.isNull} = true;
@@ -1077,8 +1006,7 @@ object NativeTextExpressions {
     "punct_ratio_native" -> (c => PunctRatio(c.head)),
     "deflate_len" -> (c => DeflateLen(c.head, litInt(c(1), "level"))),
     "canon_text" -> (c => CanonText(c.head)),
-    "lenient_temporal_norm" -> (c => LenientTemporalNorm(c.head)),
-    "temporal_parse" -> (c => TemporalParse(c.head)),
+    "temporal_parse" -> (c => TemporalParse(c.head, c.length > 1 && litBool(c(1), "lenient"))),
     "sorted_dot" -> (c => SortedDot(c)),
     "pack_sparse_vec_block" -> (c => PackSparseVecBlock(c.head)),
     "sorted_dot_block_pairs" -> (c =>

@@ -3,6 +3,8 @@ package graft.operators
 import graft.functions.NativeTextExpressions
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators over a document corpus.
@@ -31,9 +33,13 @@ object Dedup extends org.apache.spark.internal.Logging {
     * (defaults to java.io.tmpdir, correct for local mode); staged dirs are
     * removed on JVM exit. At 100 TB the same write is simply the operator's
     * natural output materialization — near-dup pair sets are consumed many
-    * times downstream.
+    * times downstream. It is also how `Queries` stages a frame with
+    * several consumers: Spark does no CSE across DataFrame references, so
+    * each downstream reference would re-execute the whole subtree. Every
+    * call writes its own directory, so two runs of one query never share
+    * one.
     */
-  private[operators] def stage(df: DataFrame, tag: String): DataFrame = {
+  private[graft] def stage(df: DataFrame, tag: String): DataFrame = {
     val spark = df.sparkSession
     val base = spark.conf.getOption("spark.graft.stagingDir").getOrElse {
       if (spark.sparkContext.isLocal) System.getProperty("java.io.tmpdir")
@@ -337,8 +343,8 @@ object Dedup extends org.apache.spark.internal.Logging {
     * cores. Within a task, rows arrive arrays-first (a bounded
     * per-partition sort on the `kind` tag — never the global
     * candidate-stream sort the r13 audit killed), arrays load into hash
-    * maps, and candidates stream through the EXACT same merge-Jaccard
-    * the codegen'd `jaccard_sorted` runs (spec-pinned bit-identical;
+    * maps, and candidates stream through the one merge-Jaccard kernel
+    * the codegen'd `jaccard_sorted` calls (spec-pinned bit-identical;
     * null shingle sets cannot reach any verify shape —
     * [[minhashCandidatePairs]] filters null-text docs before banding,
     * which is what keeps the three routes result-identical). At cluster
@@ -414,10 +420,10 @@ object Dedup extends org.apache.spark.internal.Logging {
       .mapPartitions { it: Iterator[org.apache.spark.sql.Row] =>
         // hash collisions can co-locate several cells in one partition;
         // key maps by (cell, id) so cells never mix
-        val aMap = new java.util.HashMap[(Long, Any), Array[Long]]()
-        val bMap = new java.util.HashMap[(Long, Any), Array[Long]]()
-        def arr(r: org.apache.spark.sql.Row): Array[Long] =
-          if (r.isNullAt(5)) null else r.getSeq[Long](5).toArray
+        val aMap = new java.util.HashMap[(Long, Any), ArrayData]()
+        val bMap = new java.util.HashMap[(Long, Any), ArrayData]()
+        def arr(r: org.apache.spark.sql.Row): ArrayData =
+          if (r.isNullAt(5)) null else cellSet(r.getSeq[Long](5).toArray)
         it.flatMap { r =>
           val cell = r.getInt(0).toLong * p + r.getInt(1)
           r.getInt(2) match {
@@ -431,29 +437,20 @@ object Dedup extends org.apache.spark.internal.Logging {
               val a = aMap.get((cell, r.get(3))); val b = bMap.get((cell, r.get(4)))
               if (a == null || b == null) Iterator.empty
               else Iterator.single(org.apache.spark.sql.Row(
-                r.get(3), r.get(4), mergeJaccard(a, b)))
+                r.get(3), r.get(4), NativeTextExpressions.jaccardSorted(a, b)))
           }
         }
       }(org.apache.spark.sql.Encoders.row(outSchema))
   }
 
-  /** The EXACT merge-pass Jaccard of `jaccard_sorted`
-    * ([[graft.functions.NativeTextExpressions.SortedLongJaccard]]) —
-    * same loop, same long accumulators, same `inter/union` double
-    * division, so the grid verify is bit-identical to the join form
-    * (generatively spec-pinned).
+  /** A shingle set as the grid verify holds it: wrapped once, when it
+    * enters a cell map, for the `jaccard_sorted` kernel
+    * ([[NativeTextExpressions.jaccardSorted]]) every candidate pair of
+    * the cell then runs — the join-form verify's kernel, so the routes
+    * give the same doubles.
     */
-  private[operators] def mergeJaccard(x: Array[Long], y: Array[Long]): Double = {
-    var i = 0; var j = 0; var inter = 0L
-    while (i < x.length && j < y.length) {
-      val xv = x(i); val yv = y(j)
-      if (xv == yv) { inter += 1; i += 1; j += 1 }
-      else if (xv < yv) i += 1
-      else j += 1
-    }
-    val union = x.length.toLong + y.length - inter
-    if (union == 0L) 0.0 else inter.toDouble / union
-  }
+  private[operators] def cellSet(sh: Array[Long]): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(sh)
 
   /** Monotone suffix for grid-observation names: Dataset.observe names
     * must be unique within one query, and two grid verifies can land in

@@ -110,6 +110,21 @@ object Similarity extends org.apache.spark.internal.Logging {
     */
   val MaxSrpTables = 32
 
+  /** Per-node neighbor budget of the routed [[cosineNearDupPairs]]: the
+    * IVF route emits the symmetric top-`SrpRouteK` neighbor EDGES above
+    * the threshold (a k-NN graph, per-node degree ≤ ~2·SrpRouteK), not
+    * the exhaustive pair set — the contract the recall gate measures.
+    */
+  private val SrpRouteK = 64
+
+  /** Per-task byte budget of the cross-block probe-pack exchange (see
+    * [[crossPackWidth]]). */
+  private val PackPartitionBytes = 64L << 20
+
+  /** Cap on the parquet footers [[footerRowCount]] reads; past it a
+    * stride sample of footers extrapolates. */
+  private val MaxFooterFiles = 1 << 15
+
   /** Tables needed to reach `recallTarget` with NO cap — the raw solution
     * of 1 − (1 − p^bits)^T ≥ recallTarget. Compare against [[MaxSrpTables]]
     * to learn whether the cap binds.
@@ -173,10 +188,10 @@ object Similarity extends org.apache.spark.internal.Logging {
     * the banded table (one linear job) and, past
     * `spark.graft.srp.routeCandidates`, switches to the IVF-shortlist
     * route (the q204 pattern): ~√n-list IVF index, each vector probes its
-    * nprobe nearest lists for its top-`spark.graft.srp.routeK` neighbors
+    * nprobe nearest lists for its top-[[SrpRouteK]] neighbors
     * at the exact-cosine floor, edges symmetrized and deduped. The routed
     * contract is the symmetric k-NN GRAPH above the threshold — per-node
-    * degree capped at ~2·routeK — which is what near-dup CLUSTERING
+    * degree capped at ~2·SrpRouteK — which is what near-dup CLUSTERING
     * consumes (connectivity, not every edge); recall vs the exhaustive
     * exact pair set is spec-gated ≥ 0.9 and precision stays 1.0 (the
     * kernel scores true vectors with the same exact cosine). The chosen
@@ -246,10 +261,9 @@ object Similarity extends org.apache.spark.internal.Logging {
         (est > routeGate, est, Some(banded))
       }
     if (useIvf) {
-      val routeK = graft.GraftConf.srpRouteK(spark)
       if (estCollisions >= 0)
         logInfo(s"cosineNearDupPairs: IVF-SHORTLIST route ($estCollisions est raw " +
-          s"band collisions > gate $routeGate; emitting the symmetric top-$routeK " +
+          s"band collisions > gate $routeGate; emitting the symmetric top-$SrpRouteK " +
           s"neighbor graph at threshold $threshold)")
       val fanout = graft.GraftConf.explosiveFanout(spark)
       val emb = corpus.select(col(idCol).as("vec_id"), col(vecCol).as("embedding"))
@@ -257,7 +271,7 @@ object Similarity extends org.apache.spark.internal.Logging {
       val (nLists, nprobe) = ivfAutoGeometry(spark, nRows)
       val index = ivfBuild(emb, numCentroids = nLists,
         trainIters = graft.GraftConf.int(spark, "spark.graft.ann.trainIters", 1))
-      CandidatePairs.distinctPairs(ivfSearch(index, emb, k = routeK, nprobe = nprobe,
+      CandidatePairs.distinctPairs(ivfSearch(index, emb, k = SrpRouteK, nprobe = nprobe,
           minCosine = Some(threshold))
         .filter(col("query_id") =!= col("neighbor_id"))
         .select(least(col("query_id"), col("neighbor_id")).as("id_a"),
@@ -841,14 +855,12 @@ object Similarity extends org.apache.spark.internal.Logging {
       // — at the fixed 128-way fan-out that is ~570 MB of aggregation
       // buffer per task, and 32 concurrent tasks OOM'd a 64 GiB heap
       // while SPILLING (Collect.serialize doubles the buffer it
-      // serializes). Width = estProbeBytes / packPartitionBytes bounds
+      // serializes). Width = estProbeBytes / PackPartitionBytes bounds
       // the per-task buffer at any scale; below ~fanout·target bytes the
       // width stays the fan-out (bench plans unchanged). The (list,
       // qsalt) key space (nLists × qsalts tracks probeRows / blockRows)
       // always exceeds this width, so the partitions fill.
-      val packWidth = crossPackWidth(estProbeRows * vecWidth,
-        graft.GraftConf.long(spark, "spark.graft.ann.packPartitionBytes", 64L << 20),
-        fanout)
+      val packWidth = crossPackWidth(estProbeRows * vecWidth, PackPartitionBytes, fanout)
       if (packWidth != fanout)
         logInfo(s"ivf probe scan: cross-block pack exchange widened to $packWidth " +
           s"(est probe stream ${estProbeRows * vecWidth} B)")
@@ -992,7 +1004,7 @@ object Similarity extends org.apache.spark.internal.Logging {
   /** Sum of parquet footer record counts under `df`'s plan, or None when
     * the plan is not a row-preserving tree over parquet file relations.
     * Footers are driver-side metadata reads (no Spark job); past
-    * `spark.graft.ann.maxFooterFiles` a deterministic stride sample of
+    * [[MaxFooterFiles]] a deterministic stride sample of
     * footers is read and extrapolated by the FileIndex's total bytes —
     * bounded driver time at any file count.
     */
@@ -1019,15 +1031,13 @@ object Similarity extends org.apache.spark.internal.Logging {
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
       try (r.getRecordCount, in.getLength) finally r.close()
     }
-    val cap = graft.GraftConf.long(df.sparkSession,
-      "spark.graft.ann.maxFooterFiles", 1L << 15).max(1L).toInt
     val total = fsRels.map { rel =>
       val files = rel.location.inputFiles
-      if (files.length <= cap) files.iterator.map(footerRows(_)._1).sum
+      if (files.length <= MaxFooterFiles) files.iterator.map(footerRows(_)._1).sum
       else {
         // stride-sample footers (deterministic: sorted paths) and scale
         // the sampled row count by the relation's total-bytes share
-        val stride = (files.length + cap - 1) / cap
+        val stride = (files.length + MaxFooterFiles - 1) / MaxFooterFiles
         val sampled = files.sorted.iterator.zipWithIndex
           .collect { case (p, i) if i % stride == 0 => footerRows(p) }.toSeq
         val (sRows, sBytes) = sampled.foldLeft((0L, 0L)) {

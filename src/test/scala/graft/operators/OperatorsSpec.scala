@@ -220,16 +220,20 @@ class OperatorsSpec extends SparkSpec {
       .flatMap(n => Gen.listOfN(n, Gen.chooseNum(-30L, 30L)))
       .map(_.distinct.sorted.toArray)
     val prop = Prop.forAll(genSet, genSet) { (a, b) =>
-      val expr = graft.functions.NativeTextExpressions.SortedLongJaccard(
+      val jaccard = graft.functions.NativeTextExpressions.SortedLongJaccard(
         org.apache.spark.sql.catalyst.expressions.Literal.create(a,
           org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType, false)),
         org.apache.spark.sql.catalyst.expressions.Literal.create(b,
           org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType, false)))
-        .eval(null).asInstanceOf[Double]
+      val evaluated = jaccard.eval(null).asInstanceOf[Double]
+      val generated = org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+        .generate(Seq(jaccard)).apply(org.apache.spark.sql.catalyst.InternalRow.empty).getDouble(0)
       // bit-identical, not approximately equal: the grid verify replaces
       // the codegen'd expression row-for-row
-      java.lang.Double.doubleToRawLongBits(Dedup.mergeJaccard(a, b)) ==
-        java.lang.Double.doubleToRawLongBits(expr)
+      val grid = graft.functions.NativeTextExpressions.jaccardSorted(
+        Dedup.cellSet(a), Dedup.cellSet(b))
+      Seq(evaluated, generated).forall(v =>
+        java.lang.Double.doubleToRawLongBits(grid) == java.lang.Double.doubleToRawLongBits(v))
     }
     val res = ScTest.check(ScTest.Parameters.default.withMinSuccessfulTests(200), prop)
     assert(res.passed, s"mergeJaccard diverged from jaccard_sorted: $res")

@@ -65,5 +65,50 @@ class QualityRulesSpec extends SparkSpec {
           .as("top_bigram_frac"))
     val native = QualityRules.repetitionReport(docs, "doc_id", "text")
     assert(native.except(reference).isEmpty && reference.except(native).isEmpty)
+
+    // tokenizer edge inputs, against the replaced String walk: the
+    // relational `length()` counts code points, while sum_token_len counts
+    // UTF-16 units (a non-BMP character is 2)
+    val edges = graft.functions.TokenEdges.texts
+    val got = edges.toDF("text").select(expr("token_profile(text)").as("p"))
+      .collect().map { r =>
+        val p = r.getStruct(0); (p.getInt(0), p.getInt(1), p.getLong(2), p.getInt(3))
+      }.toSeq
+    assert(got == edges.map(stringWalkProfile))
+  }
+
+  /** The String walk token_profile ran before the byte cursor, verbatim:
+    * (n_tokens, distinct_tokens, sum_token_len, top_bigram_count). */
+  private def stringWalkProfile(text: String): (Int, Int, Long, Int) = {
+    def isJavaSpace(c: Char): Boolean =
+      c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
+    val s = org.apache.spark.unsafe.types.UTF8String.fromString(text).toLowerCase.toString
+    val distinct = new java.util.HashSet[String]()
+    val bigrams = new java.util.HashMap[String, Int]()
+    var n = 0
+    var sumLen = 0L
+    var top = 0
+    var prev: String = null
+    var start = 0
+    var i = 0
+    while (i <= s.length) {
+      if (i == s.length || isJavaSpace(s.charAt(i))) {
+        if (i > start) {
+          val tok = s.substring(start, i)
+          n += 1
+          sumLen += tok.length
+          distinct.add(tok)
+          if (prev != null) {
+            val key = prev + " " + tok
+            val c = bigrams.merge(key, 1, Integer.sum)
+            if (c > top) top = c
+          }
+          prev = tok
+        }
+        start = i + 1
+      }
+      i += 1
+    }
+    (n, distinct.size, sumLen, top)
   }
 }
