@@ -36,13 +36,6 @@ object Queries {
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
     Tables(spark, dir, name)
 
-  /** Int conf with a validating parse: a typo'd value fails with a
-    * message NAMING the conf key at plan-build time, not a bare
-    * NumberFormatException from deep inside the planner.
-    */
-  private def confInt(spark: SparkSession, key: String, default: => Int): Int =
-    GraftConf.int(spark, key, default)
-
   // ---- aggregations (Q7 + §2b agg) ----
 
   /** TPC-H Q1 shape: scan-heavy partial-agg-friendly group-by — the workhorse
@@ -2437,43 +2430,25 @@ object Queries {
     // the final 5, so hash distortion can only cost recall via a probe
     // miss, never by reordering the shortlist. Same floor + tie-break
     // as q203, so the two answers are directly comparable.
-    // the staged embeddings read back as ONE partition; the inverted
-    // lists inherit that (assignment is scan-local), and the probe join
-    // would score every (query, candidate) pair in a single task — fan
-    // the corpus side out first
-    val fanout = graft.GraftConf.explosiveFanout(spark)
     // hashed floor 0.6 = the exact 0.8 floor minus generous hash-
     // distortion slack: candidates whose hashed cosine is below it are
     // essentially never true ≥0.8 pairs, so the index prunes them
-    // before ranking (the recall gate in spec is the safety net)
-    // the QUERY side needs the same fan-out as the build side: the
-    // staged embedding parquet reads back as one partition, and the
-    // per-query probe-list expression (interpreted HOF over the inlined
-    // codebook) would otherwise evaluate in a single task (~3 s here)
-    val (nLists, nprobe) = graft.operators.Similarity.ivfAutoGeometry(spark, emb.count())
-    // extra Lloyd iterations do NOT buy recall here (measured 0.924 @ 1
-    // iter → 0.908 @ 5: tighter centroids split near-dup neighborhoods
-    // across list boundaries), so training stays at 1
-    val shortlist = graft.operators.Similarity
-      .ivfSearch(graft.operators.Similarity
-          .ivfBuild(emb.repartition(fanout), numCentroids = nLists,
-            trainIters = confInt(spark, "spark.graft.ann.trainIters", 1)),
-        emb.repartition(fanout), k = 25, nprobe = nprobe,
-        // floor relaxed by the int8 quantization margin: with the
-        // in-operator rerank deliberately OFF (below), the int8 regime
-        // applies this floor to APPROXIMATE scores, and a neighbor whose
-        // true hashed cosine clears 0.6 can score just under it and
-        // silently drop out of the shortlist; the downstream exact
-        // sorted_dot ≥0.8 rerank restores precision either way, so the
-        // relaxation only widens the shortlist (float regime: admits a
-        // thin band below 0.6 the 0.8 rerank then rejects).
-        minCosine = Some(0.6 - graft.operators.Similarity.Int8FloorMargin),
-        // the sorted_dot ≥0.8 rerank below rescoring TRUE tf-idf vectors
-        // makes any in-operator quantized-shortlist rerank a redundant
-        // second pass — the ivfSearch output is a shortlist heuristic
-        // here, so approximate scores are the honest (and 4× cheaper
-        // at sf20) contract for this composition
-        quantizedRerank = Some(false))
+    // before ranking (the recall gate in spec is the safety net).
+    // It is relaxed by the int8 quantization margin: with the
+    // in-operator rerank deliberately OFF (below), the int8 regime
+    // applies this floor to APPROXIMATE scores, and a neighbor whose
+    // true hashed cosine clears 0.6 can score just under it and
+    // silently drop out of the shortlist; the downstream exact
+    // sorted_dot ≥0.8 rerank restores precision either way, so the
+    // relaxation only widens the shortlist (float regime: admits a
+    // thin band below 0.6 the 0.8 rerank then rejects).
+    // The sorted_dot ≥0.8 rerank below rescoring TRUE tf-idf vectors
+    // makes any in-operator quantized-shortlist rerank a redundant
+    // second pass — the ivfSearch output is a shortlist heuristic
+    // here, so approximate scores are the honest (and 4× cheaper
+    // at sf20) contract for this composition.
+    val shortlist = Similarity.ivfSelfSearch(emb, emb.count(), k = 25,
+        minCosine = 0.6 - Similarity.Int8FloorMargin, quantizedRerank = Some(false))
       .select(col("query_id").as("doc_id"), col("neighbor_id").as("nbr_id"))
     val reranked = shortlist
       .join(broadcast(sparse.select(col("id").as("doc_id"), col("ks").as("ka"), col("vs").as("va"))), "doc_id")

@@ -453,17 +453,16 @@ object NativeTextExpressions {
     /** The token as a view on `s`'s bytes. */
     def token: UTF8String = UTF8String.fromAddress(base, off + start, end - start)
 
-    /** The token's `String.length`: one UTF-16 unit per character, two
-      * for a character outside the BMP (a 4-byte UTF-8 sequence). */
-    def utf16Length: Int = {
-      var units = 0
+    /** The token's length in code points, as Spark's `length()` counts:
+      * one per byte that does not continue a UTF-8 sequence. */
+    def numChars: Int = {
+      var chars = 0
       var i = start
       while (i < end) {
-        val b = Platform.getByte(base, off + i)
-        if ((b & 0xC0) != 0x80) units += (if ((b & 0xF8) == 0xF0) 2 else 1)
+        if ((Platform.getByte(base, off + i) & 0xC0) != 0x80) chars += 1
         i += 1
       }
-      units
+      chars
     }
   }
 
@@ -617,8 +616,8 @@ object NativeTextExpressions {
   }
 
   /** All four repetition/diversity signals in one token walk per document:
-    * token count, distinct-token count, total token length (in UTF-16
-    * units, as `String.length` counts), and the count of the most
+    * token count, distinct-token count, total token length (in code
+    * points, as Spark's `length()` counts), and the count of the most
     * frequent adjacent bigram. Replaces a 2-scan + 2-shuffle + join
     * relational formulation in QualityRules with a single scan-local
     * eval — the quantity is per-document, so nothing about it needs to
@@ -644,7 +643,7 @@ object NativeTextExpressions {
       var prev = -1L
       while (cur.next()) {
         n += 1
-        sumLen += cur.utf16Length
+        sumLen += cur.numChars
         val id = ids.computeIfAbsent(cur.token, _ => ids.size)
         if (prev >= 0) {
           val c = bigrams.merge((prev << 32) | id, 1, Integer.sum)
@@ -662,7 +661,10 @@ object NativeTextExpressions {
 
   /** Punctuation character ratio (0.0 when empty) — same result as the
     * regexp_replace-based [[TextFunctions.punctRatio]] without running a
-    * regex engine per row.
+    * regex engine per row: punctuation count over the length in code
+    * points (Spark's `length()`). The punctuation set is ASCII, and no
+    * byte of a multibyte UTF-8 character is, so the count walks the
+    * bytes in place.
     */
   case class PunctRatio(child: Expression)
     extends UnaryExpression with StringInput with CodegenFallback {
@@ -670,18 +672,21 @@ object NativeTextExpressions {
     override def prettyName: String = "punct_ratio_native"
 
     override def nullSafeEval(input: Any): Any = {
-      val s = input.asInstanceOf[UTF8String].toString
-      if (s.isEmpty) 0.0
+      val s = input.asInstanceOf[UTF8String]
+      val n = s.numChars
+      if (n == 0) 0.0
       else {
+        val base = s.getBaseObject
+        val off = s.getBaseOffset
         var punct = 0
         var i = 0
-        while (i < s.length) {
-          val c = s.charAt(i)
+        while (i < s.numBytes) {
+          val c = Platform.getByte(base, off + i)
           if (c == '.' || c == '!' || c == '?' || c == ',' || c == ';' || c == ':')
             punct += 1
           i += 1
         }
-        punct.toDouble / s.length
+        punct.toDouble / n
       }
     }
 

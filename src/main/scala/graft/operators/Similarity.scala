@@ -5,8 +5,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import scala.util.Random
-
 /** Approximate/exact nearest-neighbor search over an embedding column.
   *
   * Scale design: the query set is always the small side — broadcast it and
@@ -38,9 +36,17 @@ object Similarity extends org.apache.spark.internal.Logging {
     VectorFunctions.register(corpus.sparkSession)
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("query_vec"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("corpus_vec"))
-    val scored = c.join(broadcast(q), col("neighbor_id") =!= col("query_id"))
-      .withColumn("cosine",
-        VectorFunctions.cosine("query_vec", "corpus_vec"))
+    rankedTopK(c.join(broadcast(q), col("neighbor_id") =!= col("query_id"))
+      .withColumn("cosine", VectorFunctions.cosine("query_vec", "corpus_vec")), k)
+  }
+
+  /** The per-query top-k every search ends in: rank each `query_id`'s
+    * scored rows by (cosine desc, neighbor_id asc), keep ranks ≤ k, and
+    * emit (query_id, neighbor_id, cosine rounded to 4 places, rk as int).
+    * Ranking happens before the rounding, so equal rounded scores keep
+    * their exact order.
+    */
+  private def rankedTopK(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("neighbor_id").asc)
     scored
@@ -84,15 +90,6 @@ object Similarity extends org.apache.spark.internal.Logging {
       .withColumn("c", expr("cosine_sim_i8(q_a, q_b)"))
       .filter(col("c") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("c"), 4).as("qcosine"))
-  }
-
-  /** Deterministic random hyperplanes for sign-bit LSH (seeded). Kept for
-    * API compatibility / tests; the operators below use the fused native
-    * [[graft.functions.SrpBuckets]] expression instead.
-    */
-  def hyperplanes(dim: Int, numPlanes: Int, seed: Long = 42L): Seq[Seq[Double]] = {
-    val rnd = new Random(seed)
-    Seq.fill(numPlanes)(Seq.fill(dim)(rnd.nextGaussian()))
   }
 
   /** Bits per SRP table for a target expected bucket population: with
@@ -265,14 +262,8 @@ object Similarity extends org.apache.spark.internal.Logging {
         logInfo(s"cosineNearDupPairs: IVF-SHORTLIST route ($estCollisions est raw " +
           s"band collisions > gate $routeGate; emitting the symmetric top-$SrpRouteK " +
           s"neighbor graph at threshold $threshold)")
-      val fanout = graft.GraftConf.explosiveFanout(spark)
       val emb = corpus.select(col(idCol).as("vec_id"), col(vecCol).as("embedding"))
-        .repartition(fanout)
-      val (nLists, nprobe) = ivfAutoGeometry(spark, nRows)
-      val index = ivfBuild(emb, numCentroids = nLists,
-        trainIters = graft.GraftConf.int(spark, "spark.graft.ann.trainIters", 1))
-      CandidatePairs.distinctPairs(ivfSearch(index, emb, k = SrpRouteK, nprobe = nprobe,
-          minCosine = Some(threshold))
+      CandidatePairs.distinctPairs(ivfSelfSearch(emb, nRows, SrpRouteK, threshold)
         .filter(col("query_id") =!= col("neighbor_id"))
         .select(least(col("query_id"), col("neighbor_id")).as("id_a"),
           greatest(col("query_id"), col("neighbor_id")).as("id_b"),
@@ -349,6 +340,28 @@ object Similarity extends org.apache.spark.internal.Logging {
     (nLists, nprobe)
   }
 
+  /** Corpus-as-queries IVF search: each of the `nVecs` vectors of `emb`
+    * (`vec_id`, `embedding`) gets its top-`k` neighbors at cosine ≥
+    * `minCosine`, itself included. The geometry is [[ivfAutoGeometry]];
+    * the index and the query side read one fan-out of `emb` (a staged
+    * table reads back as one partition, and the scan-local list
+    * assignment and probe selection would otherwise run in one task);
+    * training runs `spark.graft.ann.trainIters` Lloyd iterations
+    * (default 1: on q204's corpus more iterations lost recall, 0.924 at 1
+    * → 0.908 at 5, because tighter centroids split near-dup
+    * neighborhoods across list boundaries).
+    */
+  private[graft] def ivfSelfSearch(emb: DataFrame, nVecs: Long, k: Int, minCosine: Double,
+                                   quantizedRerank: Option[Boolean] = None): DataFrame = {
+    val spark = emb.sparkSession
+    val fanned = emb.repartition(graft.GraftConf.explosiveFanout(spark))
+    val (nLists, nprobe) = ivfAutoGeometry(spark, nVecs)
+    val index = ivfBuild(fanned, numCentroids = nLists,
+      trainIters = graft.GraftConf.int(spark, "spark.graft.ann.trainIters", 1))
+    ivfSearch(index, fanned, k = k, nprobe = nprobe, minCosine = Some(minCosine),
+      quantizedRerank = quantizedRerank)
+  }
+
   /** Queries-side broadcast ceiling (rows). Below it the query side is
     * broadcast — every executor probes locally, zero shuffle of the corpus
     * side. Above it (corpus-vs-corpus ANN, 10⁸-row query batches) the
@@ -407,7 +420,7 @@ object Similarity extends org.apache.spark.internal.Logging {
     // bit-identical once reduced to the cosine (the extra in-pipeline
     // dots are map-side), so the dedup exchange carries three scalars
     // per row instead of two dim-width vectors
-    val scored = cb.join(maybeBroadcast(qb, maxBroadcastQueries),
+    rankedTopK(cb.join(maybeBroadcast(qb, maxBroadcastQueries),
         Seq("tbl", "bucket"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"), col("query_vec"),
@@ -415,14 +428,7 @@ object Similarity extends org.apache.spark.internal.Logging {
       .withColumn("cosine",
         VectorFunctions.cosine("query_vec", "corpus_vec"))
       .select(col("query_id"), col("neighbor_id"), col("cosine"))
-      .dropDuplicates("query_id", "neighbor_id")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("neighbor_id"), round(col("cosine"), 4).as("cosine"),
-        col("rk").cast("int").as("rk"))
+      .dropDuplicates("query_id", "neighbor_id"), k)
   }
 
   /** The native codegen'd centroid scorer ([[graft.functions.NearestCentroids]])
@@ -461,93 +467,98 @@ object Similarity extends org.apache.spark.internal.Logging {
     * quantizers train on a capped sample by default): centroid QUALITY
     * needs representative data, not all of it, and a codebook is k × dim
     * floats however it was trained. The corpus contributes one `limit`
-    * job (a partition or two at any scale); every Lloyd iteration is
-    * then driver-local float math over ≤ max(k, 1024) vectors — no
+    * job ([[trainingSample]]); every Lloyd iteration is then
+    * driver-local float math ([[kMeans]] under cosine distance) — no
     * distributed pass per iteration, so training cost is independent of
-    * corpus size. (An earlier formulation ran each Lloyd assignment as a
-    * full-corpus scan + posexplode mean aggregate; at 100 TB that is
-    * `iters` extra corpus passes buying nothing the sample can't.) The
-    * full corpus is touched exactly once afterwards, by the scan-local
-    * list ASSIGNMENT in [[ivfBuild]]/[[ivfTopK]]. Initialization is
-    * deterministic k-means++-style farthest-first seeding over the same
-    * sample; a cluster that empties keeps its previous centroid (k never
-    * shrinks); no RNG anywhere, so replays train identical codebooks.
+    * corpus size. The full corpus is touched exactly once afterwards, by
+    * the scan-local list ASSIGNMENT in [[ivfBuild]]/[[ivfTopK]].
     */
   def trainCentroidsLocal(corpus: DataFrame, numCentroids: Int, iters: Int = 3,
                           idCol: String = "vec_id", vecCol: String = "embedding"
-                         ): Seq[(Long, Array[Float])] = {
+                         ): Seq[(Long, Array[Float])] =
+    coarseCentroids(trainingSample(corpus, numCentroids, idCol, vecCol), numCentroids, iters)
+
+  /** The driver-side training sample: the first max(k, 1024) rows of
+    * (sort key, vector) in scan order — one `limit` job, a partition or
+    * two at any scale. The key only fixes the coarse trainer's point
+    * order (determinism), so any deterministic i64 works: numeric ids
+    * cast; generic ids (string UUIDs, composite keys rendered to text)
+    * take the same xxhash64 surrogate the id-generic build uses.
+    */
+  private def trainingSample(corpus: DataFrame, numCentroids: Int, idCol: String,
+                             vecCol: String): Array[(Long, Array[Float])] = {
     VectorFunctions.register(corpus.sparkSession)
-    // k-means++-style seeding on a bounded driver-side sample: the first
-    // seed is the lowest-id vector; each further seed is the sample point
-    // farthest (cosine distance) from its nearest already-chosen seed — the
-    // deterministic farthest-first variant of the D² weighting (no RNG, so
-    // replays train identical codebooks). A contiguous-id prefix no longer
-    // degenerates the init: seeds start spread across the sample, so the
-    // same `iters` buys a strictly better codebook. The sample is bounded
-    // (max(k, 1024) rows — one `limit` job, a partition or two at any
-    // scale); seeding cost is O(sample × k) driver-side float ops.
-    def cos(a: Array[Float], b: Array[Float]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) { dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
-      if (na == 0.0 || nb == 0.0) 0.0 else dot / math.sqrt(na * nb)
-    }
-    // the sample sort key only fixes seed ORDER (determinism), so any
-    // deterministic i64 works: numeric ids cast; generic ids (string
-    // UUIDs, composite keys rendered to text) take the same xxhash64
-    // surrogate the id-generic build uses
     val sampleKey = corpus.schema(idCol).dataType match {
       case _: org.apache.spark.sql.types.NumericType => col(idCol).cast("long")
       case _ => surrogateId(col(idCol))
     }
-    val sample = corpus.select(sampleKey, col(vecCol))
+    corpus.select(sampleKey, col(vecCol))
       .limit(math.max(numCentroids, 1024)).collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-      .sortBy(_._1)
-    if (sample.isEmpty) return Seq.empty
-    val chosen = scala.collection.mutable.ArrayBuffer(sample.head._2)
-    val minDist = Array.fill(sample.length)(1.0 - cos(sample.head._2, sample.head._2))
-    sample.indices.foreach(i => minDist(i) = 1.0 - cos(sample(i)._2, chosen.head))
-    while (chosen.size < math.min(numCentroids, sample.length)) {
-      // ties (e.g. exhausted distinct points) resolve to the lowest index —
-      // duplicate seeds are fine, the empty-cluster rule keeps k stable
+  }
+
+  /** Coarse (cosine) centroids over the sample sorted by key: the first
+    * seed is the lowest-key vector, so a contiguous-id prefix cannot
+    * degenerate the init. Centroid ids are 0 until k.
+    */
+  private def coarseCentroids(sample: Array[(Long, Array[Float])], numCentroids: Int,
+                              iters: Int): Seq[(Long, Array[Float])] =
+    if (sample.isEmpty) Seq.empty
+    else kMeans(sample.sortBy(_._1).map(_._2), numCentroids, iters, cosineDistance)
+      .zipWithIndex.map { case (v, i) => (i.toLong, v) }.toSeq
+
+  private def cosineDistance(a: Array[Float], b: Array[Float]): Double = {
+    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+    while (i < a.length) { dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
+    1.0 - (if (na == 0.0 || nb == 0.0) 0.0 else dot / math.sqrt(na * nb))
+  }
+
+  private def squaredL2(a: Array[Float], b: Array[Float]): Double = {
+    var s = 0.0; var i = 0
+    while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }
+    s
+  }
+
+  /** Driver-local k-means, the one kernel of the coarse quantizer and the
+    * PQ subspaces. Farthest-first seeding — the deterministic variant of
+    * k-means++'s D² weighting: the first seed is `pts.head`, each further
+    * seed the point farthest (by `dist`) from its nearest chosen seed —
+    * then `iters` Lloyd iterations. Every compare is strict, so ties go
+    * to the lowest index (duplicate seeds are fine); a cell that loses
+    * every member keeps its centroid, so k never shrinks. No RNG: replays
+    * train identical centroids. min(k, |pts|) centroids (at least one).
+    */
+  private def kMeans(pts: Array[Array[Float]], k: Int, iters: Int,
+                     dist: (Array[Float], Array[Float]) => Double): Array[Array[Float]] = {
+    val seeds = scala.collection.mutable.ArrayBuffer(pts.head)
+    val minDist = pts.map(dist(_, pts.head))
+    while (seeds.size < math.min(k, pts.length)) {
       var best = 0
       var i = 1
-      while (i < sample.length) {
-        if (minDist(i) > minDist(best)) best = i
-        i += 1
-      }
-      val seed = sample(best)._2
-      chosen += seed
-      sample.indices.foreach { j =>
-        val d = 1.0 - cos(sample(j)._2, seed)
-        if (d < minDist(j)) minDist(j) = d
-      }
+      while (i < pts.length) { if (minDist(i) > minDist(best)) best = i; i += 1 }
+      val s = pts(best)
+      seeds += s
+      pts.indices.foreach { j => val d = dist(pts(j), s); if (d < minDist(j)) minDist(j) = d }
     }
-    var cents: Array[Array[Float]] = chosen.toArray
+    var cents = seeds.toArray
     val dim = cents.head.length
     for (_ <- 1 to iters) {
       val sums = Array.fill(cents.length)(new Array[Double](dim))
       val counts = new Array[Int](cents.length)
-      sample.foreach { case (_, v) =>
-        var best = 0; var bs = cos(v, cents(0))
+      pts.foreach { p =>
+        var best = 0; var bd = dist(p, cents(0))
         var c = 1
-        while (c < cents.length) {
-          val s = cos(v, cents(c))
-          if (s > bs) { bs = s; best = c }
-          c += 1
-        }
+        while (c < cents.length) { val d = dist(p, cents(c)); if (d < bd) { bd = d; best = c }; c += 1 }
         counts(best) += 1
         var i = 0
-        while (i < dim) { sums(best)(i) += v(i); i += 1 }
+        while (i < dim) { sums(best)(i) += p(i); i += 1 }
       }
-      // a cluster that lost every member keeps its previous centroid (it can
-      // regain members as the others move) instead of silently shrinking k
       cents = cents.zipWithIndex.map { case (old, c) =>
         if (counts(c) == 0) old
         else Array.tabulate(dim)(i => (sums(c)(i) / counts(c)).toFloat)
       }
     }
-    cents.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toSeq
+    cents
   }
 
   /** A built IVF index: the trained codebook plus the corpus with its
@@ -589,6 +600,24 @@ object Similarity extends org.apache.spark.internal.Logging {
   private[operators] def surrogateId(c: org.apache.spark.sql.Column) =
     xxhash64(c.cast("string"))
 
+  /** The surrogate-collision audit: one combinable two-column agg over
+    * `df`; fails loud (naming the caller `who` and the `side`, query or
+    * corpus) unless `surrogate` has as many distinct values as `orig` —
+    * a collision would merge two ids' identities. Returns the distinct
+    * id count.
+    */
+  private def auditSurrogates(df: DataFrame, surrogate: String, orig: String,
+                              who: String, side: String): Long = {
+    val audit = df.agg(
+      countDistinct(col(surrogate)).as("s"),
+      countDistinct(col(orig)).as("o")).head()
+    require(audit.getLong(0) == audit.getLong(1),
+      s"$who: xxhash64 surrogate collision among $side ids " +
+        s"(${audit.getLong(1)} distinct ids -> ${audit.getLong(0)} surrogates); " +
+        s"re-key the $side side with explicit i64 ids")
+    audit.getLong(1)
+  }
+
   /** (neighbor_id, corpus_vec, list_id[, orig_id]) for a corpus/batch:
     * long ids pass through; generic ids take the surrogate and keep the
     * original alongside for decode.
@@ -617,6 +646,22 @@ object Similarity extends org.apache.spark.internal.Logging {
     val cents = trainCentroidsLocal(corpus, numCentroids, trainIters, idCol, vecCol)
     IvfIndex(cents, assignCols(corpus, cents, idCol, vecCol))
   }
+
+  /** Width of the cross-block pack exchange: enough partitions that each
+    * task's collect_list buffer holds ≤ `targetBytes` of the probe
+    * stream, but no more than the exchange's `keys` distinct (list,
+    * salt) keys — a hash exchange of K keys fills at most K partitions,
+    * and every partition past that is an empty task. Never below the
+    * explosive fan-out (small scales keep their plan), and capped so the
+    * width cannot explode on a nonsense stats estimate. Pure —
+    * unit-tested directly in IvfBlockTopKSpec.
+    */
+  private[graft] def crossPackWidth(estStreamBytes: BigInt,
+                                    targetBytes: Long,
+                                    fanout: Int,
+                                    keys: Long): Int =
+    (estStreamBytes / targetBytes.max(1L) + 1)
+      .min(BigInt(keys)).min(BigInt(65536)).max(BigInt(fanout)).toInt
 
   /** Search a prebuilt index: each query scans only its `nprobe` nearest
     * inverted lists (≈ nprobe/numCentroids of the corpus), as a BLOCK
@@ -649,18 +694,6 @@ object Similarity extends org.apache.spark.internal.Logging {
     * on list_id — at cluster scale persist `assigned` bucketed by
     * list_id so only the (small) packed blobs move.
     */
-  /** Width of the cross-block pack exchange: enough partitions that each
-    * task's collect_list buffer holds ≤ `targetBytes` of the probe
-    * stream, never below the explosive fan-out (small scales keep their
-    * plan), capped so the width cannot explode on a nonsense stats
-    * estimate. Pure — unit-tested directly in IvfBlockTopKSpec.
-    */
-  private[graft] def crossPackWidth(estStreamBytes: BigInt,
-                                    targetBytes: Long,
-                                    fanout: Int): Int =
-    (estStreamBytes / targetBytes.max(1L) + 1)
-      .max(BigInt(fanout)).min(BigInt(65536)).toInt
-
   def ivfSearch(index: IvfIndex, queries: DataFrame, k: Int, nprobe: Int = 4,
                 idCol: String = "vec_id", vecCol: String = "embedding",
                 maxBroadcastQueries: Long = DefaultMaxBroadcastQueries,
@@ -857,10 +890,11 @@ object Similarity extends org.apache.spark.internal.Logging {
       // while SPILLING (Collect.serialize doubles the buffer it
       // serializes). Width = estProbeBytes / PackPartitionBytes bounds
       // the per-task buffer at any scale; below ~fanout·target bytes the
-      // width stays the fan-out (bench plans unchanged). The (list,
-      // qsalt) key space (nLists × qsalts tracks probeRows / blockRows)
-      // always exceeds this width, so the partitions fill.
-      val packWidth = crossPackWidth(estProbeRows * vecWidth, PackPartitionBytes, fanout)
+      // width stays the fan-out (bench plans unchanged), and it never
+      // exceeds the (list, qsalt) key space, which no hash exchange can
+      // spread wider.
+      val packWidth = crossPackWidth(estProbeRows * vecWidth, PackPartitionBytes, fanout,
+        nLists.toLong * qsalts)
       if (packWidth != fanout)
         logInfo(s"ivf probe scan: cross-block pack exchange widened to $packWidth " +
           s"(est probe stream ${estProbeRows * vecWidth} B)")
@@ -880,13 +914,7 @@ object Similarity extends org.apache.spark.internal.Logging {
           col("e.neighbor_id").as("neighbor_id"),
           col("e.cosine").as("cosine"))
     }
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    perChunk
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("neighbor_id"), round(col("cosine"), 4).as("cosine"),
-        col("rk").cast("int").as("rk"))
+    rankedTopK(perChunk, k)
   }
 
   /** [[ivfSearch]] for a non-long id column: encode query ids onto the
@@ -926,27 +954,14 @@ object Similarity extends org.apache.spark.internal.Logging {
     val encQueries = queries.select(surrogateId(col(idCol)).as(idCol), col(vecCol))
     val qDict = queries.select(col(idCol).as("__q_orig"),
       surrogateId(col(idCol)).as("query_id"))
-    val qAudit = qDict.agg(
-      countDistinct(col("query_id")).as("s"),
-      countDistinct(col("__q_orig")).as("o")).head()
-    require(qAudit.getLong(0) == qAudit.getLong(1),
-      s"ivfSearch: xxhash64 surrogate collision among query ids " +
-        s"(${qAudit.getLong(1)} distinct ids -> ${qAudit.getLong(0)} surrogates); " +
-        "re-key the query batch with explicit i64 ids")
+    auditSurrogates(qDict, "query_id", "__q_orig", "ivfSearch", "query")
     val nDict = index.assigned.select(col("neighbor_id"),
       col("orig_id").as("__n_orig"))
     val perSearch = graft.GraftConf.annAuditGenericIdsPerSearch(spark)
     if (perSearch || !index.genericAuditPassed.get()) {
-      val audit = nDict.agg(
-        countDistinct(col("neighbor_id")).as("s"),
-        countDistinct(col("__n_orig")).as("o")).head()
-      require(audit.getLong(0) == audit.getLong(1),
-        s"ivfSearch: xxhash64 surrogate collision among corpus ids " +
-          s"(${audit.getLong(1)} distinct ids -> ${audit.getLong(0)} surrogates); " +
-          "re-key the corpus with explicit i64 ids")
+      val n = auditSurrogates(nDict, "neighbor_id", "__n_orig", "ivfSearch", "corpus")
       index.genericAuditPassed.set(true)
-      logInfo(s"ivf generic ids: corpus surrogate audit PASSED " +
-        s"(${audit.getLong(1)} distinct ids" +
+      logInfo(s"ivf generic ids: corpus surrogate audit PASSED ($n distinct ids" +
         (if (perSearch) ", per-search mode)" else "; memoized for this index)"))
     } else
       logInfo("ivf generic ids: corpus surrogate audit memoized (already " +
@@ -1247,22 +1262,15 @@ object Similarity extends org.apache.spark.internal.Logging {
     }
     val querySide = queries
       .select(col(idCol).as("query_id"), col(vecCol).as("query_vec"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
     val rescored = slim
       .join(corpusSide.hint("SHUFFLE_HASH"), "neighbor_id")
       .join(querySide.hint("SHUFFLE_HASH"), "query_id")
       .withColumn("cosine", VectorFunctions.cosine("query_vec", "corpus_vec"))
       .select(col("query_id"), col("neighbor_id"), col("cosine"))
-    val floored = minCosine match {
+    rankedTopK(minCosine match {
       case Some(t) => rescored.filter(col("cosine") >= t)
       case None => rescored
-    }
-    floored
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("neighbor_id"),
-        round(col("cosine"), 4).as("cosine"), col("rk").cast("int").as("rk"))
+    }, k)
   }
 
   private def indexDimOf(index: IvfIndex): Int = index.centroids.head._2.length
@@ -1311,67 +1319,20 @@ object Similarity extends org.apache.spark.internal.Logging {
 
   // ---- product quantization (PQ) ----
 
-  /** A trained PQ index: `codebooks(j)(c)` is centroid c of subspace j
-    * (m × ksub × (dim/m) floats — driver-small by construction), and
-    * `encoded` holds one `array<int>` of m codes per corpus vector. The
-    * memory story is the point: m bytes/vector (codes) + a shared codebook
-    * vs 4·dim bytes/vector — at dim 768, m=8 that is a 384× smaller scan.
+  /** PQ codebooks: driver-local L2 [[kMeans]] per subspace over the
+    * first 1024 sample rows (the standard PQ training recipe — FAISS
+    * trains codebooks on a sample too). L2 here, not cosine, because PQ
+    * reconstructs dot products additively and subvector magnitudes
+    * matter. `codebooks(j)(c)` is centroid c of subspace j.
     */
-  final case class PqIndex private[operators] (
-      codebooks: Array[Array[Array[Float]]], encoded: DataFrame, dim: Int) {
-    def m: Int = codebooks.length
-    def ksub: Int = codebooks.head.length
-  }
-
-  /** Driver-local L2 k-means per subspace over a bounded sample (the
-    * standard PQ training recipe — FAISS trains codebooks on a sample too;
-    * codebook quality needs representative data, not all of it). Init is
-    * the same deterministic farthest-first seeding as the IVF coarse
-    * quantizer; L2 here, not cosine, because PQ reconstructs dot products
-    * additively and subvector magnitudes matter.
-    */
-  private def pqTrainLocal(sample: Array[Array[Float]], m: Int, ksub: Int,
-                           iters: Int): Array[Array[Array[Float]]] = {
+  private def pqCodebooks(sample: Array[Array[Float]], m: Int, ksub: Int,
+                          iters: Int): Array[Array[Array[Float]]] = {
     val dim = sample.head.length
     require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
     val sub = dim / m
-    def l2(a: Array[Float], b: Array[Float]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }
-      s
-    }
     Array.tabulate(m) { j =>
-      val pts = sample.map(v => java.util.Arrays.copyOfRange(v, j * sub, (j + 1) * sub))
-      val k = math.min(ksub, pts.length)
-      // farthest-first seeding
-      val seeds = scala.collection.mutable.ArrayBuffer(pts.head)
-      val minD = pts.map(p => l2(p, seeds.head))
-      while (seeds.size < k) {
-        var best = 0
-        var i = 1
-        while (i < pts.length) { if (minD(i) > minD(best)) best = i; i += 1 }
-        val s = pts(best)
-        seeds += s
-        pts.indices.foreach { i => val d = l2(pts(i), s); if (d < minD(i)) minD(i) = d }
-      }
-      var cents = seeds.toArray
-      for (_ <- 1 to iters) {
-        val sums = Array.fill(cents.length)(new Array[Double](sub))
-        val counts = new Array[Int](cents.length)
-        pts.foreach { p =>
-          var best = 0; var bd = Double.MaxValue
-          var c = 0
-          while (c < cents.length) { val d = l2(p, cents(c)); if (d < bd) { bd = d; best = c }; c += 1 }
-          counts(best) += 1
-          var i = 0
-          while (i < sub) { sums(best)(i) += p(i); i += 1 }
-        }
-        cents = cents.zipWithIndex.map { case (old, c) =>
-          if (counts(c) == 0) old // empty cell keeps its centroid, k stable
-          else Array.tabulate(sub)(i => (sums(c)(i) / counts(c)).toFloat)
-        }
-      }
-      cents
+      kMeans(sample.map(v => java.util.Arrays.copyOfRange(v, j * sub, (j + 1) * sub)),
+        ksub, iters, squaredL2)
     }
   }
 
@@ -1397,38 +1358,6 @@ object Similarity extends org.apache.spark.internal.Logging {
       acc => acc.getField("i"))
   }
 
-  /** Train codebooks (on a bounded sample) and encode every corpus vector
-    * to its m codes — one scan-local pass, no shuffle. `encoded` carries
-    * codes ONLY: the compressed representation is the deliverable.
-    */
-  def pqBuild(corpus: DataFrame, m: Int = 4, ksub: Int = 16, trainIters: Int = 3,
-              idCol: String = "vec_id", vecCol: String = "embedding"): PqIndex = {
-    val sample = corpus.select(col(vecCol)).limit(1024).collect()
-      .map(_.getSeq[Float](0).toArray)
-    require(sample.nonEmpty, "pqBuild: empty corpus")
-    val dim = sample.head.length
-    val codebooks = pqTrainLocal(sample, m, ksub, trainIters)
-    val sub = dim / m
-    val codes = array((0 until m).map { j =>
-      nearestCode(slice(col(vecCol), j * sub + 1, sub), codebooks(j))
-    }: _*)
-    PqIndex(codebooks,
-      corpus.select(col(idCol).as("neighbor_id"), codes.as("codes")), dim)
-  }
-
-  /** PQ ANN top-k with asymmetric distance computation (ADC) + exact
-    * rerank. Per query, the dot of the query subvector with every codebook
-    * centroid is precomputed scan-local into an m × ksub lookup table, so
-    * scoring a corpus vector is m table lookups over its codes — the scan
-    * reads m ints/vector instead of dim floats. The reconstructed cosine
-    * ranks a shortlist of `rerankFactor`·k candidates, which a join back
-    * to the original vectors reranks exactly — the standard PQ recipe
-    * (compressed scan for candidates, exact math only on the shortlist).
-    * `corpus` is only touched for the shortlist join; queries are
-    * broadcast (PQ's scan is brute-force over codes, so the query side
-    * must be the small side — compose with [[ivfBuild]] lists for huge
-    * query batches).
-    */
   /** Per-query ADC lookup table: `lut(j)(c)` = dot(query subvector j,
     * codebook centroid c) — m × ksub doubles computed scan-local per query
     * row against the inlined codebooks.
@@ -1467,47 +1396,6 @@ object Similarity extends org.apache.spark.internal.Logging {
   private def queryNorm(vecCol: String) =
     sqrt(aggregate(col(vecCol), lit(0.0d), (acc, x) => acc + x * x))
 
-  /** Exact rerank of an (approx-scored) shortlist: join the float vectors
-    * back for the shortlist rows only, rank by true cosine.
-    */
-  private def rerankExact(shortlist: DataFrame, corpus: DataFrame, k: Int,
-                          idCol: String, vecCol: String): DataFrame = {
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    shortlist
-      .join(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("corpus_vec")),
-        "neighbor_id")
-      .withColumn("cosine", VectorFunctions.cosine("query_vec", "corpus_vec"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("neighbor_id"), round(col("cosine"), 4).as("cosine"),
-        col("rk").cast("int").as("rk"))
-  }
-
-  def pqSearch(index: PqIndex, corpus: DataFrame, queries: DataFrame, k: Int,
-               rerankFactor: Int = 4,
-               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    VectorFunctions.register(queries.sparkSession)
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("query_vec"),
-      pqQueryLut(index.codebooks, index.dim, vecCol).as("lut"),
-      queryNorm(vecCol).as("q_norm"))
-    val shortlistW = Window.partitionBy(col("query_id"))
-      .orderBy(col("approx_cosine").desc, col("neighbor_id").asc)
-    val shortlist = index.encoded
-      .join(broadcast(q), col("neighbor_id") =!= col("query_id"))
-      .withColumn("approx_cosine", adcCosine(pqCodeNorms(index.codebooks)))
-      .withColumn("srk", row_number().over(shortlistW))
-      .filter(col("srk") <= k * math.max(rerankFactor, 1))
-    rerankExact(shortlist, corpus, k, idCol, vecCol)
-  }
-
-  /** One-shot [[pqBuild]] + [[pqSearch]]. */
-  def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-             m: Int = 4, ksub: Int = 16, trainIters: Int = 3, rerankFactor: Int = 4,
-             idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    pqSearch(pqBuild(corpus, m, ksub, trainIters, idCol, vecCol),
-      corpus, queries, k, rerankFactor, idCol, vecCol)
-
   // ---- IVF-PQ: coarse pruning over a compressed scan ----
 
   /** A built IVF-PQ index: coarse centroids partition the corpus into
@@ -1527,22 +1415,22 @@ object Similarity extends org.apache.spark.internal.Logging {
     def m: Int = codebooks.length
   }
 
-  /** Train coarse centroids (distributed Lloyd's) + PQ codebooks (bounded
-    * sample), then assign and encode every corpus vector in ONE scan-local
-    * pass — no join, no shuffle, the same build posture as [[ivfBuild]]
-    * and [[pqBuild]] separately.
+  /** Train coarse centroids and PQ codebooks on ONE bounded sample (one
+    * `limit` job: [[trainingSample]]; the coarse quantizer reads it
+    * sorted by id, the codebooks its first 1024 rows in scan order), then
+    * assign and encode every corpus vector in ONE scan-local pass — no
+    * join, no shuffle, the same build posture as [[ivfBuild]].
+    * `numCentroids = 1` is flat PQ: one list holding the whole corpus.
     */
   def ivfPqBuild(corpus: DataFrame,
                  numCentroids: Int = 16, m: Int = 4, ksub: Int = 16,
                  trainIters: Int = 3,
                  idCol: String = "vec_id", vecCol: String = "embedding"): IvfPqIndex = {
-    VectorFunctions.register(corpus.sparkSession)
-    val cents = trainCentroidsLocal(corpus, numCentroids, trainIters, idCol, vecCol)
-    val sample = corpus.select(col(vecCol)).limit(1024).collect()
-      .map(_.getSeq[Float](0).toArray)
+    val sample = trainingSample(corpus, numCentroids, idCol, vecCol)
     require(sample.nonEmpty, "ivfPqBuild: empty corpus")
-    val dim = sample.head.length
-    val codebooks = pqTrainLocal(sample, m, ksub, trainIters)
+    val cents = coarseCentroids(sample, numCentroids, trainIters)
+    val dim = sample.head._2.length
+    val codebooks = pqCodebooks(sample.take(1024).map(_._2), m, ksub, trainIters)
     val sub = dim / m
     val codes = array((0 until m).map { j =>
       nearestCode(slice(col(vecCol), j * sub + 1, sub), codebooks(j))
@@ -1575,7 +1463,11 @@ object Similarity extends org.apache.spark.internal.Logging {
       .withColumn("approx_cosine", adcCosine(pqCodeNorms(index.codebooks)))
       .withColumn("srk", row_number().over(shortlistW))
       .filter(col("srk") <= k * math.max(rerankFactor, 1))
-    rerankExact(shortlist, corpus, k, idCol, vecCol)
+    // exact rerank: the float vectors join back for the shortlist rows only
+    rankedTopK(shortlist
+      .join(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("corpus_vec")),
+        "neighbor_id")
+      .withColumn("cosine", VectorFunctions.cosine("query_vec", "corpus_vec")), k)
   }
 
   /** One-shot [[ivfPqBuild]] + [[ivfPqSearch]]. */
@@ -1586,6 +1478,24 @@ object Similarity extends org.apache.spark.internal.Logging {
     ivfPqSearch(ivfPqBuild(corpus, numCentroids, m, ksub, trainIters, idCol, vecCol),
       corpus, queries, k, nprobe, rerankFactor, idCol, vecCol)
 
+  /** PQ ANN top-k with asymmetric distance computation (ADC) + exact
+    * rerank, over the whole corpus: the one-list IVF-PQ (one centroid,
+    * one probe). Per query, the dot of the query subvector with every
+    * codebook centroid is precomputed scan-local into an m × ksub lookup
+    * table, so scoring a corpus vector is m table lookups over its codes
+    * — the scan reads m ints/vector instead of dim floats. The
+    * reconstructed cosine ranks a shortlist of `rerankFactor`·k
+    * candidates, which a join back to the original vectors reranks
+    * exactly. The query side must be the small side (PQ's scan is
+    * brute-force over codes) — use more lists for huge query batches.
+    */
+  def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
+             m: Int = 4, ksub: Int = 16, trainIters: Int = 3, rerankFactor: Int = 4,
+             idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    ivfPqTopK(corpus, queries, k, numCentroids = 1, m = m, ksub = ksub,
+      trainIters = trainIters, nprobe = 1, rerankFactor = rerankFactor,
+      idCol = idCol, vecCol = vecCol)
+
   // ---- index persistence: build once, query across sessions ----
   //
   // The inverted lists are written PARTITIONED BY list_id, so a loaded
@@ -1595,13 +1505,25 @@ object Similarity extends org.apache.spark.internal.Logging {
   // difference between "touch nprobe/numCentroids of the bytes" holding on
   // disk, not just in the plan.
 
-  private def centroidsToDf(spark: SparkSession, cents: Seq[(Long, Array[Float])]) = {
+  /** The artifact every saved index shares: `centroids/` and the
+    * inverted lists `assigned/` (written by [[writeLists]]).
+    */
+  private def writeIndex(dir: String, cents: Seq[(Long, Array[Float])],
+                         assigned: DataFrame): Unit = {
+    val spark = assigned.sparkSession
     import spark.implicits._
     cents.map { case (cid, v) => (cid, v.toSeq) }.toDF("list_id", "centroid")
+      .write.mode("overwrite").parquet(s"$dir/centroids")
+    writeLists(assigned, s"$dir/assigned", "overwrite")
   }
 
-  private def centroidsFromDf(df: DataFrame): Seq[(Long, Array[Float])] =
-    df.collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).sortBy(_._1).toSeq
+  /** (centroids by id, `assigned`) of a saved index ([[writeIndex]]). */
+  private def readIndex(spark: SparkSession,
+                        dir: String): (Seq[(Long, Array[Float])], DataFrame) = {
+    val cents = spark.read.parquet(s"$dir/centroids").collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).sortBy(_._1).toSeq
+    (cents, readLists(spark, s"$dir/assigned"))
+  }
 
   private def codebooksToDf(spark: SparkSession, cbs: Array[Array[Array[Float]]]) = {
     import spark.implicits._
@@ -1615,17 +1537,22 @@ object Similarity extends org.apache.spark.internal.Logging {
       .groupBy(_._1).toSeq.sortBy(_._1)
       .map(_._2.sortBy(_._2).map(_._3).toArray).toArray
 
-  /** Align a DataFrame's task partitioning with a downstream
-    * `partitionBy(partCol)` write: without it, EVERY writer task emits a
-    * file per partition value it holds — O(values × writers) tiny files
-    * (measured: 113,576 files for a 1000-list `assigned/` at the 1M-doc
-    * tier, and the first rerank measurement paid ~200 s just opening
-    * them). One hash shuffle on the partition column lands each value
-    * wholly in one task ⇒ exactly one file per value. Content is
+  /** Writes a list-partitioned table (`assigned/`, `packed/`) under
+    * `path`, one directory per list_id. A hash shuffle on list_id first
+    * lands each list wholly in one task ⇒ exactly one file per list;
+    * without it EVERY writer task emits a file per list it holds —
+    * O(lists × writers) tiny files (measured: 113,576 files for a
+    * 1000-list `assigned/` at the 1M-doc tier, and the first rerank
+    * measurement paid ~200 s just opening them). Content is
     * write-order-invariant (round-trip + append specs pin it).
     */
-  private def alignedForWrite(df: DataFrame, partCol: String): DataFrame =
-    df.repartition(col(partCol))
+  private def writeLists(df: DataFrame, path: String, mode: String): Unit =
+    df.repartition(col("list_id")).write.mode(mode).partitionBy("list_id").parquet(path)
+
+  /** A [[writeLists]] table read back: partition discovery types
+    * `list_id` as int, so it is cast back to long. */
+  private def readLists(spark: SparkSession, path: String): DataFrame =
+    spark.read.parquet(path).withColumn("list_id", col("list_id").cast("long"))
 
   /** Marker file stamping a PASSED corpus-side surrogate audit into a
     * saved generic-id index: [[ivfLoad]] pre-seeds the in-memory memo
@@ -1641,29 +1568,18 @@ object Similarity extends org.apache.spark.internal.Logging {
   }
 
   def ivfSave(index: IvfIndex, dir: String): Unit = {
-    val spark = index.assigned.sparkSession
-    centroidsToDf(spark, index.centroids)
-      .write.mode("overwrite").parquet(s"$dir/centroids")
-    alignedForWrite(index.assigned, "list_id").write.mode("overwrite")
-      .partitionBy("list_id").parquet(s"$dir/assigned")
+    writeIndex(dir, index.centroids, index.assigned)
     // Generic-id builds: run the corpus surrogate audit HERE if it has
     // not already passed (save time is the natural once-per-lifetime
     // point — the corpus was just rewritten anyway) and stamp the result,
     // so every future load+search skips the full-corpus agg.
     if (index.assigned.columns.contains("orig_id")) {
       if (!index.genericAuditPassed.get()) {
-        val audit = index.assigned.agg(
-          countDistinct(col("neighbor_id")).as("s"),
-          countDistinct(col("orig_id")).as("o")).head()
-        require(audit.getLong(0) == audit.getLong(1),
-          s"ivfSave: xxhash64 surrogate collision among corpus ids " +
-            s"(${audit.getLong(1)} distinct ids -> ${audit.getLong(0)} " +
-            "surrogates); re-key the corpus with explicit i64 ids")
+        val n = auditSurrogates(index.assigned, "neighbor_id", "orig_id", "ivfSave", "corpus")
         index.genericAuditPassed.set(true)
-        logInfo(s"ivfSave: corpus surrogate audit PASSED " +
-          s"(${audit.getLong(1)} distinct ids); stamping artifact")
+        logInfo(s"ivfSave: corpus surrogate audit PASSED ($n distinct ids); stamping artifact")
       }
-      val (fs, marker) = fsFor(spark, s"$dir/$GenericAuditMarker")
+      val (fs, marker) = fsFor(index.assigned.sparkSession, s"$dir/$GenericAuditMarker")
       fs.create(marker, true).close()
     }
   }
@@ -1731,23 +1647,16 @@ object Similarity extends org.apache.spark.internal.Logging {
   def ivfSavePacked(index: IvfIndex, dir: String,
                     blockRows: Int = DefaultBlockRows): Unit = {
     ivfSave(index, dir)
-    val aligned = alignedForWrite(packLists(index.assigned, blockRows,
-      index.centroids.length, indexDimOf(index).toLong * 4L + 24L), "list_id")
-    aligned.write.mode("overwrite").partitionBy("list_id").parquet(s"$dir/packed")
+    writeLists(packLists(index.assigned, blockRows, index.centroids.length,
+      indexDimOf(index).toLong * 4L + 24L), s"$dir/packed", "overwrite")
   }
 
   def ivfLoad(spark: SparkSession, dir: String): IvfIndex = {
-    val assigned = spark.read.parquet(s"$dir/assigned")
-      .withColumn("list_id", col("list_id").cast("long"))
-    val packedPath = new org.apache.hadoop.fs.Path(s"$dir/packed")
-    val fs = packedPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (cents, assigned) = readIndex(spark, dir)
+    val (fs, packedPath) = fsFor(spark, s"$dir/packed")
     val packed =
-      if (fs.exists(packedPath))
-        Some(spark.read.parquet(s"$dir/packed")
-          .withColumn("list_id", col("list_id").cast("long")))
-      else None
-    val idx = IvfIndex(centroidsFromDf(spark.read.parquet(s"$dir/centroids")),
-      assigned, packed)
+      if (fs.exists(packedPath)) Some(readLists(spark, s"$dir/packed")) else None
+    val idx = IvfIndex(cents, assigned, packed)
     // pre-seed the generic-id audit memo from the artifact stamp: a
     // loaded index whose save-time audit passed never re-pays the
     // full-corpus scan (ivfAppendToSaved deletes the stamp, re-arming it)
@@ -1792,15 +1701,13 @@ object Similarity extends org.apache.spark.internal.Logging {
   def ivfAppendToSaved(spark: SparkSession, dir: String, batch: DataFrame,
                        idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
     VectorFunctions.register(spark)
-    val cents = centroidsFromDf(spark.read.parquet(s"$dir/centroids"))
+    val (cents, saved) = readIndex(spark, dir)
     val assignedBatch = assignCols(batch, cents, idCol, vecCol)
-    val savedGeneric = spark.read.parquet(s"$dir/assigned")
-      .columns.contains("orig_id")
+    val savedGeneric = saved.columns.contains("orig_id")
     require(savedGeneric == assignedBatch.columns.contains("orig_id"),
       "ivfAppendToSaved: batch id type (long vs generic-surrogate) must match " +
         "the saved index — a mixed corpus cannot decode consistently")
-    alignedForWrite(assignedBatch, "list_id").write.mode("append")
-      .partitionBy("list_id").parquet(s"$dir/assigned")
+    writeLists(assignedBatch, s"$dir/assigned", "append")
     // appended ids are UNAUDITED — drop the save-time audit stamp so the
     // next generic search of the loaded index re-runs the collision audit
     // over the widened corpus (a fresh id could collide with a standing one)
@@ -1818,15 +1725,10 @@ object Similarity extends org.apache.spark.internal.Logging {
     // metadata, not identity, and search results are chunking-invariant.
     // Appended blobs may run under-full until a re-save compacts them —
     // the probe reads proportionally more (small) rows, never wrong rows.
-    val packedPath = new org.apache.hadoop.fs.Path(s"$dir/packed")
-    val fs = packedPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(packedPath)) {
-      alignedForWrite(
-        packLists(assignedBatch, DefaultBlockRows, cents.length,
-          cents.head._2.length.toLong * 4L + 24L), "list_id")
-        .write.mode("append").partitionBy("list_id")
-        .parquet(s"$dir/packed")
-    }
+    val (fs, packedPath) = fsFor(spark, s"$dir/packed")
+    if (fs.exists(packedPath))
+      writeLists(packLists(assignedBatch, DefaultBlockRows, cents.length,
+        cents.head._2.length.toLong * 4L + 24L), s"$dir/packed", "append")
   }
 
   /** Inverted-list occupancy after builds/appends — |lists| rows (bounded
@@ -1848,21 +1750,15 @@ object Similarity extends org.apache.spark.internal.Logging {
   }
 
   def ivfPqSave(index: IvfPqIndex, dir: String): Unit = {
-    val spark = index.assigned.sparkSession
-    centroidsToDf(spark, index.centroids)
-      .write.mode("overwrite").parquet(s"$dir/centroids")
-    codebooksToDf(spark, index.codebooks)
+    writeIndex(dir, index.centroids, index.assigned)
+    codebooksToDf(index.assigned.sparkSession, index.codebooks)
       .write.mode("overwrite").parquet(s"$dir/codebooks")
-    alignedForWrite(index.assigned, "list_id").write.mode("overwrite")
-      .partitionBy("list_id").parquet(s"$dir/assigned")
   }
 
   def ivfPqLoad(spark: SparkSession, dir: String): IvfPqIndex = {
     val codebooks = codebooksFromDf(spark.read.parquet(s"$dir/codebooks"))
-    val assigned = spark.read.parquet(s"$dir/assigned")
-      .withColumn("list_id", col("list_id").cast("long"))
-    IvfPqIndex(centroidsFromDf(spark.read.parquet(s"$dir/centroids")),
-      codebooks, assigned, codebooks.map(_.head.length).sum)
+    val (cents, assigned) = readIndex(spark, dir)
+    IvfPqIndex(cents, codebooks, assigned, codebooks.map(_.head.length).sum)
   }
 
   /** IVF-flat ANN: partition the corpus into inverted lists by nearest

@@ -64,6 +64,22 @@ class PlanShapeSpec extends SparkSpec {
         "the standing corpus must not be rescanned through a shuffle")
   }
 
+  test("IVF-PQ build collects ONE training sample: one job for centroids and codebooks") {
+    val vecs = spark.read.parquet(s"$sf0001/embeddings.parquet")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      operators.Similarity.ivfPqBuild(vecs, numCentroids = 4, m = 8, ksub = 16)
+      org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get() == 1, s"${jobs.get()} jobs: the coarse and PQ trainers must share one sample")
+  }
+
   test("column profile is a single scan shared by nulls and multi-distinct") {
     val prof = Queries.columnProfile(spark, sf0001)
     assert(scanColumns(prof) == Set("lang", "source", "n_chars"))

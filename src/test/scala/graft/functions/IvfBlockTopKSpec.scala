@@ -426,16 +426,24 @@ class IvfBlockTopKSpec extends SparkSpec {
     // (the 1M-doc OOM: ~73 GB stream at a fixed 128-way fan-out spilled
     // ~570 MB buffers per task and OOM'd a 64 GiB heap mid-serialize)
     val target = 64L << 20
+    val manyKeys = 1L << 20
     // small stream: the fan-out floor holds (bench plans unchanged)
-    assert(Similarity.crossPackWidth(BigInt(1) << 30, target, 128) == 128)
+    assert(Similarity.crossPackWidth(BigInt(1) << 30, target, 128, manyKeys) == 128)
     // the sf20 shape: ~73 GB / 64 MB ⇒ ~1169 partitions (≤64 MB each)
-    val w = Similarity.crossPackWidth(BigInt(73L << 30), target, 128)
+    val w = Similarity.crossPackWidth(BigInt(73L << 30), target, 128, manyKeys)
     assert(w > 1000 && w < 1300, s"expected ~1169, got $w")
     assert(BigInt(73L << 30) / w <= target, "per-task bytes must be bounded")
-    // a sentinel/nonsense estimate cannot explode the width
-    assert(Similarity.crossPackWidth(BigInt(Long.MaxValue) * 1000, target, 128) == 65536)
+    // a sentinel/nonsense estimate cannot explode the width: it stops at
+    // the (list, salt) key space (6 lists × 1024 salts, the stats-sentinel
+    // case above), and at 65536 however many keys there are
+    assert(Similarity.crossPackWidth(BigInt(Long.MaxValue) * 1000, target, 128, 6L * 1024) ==
+      6144)
+    assert(Similarity.crossPackWidth(BigInt(Long.MaxValue) * 1000, target, 128, manyKeys) ==
+      65536)
+    // a key space below the fan-out keeps the fan-out
+    assert(Similarity.crossPackWidth(BigInt(73L << 30), target, 128, 16) == 128)
     // degenerate target cannot divide by zero
-    assert(Similarity.crossPackWidth(BigInt(1) << 30, 0L, 16) >= 16)
+    assert(Similarity.crossPackWidth(BigInt(1) << 30, 0L, 16, manyKeys) >= 16)
   }
 
   test("every ivfSearch regime returns the flat join's rows and logs the gates it took") {

@@ -529,18 +529,19 @@ class OperatorsSpec extends SparkSpec {
     val exact = Similarity.bruteForceTopK(plantedCorpus, queries, k = 5)
       .select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val index = Similarity.pqBuild(plantedCorpus, m = 8, ksub = 16)
+    // flat PQ is the one-list IVF-PQ
+    val index = Similarity.ivfPqBuild(plantedCorpus, numCentroids = 1, m = 8, ksub = 16)
     // compressed representation: m codes per vector, each < ksub
-    val codeRow = index.encoded.select("codes").first().getSeq[Int](0)
+    val codeRow = index.assigned.select("codes").first().getSeq[Int](0)
     assert(codeRow.length == 8 && codeRow.forall(c => c >= 0 && c < 16))
-    val pq = Similarity.pqSearch(index, plantedCorpus, queries, k = 5)
+    val pq = Similarity.ivfPqSearch(index, plantedCorpus, queries, k = 5, nprobe = 1)
       .select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = pq.intersect(exact).size.toDouble / exact.size
     assert(recall >= 0.9, s"PQ recall $recall")
     // without rerank the compressed scan alone must still be informative
-    val approxOnly = Similarity.pqSearch(index, plantedCorpus, queries, k = 5,
-        rerankFactor = 1)
+    val approxOnly = Similarity.ivfPqSearch(index, plantedCorpus, queries, k = 5,
+        nprobe = 1, rerankFactor = 1)
       .select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val approxRecall = approxOnly.intersect(exact).size.toDouble / exact.size
@@ -573,8 +574,7 @@ class OperatorsSpec extends SparkSpec {
     // fits inside both build paths' 1024-row training sample)
     val allProbe = Similarity.ivfPqSearch(index, clustered, queries, k = 5, nprobe = 8)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
-    val plainPq = Similarity.pqSearch(
-        Similarity.pqBuild(clustered, m = 8, ksub = 16), clustered, queries, k = 5)
+    val plainPq = Similarity.pqTopK(clustered, queries, k = 5, m = 8, ksub = 16)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
     assert(allProbe == plainPq, "nprobe=all must reduce IVF-PQ to plain PQ")
   }

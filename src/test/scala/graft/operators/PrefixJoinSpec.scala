@@ -227,8 +227,7 @@ class PrefixJoinSpec extends SparkSpec {
 
   test("q204's IVF geometry is ivfAutoGeometry: same lists and probes as its former inline policy") {
     // the reference: annTopkTfidf's inline geometry before it called
-    // Similarity.ivfAutoGeometry, verbatim (its private confInt is
-    // GraftConf.int)
+    // Similarity.ivfAutoGeometry, verbatim
     def inline(nVecs: Long): (Int, Int) = {
       val nLists = math.max(4, math.round(math.sqrt(nVecs.toDouble)).toInt)
       val nprobeNum = graft.GraftConf.int(spark, "spark.graft.ann.nprobeNum",

@@ -45,6 +45,10 @@ class QualityRulesSpec extends SparkSpec {
     // 2-scan relational shape the native single-pass expression replaced
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), col("text"))
+      // two 2-character non-BMP tokens and a 3-character one: token
+      // lengths count code points, as length() does (7 / 3, not 11 / 3)
+      .union(Seq((-1L, "\uD835\uDC9C\uD835\uDCD1 \uD835\uDC9C\uD835\uDCD1 tok"))
+        .toDF("doc_id", "text"))
     val base = docs
       .select(col("doc_id"), graft.functions.TextFunctions.tokens(col("text")).as("__t"))
       .withColumn("n_tokens", size(col("__t")))
@@ -65,10 +69,11 @@ class QualityRulesSpec extends SparkSpec {
           .as("top_bigram_frac"))
     val native = QualityRules.repetitionReport(docs, "doc_id", "text")
     assert(native.except(reference).isEmpty && reference.except(native).isEmpty)
+    assert(native.filter(col("doc_id") === -1L).select("mean_token_len").as[Double].head() ==
+      2.3333)
 
-    // tokenizer edge inputs, against the replaced String walk: the
-    // relational `length()` counts code points, while sum_token_len counts
-    // UTF-16 units (a non-BMP character is 2)
+    // tokenizer edge inputs, against the replaced String walk (token
+    // lengths in code points, as the relational `length()` counts)
     val edges = graft.functions.TokenEdges.texts
     val got = edges.toDF("text").select(expr("token_profile(text)").as("p"))
       .collect().map { r =>
@@ -77,7 +82,8 @@ class QualityRulesSpec extends SparkSpec {
     assert(got == edges.map(stringWalkProfile))
   }
 
-  /** The String walk token_profile ran before the byte cursor, verbatim:
+  /** The String walk token_profile ran before the byte cursor, with
+    * token lengths counted in code points rather than UTF-16 units:
     * (n_tokens, distinct_tokens, sum_token_len, top_bigram_count). */
   private def stringWalkProfile(text: String): (Int, Int, Long, Int) = {
     def isJavaSpace(c: Char): Boolean =
@@ -96,7 +102,7 @@ class QualityRulesSpec extends SparkSpec {
         if (i > start) {
           val tok = s.substring(start, i)
           n += 1
-          sumLen += tok.length
+          sumLen += tok.codePointCount(0, tok.length)
           distinct.add(tok)
           if (prev != null) {
             val key = prev + " " + tok
