@@ -5,6 +5,7 @@ import graft.functions.NativeTextExpressions
 import graft.functions.TextFunctions._
 import graft.multimodal.Multimodal
 import graft.operators.{AsOfJoin, Bpe, Dedup, Similarity}
+import graft.streaming.EventStreams
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -611,20 +612,17 @@ object Queries {
   }
 
   // ---- streaming batch mirrors ----
+  // The streaming transforms themselves, run over the batch table: the
+  // optimizer drops their watermark from a batch plan.
 
   def tumblingHourly(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "events")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("total_value"))
-      .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
-        col("event_type"), col("n_events"), col("total_value"))
+    EventStreams.hourlyTypeCounts(t(spark, dir, "events"))
+      .withColumn("window_start", date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss"))
       .orderBy(col("window_start"), col("event_type"))
 
   def sessionWindows(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "events")
-      .groupBy(session_window(col("ts"), "5 minutes"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(date_format(col("session_window.start"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
+    EventStreams.userSessions(t(spark, dir, "events"))
+      .select(date_format(col("session_start"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
         col("user_id"), col("n_events"))
       .orderBy(col("user_id"), col("session_start"))
 
@@ -2214,11 +2212,8 @@ object Queries {
     * via one combinable aggregation, one join back — two shuffles total.
     */
   def noveltyScore(spark: SparkSession, dir: String): DataFrame = {
-    NativeTextExpressions.register(spark)
-    val grams = t(spark, dir, "documents")
-      .select(col("doc_id"), expr("word_ngram_hashes(text, 3)").as("__gs"))
-      .select(col("doc_id"), explode_outer(col("__gs")).as("gh"))
-      .filter(col("gh").isNotNull)
+    val grams = Dedup.gramPostings(t(spark, dir, "documents"), "doc_id", "text", 3)
+      .select(col("id").as("doc_id"), col("gh"))
     val df = grams.groupBy(col("gh")).agg(count(lit(1)).as("df"))
     grams.join(df, "gh")
       .groupBy(col("doc_id"))

@@ -28,11 +28,20 @@ private[graft] object CandidatePairs extends org.apache.spark.internal.Logging {
     * unlike the variable-width verify tables, because band rows are
     * fixed-width (id plus one or two key columns): 2M rows are tens of MB.
     * Decide it once per call and feed the one decision to both
-    * [[keyPairs]] and [[distinctPairs]].
+    * [[keyPairs]] and [[distinctPairs]] — [[bandPairs]] does exactly that.
     */
   def bandGate(spark: SparkSession, op: String, rows: => Long): Boolean =
     GraftConf.gate(spark, op, ("broadcast", "shuffle"),
       "spark.graft.bandJoin.broadcastRows", 2000000L, "count")(rows)
+
+  /** The band step of the LSH operators: the distinct `(id_a, id_b)` pairs
+    * sharing a `keys` bucket of the band table `t`, with the band join's
+    * regime decided once by [[bandGate]] (`op`, over `rows` band rows).
+    */
+  def bandPairs(t: DataFrame, keys: Seq[String], op: String, rows: => Long): DataFrame = {
+    val fits = bandGate(t.sparkSession, op, rows)
+    distinctPairs(keyPairs(t, keys, fits), pinned = !fits)
+  }
 
   /** `(id_a, id_b)` rows, `id_a < id_b`, one per shared key of `t`
     * (`id` plus the `keys` columns) — NOT deduplicated. `on` is an extra

@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.functions.NativeTextExpressions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -22,17 +21,14 @@ import org.apache.spark.sql.functions._
   */
 object Decontaminate {
 
-  /** Distinct (id, gram-hash) pairs for a document table — the native
-    * single-pass expression (one JIT'd loop per doc; gram strings never
-    * leave the eval), value-identical to
+  /** Distinct (id, gram-hash) pairs for a document table: the
+    * [[Dedup.gramPostings]] of the native single-pass expression (gram
+    * strings never leave the eval), value-identical to
     * `xxhash64(explode(TextFunctions.wordNgrams(text, n)))` and
     * parity-tested against it in NativeTextExpressionsSpec.
     */
-  private def gramKeys(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
-    NativeTextExpressions.register(docs.sparkSession)
-    docs.select(col(idCol).as("__id"),
-      explode(expr(s"word_ngram_hashes($textCol, $n)")).as("__gh"))
-  }
+  private def gramKeys(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
+    Dedup.gramPostings(docs, idCol, textCol, n).select(col("id").as("__id"), col("gh").as("__gh"))
 
   /** Ids of corpus documents sharing at least one word n-gram with the
     * benchmark corpus, with the collision count per document.

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.functions.NativeTextExpressions
 import graft.functions.TextFunctions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
@@ -78,20 +78,29 @@ object Dedup extends org.apache.spark.internal.Logging {
     } finally cached.unpersist(blocking = false)
   }
 
-  /** Exact dedup, canonical-representative form: keep min(id) per identical
-    * `textCol`. Grouping by a 128-bit content hash (two independently
-    * seeded 64-bit lanes) keeps the shuffle key fixed-width — at 100 TB the
-    * shuffle moves 16-byte hashes + ids, not documents — while staying
+  /** The 128-bit content key of `c`: two independently seeded 64-bit
+    * xxhash64 lanes. Keying on it keeps a shuffle or a state store
+    * fixed-width (16 bytes per document, never the document) while staying
     * collision-safe at tens of billions of documents, where a single
-    * 64-bit key would start birthday-colliding (~2³² docs).
+    * 64-bit key would start birthday-colliding (~2³² docs). Every exact
+    * content match derives it here: [[exactCanonical]], both sides of
+    * [[suppressExact]] and the streaming
+    * [[graft.streaming.EventStreams.dedupedByContent]].
     */
-  def exactCanonical(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+  private[graft] def contentKey(c: Column): (Column, Column) =
+    (xxhash64(c), xxhash64(lit("g2#"), c))
+
+  /** Exact dedup, canonical-representative form: keep min(id) per identical
+    * `textCol`, grouped by the 128-bit [[contentKey]] — at 100 TB the
+    * shuffle moves 16-byte hashes + ids, not documents.
+    */
+  def exactCanonical(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val (h1, h2) = contentKey(col(textCol))
     docs
-      .withColumn("__h1", xxhash64(col(textCol)))
-      .withColumn("__h2", xxhash64(lit("g2#"), col(textCol)))
-      .groupBy(col("__h1"), col("__h2"))
+      .groupBy(h1.as("__h1"), h2.as("__h2"))
       .agg(min(col(idCol)).as(idCol), count(lit(1)).as("dup_cnt"))
       .drop("__h1", "__h2")
+  }
 
   /** Exact suppression against a reference corpus: drop rows of `df`
     * whose content appears verbatim in `reference` — the exact sibling of
@@ -103,13 +112,10 @@ object Dedup extends org.apache.spark.internal.Logging {
     */
   def suppressExact(df: DataFrame, reference: DataFrame,
                     textCol: String, refTextCol: String): DataFrame = {
-    val refKeys = reference.select(
-      xxhash64(col(refTextCol)).as("__r1"),
-      xxhash64(lit("g2#"), col(refTextCol)).as("__r2")).distinct()
-    df.join(refKeys,
-        xxhash64(col(textCol)) === col("__r1") &&
-          xxhash64(lit("g2#"), col(textCol)) === col("__r2"),
-        "left_anti")
+    val (r1, r2) = contentKey(col(refTextCol))
+    val (k1, k2) = contentKey(col(textCol))
+    df.join(reference.select(r1.as("__r1"), r2.as("__r2")).distinct(),
+      k1 === col("__r1") && k2 === col("__r2"), "left_anti")
   }
 
   /** Bloom-filter suppression against a reference corpus — the
@@ -219,10 +225,8 @@ object Dedup extends org.apache.spark.internal.Logging {
       // verify-broadcast → grid REGIME boundary plus the grid's
       // documented 2P·bytes replication, not this dedup (PLANS.md r17).
       val spark = docs.sparkSession
-      val bandFits = CandidatePairs.bandGate(spark, "minhashCandidatePairs band", nDocs * bands)
-      val candidates = CandidatePairs.distinctPairs(
-        CandidatePairs.keyPairs(banded, Seq("band", "band_hash"), bandFits),
-        pinned = !bandFits)
+      val candidates = CandidatePairs.bandPairs(banded, Seq("band", "band_hash"),
+        "minhashCandidatePairs band", nDocs * bands)
 
       // verify: fetch each side's shingle set once; merge-join Jaccard over
       // the sorted hash arrays (O(|a|+|b|) per pair). While the shingle
@@ -322,6 +326,32 @@ object Dedup extends org.apache.spark.internal.Logging {
     attached.select(col("id_a"), col("id_b"),
       expr("jaccard_sorted(sh_a, sh_b)").as("jaccard"))
 
+  /** Fragment count of the grid verify: smallest P whose per-cell array
+    * volume (2·corpusBytes/P) fits the cell budget, floored so P² covers
+    * the cores. Shared by [[gridJaccardVerify]] and the [[shuffleVerify]]
+    * cost model (which compares 2P against the estimated pair-degree).
+    */
+  private[operators] def gridFragmentsUncapped(spark: SparkSession, setBytes: Long): Long = {
+    val cellBytes = graft.GraftConf.gridVerifyCellBytes(spark)
+    val cores = spark.sparkContext.defaultParallelism
+    math.max(
+      math.max(2L, (2L * setBytes + cellBytes - 1) / cellBytes),
+      math.ceil(math.sqrt(cores.toDouble)).toLong)
+  }
+
+  /** Capped fragment count: P grows linearly with corpus array bytes, so
+    * an uncapped grid at mega-corpus scale would request P² cells — a
+    * ~1 TB array corpus at the 128 MiB default cell is P≈16k ⇒ 270 M
+    * shuffle partitions, and `p * p` as Int overflows NEGATIVE past
+    * P = 46341. [[shuffleVerify]] never routes to the grid when the
+    * uncapped P exceeds `spark.graft.gridVerify.maxFragments` (it falls
+    * back to the join-form verify with a log); the cap here is the
+    * belt-and-braces for direct [[gridJaccardVerify]] callers.
+    */
+  private[operators] def gridFragments(spark: SparkSession, setBytes: Long): Int =
+    math.min(gridFragmentsUncapped(spark, setBytes),
+      graft.GraftConf.gridVerifyMaxFragments(spark).toLong).toInt
+
   /** Verify candidate pairs against their full sorted shingle-hash sets
     * WITHOUT attaching an array per pair — the fragment-and-replicate
     * (grid) co-group, the above-broadcast-gate regime of the minhash
@@ -353,32 +383,6 @@ object Dedup extends org.apache.spark.internal.Logging {
     * per-task memory is bounded by the cell budget regardless of
     * corpus size.
     */
-  /** Fragment count of the grid verify: smallest P whose per-cell array
-    * volume (2·corpusBytes/P) fits the cell budget, floored so P² covers
-    * the cores. Shared by [[gridJaccardVerify]] and the [[shuffleVerify]]
-    * cost model (which compares 2P against the estimated pair-degree).
-    */
-  private[operators] def gridFragmentsUncapped(spark: SparkSession, setBytes: Long): Long = {
-    val cellBytes = graft.GraftConf.gridVerifyCellBytes(spark)
-    val cores = spark.sparkContext.defaultParallelism
-    math.max(
-      math.max(2L, (2L * setBytes + cellBytes - 1) / cellBytes),
-      math.ceil(math.sqrt(cores.toDouble)).toLong)
-  }
-
-  /** Capped fragment count: P grows linearly with corpus array bytes, so
-    * an uncapped grid at mega-corpus scale would request P² cells — a
-    * ~1 TB array corpus at the 128 MiB default cell is P≈16k ⇒ 270 M
-    * shuffle partitions, and `p * p` as Int overflows NEGATIVE past
-    * P = 46341. [[shuffleVerify]] never routes to the grid when the
-    * uncapped P exceeds `spark.graft.gridVerify.maxFragments` (it falls
-    * back to the join-form verify with a log); the cap here is the
-    * belt-and-braces for direct [[gridJaccardVerify]] callers.
-    */
-  private[operators] def gridFragments(spark: SparkSession, setBytes: Long): Int =
-    math.min(gridFragmentsUncapped(spark, setBytes),
-      graft.GraftConf.gridVerifyMaxFragments(spark).toLong).toInt
-
   private[operators] def gridJaccardVerify(candidates: DataFrame,
                                            sets: DataFrame,
                                            setBytes: Long): DataFrame = {
@@ -390,7 +394,7 @@ object Dedup extends org.apache.spark.internal.Logging {
       s"~${2L * setBytes / p} array B/cell vs budget $cellBytes; " +
       s"array bytes exchanged ~${2L * p * setBytes})")
     val pbs = lit((0 until p).toArray)
-    def frag(c: org.apache.spark.sql.Column) = pmod(xxhash64(c), lit(p.toLong)).cast("int")
+    def frag(c: Column) = pmod(xxhash64(c), lit(p.toLong)).cast("int")
     // (pa, pb, kind, id_a, id_b, sh): kind 1 = row-fragment arrays,
     // 2 = column-fragment arrays, 3 = candidates. Unused ids carry null —
     // kind discriminates, so the sentinel is never read ambiguously. Ids
@@ -481,33 +485,48 @@ object Dedup extends org.apache.spark.internal.Logging {
     minhashCandidatePairs(docs, idCol, textCol, numHashes = 16,
         bands = bandsFor(threshold), minJaccard = threshold)
 
-  /** SimHash near-dup pairs: 64-bit signature, banded into 4×16-bit chunks
-    * (pigeonhole: hamming ≤ 3 ⟹ at least one identical chunk), bucket
-    * self-join per chunk on fixed-width keys, distinct pairs, then verify
-    * with true hamming distance. Same bucket-not-all-pairs scaling argument
-    * as MinHash.
+  /** The SimHash pigeonhole: a 64-bit signature is [[SimhashChunkCount]]
+    * 16-bit chunks, so two signatures within Hamming distance 3 differ in
+    * at most 3 chunks and share at least one identical chunk. Bucketing on
+    * (chunk, chunk value) therefore finds every pair with maxHamming ≤ 3;
+    * a larger bound still verifies correctly but may miss pairs whose
+    * differing bits spread across all 4 chunks.
+    */
+  private val SimhashChunkCount = 4
+
+  /** The `c`-th 16-bit chunk of the SimHash `sh` (see [[SimhashChunkCount]]). */
+  private[graft] def simhashChunk(sh: Column, c: Int): Column =
+    shiftrightunsigned(sh, c * 16).bitwiseAND(lit(0xFFFFL))
+
+  /** The posexploded `(chunk, chunk_val)` rows of all chunks of `sh`. */
+  private[graft] def simhashChunks(sh: Column): Column =
+    posexplode(array((0 until SimhashChunkCount).map(simhashChunk(sh, _)): _*))
+      .as(Seq("chunk", "chunk_val"))
+
+  /** SimHash near-dup pairs: 64-bit signature, banded into its pigeonhole
+    * chunks ([[SimhashChunkCount]]), bucket self-join per chunk on fixed-width
+    * keys, distinct pairs, then verify with true hamming distance. Same
+    * bucket-not-all-pairs scaling argument as MinHash.
     */
   def simhashNearDups(docs: DataFrame, idCol: String, textCol: String,
                       maxHamming: Int = 3): DataFrame = {
     // cached for the build, released on return — same reuse reason as the
     // MinHash signature table
-    NativeTextExpressions.register(docs.sparkSession)
+    val spark = docs.sparkSession
+    NativeTextExpressions.register(spark)
     val rawSig = docs.select(col(idCol).as("id"),
       expr(s"simhash64_native($textCol)").as("sh"))
     withCachedSig(rawSig, "simhash-pairs") { (sig, nDocs) =>
-      val chunked = sig.select(col("id"),
-        posexplode(array((0 until 4).map { c =>
-          shiftrightunsigned(col("sh"), c * 16).bitwiseAND(lit(0xFFFFL))
-        }: _*)).as(Seq("chunk", "chunk_val")))
-      val bandFits = CandidatePairs.bandGate(docs.sparkSession, "simhashNearDups band", nDocs * 4)
-      val candidates = CandidatePairs.distinctPairs(
-        CandidatePairs.keyPairs(chunked, Seq("chunk", "chunk_val"), bandFits),
-        pinned = !bandFits)
-      // the signature table is 16 bytes/doc — broadcast the verify at
-      // any corpus size a single executor can hold; above that, hash
-      // joins with the signature table as build side
+      val candidates = CandidatePairs.bandPairs(sig.select(col("id"), simhashChunks(col("sh"))),
+        Seq("chunk", "chunk_val"), "simhashNearDups band", nDocs * SimhashChunkCount)
+      // the signature table is 16 bytes/doc: broadcast the verify while it
+      // fits the broadcast budget; above that, hash joins with the
+      // signature table as build side
+      val verifyFits = graft.GraftConf.gate(spark, "simhashNearDups verify",
+        ("broadcast", "shuffle"), "spark.graft.broadcastBytes",
+        graft.GraftConf.broadcastBytes(spark), "count")(nDocs * 16)
       CandidatePairs.attachSides(candidates, sig, Seq("sh"),
-          Some(if (nDocs <= 10000000L) "broadcast" else "shuffle_hash"))
+          Some(if (verifyFits) "broadcast" else "shuffle_hash"))
         .select(col("id_a"), col("id_b"),
           hammingDistance(col("sh_a"), col("sh_b")).as("hamming"))
         .filter(col("hamming") <= maxHamming)
@@ -525,10 +544,8 @@ object Dedup extends org.apache.spark.internal.Logging {
     * is the "filter the incoming feed against the existing corpus" shape:
     * the reference chunk table is built ONCE (staged to parquet via
     * [[stage]]) and reused by all four anti-joins and every micro-batch.
-    *
-    * Recall guarantee holds for `maxHamming` ≤ 3 (4 chunks pigeonhole 3 bit
-    * errors); larger bounds still verify correctly but may miss pairs whose
-    * differing bits spread across all 4 chunks.
+    * The chunks are [[simhashChunks]], so the recall guarantee is the
+    * pigeonhole's: exact for `maxHamming` ≤ 3.
     */
   def suppressNearDups(df: DataFrame, reference: DataFrame,
                        textCol: String, refTextCol: String,
@@ -541,16 +558,13 @@ object Dedup extends org.apache.spark.internal.Logging {
     // stream-static form: every micro-batch reuses the same parquet.
     val refChunks = stage(reference
       .select(expr(s"simhash64_native($refTextCol)").as("__ref_sh"))
-      .select(col("__ref_sh"),
-        posexplode(array((0 until 4).map { c =>
-          shiftrightunsigned(col("__ref_sh"), c * 16).bitwiseAND(lit(0xFFFFL))
-        }: _*)).as(Seq("__chunk", "__chunk_val"))), "suppress-ref")
+      .select(col("__ref_sh"), simhashChunks(col("__ref_sh"))), "suppress-ref")
     val withSh = df.withColumn("__sh", expr(s"simhash64_native($textCol)"))
-    val survived = (0 until 4).foldLeft(withSh) { (acc, c) =>
-      val refC = refChunks.filter(col("__chunk") === c)
-        .select(col("__chunk_val").as("__ref_cv"), col("__ref_sh"))
+    val survived = (0 until SimhashChunkCount).foldLeft(withSh) { (acc, c) =>
+      val refC = refChunks.filter(col("chunk") === c)
+        .select(col("chunk_val").as("__ref_cv"), col("__ref_sh"))
       acc.join(refC,
-        shiftrightunsigned(acc("__sh"), c * 16).bitwiseAND(lit(0xFFFFL)) === col("__ref_cv") &&
+        simhashChunk(acc("__sh"), c) === col("__ref_cv") &&
           hammingDistance(acc("__sh"), col("__ref_sh")) <= maxHamming,
         "left_anti")
     }
@@ -711,6 +725,99 @@ object Dedup extends org.apache.spark.internal.Logging {
     out
   }
 
+  /** (id, sz, gh): one row per distinct word-`n`-gram hash of each
+    * document, from the native `word_ngram_hashes`; `sz` is the document's
+    * distinct gram count (the set is distinct, so size(set) = |A|, constant
+    * per id). Grams are 8-byte xxhash64 keys, never strings.
+    *
+    * explode_outer, not explode: plain explode makes Catalyst push a
+    * `size(word_ngram_hashes(..)) > 0` pre-filter below the project, which
+    * evaluates the native expression TWICE per row. The outer variant needs
+    * no pre-filter; the one null-gram row it emits for a null or gramless
+    * text is dropped here, so the rows are plain explode's.
+    */
+  private[graft] def gramPostings(docs: DataFrame, idCol: String, textCol: String,
+                                  n: Int): DataFrame = {
+    NativeTextExpressions.register(docs.sparkSession)
+    docs
+      .select(col(idCol).as("id"), expr(s"word_ngram_hashes($textCol, $n)").as("__gs"))
+      .select(col("id"), size(col("__gs")).as("sz"), explode_outer(col("__gs")).as("gh"))
+      .filter(col("gh").isNotNull)
+  }
+
+  /** Inverted-index gram overlap between `left` and `right` (which may be
+    * the same corpus): `(id_a, id_b, common, sz_a, sz_b)` for every pair of
+    * documents sharing at least one gram — `common` = |A∩B| and `sz_a`,
+    * `sz_b` = |A|, |B|, so any exact set score follows without
+    * materializing gram sets per pair. `on` is an extra join predicate over
+    * the sides aliased `a` and `b` (`a.id < b.id` for a self-join).
+    *
+    * Both [[gramPostings]] tables are repartitioned on `gh` at one width
+    * ([[gramJoinWidthOf]] over max(left, right): the pair-count map carries
+    * the LARGE side's grams regardless of which side is small). On a
+    * self-join the two sides are then the IDENTICAL subplan shuffled on the
+    * same key, so Spark reuses one exchange for both (one corpus scan + one
+    * shuffle — asserted in PlanShapeSpec). `first()` recovers both set
+    * sizes from the per-id-constant `sz`, with no per-document size joins.
+    */
+  private def gramOverlap(left: DataFrame, right: DataFrame, idCol: String,
+                          textCol: String, n: Int, on: Column): DataFrame = {
+    val w = gramJoinWidthOf(left.sparkSession,
+      left.queryExecution.optimizedPlan.stats.sizeInBytes
+        .max(right.queryExecution.optimizedPlan.stats.sizeInBytes))
+    def grams(side: DataFrame) = gramPostings(side, idCol, textCol, n)
+      .repartition(w, col("gh"))
+    val joined = grams(left).as("a")
+      .join(grams(right).as("b"), col("a.gh") === col("b.gh") && on)
+    // the pair aggregation at the same width, so the FINAL pair-count map
+    // scales with the corpus too (the groupBy's own exchange is elided —
+    // the explicit partitioning satisfies its clustering requirement)
+    (if (w > left.sparkSession.sessionState.conf.numShufflePartitions)
+       joined.repartition(w, col("a.id"), col("b.id"))
+     else joined)
+      .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
+      .agg(count(lit(1)).as("common"),
+        first(col("a.sz")).as("sz_a"), first(col("b.sz")).as("sz_b"))
+  }
+
+  /** Width of the inverted-index gram self-join (and of the pair
+    * aggregation downstream of it). The join stage holds the PARTIAL
+    * pair-count hash map, whose key cardinality is per-task pairs =
+    * per-task grams × df (df constant on a real corpus ⇒ linear in the
+    * task's gram share) — at the default fixed width the map grows with
+    * the corpus until it crosses the memory-subsystem cliff: q80 at the
+    * 1M-doc tier spent its whole join stage inside
+    * BytesToBytesMap.append/growAndRehash (~8M keys/task × 32 concurrent
+    * ≈ the execution pool), 6.5× the wall of the 500k tier on 2× rows;
+    * re-run at 4× the width it came back to ~linear. Width therefore
+    * scales with the corpus bytes estimate (jobless, Catalyst stats) at
+    * `spark.graft.ngram.joinPartitionBytes` per task, never below the
+    * session default (small scales keep their exact plans — the widen
+    * only fires past ~32 MiB of compressed docs at the 32-partition
+    * default), capped like the other width pins. Logged when it widens.
+    *
+    * The gram tables are repartitioned at this width ALWAYS, not only when
+    * it widens (r19). Without the explicit exchange, a gram table under the
+    * broadcast threshold plans as a BroadcastHashJoin whose STREAM side
+    * keeps the raw scan partitioning — a small corpus parquet is one split,
+    * so the join, the pair partial-aggregation, and the gram evaluation
+    * itself ran on ONE core (and the gram subtree was computed twice:
+    * broadcast builds get no exchange reuse). Measured at sf0.1 (500 docs,
+    * 260k gram rows, 1.27M candidates): join+pair-agg 2.0 s on the
+    * single-task plan, 0.4 s with the pin.
+    */
+  private def gramJoinWidthOf(spark: SparkSession, est: BigInt): Int = {
+    val default = spark.sessionState.conf.numShufflePartitions
+    val budget = graft.GraftConf.long(spark,
+      "spark.graft.ngram.joinPartitionBytes", 1L << 20)
+    val w = (est / BigInt(budget.max(1L)) + 1)
+      .max(BigInt(default)).min(BigInt(65536)).toInt
+    if (w != default)
+      logInfo(s"ngram inverted-index join: gram exchange widened to $w " +
+        s"(est corpus $est B, budget $budget B/task, default $default)")
+    w
+  }
+
   /** EXACT n-gram Jaccard dedup, inverted-index form: every pair of
     * documents whose word-n-gram-set Jaccard similarity meets `threshold`,
     * with the exact similarity — no LSH, no candidate loss.
@@ -735,104 +842,13 @@ object Dedup extends org.apache.spark.internal.Logging {
     * is bounded (per-bucket, per-domain) and the answer must be exact, and
     * the MinHash path when it is not.
     */
-  /** Width of the inverted-index gram self-join (and of the pair
-    * aggregation downstream of it). The join stage holds the PARTIAL
-    * pair-count hash map, whose key cardinality is per-task pairs =
-    * per-task grams × df (df constant on a real corpus ⇒ linear in the
-    * task's gram share) — at the default fixed width the map grows with
-    * the corpus until it crosses the memory-subsystem cliff: q80 at the
-    * 1M-doc tier spent its whole join stage inside
-    * BytesToBytesMap.append/growAndRehash (~8M keys/task × 32 concurrent
-    * ≈ the execution pool), 6.5× the wall of the 500k tier on 2× rows;
-    * re-run at 4× the width it came back to ~linear. Width therefore
-    * scales with the corpus bytes estimate (jobless, Catalyst stats) at
-    * `spark.graft.ngram.joinPartitionBytes` per task, never below the
-    * session default (small scales keep their exact plans — the widen
-    * only fires past ~32 MiB of compressed docs at the 32-partition
-    * default), capped like the other width pins. Logged when it widens.
-    */
-  private[operators] def gramJoinWidth(docs: DataFrame): Int =
-    gramJoinWidthOf(docs.sparkSession,
-      docs.queryExecution.optimizedPlan.stats.sizeInBytes)
-
-  /** Width from an explicit corpus-bytes estimate — the two-sided join
-    * ([[textFuzzyJoin]]) sizes its exchange from max(left, right): a
-    * small left joined against a large right still carries the large
-    * side's grams through the pair-count map, so the LEFT-only estimate
-    * the first cut used never widened exactly where the cliff lives.
-    * Computed ONCE per operator invocation and threaded to both the gram
-    * and pair helpers (the width is deterministic for fixed stats, but a
-    * single computation keeps the log line per call honest). */
-  private[operators] def gramJoinWidthOf(spark: SparkSession, est: BigInt): Int = {
-    val default = spark.sessionState.conf.numShufflePartitions
-    val budget = graft.GraftConf.long(spark,
-      "spark.graft.ngram.joinPartitionBytes", 1L << 20)
-    val w = (est / BigInt(budget.max(1L)) + 1)
-      .max(BigInt(default)).min(BigInt(65536)).toInt
-    if (w != default)
-      logInfo(s"ngram inverted-index join: gram exchange widened to $w " +
-        s"(est corpus $est B, budget $budget B/task, default $default)")
-    w
-  }
-
-  /** Repartition `grams` on the join key at the pinned width — ALWAYS,
-    * not only when the width pin fires (r19). Without the explicit
-    * exchange, a gram table under the broadcast threshold plans as a
-    * BroadcastHashJoin whose STREAM side keeps the raw scan partitioning
-    * — a small corpus parquet is one split, so the join, the pair
-    * partial-aggregation, and the gram evaluation itself ran on ONE core
-    * (and the gram subtree was computed twice: broadcast builds get no
-    * exchange reuse). Measured at sf0.1 (500 docs, 260k gram rows, 1.27M
-    * candidates): join+pair-agg 2.0 s on the single-task plan, 0.4 s with
-    * the pin. At scale nothing changes: the widened width takes over past
-    * the byte budget, and under the no-broadcast (100 TB) regime both
-    * sides carry the IDENTICAL repartition subtree, so the one-shuffle
-    * exchange reuse is preserved (PlanShapeSpec pins it). */
-  private def widenedGrams(w: Int, grams: DataFrame): DataFrame =
-    grams.repartition(
-      w.max(grams.sparkSession.sessionState.conf.numShufflePartitions), col("gh"))
-
-  /** Pair-aggregation partitioning: same width as the gram join so the
-    * FINAL pair-count map scales with the corpus too (the groupBy's own
-    * exchange is elided — the explicit partitioning satisfies its
-    * clustering requirement, so the exchange count is unchanged). */
-  private def widenedPairs(w: Int, joined: DataFrame,
-                           aCol: org.apache.spark.sql.Column,
-                           bCol: org.apache.spark.sql.Column): DataFrame =
-    if (w > joined.sparkSession.sessionState.conf.numShufflePartitions)
-      joined.repartition(w, aCol, bCol)
-    else joined
-
   def ngramJaccardAllPairs(docs: DataFrame, idCol: String, textCol: String,
-                           n: Int = 3, threshold: Double = 0.5): DataFrame = {
-    NativeTextExpressions.register(docs.sparkSession)
-    // `word_ngram_hashes` returns the DISTINCT gram set, so size(set) is
-    // |A| — carrying it through the explode (constant per id) lets the
-    // pair groupBy recover both set sizes with first(), eliminating the
-    // two per-document size joins; and because the self-join's two inputs
-    // are then the IDENTICAL subplan shuffled on the same key, Spark
-    // reuses one exchange for both sides (one corpus scan + one shuffle
-    // total — asserted in PlanShapeSpec).
-    // explode_outer, not explode: plain explode makes Catalyst push a
-    // `size(word_ngram_hashes(..)) > 0` pre-filter below the project,
-    // which evaluates the expensive native expression TWICE per row;
-    // the outer variant needs no pre-filter (a null text row surfaces as
-    // one null-gram row and is dropped by the join's null rejection).
-    val w = gramJoinWidth(docs)
-    val grams = widenedGrams(w, docs
-      .select(col(idCol).as("id"), expr(s"word_ngram_hashes($textCol, $n)").as("__gs"))
-      .select(col("id"), size(col("__gs")).as("sz"), explode_outer(col("__gs")).as("gh")))
-    val joined = grams.as("a")
-      .join(grams.as("b"), col("a.gh") === col("b.gh") && col("a.id") < col("b.id"))
-    widenedPairs(w, joined, col("a.id"), col("b.id"))
-      .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .agg(count(lit(1)).as("common"),
-        first(col("a.sz")).as("__sza"), first(col("b.sz")).as("__szb"))
+                           n: Int = 3, threshold: Double = 0.5): DataFrame =
+    gramOverlap(docs, docs, idCol, textCol, n, col("a.id") < col("b.id"))
       .withColumn("ngram_jaccard",
-        col("common").cast("double") / (col("__sza") + col("__szb") - col("common")))
+        col("common").cast("double") / (col("sz_a") + col("sz_b") - col("common")))
       .filter(col("ngram_jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("ngram_jaccard"))
-  }
 
   /** EXACT n-gram containment pairs: pairs where the SMALLER document's
     * gram set is mostly inside the larger's (max(|A∩B|/|A|, |A∩B|/|B|) ≥
@@ -840,27 +856,15 @@ object Dedup extends org.apache.spark.internal.Logging {
     * embedded inside another, which symmetric Jaccard under-scores (a
     * 100-gram doc fully contained in a 10 000-gram doc has Jaccard ≈ 0.01
     * but containment 1.0). Same inverted-index/one-reused-exchange shape
-    * as [[ngramJaccardAllPairs]]; emits both directed containments plus
-    * the Jaccard for context.
+    * as [[ngramJaccardAllPairs]]; emits both directed containments.
     */
   def ngramContainmentPairs(docs: DataFrame, idCol: String, textCol: String,
-                            n: Int = 3, threshold: Double = 0.9): DataFrame = {
-    NativeTextExpressions.register(docs.sparkSession)
-    val w = gramJoinWidth(docs)
-    val grams = widenedGrams(w, docs
-      .select(col(idCol).as("id"), expr(s"word_ngram_hashes($textCol, $n)").as("__gs"))
-      .select(col("id"), size(col("__gs")).as("sz"), explode_outer(col("__gs")).as("gh")))
-    val joined = grams.as("a")
-      .join(grams.as("b"), col("a.gh") === col("b.gh") && col("a.id") < col("b.id"))
-    widenedPairs(w, joined, col("a.id"), col("b.id"))
-      .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .agg(count(lit(1)).as("common"),
-        first(col("a.sz")).as("__sza"), first(col("b.sz")).as("__szb"))
-      .withColumn("containment_a", col("common").cast("double") / col("__sza"))
-      .withColumn("containment_b", col("common").cast("double") / col("__szb"))
+                            n: Int = 3, threshold: Double = 0.9): DataFrame =
+    gramOverlap(docs, docs, idCol, textCol, n, col("a.id") < col("b.id"))
+      .withColumn("containment_a", col("common").cast("double") / col("sz_a"))
+      .withColumn("containment_b", col("common").cast("double") / col("sz_b"))
       .filter(greatest(col("containment_a"), col("containment_b")) >= threshold)
       .select(col("id_a"), col("id_b"), col("containment_a"), col("containment_b"))
-  }
 
   /** Cross-corpus SEGMENT dedup (the CCNet/RefinedWeb "paragraph dedup"
     * shape): split every document into aligned `window`-token segments,
@@ -989,27 +993,12 @@ object Dedup extends org.apache.spark.internal.Logging {
     */
   def textFuzzyJoin(left: DataFrame, right: DataFrame,
                     idCol: String, textCol: String,
-                    n: Int = 3, threshold: Double = 0.5): DataFrame = {
-    NativeTextExpressions.register(left.sparkSession)
-    // width from max(left, right): the pair-count map carries the LARGE
-    // side's grams regardless of which side is small
-    val w = gramJoinWidthOf(left.sparkSession,
-      left.queryExecution.optimizedPlan.stats.sizeInBytes
-        .max(right.queryExecution.optimizedPlan.stats.sizeInBytes))
-    def grams(side: DataFrame) = widenedGrams(w, side
-      .select(col(idCol).as("id"), expr(s"word_ngram_hashes($textCol, $n)").as("__gs"))
-      .select(col("id"), size(col("__gs")).as("sz"), explode_outer(col("__gs")).as("gh")))
-    val joined = grams(left).as("a")
-      .join(grams(right).as("b"), col("a.gh") === col("b.gh"))
-    widenedPairs(w, joined, col("a.id"), col("b.id"))
-      .groupBy(col("a.id").as("id_l"), col("b.id").as("id_r"))
-      .agg(count(lit(1)).as("common"),
-        first(col("a.sz")).as("__szl"), first(col("b.sz")).as("__szr"))
+                    n: Int = 3, threshold: Double = 0.5): DataFrame =
+    gramOverlap(left, right, idCol, textCol, n, lit(true))
       .withColumn("jaccard",
-        col("common").cast("double") / (col("__szl") + col("__szr") - col("common")))
+        col("common").cast("double") / (col("sz_a") + col("sz_b") - col("common")))
       .filter(col("jaccard") >= threshold)
-      .select(col("id_l"), col("id_r"), col("jaccard"))
-  }
+      .select(col("id_a").as("id_l"), col("id_b").as("id_r"), col("jaccard"))
 
   /** Incremental dedup: the daily-crawl shape — a NEW batch arrives and
     * must be deduped (a) against the already-deduped corpus and (b) within
@@ -1031,15 +1020,5 @@ object Dedup extends org.apache.spark.internal.Logging {
     val winners = unseen.groupBy(keys: _*).agg(min(col(idCol)).as("__wid"))
     unseen.join(winners.select(col("__wid")),
       unseen(idCol) === col("__wid"), "left_semi")
-  }
-
-  /** N-gram Jaccard similarity for given candidate id pairs (exact verify
-    * step; candidates come from LSH, never all-pairs).
-    */
-  def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
-                        pairs: DataFrame, n: Int = 3): DataFrame = {
-    val grams = docs.select(col(idCol).as("id"), wordNgrams(col(textCol), n).as("grams"))
-    CandidatePairs.attachSides(pairs, grams, Seq("grams"), None)
-      .select(col("id_a"), col("id_b"), jaccard(col("grams_a"), col("grams_b")).as("ngram_jaccard"))
   }
 }

@@ -137,13 +137,8 @@ object PrefixJoin {
   private def orderedSets(docs: DataFrame, idCol: String, textCol: String,
                           n: Int): DataFrame = {
     require(n >= 1, s"gram width must be >= 1, got $n")
-    NativeTextExpressions.register(docs.sparkSession)
-    // explode_outer: plain explode would push a size()>0 pre-filter that
-    // evaluates the native gram expression twice per row (the q80 lesson)
-    val toks = docs
-      .select(col(idCol).as("id"), expr(s"word_ngram_hashes($textCol, $n)").as("__gs"))
-      .select(col("id"), explode_outer(col("__gs")).as("tok"))
-      .filter(col("tok").isNotNull)
+    val toks = Dedup.gramPostings(docs, idCol, textCol, n)
+      .select(col("id"), col("gh").as("tok"))
     val df = toks.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     toks.join(df, "tok")
       .groupBy(col("id"))

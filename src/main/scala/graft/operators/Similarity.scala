@@ -162,11 +162,8 @@ object Similarity extends org.apache.spark.internal.Logging {
                         idCol: String = "vec_id", vecCol: String = "embedding",
                         seed: Long = 42L): DataFrame = {
     val nRows = corpus.count()
-    val bandFits = CandidatePairs.bandGate(corpus.sparkSession,
-      "srpCandidatePairs band", nRows * numTables)
-    CandidatePairs.distinctPairs(CandidatePairs.keyPairs(
-      srpBanded(corpus, numTables, bits, idCol, vecCol, seed), Seq("tbl", "bucket"), bandFits),
-      pinned = !bandFits)
+    CandidatePairs.bandPairs(srpBanded(corpus, numTables, bits, idCol, vecCol, seed),
+      Seq("tbl", "bucket"), "srpCandidatePairs band", nRows * numTables)
   }
 
   /** All-pairs above a cosine threshold via banded SRP-LSH (embedding-cosine

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.operators.Dedup
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -25,14 +26,6 @@ object EventStreams {
       .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("total_value"))
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n_events"), col("total_value"))
-
-  /** Sliding window: 1-hour windows every 15 minutes. */
-  def slidingValueAvg(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), "1 hour", "15 minutes"))
-      .agg(round(avg(col("value")), 2).as("avg_value"))
-      .select(col("window.start").as("window_start"), col("avg_value"))
 
   /** Session windows per user with a 5-minute inactivity gap. */
   def userSessions(events: DataFrame): DataFrame =
@@ -70,19 +63,21 @@ object EventStreams {
 
   /** Streaming exact-content dedup: duplicates BY CONTENT (not id) within
     * the watermark are dropped — the streaming mirror of the batch exact
-    * dedup for a live document feed. Same 128-bit content key as
-    * [[graft.operators.Dedup.exactCanonical]] (state stores two longs per
+    * dedup for a live document feed. Keyed on the batch operators'
+    * 128-bit [[graft.operators.Dedup.contentKey]] (state stores two longs per
     * distinct document, never the document), same watermark-bounded state
     * story as [[dedupedStream]].
     */
   def dedupedByContent(stream: DataFrame, contentCol: String, tsCol: String = "ts",
-                       delay: String = "10 minutes"): DataFrame =
+                       delay: String = "10 minutes"): DataFrame = {
+    val (k1, k2) = Dedup.contentKey(col(contentCol))
     stream
-      .withColumn("__ck1", xxhash64(col(contentCol)))
-      .withColumn("__ck2", xxhash64(lit("g2#"), col(contentCol)))
+      .withColumn("__ck1", k1)
+      .withColumn("__ck2", k2)
       .withWatermark(tsCol, delay)
       .dropDuplicatesWithinWatermark("__ck1", "__ck2")
       .drop("__ck1", "__ck2")
+  }
 
   // ---- custom state: in-stream NEAR-dup dedup via flatMapGroupsWithState ----
 
@@ -99,9 +94,9 @@ object EventStreams {
     * against itself" shape — [[graft.operators.Dedup.suppressNearDups]]
     * covers the stream-vs-static-corpus case; this one needs state.
     *
-    * Shape: simhash scan-local per doc → explode the 4×16-bit pigeonhole
-    * chunks (hamming ≤ 3 ⟹ at least one identical chunk — same guarantee
-    * as the batch operator) → `flatMapGroupsWithState` keyed by
+    * Shape: simhash scan-local per doc → explode the batch operators'
+    * pigeonhole chunks ([[graft.operators.Dedup.simhashChunks]]; hamming
+    * ≤ 3 ⟹ at least one identical chunk) → `flatMapGroupsWithState` keyed by
     * (chunk, chunk_val) holding the full signatures recently seen in that
     * bucket → one verdict row per (doc, chunk): `is_dup` = that bucket held
     * an earlier signature within the hamming bound. State is bounded
@@ -140,10 +135,7 @@ object EventStreams {
       .select(col(idCol).cast("long").as("doc_id"), col(tsCol).as("ts"),
         expr(s"simhash64_native($contentCol)").as("sh"))
       .withWatermark("ts", delay)
-      .select(col("doc_id"), col("ts"), col("sh"),
-        posexplode(array((0 until 4).map { c =>
-          shiftrightunsigned(col("sh"), c * 16).bitwiseAND(lit(0xFFFFL))
-        }: _*)).as(Seq("chunk", "chunk_val")))
+      .select(col("doc_id"), col("ts"), col("sh"), Dedup.simhashChunks(col("sh")))
       .as[DocChunk]
 
     val verdicts = chunked
@@ -272,15 +264,6 @@ object EventStreams {
             closed.reverseIterator
           }
       }
-  }
-
-  /** Run any of the above on a streaming DataFrame into an in-memory sink —
-    * the harness used by the streaming tests.
-    */
-  def runToMemory(df: DataFrame, queryName: String, mode: OutputMode = OutputMode.Append()): Unit = {
-    val q = df.writeStream.format("memory").queryName(queryName).outputMode(mode).start()
-    q.processAllAvailable()
-    q.stop()
   }
 
   /** Streaming → table refresh via foreachBatch + the batch lifecycle's

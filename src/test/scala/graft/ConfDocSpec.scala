@@ -35,4 +35,13 @@ class ConfDocSpec extends AnyFunSuite {
     assert((documented -- inCode).isEmpty,
       s"README conf-table rows for keys src/main never reads: ${(documented -- inCode).toSeq.sorted}")
   }
+
+  test("README's query counts are SparkEntry's") {
+    val sentence = "(\\d+) queries total, (\\d+) oracle-checked \\(the (\\d+) rows-only".r
+    val m = sentence.findFirstMatchIn(read(new java.io.File("README.md"))).getOrElse(
+      fail("README no longer says \"N queries total, M oracle-checked (the K rows-only\""))
+    val (queries, oracle) = (SparkEntry.queries.size, SparkEntry.oracleSql.size)
+    assert((m.group(1).toInt, m.group(2).toInt, m.group(3).toInt) ==
+      (queries, oracle, queries - oracle))
+  }
 }

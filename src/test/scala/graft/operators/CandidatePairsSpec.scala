@@ -44,7 +44,7 @@ class CandidatePairsSpec extends SparkSpec {
       ("minhash", Nil, Some("minhashCandidatePairs band"),
         Some("minhashCandidatePairs verify"),
         () => Dedup.minhashCandidatePairs(docs, "doc_id", "text", numHashes = 16, bands = 8)),
-      ("simhash", Nil, Some("simhashNearDups band"), None,
+      ("simhash", Nil, Some("simhashNearDups band"), Some("simhashNearDups verify"),
         () => Dedup.simhashNearDups(docs, "doc_id", "text")),
       ("srp", Nil, Some("cosineNearDupPairs band"), Some("cosineNearDupPairs verify"),
         () => Similarity.cosineNearDupPairs(emb, threshold = 0.2)),

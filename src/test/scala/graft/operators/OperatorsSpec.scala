@@ -284,12 +284,27 @@ class OperatorsSpec extends SparkSpec {
     assert(acc.value == 2L, s"reference scanned ${acc.value / 2.0} times, expected 1")
   }
 
-  test("ngram jaccard on candidate pairs") {
-    val pairs = Seq((0L, 1L), (0L, 3L)).toDF("id_a", "id_b")
-    val out = Dedup.ngramJaccardPairs(docs, "doc_id", "text", pairs)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    assert(out((0L, 1L)) == 1.0)
-    assert(out((0L, 3L)) < 0.1)
+  test("suppressNearDups drops exactly the incoming docs simhashNearDups pairs with the reference") {
+    // both operators bucket on the same SimHash chunks and are exact at
+    // maxHamming <= 3, so any disagreement is a chunking bug
+    val real = graft.Tables(spark, sf0001, "documents").select("doc_id", "text")
+    val reference = real.filter(col("doc_id") % 2 === 0)
+    val offset = real.agg(max(col("doc_id"))).head.getLong(0) + 1
+    val copies = reference.orderBy("doc_id").limit(3)
+      .select((col("doc_id") + offset).as("doc_id"), col("text"))
+    val incoming = real.filter(col("doc_id") % 2 =!= 0).unionByName(copies)
+    def ids(df: org.apache.spark.sql.DataFrame) = df.select("doc_id").as[Long].collect().toSet
+    val (inIds, refIds, copyIds) = (ids(incoming), ids(reference), ids(copies))
+    val kept = ids(Dedup.suppressNearDups(incoming, reference, "text", "text", maxHamming = 3))
+    val paired = Dedup.simhashNearDups(incoming.unionByName(reference), "doc_id", "text",
+        maxHamming = 3)
+      .select("id_a", "id_b").as[(Long, Long)].collect()
+      .flatMap { case (a, b) => Seq(a -> b, b -> a) }
+      .collect { case (i, r) if inIds(i) && refIds(r) => i }.toSet
+    assert(copyIds.size == 3 && copyIds.subsetOf(paired), s"copies $copyIds not paired")
+    assert(kept == inIds -- paired,
+      s"suppression kept ${(kept -- (inIds -- paired)).take(5)} paired and dropped " +
+        s"${((inIds -- paired) -- kept).take(5)} unpaired")
   }
 
   test("gram-join width pin is invisible in results and logs its decision") {
