@@ -1,7 +1,20 @@
 package graft.etl
 
+import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, current_timestamp, lit}
+import org.apache.spark.sql.catalyst.catalog.{CatalogTablePartition, ExternalCatalogUtils}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
+import org.apache.spark.sql.execution.{CommandResultExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, StructType, TimestampType}
+
+import java.net.URI
+import java.time.Instant
+import java.util.UUID
 
 /** Table lifecycle: build → prod swap → history (reference D1–D5, A1, Q7–Q9).
   *
@@ -19,9 +32,34 @@ object TableLifecycle {
   def historyName(table: String): String = s"${table}_history"
   private[graft] def prevName(table: String): String = s"${table}_prev"
 
-  /** D1/S3 — stage a DataFrame as the `_build` table. */
-  def stageBuild(df: DataFrame, table: String): Unit =
-    df.write.mode("overwrite").saveAsTable(buildName(table))
+  /** D1/S3 — stage a DataFrame as the `_build` table; returns the rows the
+    * write committed, read from the write's own `numOutputRows` metric, so
+    * a load needs no count after it. The table is created empty and then
+    * filled by an `INSERT`: Spark's `saveAsTable` runs its write inside a
+    * command whose metrics it does not expose.
+    */
+  def stageBuild(df: DataFrame, table: String): Long = {
+    val spark = df.sparkSession
+    val build = buildName(table)
+    dropIfExists(spark, build)
+    spark.catalog.createTable(build, spark.conf.get("spark.sql.sources.default"),
+      nullable(df.schema), Map.empty[String, String])
+    val source = s"${build}_source_${UUID.randomUUID().toString.replace('-', '_')}"
+    df.createTempView(source)
+    val insert = try spark.sql(s"INSERT INTO `$build` SELECT * FROM `$source`")
+      finally spark.catalog.dropTempView(source)
+    committedRows(insert.queryExecution.executedPlan)
+      .getOrElse(throw new IllegalStateException(s"the write of $build reported no numOutputRows"))
+  }
+
+  /** The `numOutputRows` of the write an executed command's plan ran. */
+  private def committedRows(plan: SparkPlan): Option[Long] = plan match {
+    case w: DataWritingCommandExec => Some(w.cmd.metrics("numOutputRows").value)
+    case c: CommandResultExec      => committedRows(c.commandPhysicalPlan)
+    case a: AdaptiveSparkPlanExec  => committedRows(a.executedPlan)
+    case q: QueryStageExec         => committedRows(q.plan)
+    case other                     => other.children.iterator.flatMap(committedRows).nextOption()
+  }
 
   /** Q8/Q9 — catalog existence probe (`to_regclass` /
     * `v_catalog.tables EXISTS`, load_tables_daily.py:410–413,475–482).
@@ -64,10 +102,84 @@ object TableLifecycle {
   /** A1 — append-only audit snapshot
     * (`INSERT INTO {t}_history SELECT * FROM {t}`, vertica_upload.py:220),
     * with the `load_time` stamp the quarterly path adds (:132–134).
+    *
+    * `<t>_history` is parquet `PARTITIONED BY (load_time)`: the published
+    * table's columns, then `load_time`, one partition per snapshot. A
+    * snapshot stamps one µs timestamp, copies the published table's data
+    * files into `load_time=<stamp>/` under names no other snapshot uses,
+    * then registers the partition: no job, and no row is decoded or
+    * re-encoded. Until it is registered the directory is invisible to
+    * readers, so a snapshot that stops half-way adds nothing. Two
+    * snapshots in the same µs share one partition, as two appends stamped
+    * alike shared one `load_time` before.
+    *
+    * When the published table's columns differ from the history's (a type
+    * drifted between loads) or it is not an unpartitioned parquet table,
+    * that snapshot is appended by name through Spark's write into its new
+    * partition instead: a widening cast succeeds and an unsafe one fails,
+    * as the unpartitioned history's append did. A history table of that
+    * older layout is refused with the conversion MIGRATION.md gives.
     */
-  def snapshotToHistory(spark: SparkSession, table: String): Unit = {
-    val snap = spark.table(table).withColumn("load_time", current_timestamp())
-    snap.write.mode("append").saveAsTable(historyName(table))
+  def snapshotToHistory(spark: SparkSession, table: String): Unit =
+    snapshotToHistory(spark, table, DateTimeUtils.instantToMicros(Instant.now()))
+
+  /** [[snapshotToHistory]] stamped `stampMicros` (µs since the epoch). */
+  private[etl] def snapshotToHistory(spark: SparkSession, table: String, stampMicros: Long): Unit = {
+    val session = spark.asInstanceOf[ClassicSession]
+    val catalog = session.sessionState.catalog
+    val published = catalog.getTempViewOrPermanentTableMetadata(
+      session.sessionState.sqlParser.parseTableIdentifier(table))
+    val historyId = session.sessionState.sqlParser.parseTableIdentifier(historyName(table))
+    if (!catalog.tableExists(historyId)) {
+      val columns = nullable(StructType(published.schema.filterNot(_.name == LoadTime))).toDDL
+      spark.sql(s"CREATE TABLE ${historyId.quotedString} ($columns, `$LoadTime` TIMESTAMP) " +
+        s"USING parquet PARTITIONED BY (`$LoadTime`)")
+    }
+    val history = catalog.getTableMetadata(historyId)
+    if (history.partitionColumnNames != Seq(LoadTime)) {
+      val h = historyId.quotedString
+      val old = historyId.copy(table = s"${historyId.table}_unpartitioned").quotedString
+      throw new IllegalStateException(s"$h has the unpartitioned history layout; convert it once " +
+        s"(MIGRATION.md): ALTER TABLE $h RENAME TO $old; CREATE TABLE $h USING parquet " +
+        s"PARTITIONED BY ($LoadTime) AS SELECT * FROM $old")
+    }
+    val stamp = Cast(Literal(stampMicros, TimestampType), StringType,
+      Some(session.sessionState.conf.sessionLocalTimeZone)).eval().toString
+    def fields(s: StructType) = s.map(f => (f.name, f.dataType))
+    val filesFit = Seq(published, history).forall(_.provider.exists(_.equalsIgnoreCase("parquet"))) &&
+      published.partitionColumnNames.isEmpty && published.bucketSpec.isEmpty &&
+      fields(published.schema) == fields(history.dataSchema)
+    if (filesFit) {
+      val conf = session.sessionState.newHadoopConf()
+      val dir = new Path(new Path(history.location), ExternalCatalogUtils.getPartitionPathString(LoadTime, stamp))
+      val fs = dir.getFileSystem(conf)
+      fs.mkdirs(dir)
+      val tag = UUID.randomUUID()
+      spark.table(table).inputFiles.foreach { f =>
+        val src = new Path(new URI(f))
+        FileUtil.copy(src.getFileSystem(conf), src, fs, new Path(dir, s"$tag-${src.getName}"), false, conf)
+      }
+      catalog.createPartitions(historyId, Seq(CatalogTablePartition(Map(LoadTime -> stamp),
+        history.storage.copy(locationUri = Some(dir.toUri)))), ignoreIfExists = true)
+      spark.catalog.refreshTable(historyName(table))
+    } else {
+      spark.table(table).withColumn(LoadTime, lit(DateTimeUtils.microsToInstant(stampMicros)))
+        .write.mode("append").partitionBy(LoadTime).saveAsTable(historyName(table))
+    }
+  }
+
+  private val LoadTime = "load_time"
+
+  /** `s` with every field, element and value nullable, as Spark stores
+    * the schema of a table its write creates. */
+  private def nullable(s: StructType): StructType = {
+    def open(t: DataType): DataType = t match {
+      case st: StructType => nullable(st)
+      case a: ArrayType   => ArrayType(open(a.elementType), containsNull = true)
+      case m: MapType     => MapType(open(m.keyType), open(m.valueType), valueContainsNull = true)
+      case other          => other
+    }
+    StructType(s.map(f => f.copy(dataType = open(f.dataType), nullable = true)))
   }
 
   /** Q10 — first-column extraction (`get_return_list`,

@@ -1,6 +1,11 @@
 package graft.etl
 
+import org.apache.spark.DriverTask
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
+import org.apache.spark.sql.execution.PartitionedFileUtil
+import org.apache.spark.sql.execution.datasources.{FileFormat, FilePartition, HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -174,23 +179,34 @@ object TypeInference {
   /** The samples [[sampleSizeFor]] can pick once the count is past 1 000. */
   private val SamplePrefixes = Seq(500, 1000)
 
-  /** Sampled per-column inference (Q1/Q2/Q5/Q6/T3) in ONE Spark job: each
-    * partition counts its rows (up to 10 001) and votes every column over
-    * its first rows, guess → widen per value; the caller then picks the
-    * sample size from the count and combines the partitions' votes over
-    * the file's first n rows. The sample is the first n rows in partition
-    * order, so a scan split across cores votes the same rows as one split.
+  /** Sampled per-column inference (Q1/Q2/Q5/Q6/T3) in at most ONE Spark
+    * job: the vote reads the frame's first rows in partition order,
+    * counting them up to 10 001 and voting every column over its first
+    * rows, guess → widen per value; the caller then picks the sample size
+    * from the count and takes the vote over the first n rows. The sample
+    * is the first n rows in partition order, so a scan split across cores
+    * votes the same rows as one split.
     *
-    * A partition reports its running vote only where it widened (at most
-    * five steps per column on the lattice), so the vote over any prefix is
-    * the widening of each earlier partition's whole vote and one
-    * partition's vote at a row index.
+    *  - A bare file-source scan whose columns are all text (what
+    *    [[Ingest.readCsvAllText]] returns) is read on the driver, through
+    *    the relation's own reader over the splits its scan would run, in
+    *    their order: no job. It reads 10 001 rows at most, and 10 001 rows
+    *    exist exactly when the job's per-partition counts, each capped at
+    *    10 001, sum past 10 000, so both pick the same sample size.
+    *  - Any other frame votes in one job: each partition runs the same
+    *    vote over its first 10 001 rows, and the partitions' votes combine
+    *    in partition order.
+    *
+    * A run of rows reports its running vote only where it widened (at
+    * most five steps per column on the lattice), so the vote over any
+    * prefix is the widening of each earlier run's whole vote and one run's
+    * vote at a row index.
     *
     * The reference runs one `SELECT col WHERE col IS NOT NULL LIMIT n` per
     * column (load_tables_daily.py:287); a naive port launches one Spark job
     * per column — 500 job rounds on a 500-column extract, and each
     * `IS NOT NULL … LIMIT` probe can scan arbitrarily deep on a
-    * mostly-null column. This job reads at most 10 001 rows per partition
+    * mostly-null column. This vote reads at most 10 001 rows per partition
     * regardless of table size or column count. Null values inside the
     * sample are skipped by the vote (an all-null column stays text,
     * matching the reference's all-text default). `sampleRows` fixes n and
@@ -211,54 +227,99 @@ object TypeInference {
     Array.tabulate(DType.all.size, DType.all.size)((a, b) =>
       DType.all.indexOf(widen(DType.all(a), DType.all(b))))
 
-  /** The row count (each partition counting up to `countCap`) and, per
-    * prefix length, the vote of every column over the first that many
-    * rows as an index into [[DType.all]] (-1: no non-null value). */
+  /** The vote of one ordered run of text rows: it reads at most `reads`
+    * rows and votes the first `depth`; the rows read and, per column, the
+    * (row, vote) steps where the running vote widened, packed as
+    * row << 4 | vote with the vote an index into [[DType.all]]. */
+  private def voteRun(it: Iterator[InternalRow], width: Int, depth: Int, reads: Int,
+                      lenient: Boolean): (Int, Array[Array[Long]]) = {
+    val vote = Array.fill(width)(-1)
+    val steps = Array.fill(width)(new scala.collection.mutable.ArrayBuilder.ofLong)
+    var n = 0
+    while (n < reads && it.hasNext) {
+      val r = it.next()
+      if (n < depth) {
+        var c = 0
+        while (c < width) {
+          if (!r.isNullAt(c)) {
+            val g = DType.all.indexOf(guessType(r.getUTF8String(c).toString, lenient))
+            val w = if (vote(c) < 0) g else widenCode(vote(c))(g)
+            if (w != vote(c)) { vote(c) = w; steps(c) += (n.toLong << 4 | w) }
+          }
+          c += 1
+        }
+      }
+      n += 1
+    }
+    (n, steps.map(_.result()))
+  }
+
+  /** The row count (up to `countCap` per run) and, per prefix length, the
+    * vote of every column over the first that many rows as an index into
+    * [[DType.all]] (-1: no non-null value). */
   private def prefixVotes(df: DataFrame, prefixes: Seq[Int], countCap: Int,
                           lenient: Boolean): (Long, Map[Int, Array[Int]]) = {
     val width = df.columns.length
     val depth = prefixes.max
     val reads = math.max(depth, countCap)
-    val join = widenCode
-    val text = df.select(df.columns.map(c => col(c).cast(StringType)).toSeq: _*)
-    // (partition, rows, per column the (row, vote) steps packed as row << 4 | vote)
-    val parts = text.queryExecution.toRdd.mapPartitionsWithIndex { (p, it) =>
-      val vote = Array.fill(width)(-1)
-      val steps = Array.fill(width)(new scala.collection.mutable.ArrayBuilder.ofLong)
-      var n = 0
-      while (n < reads && it.hasNext) {
-        val r = it.next()
-        if (n < depth) {
-          var c = 0
-          while (c < width) {
-            if (!r.isNullAt(c)) {
-              val g = DType.all.indexOf(guessType(r.getUTF8String(c).toString, lenient))
-              val w = if (vote(c) < 0) g else join(vote(c))(g)
-              if (w != vote(c)) { vote(c) = w; steps(c) += (n.toLong << 4 | w) }
-            }
-            c += 1
-          }
-        }
-        n += 1
-      }
-      Iterator.single((p, n, steps.map(_.result())))
-    }.collect().sortBy(_._1)
+    val runs = textFileScan(df) match {
+      case Some(fs) => DriverTask.run(Seq(voteRun(scanRows(fs), width, depth, reads, lenient)))
+      case None =>
+        val text = df.select(df.columns.map(c => col(c).cast(StringType)).toSeq: _*)
+        text.queryExecution.toRdd
+          .mapPartitions(it => Iterator.single(voteRun(it, width, depth, reads, lenient)))
+          .collect().toSeq
+    }
     def voteOver(prefix: Int): Array[Int] = Array.tabulate(width) { c =>
       var acc = -1
       var left = prefix
-      for ((_, n, steps) <- parts if left > 0) {
+      for ((n, steps) <- runs if left > 0) {
         val seen = math.min(left, n)
-        // the partition's running vote after its first `seen` rows
+        // the run's vote after its first `seen` rows
         val last = steps(c).lastIndexWhere(s => (s >> 4) < seen)
         if (last >= 0) {
           val v = (steps(c)(last) & 15).toInt
-          acc = if (acc < 0) v else join(acc)(v)
+          acc = if (acc < 0) v else widenCode(acc)(v)
         }
         left -= seen
       }
       acc
     }
-    (parts.map(_._2.toLong).sum, prefixes.map(p => p -> voteOver(p)).toMap)
+    (runs.map(_._1.toLong).sum, prefixes.map(p => p -> voteOver(p)).toMap)
+  }
+
+  /** The file relation `df` scans bare, if its columns are all text: no
+    * operator over the scan, no bucketed read, no partition column that
+    * shadows a data column. */
+  private def textFileScan(df: DataFrame): Option[HadoopFsRelation] =
+    df.queryExecution.analyzed match {
+      case l @ LogicalRelation(fs: HadoopFsRelation, _, _, false, _)
+          if fs.bucketSpec.isEmpty && l.output.forall(_.dataType == StringType) &&
+            fs.dataSchema.length + fs.partitionSchema.length == l.output.length => Some(fs)
+      case _ => None
+    }
+
+  /** The rows of `fs`'s scan, read lazily on the driver in the scan's
+    * order: the splits `FileSourceScanExec` cuts, by the same calls under
+    * the relation's own session (its split size), each read by the
+    * relation's own reader. Call inside [[DriverTask.run]], which closes
+    * every reader this opens. */
+  private def scanRows(fs: HadoopFsRelation): Iterator[InternalRow] = {
+    val session = fs.sparkSession
+    val listed = fs.location.listFiles(Nil, Nil)
+    val maxSplit = FilePartition.maxSplitBytes(session, listed)
+    val splits = listed.flatMap { p =>
+      p.files.flatMap { f =>
+        val path = f.getPath
+        PartitionedFileUtil.splitFiles(f, path, fs.fileFormat.isSplitable(session, fs.options, path),
+          maxSplit, p.values)
+      }
+    }.sortBy(_.length)(Ordering[Long].reverse)
+    val read = fs.fileFormat.buildReaderWithPartitionValues(session, fs.dataSchema,
+      fs.partitionSchema, fs.dataSchema, Nil, fs.options + (FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      session.asInstanceOf[ClassicSession].sessionState.newHadoopConfWithOptions(fs.options))
+    FilePartition.getFilePartitions(session, splits, maxSplit).iterator
+      .flatMap(_.files.iterator.flatMap(read))
   }
 
   /** D3 equivalent: one-shot functional cast rewrite instead of per-column

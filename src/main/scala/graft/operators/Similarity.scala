@@ -161,9 +161,8 @@ object Similarity extends org.apache.spark.internal.Logging {
   def srpCandidatePairs(corpus: DataFrame, numTables: Int, bits: Int,
                         idCol: String = "vec_id", vecCol: String = "embedding",
                         seed: Long = 42L): DataFrame = {
-    val nRows = corpus.count()
     CandidatePairs.bandPairs(srpBanded(corpus, numTables, bits, idCol, vecCol, seed),
-      Seq("tbl", "bucket"), "srpCandidatePairs band", nRows * numTables)
+      Seq("tbl", "bucket"), "srpCandidatePairs band", corpus.count() * numTables)
   }
 
   /** All-pairs above a cosine threshold via banded SRP-LSH (embedding-cosine

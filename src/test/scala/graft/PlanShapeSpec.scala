@@ -658,6 +658,29 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
+  test("srpCandidatePairs with the band gate forced runs no job at build and no count") {
+    // budget 0 decides the regime without its estimate: the corpus count
+    // is passed by name and must not run
+    val vecs = spark.read.parquet(s"$sf0001/embeddings.parquet")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val (_, logs) = withConf("spark.graft.bandJoin.broadcastRows" -> "0") {
+      org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(listener)
+      try LogCapture("graft.gate") {
+        val pairs = operators.Similarity.srpCandidatePairs(vecs, numTables = 2, bits = 8)
+        org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+        pairs
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs.get() == 0, s"${jobs.get()} jobs ran building the candidate pairs")
+    assert(logs.exists(l => l.startsWith("gate srpCandidatePairs band: shuffle regime") &&
+      l.contains("estimate not run")), s"no forced band decision in $logs")
+  }
+
   test("cdc chunking keeps chunk text out of the shuffle (hashes only)") {
     val df = Queries.cdcChunks(spark, sf0001)
     df.collect()

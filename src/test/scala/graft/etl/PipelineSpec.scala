@@ -111,6 +111,126 @@ class PipelineSpec extends SparkSpec {
     TableLifecycle.dropIfExists(spark, t)
   }
 
+  test("the stage write's committed count is the table's count: rows, blank lines, header only") {
+    val dir = Files.createTempDirectory("committed")
+    val extracts = Seq(
+      writeCsv(dir, "Counted_Rows.csv", Seq("id,v") ++ (1 to 2500).map(i => s"$i,x$i")),
+      writeCsv(dir, "Counted_Blank.csv", Seq("id,v", "", "", "")),
+      writeCsv(dir, "Counted_Header.csv", Seq("id,v")))
+    val report = Pipeline.runDaily(spark, extracts, dir.resolve("history").toString, withHistory = true)
+    assert(report.tables.map(_.rows) == Seq(2500L, 0L, 0L))
+    report.tables.foreach(t => assert(t.rows == TableLifecycle.recordCount(spark, t.table), t.table))
+    val typed = TypeInference.inferAndNarrow(Ingest.readCsvAllText(spark, extracts.head))
+    assert(TableLifecycle.stageBuild(typed, "counted_again") == 2500L)
+    assert(spark.table(TableLifecycle.buildName("counted_again")).schema == spark.table("counted_rows").schema)
+  }
+
+  /** The `load_time` partitions of `table`'s history: stamp → data files. */
+  private def historyPartitions(table: String): Map[java.time.Instant, Int] = {
+    val h = spark.table(TableLifecycle.historyName(table))
+    h.select("load_time").distinct().collect().map(_.getTimestamp(0).toInstant).map { t =>
+      t -> h.where(org.apache.spark.sql.functions.col("load_time") === java.sql.Timestamp.from(t)).inputFiles.length
+    }.toMap
+  }
+
+  private def micros(t: java.time.Instant): Long = t.getEpochSecond * 1000000L + t.getNano / 1000
+
+  test("history snapshots copy prod's files into one load_time partition each, in no job") {
+    import spark.implicits._
+    val t = "hist_copy"
+    Seq(t, TableLifecycle.historyName(t)).foreach(TableLifecycle.dropIfExists(spark, _))
+    val base = java.time.Instant.parse("2026-03-01T08:15:30.123456Z")
+    val stamps = (0 until 3).map(d => base.plusSeconds(86400L * d).plusNanos(1000L * d))
+    stamps.zipWithIndex.foreach { case (stamp, d) =>
+      TableLifecycle.stageBuild((1 to 100 + d).map(i => (i, s"v$i")).toDF("id", "v").repartition(3 + d), t)
+      TableLifecycle.swap(spark, t)
+      val prodFiles = spark.table(t).inputFiles.length
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      }
+      org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        TableLifecycle.snapshotToHistory(spark, t, micros(stamp))
+        org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+      } finally spark.sparkContext.removeSparkListener(listener)
+      assert(jobs.get() == 0, s"snapshot ${d + 1} ran ${jobs.get()} jobs")
+      assert(historyPartitions(t)(stamp) == prodFiles, s"snapshot ${d + 1}")
+    }
+    assert(historyPartitions(t).keySet == stamps.toSet)
+    val h = spark.table(TableLifecycle.historyName(t))
+    assert(h.columns.toSeq == Seq("id", "v", "load_time"))
+    assert(h.count() == 100 + 101 + 102)
+    assert(h.where($"load_time" === java.sql.Timestamp.from(stamps(1))).drop("load_time")
+      .as[(Int, String)].collect().sorted.toSeq == (1 to 101).map(i => (i, s"v$i")))
+    assert(spark.sql(s"SHOW PARTITIONS ${TableLifecycle.historyName(t)}").count() == 3)
+  }
+
+  test("two snapshots in the same µs share one partition and keep both copies") {
+    import spark.implicits._
+    val t = "hist_same_us"
+    Seq(t, TableLifecycle.historyName(t)).foreach(TableLifecycle.dropIfExists(spark, _))
+    TableLifecycle.stageBuild((1 to 10).toDF("id").repartition(2), t)
+    TableLifecycle.swap(spark, t)
+    val stamp = java.time.Instant.parse("2026-03-01T08:15:30.000001Z")
+    TableLifecycle.snapshotToHistory(spark, t, micros(stamp))
+    TableLifecycle.snapshotToHistory(spark, t, micros(stamp))
+    assert(historyPartitions(t) == Map(stamp -> 2 * spark.table(t).inputFiles.length))
+    assert(spark.table(TableLifecycle.historyName(t)).count() == 20)
+  }
+
+  test("type drift appends by name as before: a cast that fits appends, an overflow fails") {
+    import spark.implicits._
+    val t = "hist_drift"
+    Seq(t, TableLifecycle.historyName(t)).foreach(TableLifecycle.dropIfExists(spark, _))
+    def load(values: Seq[Int], sqlType: String): Unit = {
+      TableLifecycle.stageBuild(values.toDF("n").selectExpr(s"cast(n as $sqlType) as n"), t)
+      TableLifecycle.swap(spark, t)
+    }
+    // the history takes the integer day's type; a smallint day then appends
+    load(Seq(70000, 1), "int")
+    TableLifecycle.snapshotToHistory(spark, t)
+    load(Seq(7, 8), "smallint")
+    TableLifecycle.snapshotToHistory(spark, t)
+    val h = spark.table(TableLifecycle.historyName(t))
+    assert(h.schema("n").dataType == IntegerType)
+    assert(h.select("n").as[Int].collect().sorted.toSeq == Seq(1, 7, 8, 70000))
+    assert(h.select("load_time").distinct().count() == 2)
+    // a smallint history cannot take an integer day's 70000
+    val u = "hist_overflow"
+    Seq(u, TableLifecycle.historyName(u)).foreach(TableLifecycle.dropIfExists(spark, _))
+    TableLifecycle.stageBuild(Seq(7.toShort).toDF("n"), u)
+    TableLifecycle.swap(spark, u)
+    TableLifecycle.snapshotToHistory(spark, u)
+    TableLifecycle.stageBuild(Seq(70000).toDF("n"), u)
+    TableLifecycle.swap(spark, u)
+    val err = intercept[org.apache.spark.SparkThrowable](TableLifecycle.snapshotToHistory(spark, u))
+    assert(err.getCondition == "CAST_OVERFLOW_IN_TABLE_INSERT", err.getCondition)
+    assert(spark.table(TableLifecycle.historyName(u)).count() == 1)
+  }
+
+  test("an unpartitioned history table is refused with its conversion, which then works") {
+    import spark.implicits._
+    val t = "hist_old_layout"
+    val h = TableLifecycle.historyName(t)
+    Seq(t, h).foreach(TableLifecycle.dropIfExists(spark, _))
+    TableLifecycle.stageBuild(Seq(1, 2).toDF("id"), t)
+    TableLifecycle.swap(spark, t)
+    spark.table(t).withColumn("load_time", org.apache.spark.sql.functions.current_timestamp())
+      .write.saveAsTable(h)
+    val err = intercept[IllegalStateException](TableLifecycle.snapshotToHistory(spark, t))
+    assert(err.getMessage.contains("MIGRATION.md"), err.getMessage)
+    val conversion = Seq(s"ALTER TABLE `$h` RENAME TO `${h}_unpartitioned`",
+      s"CREATE TABLE `$h` USING parquet PARTITIONED BY (load_time) AS SELECT * FROM `${h}_unpartitioned`")
+    assert(err.getMessage.contains(conversion.mkString("; ")), err.getMessage)
+    conversion.foreach(spark.sql)
+    TableLifecycle.snapshotToHistory(spark, t)
+    assert(spark.table(h).count() == 4)
+    assert(spark.table(h).select("load_time").distinct().count() == 2)
+    TableLifecycle.dropIfExists(spark, s"${h}_unpartitioned")
+  }
+
   test("inference runs ONE job regardless of column count") {
     import spark.implicits._
     // 20-column all-text frame: the naive per-column probe would launch 20+

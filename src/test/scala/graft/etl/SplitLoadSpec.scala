@@ -4,6 +4,7 @@ import graft.SparkSpec
 import org.apache.spark.ListenerBusAccess
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import java.nio.file.{Files, Path}
@@ -12,9 +13,10 @@ import scala.collection.mutable.ArrayBuffer
 import DType._
 
 /** The daily load on every core: the extract's scan split across the
-  * cores ([[Ingest.readCsvAllText]]), the count and the vote in one job
-  * ([[TypeInference.inferColumnTypes]]), and the sample still the file's
-  * first n rows however the scan is split.
+  * cores ([[Ingest.readCsvAllText]]), the count and the vote read on the
+  * driver for a file scan and in one job for any other frame
+  * ([[TypeInference.inferColumnTypes]]), and the sample still the scan's
+  * first n rows however it is split.
   */
 class SplitLoadSpec extends SparkSpec {
 
@@ -51,7 +53,7 @@ class SplitLoadSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
-  test("one vote job picks the sample sampleSizeFor picks: the first 500 / 1000 / all rows") {
+  test("the vote picks the sample sampleSizeFor picks, in 0 jobs for a file scan and 1 for a Dataset") {
     // w500 turns text at row 600, w1000 at row 1200: after the 500- and
     // the 1000-row sample respectively
     def rows(n: Int) = Iterator.range(0, n).map { i =>
@@ -67,13 +69,15 @@ class SplitLoadSpec extends SparkSpec {
       assert(df.rdd.getNumPartitions == 1)
       val (votes, jobs, _) = jobsOf(TypeInference.inferColumnTypes(df))
       assert(votes - "id" == want, s"$n rows")
-      assert(jobs.size == 1, s"$n rows: the count and the vote ran as ${jobs.size} jobs")
-      // the same rows in 4 ordered partitions vote the same first rows
+      assert(jobs.isEmpty, s"$n rows: the driver vote over the file scan ran ${jobs.size} jobs")
+      // the same rows in 4 ordered partitions vote the same first rows, in one job
       import spark.implicits._
       val parts = spark.createDataset(spark.sparkContext.parallelize(
         rows(n).map(_.split(',')).map(a => (a(0), a(1), a(2))).toSeq, 4)).toDF("id", "w500", "w1000")
       assert(parts.rdd.getNumPartitions == 4)
-      assert(TypeInference.inferColumnTypes(parts) - "id" == want, s"$n rows in 4 partitions")
+      val (partVotes, partJobs, _) = jobsOf(TypeInference.inferColumnTypes(parts))
+      assert(partVotes - "id" == want, s"$n rows in 4 partitions")
+      assert(partJobs.size == 1, s"$n rows in 4 partitions: the count and the vote ran as ${partJobs.size} jobs")
     }
   }
 
@@ -95,6 +99,8 @@ class SplitLoadSpec extends SparkSpec {
     assert(split.rdd.getNumPartitions == spark.sparkContext.defaultParallelism)
     val votes = TypeInference.inferColumnTypes(one)
     assert(TypeInference.inferColumnTypes(split) == votes)
+    // a no-op filter over the split scan takes the one-job vote
+    assert(TypeInference.inferColumnTypes(split.filter(lit(true))) == votes)
     assert(votes == Map("id" -> SmallInt, "small" -> SmallInt, "amount" -> Num, "flag" -> Bool,
       "day" -> DateD, "ts" -> Timestamp, "note" -> Text))
     val a = TypeInference.narrow(one, votes)
@@ -107,6 +113,39 @@ class SplitLoadSpec extends SparkSpec {
       rowsB.groupBy(identity).view.mapValues(_.size).toMap)
     // the planted values narrow to null on both sides
     assert(b.filter("small is null").count() == rowsA.count(_(1) == null))
+  }
+
+  test("a directory of unequal files: the driver vote reads the scan's first rows, as the job does") {
+    // three files, the largest with no planted value and listed last by
+    // name; the other two carry "hello" from their first row, so a vote
+    // that did not take the scan's split order would see it
+    val dir = Files.createTempDirectory("split-dir")
+    def write(name: String, n: Int, planted: Boolean): Unit = {
+      val out = Files.newBufferedWriter(dir.resolve(name))
+      try {
+        out.write("id,small,note\n")
+        (0 until n).foreach { i =>
+          out.write(s"$i,${if (planted && i < 50) "hello" else (i % 300).toString},row $i of $name\n")
+        }
+      } finally out.close()
+    }
+    write("a_small.csv", 3000, planted = true)
+    write("b_mid.csv", 5000, planted = true)
+    write("c_big.csv", 8000, planted = false)
+    // split by the cores, and into 64 KiB splits, equal-length ones across files
+    for (maxSplit <- Seq("134217728", "65536")) {
+      val scan = withConf("spark.sql.files.maxPartitionBytes" -> maxSplit)(Ingest.readCsvAllText(spark, dir.toString))
+      val (driver, jobs, _) = jobsOf(TypeInference.inferColumnTypes(scan))
+      assert(jobs.isEmpty, s"the driver vote ran ${jobs.size} jobs")
+      assert(TypeInference.inferColumnTypes(scan.filter(lit(true))) == driver)
+      // the vote over the first sampleSizeFor rows the scan returns
+      val rows = scan.collect()
+      val n = TypeInference.sampleSizeFor(rows.length)
+      val expected = scan.columns.zipWithIndex.map { case (c, i) =>
+        c -> TypeInference.meet(rows.take(n).map(_.getString(i)).filter(_ != null).map(TypeInference.guessType).toSeq)
+      }.toMap
+      assert(driver == expected, s"split at most $maxSplit bytes")
+    }
   }
 
   test("the split read leaves the caller's session conf unchanged") {
@@ -136,14 +175,14 @@ class SplitLoadSpec extends SparkSpec {
     }
   }
 
-  test("runDaily loads a table in at most 5 jobs, and its stage write runs on every core") {
+  test("runDaily loads a table in 1 job, and its stage write runs on every core") {
     val history = Files.createTempDirectory("split-history").toString
     val dir = Files.createTempDirectory("split-day")
     val f = Files.copy(Path.of(extract), dir.resolve("Split_Extract.csv")).toString
     Pipeline.runDaily(spark, Seq(f), history, withHistory = true) // warm the catalog
     val (report, jobs, _) = jobsOf(Pipeline.runDaily(spark, Seq(f), history, withHistory = true))
     assert(report.tables.map(_.rows) == Seq(12000L))
-    assert(jobs.size <= 5, s"one table load ran ${jobs.size} jobs")
+    assert(jobs.size == 1, s"one table load ran ${jobs.size} jobs")
     // the steps one at a time: the stage write of the 1.2 MB extract
     val typed = TypeInference.inferAndNarrow(Ingest.readCsvAllText(spark, f))
     val (_, writeJobs, writeTasks) = jobsOf(TableLifecycle.stageBuild(typed, "split_extract"))
