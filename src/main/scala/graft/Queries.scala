@@ -2002,9 +2002,8 @@ object Queries {
     * range-clustered layout of the order-day key, with the scan/skip
     * verdict for a fixed 3-month predicate and the per-shard matching-row
     * count proving skipped shards lose nothing (n_match = 0 wherever
-    * scanned = 0 — the data-skipping soundness invariant, also asserted
-    * in ZoneMapSpec against a physically pruned read). See
-    * [[graft.operators.ZoneMap]] for the layout/scan machinery.
+    * scanned = 0 — the data-skipping soundness invariant). See
+    * [[graft.operators.ZoneMap]] for the layout machinery.
     */
   def zoneMapSkipping(spark: SparkSession, dir: String): DataFrame = {
     val day = datediff(to_date(col("o_orderdate")),

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.DriverFooterSchema
 import org.apache.spark.sql.functions._
 
 /** Loaders for the driver's parquet test tables (TESTDATA.md).
@@ -15,7 +16,8 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
     if (name == "events") {
       // events.parquet has shipped with two physical types for `ts`:
       // TIMESTAMP(NANOS) — which the vectorized reader only accepts as
@@ -25,9 +27,16 @@ object Tables {
       // as TIMESTAMP_NTZ. Normalize both to session-tz TIMESTAMP (the
       // session pins UTC) so every downstream query sees one type.
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$dir/$name.parquet")
-      normalizeEventTs(raw)
-    } else spark.read.parquet(s"$dir/$name.parquet")
+      normalizeEventTs(read(spark, path))
+    } else read(spark, path)
+  }
+
+  /** `spark.read.parquet(path)` without the Spark job its schema inference
+    * runs: the schema comes from the same footer, read on the driver.
+    */
+  private def read(spark: SparkSession, path: String): DataFrame =
+    DriverFooterSchema.infer(spark, path)
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
 
   /** Normalize an events-shaped frame's `ts` to TIMESTAMP regardless of
     * which physical parquet type it was read as. */

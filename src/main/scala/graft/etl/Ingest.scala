@@ -118,15 +118,6 @@ object Ingest {
     }
   }
 
-  /** JSON-lines ingest — the second text source format next to CSV. Same
-    * two-phase stance: read with Spark's schema inference off the table
-    * (all values as string via a text read + from_json would lose arrays),
-    * so here we accept Spark's JSON inference and hand the result to
-    * [[TypeInference.narrow]] only when columns came back as strings.
-    */
-  def readJsonLines(spark: SparkSession, path: String): DataFrame =
-    spark.read.json(path)
-
   /** JSON-lines sink — the interchange format LLM-pipeline corpora ship in
     * (one JSON object per line, newline-safe: Spark's JSON writer escapes
     * embedded newlines/quotes/unicode, so arbitrary document text

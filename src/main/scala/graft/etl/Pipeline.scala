@@ -28,7 +28,9 @@ object Pipeline extends Logging {
     * quarterly path's audit snapshot (X2, vertica_upload.py:389–394).
     * A table load runs one Spark job, its staged write: the header, the
     * type vote and the history snapshot are read and copied on the
-    * driver, and the count is the write's own.
+    * driver, and the count is the write's own. An extract with no header
+    * line (a 0-byte file) loads as nothing: it is reported with 0 rows
+    * and 0 columns, and its table, `_build` and history are not touched.
     */
   def runDaily(spark: SparkSession, csvFiles: Seq[String], historyDir: String,
                withHistory: Boolean = false): RunReport = {
@@ -41,11 +43,18 @@ object Pipeline extends Logging {
       val table = Ingest.tableNameFor(f)
       val (report, sec) = timed {
         val staged = Ingest.readCsvAllText(spark, f)        // S1–S4, D1
-        val typed = TypeInference.inferAndNarrow(staged)    // Q1–Q6, T1–T4, D3
-        val rows = TableLifecycle.stageBuild(typed, table)  // build state; Q7 count
-        TableLifecycle.swap(spark, table)                   // D2+D4 swap
-        if (withHistory) TableLifecycle.snapshotToHistory(spark, table) // A1
-        TableReport(table, rows, typed.columns.length, 0.0)
+        if (staged.columns.isEmpty) {
+          // no header line, so no columns: parquet cannot write a table
+          // without columns, and the published table stays as it was
+          logWarning(s"$f has no header line: $table and its history are left as they were")
+          TableReport(table, 0L, 0, 0.0)
+        } else {
+          val typed = TypeInference.inferAndNarrow(staged)    // Q1–Q6, T1–T4, D3
+          val rows = TableLifecycle.stageBuild(typed, table)  // build state; Q7 count
+          TableLifecycle.swap(spark, table)                   // D2+D4 swap
+          if (withHistory) TableLifecycle.snapshotToHistory(spark, table) // A1
+          TableReport(table, rows, typed.columns.length, 0.0)
+        }
       }
       logInfo(s"table ${report.table}: ${report.rows} rows in $sec s")
       report.copy(seconds = sec)

@@ -9,7 +9,7 @@ import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
 import org.apache.spark.sql.execution.{CommandResultExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, StructType, TimestampType}
 
 import java.net.URI
@@ -203,36 +203,6 @@ object TableLifecycle {
       .bucketBy(buckets, keys.head, keys.tail: _*)
       .sortBy(keys.head, keys.tail: _*)
       .saveAsTable(table)
-
-  /** Partitioned publish: directory-partition the table by low-cardinality
-    * columns (date buckets, region, …) so filters on them become partition
-    * pruning — the scan skips whole directories instead of reading and
-    * filtering. The first lever for time-ranged queries over 100 TB of
-    * fact data; verify with `.explain` showing the pruned partition count.
-    */
-  def publishPartitioned(df: DataFrame, table: String, partitionCols: Seq[String]): Unit =
-    df.write.mode("overwrite")
-      .partitionBy(partitionCols: _*)
-      .saveAsTable(table)
-
-  /** Small-file compaction: rewrite a table into `targetFiles` files per
-    * partition. Streaming/incremental ingest accumulates small files that
-    * degrade scan parallelism bookkeeping; periodic compaction is the
-    * standard fix. Sorting within partitions clusters the layout for
-    * min/max skipping on the sort key. The rewrite is staged as the
-    * `_build` table and published by [[swap]], so a crash at any point
-    * leaves a complete copy.
-    */
-  def compact(spark: SparkSession, table: String, targetFiles: Int,
-              sortCols: Seq[String] = Nil): Unit = {
-    val df = spark.table(table)
-    val arranged =
-      if (sortCols.nonEmpty)
-        df.repartition(targetFiles).sortWithinPartitions(sortCols.map(col): _*)
-      else df.repartition(targetFiles)
-    stageBuild(arranged, table)
-    swap(spark, table)
-  }
 
   /** D5 — schema-only clone (`CREATE TABLE new AS SELECT * FROM old WHERE
     * 1 = 2`, vertica_upload.py:191–197). `lit(false)` is folded by Catalyst

@@ -371,11 +371,11 @@ object NativeTextExpressions {
   }
 
   /** 64-bit SimHash over whitespace tokens of the lowercased input — one
-    * pass, no intermediate arrays. Same semantics as
-    * [[TextFunctions.simhash64]] modulo hash family internals. It splits
-    * on `Character.isWhitespace`, which also takes unicode separators, so
-    * it keeps its own char walk rather than the regex-`\s` [[Tokens]]
-    * cursor of the other word-level expressions.
+    * pass, no intermediate arrays: per bit, the sign of the ±1 votes of
+    * the tokens' hashes. It splits on `Character.isWhitespace`, which
+    * also takes unicode separators, so it keeps its own char walk rather
+    * than the regex-`\s` [[Tokens]] cursor of the other word-level
+    * expressions.
     */
   case class SimHash(child: Expression)
     extends UnaryExpression with StringInput with CodegenFallback {

@@ -66,33 +66,6 @@ object TextFunctions {
     }
   }
 
-  /** ±1 per bit of a 64-bit hash value (bit 0 first). The shift amounts are
-    * Scala-level constants, so each lane is a plain literal-mask test.
-    */
-  private def bitSigns(h: Column): Column =
-    array((0 until 64).map { i =>
-      when(h.bitwiseAND(lit(1L << i)) =!= 0, lit(1L)).otherwise(lit(-1L))
-    }: _*)
-
-  /** 64-bit SimHash over token hashes: per bit, sum +1/-1 across tokens,
-    * sign → bit; bits folded as two 32-bit halves recombined with shift/or
-    * (bitwise ops, so ANSI overflow checking never fires). Pure column
-    * expressions end to end.
-    */
-  def simhash64(text: Column): Column = {
-    val hashes = transform(tokens(text), t => xxhash64(t))
-    val signs = aggregate(
-      hashes,
-      array_repeat(lit(0L), 64),
-      (acc, h) => zip_with(acc, bitSigns(h), (a, b) => a + b))
-    val bits = transform(signs, c => when(c > 0, lit(1L)).otherwise(lit(0L)))
-    def fold32(half: Column): Column =
-      aggregate(half, lit(0L), (acc, b) => acc * 2 + b)
-    val hi = fold32(slice(bits, 1, 32))
-    val lo = fold32(slice(bits, 33, 32))
-    shiftleft(hi, 32).bitwiseOR(lo)
-  }
-
   /** Hamming distance between two simhash longs. */
   def hammingDistance(a: Column, b: Column): Column =
     bit_count(a.bitwiseXOR(b))
@@ -147,7 +120,7 @@ object TextFunctions {
     (1 to 32).map(j => Math.floorMod(2654435761L * j, 1000000007L))
 
   /** Portable 32-bit SimHash over base-31 token hashes — unlike
-    * [[simhash64]] (xxhash64-based, engine-specific values), every step
+    * `simhash64_native` (xxhash64-based, engine-specific values), every step
     * is plain integer arithmetic mod 1e9+7 that any engine reproduces
     * bit-for-bit: token hash = the [[rollingFingerprint]] fold over the
     * token's chars; lane j votes +1 when (h·lane_j) mod M lands in the

@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.simd.{LaneSplitScalarVecOps, ScalarVecOps, VecOps}
+import graft.simd.{ScalarVecOps, VecOps}
 import org.apache.spark.sql.catalyst.util.ArrayData
 
 /** The ONE float-vector arithmetic provider for every cosine/dot hot
@@ -35,10 +35,6 @@ import org.apache.spark.sql.catalyst.util.ArrayData
   */
 object VecKernels {
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
-  /** Spec-only reference for the lane-split-8 arithmetic (never serves
-    * production traffic — SimdKernelsSpec pins the SIMD kernel to it). */
-  private[graft] val laneSplitReference: VecOps = new LaneSplitScalarVecOps
 
   private[graft] val serial: VecOps = new ScalarVecOps
 

@@ -423,17 +423,6 @@ object Multimodal {
       (lit(64) + floor(octet_length(col("payload")) / 7).cast("int") % 512).cast("int").as("height"),
       when(octet_length(col("payload")) % 2 === 0, "png").otherwise("jpeg").as("format"))
 
-  /** Frame-sampling plumbing for video-like payloads: explode evenly spaced
-    * frame offsets (every `everyNBytes`) — the partition/batch shape of a
-    * real frame sampler, with byte offsets standing in for frame indexes.
-    */
-  def sampleFrames(binDf: DataFrame, everyNBytes: Int = 100): DataFrame =
-    binDf.select(
-      col("id"),
-      posexplode(sequence(lit(0),
-        greatest(octet_length(col("payload")).cast("int") - 1, lit(0)),
-        lit(everyNBytes))).as(Seq("frame_no", "byte_offset")))
-
   case class MediaFeatures(id: Long, embedding: Array[Float])
 
   /** Feature extraction over the binary payload: a normalized byte-value
@@ -503,18 +492,4 @@ object Multimodal {
         }
       }.toDF("id", "fmt", "payload")
   }
-
-  /** Resize plumbing: target geometry + scale factors as pure columns over
-    * the decoded metadata (from [[metaColumns]]). The pixel resample itself
-    * is codec-bound and lives behind the [[decodeMeta]] seam; everything a
-    * planner needs — output geometry, scale, whether work is needed — is
-    * columnar and codegen'd.
-    */
-  def resizePlan(metaDf: DataFrame, targetW: Int, targetH: Int): DataFrame =
-    metaDf.select(
-      col("id"), col("width"), col("height"),
-      lit(targetW).as("target_w"), lit(targetH).as("target_h"),
-      round(lit(targetW) / col("width").cast("double"), 4).as("scale_x"),
-      round(lit(targetH) / col("height").cast("double"), 4).as("scale_y"),
-      (col("width") =!= targetW || col("height") =!= targetH).as("needs_resize"))
 }

@@ -33,34 +33,23 @@ object BloomJoin {
   def bloomSemiJoin(big: DataFrame, bigKey: String,
                     small: DataFrame, smallKey: String,
                     fpp: Double = 0.01): DataFrame = {
-    graft.functions.NativeTextExpressions.register(big.sparkSession)
-    val keys = small.select(col(smallKey).cast("long").as("k")).filter(col("k").isNotNull)
-    val n = math.max(1L, keys.distinct().count())
-    val bloom = keys.stat.bloomFilter("k", n, fpp)
-    val out = new java.io.ByteArrayOutputStream()
-    bloom.writeTo(out)
-    big
-      .filter(call_function("bloom_might_contain",
-        col(bigKey).cast("long"), lit(out.toByteArray)))
-      .join(keys.distinct().select(col("k").as(bigKey)), Seq(bigKey), "left_semi")
+    val (pruned, keys) = bloomPruned(big, bigKey, small, smallKey, fpp)
+    pruned.join(keys.distinct().select(col("k").as(bigKey)), Seq(bigKey), "left_semi")
   }
 
-  /** Diagnostic: (big rows, bloom survivors, true matches) — the pruning
-    * share the spec gates on.
+  /** `big` filtered at the scan by a bloom over `small`'s non-null keys,
+    * and those keys (cast to long) as column `k`.
     */
-  def pruneStats(big: DataFrame, bigKey: String,
-                 small: DataFrame, smallKey: String,
-                 fpp: Double = 0.01): (Long, Long, Long) = {
+  private[operators] def bloomPruned(big: DataFrame, bigKey: String,
+                                     small: DataFrame, smallKey: String,
+                                     fpp: Double): (DataFrame, DataFrame) = {
     graft.functions.NativeTextExpressions.register(big.sparkSession)
     val keys = small.select(col(smallKey).cast("long").as("k")).filter(col("k").isNotNull)
     val n = math.max(1L, keys.distinct().count())
     val bloom = keys.stat.bloomFilter("k", n, fpp)
     val out = new java.io.ByteArrayOutputStream()
     bloom.writeTo(out)
-    val survivors = big.filter(call_function("bloom_might_contain",
-      col(bigKey).cast("long"), lit(out.toByteArray))).count()
-    val trueMatches = big.join(
-      keys.distinct().select(col("k").as(bigKey)), Seq(bigKey), "left_semi").count()
-    (big.count(), survivors, trueMatches)
+    (big.filter(call_function("bloom_might_contain", col(bigKey).cast("long"), lit(out.toByteArray))),
+      keys)
   }
 }

@@ -414,23 +414,6 @@ object Bpe {
         sum(size(split(trim(col("repr")), " ")).cast("long")).as("n_tokens"))
   }
 
-  /** The profile rewritten by a merge list, in order — (repr, n). Used by
-    * the compression spec (total symbol count must shrink with every
-    * merge) and by downstream tokenization.
-    */
-  def applyMerges(profile: DataFrame, merges: Seq[BpeMerge]): DataFrame =
-    merges.foldLeft(
-      profile.select(initialRepr(col("word")).as("repr"), col("n").cast("long").as("n"))
-    )((df, m) => applyMerge(df, m.left, m.right))
-
-  /** Corpus-weighted symbol count of a rewritten profile — the quantity
-    * each merge must strictly reduce.
-    */
-  def totalSymbols(words: DataFrame): Long =
-    words
-      .select(sum(size(split(trim(col("repr")), " ")).cast("long") * col("n")).as("t"))
-      .collect()(0).getLong(0)
-
   /** Merge table as a DataFrame for the driver contract. */
   def mergesDf(spark: SparkSession, merges: Seq[BpeMerge]): DataFrame = {
     import spark.implicits._

@@ -30,21 +30,6 @@ object Decontaminate {
   private def gramKeys(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
     Dedup.gramPostings(docs, idCol, textCol, n).select(col("id").as("__id"), col("gh").as("__gh"))
 
-  /** Ids of corpus documents sharing at least one word n-gram with the
-    * benchmark corpus, with the collision count per document.
-    */
-  def contaminated(corpus: DataFrame, benchmark: DataFrame,
-                   idCol: String, textCol: String,
-                   benchTextCol: String, n: Int = 8): DataFrame = {
-    val benchGrams = gramKeys(benchmark.select(lit(0L).as("__bid"), col(benchTextCol)),
-        "__bid", benchTextCol, n)
-      .select(col("__gh")).distinct()
-    gramKeys(corpus, idCol, textCol, n)
-      .join(broadcast(benchGrams), "__gh")
-      .groupBy(col("__id").as(idCol))
-      .agg(count(lit(1)).as("n_shared_grams"))
-  }
-
   /** Corpus rows with every benchmark-colliding document removed — the
     * filter applied to the training set before tokenization. Anti-join on
     * the hashed gram keys; all corpus columns pass through untouched.

@@ -462,29 +462,6 @@ object Dedup extends org.apache.spark.internal.Logging {
     */
   private val GridObs = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Bands for a Jaccard threshold: with r = numHashes/b rows per band, a
-    * pair at Jaccard s is caught with 1−(1−s^r)^b. Pick the FEWEST bands
-    * (highest precision — fewer, longer bands admit fewer false candidates)
-    * that still reach the recall target for a pair at exactly the
-    * threshold; pairs above it have strictly higher catch probability. The
-    * MinHash mirror of [[Similarity.tablesFor]].
-    */
-  def bandsFor(threshold: Double, numHashes: Int = 16, recallTarget: Double = 0.9): Int = {
-    val divisors = (1 to numHashes).filter(numHashes % _ == 0)
-    divisors.find { b =>
-      val r = numHashes / b
-      1.0 - math.pow(1.0 - math.pow(threshold, r), b) >= recallTarget
-    }.getOrElse(divisors.last)
-  }
-
-  /** Near-dup pairs above a Jaccard threshold (LSH candidates, verified;
-    * banding auto-tuned to ≥0.9 recall at the threshold).
-    */
-  def minhashNearDups(docs: DataFrame, idCol: String, textCol: String,
-                      threshold: Double = 0.8): DataFrame =
-    minhashCandidatePairs(docs, idCol, textCol, numHashes = 16,
-        bands = bandsFor(threshold), minJaccard = threshold)
-
   /** The SimHash pigeonhole: a 64-bit signature is [[SimhashChunkCount]]
     * 16-bit chunks, so two signatures within Hamming distance 3 differ in
     * at most 3 chunks and share at least one identical chunk. Bucketing on
@@ -837,7 +814,7 @@ object Dedup extends org.apache.spark.internal.Logging {
     * self-join fan-out is Σ_g df(g)² — bounded in practice by dropping
     * nothing but *relying on AQE skew splitting* for boilerplate grams; a
     * stop-gram df cap would bound it further but changes semantics, so it
-    * is deliberately NOT applied here. Compared to [[minhashNearDups]]
+    * is deliberately NOT applied here. Compared to [[minhashCandidatePairs]]
     * this is the exact (recall-1.0) flavor; pick it when the corpus slice
     * is bounded (per-bucket, per-domain) and the answer must be exact, and
     * the MinHash path when it is not.

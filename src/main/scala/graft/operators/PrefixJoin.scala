@@ -115,26 +115,13 @@ object PrefixJoin {
     }
   }
 
-  /** Candidate-pair counts of the prefix index vs the full inverted index
-    * over the same gram sets — the pruning-effectiveness diagnostic the
-    * spec gates on (prefix ≤ full always).
-    */
-  def candidateCounts(docs: DataFrame, idCol: String, textCol: String,
-                      threshold: Double, n: Int = 3): (Long, Long) = {
-    val sets = Dedup.stage(orderedSets(docs, idCol, textCol, n), "prefixjoin-cand")
-    def distinct(postings: DataFrame, key: String): Long = CandidatePairs.distinctPairs(
-      CandidatePairs.keyPairs(postings, Seq(key), broadcastSide = false), pinned = false).count()
-    (distinct(prefixPostings(sets, threshold), "ptok"),
-      distinct(sets.select(col("id"), explode(col("toks")).as("tok")), "tok"))
-  }
-
   /** (id, toks, sz): each document's distinct gram hashes ordered by
     * ascending global df (hash tie-break), staged by callers — the table
     * feeds the prefix postings AND both sides of the verify join, and
     * without materialization Spark re-executes the scan→explode→df-join→
     * sort pipeline once per consumer.
     */
-  private def orderedSets(docs: DataFrame, idCol: String, textCol: String,
+  private[operators] def orderedSets(docs: DataFrame, idCol: String, textCol: String,
                           n: Int): DataFrame = {
     require(n >= 1, s"gram width must be >= 1, got $n")
     val toks = Dedup.gramPostings(docs, idCol, textCol, n)
@@ -149,7 +136,7 @@ object PrefixJoin {
   }
 
   /** One row per (id, prefix gram hash). */
-  private def prefixPostings(sets: DataFrame, threshold: Double): DataFrame = {
+  private[operators] def prefixPostings(sets: DataFrame, threshold: Double): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
     val prefixLen = (col("sz") - ceil(col("sz") * threshold) + 1).cast("int")

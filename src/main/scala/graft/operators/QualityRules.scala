@@ -65,18 +65,4 @@ object QualityRules {
           .when(col("compression_ratio") > maxRatio, "random")
           .otherwise("ok"))
   }
-
-  /** The filter built on the report: keep documents below the repetition
-    * ceiling and above the diversity floor — the composable "drop the
-    * keyword-stuffed and the copy-pasted" cleaning step.
-    */
-  def repetitionFilter(docs: DataFrame, idCol: String, textCol: String,
-                       maxTopBigramFrac: Double = 0.2,
-                       minDistinctRatio: Double = 0.3): DataFrame = {
-    val report = repetitionReport(docs, idCol, textCol)
-      .filter(col("top_bigram_frac") <= maxTopBigramFrac &&
-        col("distinct_ratio") >= minDistinctRatio)
-      .select(col("doc_id"))
-    docs.join(report, docs(idCol) === report("doc_id"), "left_semi")
-  }
 }

@@ -36,10 +36,4 @@ object Rollups {
         sum(col("sum_v")).as("sum_v"),
         min(col("min_v")).as("min_v"),
         max(col("max_v")).as("max_v"))
-
-  /** Read view with the derived average — kept OUT of the state so the
-    * merge stays algebraic.
-    */
-  def withAvg(state: DataFrame): DataFrame =
-    state.withColumn("avg_v", col("sum_v") / col("n_rows"))
 }

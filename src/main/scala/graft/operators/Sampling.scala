@@ -71,17 +71,6 @@ object Sampling {
     df.withColumn("split", labeled)
   }
 
-  /** Deterministic Bernoulli-by-hash sample: keeps rows whose bucket falls
-    * under `fraction`. Unlike `df.sample`, membership is a property of the
-    * ROW, not the run — re-running, repartitioning, or unioning new data
-    * never flips membership of existing rows.
-    */
-  def hashSample(df: DataFrame, idCol: String, fraction: Double,
-                 buckets: Int = DefaultBuckets, salt: Long = 42L): DataFrame = {
-    require(fraction >= 0.0 && fraction <= 1.0, "fraction in [0,1]")
-    df.filter(bucketOf(col(idCol), buckets, salt) < lit(math.round(fraction * buckets)))
-  }
-
   /** Deterministic per-stratum cap: keep at most `cap` rows per stratum,
     * chosen by hash order (mix, id) — the "at most N documents per domain"
     * crawl-balancing op, reproducible across runs and re-layout like every
@@ -89,9 +78,9 @@ object Sampling {
     * power-law strata where one domain dwarfs an executor, pre-thin with a
     * mix-MAGNITUDE filter — `df.filter(mixOf(col(id), salt) < t)` keeps
     * exactly the rank-order prefix, so any `t` with ≥ cap survivors per hot
-    * stratum leaves the final survivor set unchanged. ([[hashSample]] does
-    * NOT have this property: it buckets by mix mod B, which is uncorrelated
-    * with the mix-magnitude rank order used here.)
+    * stratum leaves the final survivor set unchanged. ([[stratifiedSample]]
+    * does NOT have this property: it buckets by mix mod B, which is
+    * uncorrelated with the mix-magnitude rank order used here.)
     */
   def capPerStratum(df: DataFrame, idCol: String, stratumCol: String,
                     cap: Int, salt: Long = 42L): DataFrame = {
@@ -142,9 +131,11 @@ object Sampling {
   /** Per-stratum deterministic sampling: each row keeps membership by its
     * id-bucket, with the threshold chosen by the row's stratum (e.g.
     * down-sample boilerplate-heavy languages, keep all of a rare one).
-    * Strata not in `fractions` use `defaultFraction`. Same stability
-    * guarantees as [[hashSample]]; still one scan-local filter, and the
-    * sampled fractions compose with [[withSplit]] on a different salt.
+    * Strata not in `fractions` use `defaultFraction`. Unlike `df.sample`,
+    * membership is a property of the ROW, not the run — re-running,
+    * repartitioning, or unioning new data never flips membership of
+    * existing rows. One scan-local filter, and the sampled fractions
+    * compose with [[withSplit]] on a different salt.
     */
   def stratifiedSample(df: DataFrame, idCol: String, stratumCol: String,
                        fractions: Map[String, Double], defaultFraction: Double,

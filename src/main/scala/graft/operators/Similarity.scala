@@ -133,36 +133,14 @@ object Similarity extends org.apache.spark.internal.Logging {
     else math.max(1, math.ceil(math.log1p(-recallTarget) / math.log1p(-pb)).toInt)
   }
 
-  /** Number of independent SRP tables needed to reach `recallTarget` for a
-    * pair at exactly `threshold` cosine (pairs above the threshold have
-    * higher per-table probability, so aggregate recall exceeds the target).
-    * Capped at `maxTables`: if the cap binds, worst-case recall is below
-    * target — raise `targetBucket` (fewer bits) or accept the lower recall.
-    */
-  def tablesFor(threshold: Double, bits: Int, recallTarget: Double = 0.9,
-                maxTables: Int = MaxSrpTables): Int =
-    math.min(maxTables, tablesForUncapped(threshold, bits, recallTarget))
-
   /** The SRP band table: one (id, tbl, bucket) row per vector per table. */
-  private def srpBanded(corpus: DataFrame, numTables: Int, bits: Int,
+  private[graft] def srpBanded(corpus: DataFrame, numTables: Int, bits: Int,
                         idCol: String, vecCol: String, seed: Long): DataFrame = {
     VectorFunctions.register(corpus.sparkSession)
     corpus
       .select(col(idCol).as("id"),
         expr(s"srp_buckets($vecCol, $numTables, $bits, ${seed}L)").as("buckets"))
       .select(col("id"), posexplode(col("buckets")).as(Seq("tbl", "bucket")))
-  }
-
-  /** Banded-SRP candidate pairs: each vector lands in `numTables` buckets
-    * (one per independent b-bit table); candidates are within-bucket pairs,
-    * deduplicated across tables BEFORE any verification. Exposed separately
-    * from [[cosineNearDupPairs]] so candidate volume is testable.
-    */
-  def srpCandidatePairs(corpus: DataFrame, numTables: Int, bits: Int,
-                        idCol: String = "vec_id", vecCol: String = "embedding",
-                        seed: Long = 42L): DataFrame = {
-    CandidatePairs.bandPairs(srpBanded(corpus, numTables, bits, idCol, vecCol, seed),
-      Seq("tbl", "bucket"), "srpCandidatePairs band", corpus.count() * numTables)
   }
 
   /** All-pairs above a cosine threshold via banded SRP-LSH (embedding-cosine
@@ -1521,18 +1499,6 @@ object Similarity extends org.apache.spark.internal.Logging {
     (cents, readLists(spark, s"$dir/assigned"))
   }
 
-  private def codebooksToDf(spark: SparkSession, cbs: Array[Array[Array[Float]]]) = {
-    import spark.implicits._
-    cbs.zipWithIndex.flatMap { case (cb, j) =>
-      cb.zipWithIndex.map { case (c, code) => (j, code, c.toSeq) }
-    }.toSeq.toDF("subspace", "code", "centroid")
-  }
-
-  private def codebooksFromDf(df: DataFrame): Array[Array[Array[Float]]] =
-    df.collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Float](2).toArray))
-      .groupBy(_._1).toSeq.sortBy(_._1)
-      .map(_._2.sortBy(_._2).map(_._3).toArray).toArray
-
   /** Writes a list-partitioned table (`assigned/`, `packed/`) under
     * `path`, one directory per list_id. A hash shuffle on list_id first
     * lands each list wholly in one task ⇒ exactly one file per list;
@@ -1743,18 +1709,6 @@ object Similarity extends org.apache.spark.internal.Logging {
       .select(col("list_id"), col("n_vectors"), round(col("mean_n"), 2).as("mean_n"),
         col("skewed"))
       .orderBy(col("list_id"))
-  }
-
-  def ivfPqSave(index: IvfPqIndex, dir: String): Unit = {
-    writeIndex(dir, index.centroids, index.assigned)
-    codebooksToDf(index.assigned.sparkSession, index.codebooks)
-      .write.mode("overwrite").parquet(s"$dir/codebooks")
-  }
-
-  def ivfPqLoad(spark: SparkSession, dir: String): IvfPqIndex = {
-    val codebooks = codebooksFromDf(spark.read.parquet(s"$dir/codebooks"))
-    val (cents, assigned) = readIndex(spark, dir)
-    IvfPqIndex(cents, codebooks, assigned, codebooks.map(_.head.length).sum)
   }
 
   /** IVF-flat ANN: partition the corpus into inverted lists by nearest

@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
 
@@ -61,22 +60,6 @@ object SkippingIndex {
         substring(max(col(keyCol)), 1, prefixLen).as("max_prefix"),
         (length(max(col(keyCol))) > prefixLen).as("max_truncated"),
         count(lit(1)).as("n_rows"))
-
-  /** Merge two string manifests — the [[ZoneMap.mergeManifests]] law for
-    * truncated bounds (valid because truncation is monotone; the max
-    * side rides a struct so an equal prefix resolves to the truncated —
-    * i.e. genuinely larger — variant).
-    */
-  def mergeStringManifests(a: DataFrame, b: DataFrame): DataFrame =
-    a.unionByName(b)
-      .groupBy(col("zshard"))
-      .agg(min(col("min_prefix")).as("min_prefix"),
-        max(struct(col("max_prefix"), col("max_truncated"))).as("mx"),
-        sum(col("n_rows")).as("n_rows"))
-      .select(col("zshard"), col("min_prefix"),
-        col("mx.max_prefix").as("max_prefix"),
-        col("mx.max_truncated").as("max_truncated"),
-        col("n_rows"))
 
   /** A strict upper bound for every string starting with `prefix`:
     * increment the last code point (skipping the surrogate gap); if it
@@ -160,7 +143,7 @@ object SkippingIndex {
     * aggregate from catalyst, a `TypedImperativeAggregate`) under a
     * graft name. The buffer is the LIVE `util.sketch.BloomFilter`
     * object — serialization (the filter's native `writeTo`, the same
-    * bytes [[scanEquals]] and [[mergeBloomManifests]] read back) happens
+    * bytes [[scanEquals]] reads back) happens
     * only at partial-aggregate shuffle boundaries, never per row. This
     * retires the previous `Aggregator` with a Java-serialized buffer —
     * the last `javaSerialization` encoder in main.
@@ -192,9 +175,9 @@ object SkippingIndex {
     * merge map-side like any sum.
     *
     * `expectedPerShard` and `fpp` FIX the filter geometry (bit width,
-    * hash count): every manifest that will ever be merged into this one
-    * ([[mergeBloomManifests]]) must be built with the SAME two values,
-    * or `mergeInPlace` throws IncompatibleMergeException. Treat them as
+    * hash count): manifests merged by a bitwise OR of their filters
+    * (`BloomFilter.mergeInPlace`) must be built with the SAME two values,
+    * or the merge throws IncompatibleMergeException. Treat them as
     * deployment configuration — a stable constant sized to the expected
     * steady-state shard population — never something derived from the
     * current batch's row count. Overshooting the estimate only degrades
@@ -234,37 +217,5 @@ object SkippingIndex {
         .parquet(surviving.map(s => s"$path/zshard=$s"): _*)
         .filter(col(valueCol) === v)
     }
-  }
-
-  /** Merge two bloom manifests (per-shard bitwise OR via the engine's
-    * own `mergeInPlace`) — appends update equality-skipping stats from
-    * the batch's own rows, never a layout rescan. Both inputs must have
-    * been built by [[bloomManifest]] with IDENTICAL (expectedPerShard,
-    * fpp) — filter geometry must match bit-for-bit to OR, and
-    * `mergeInPlace` throws IncompatibleMergeException otherwise.
-    */
-  def mergeBloomManifests(a: DataFrame, b: DataFrame): DataFrame = {
-    val mergeAgg = udaf(new Aggregator[Array[Byte], Array[Byte], Array[Byte]] {
-      private def read(bytes: Array[Byte]) =
-        BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes))
-      private def write(bf: BloomFilter): Array[Byte] = {
-        val out = new java.io.ByteArrayOutputStream()
-        bf.writeTo(out)
-        out.toByteArray
-      }
-      override def zero: Array[Byte] = Array.empty
-      override def reduce(acc: Array[Byte], row: Array[Byte]): Array[Byte] =
-        if (acc.isEmpty) row
-        else if (row.isEmpty) acc
-        else { val m = read(acc); m.mergeInPlace(read(row)); write(m) }
-      override def merge(a0: Array[Byte], b0: Array[Byte]): Array[Byte] =
-        reduce(a0, b0)
-      override def finish(r: Array[Byte]): Array[Byte] = r
-      override def bufferEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-      override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-    })
-    a.unionByName(b)
-      .groupBy(col("zshard"))
-      .agg(mergeAgg(col("bloom")).as("bloom"), sum(col("n_rows")).as("n_rows"))
   }
 }

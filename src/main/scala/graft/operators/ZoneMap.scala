@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Zone maps — per-shard min/max statistics over a clustered layout, and
@@ -113,24 +113,4 @@ object ZoneMap {
       .agg(min(col("min_key")).as("min_key"),
         max(col("max_key")).as("max_key"),
         sum(col("n_rows")).as("n_rows"))
-
-  /** Stats-pruned scan of a [[writeLayout]] directory: consult the
-    * manifest, read only shards whose [min_key, max_key] intersects
-    * [lo, hi], then re-apply the row-level predicate. The manifest
-    * collect is |shards| rows — metadata, not data.
-    */
-  def scanRange(spark: SparkSession, path: String, manifestDf: DataFrame,
-                keyCol: String, lo: Long, hi: Long): DataFrame = {
-    val surviving = manifestDf
-      .filter(col("max_key") >= lo && col("min_key") <= hi)
-      .select(col("zshard")).collect().map(_.getLong(0)).sorted
-    if (surviving.isEmpty) {
-      spark.read.parquet(path).filter(lit(false))
-    } else {
-      // basePath keeps the zshard partition column visible in the schema
-      spark.read.option("basePath", path)
-        .parquet(surviving.map(s => s"$path/zshard=$s"): _*)
-        .filter(col(keyCol) >= lo && col(keyCol) <= hi)
-    }
-  }
 }

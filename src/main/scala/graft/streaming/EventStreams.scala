@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.Dedup
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -35,22 +35,6 @@ object EventStreams {
       .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("session_value"))
       .select(col("session_window.start").as("session_start"),
         col("user_id"), col("n_events"), col("session_value"))
-
-  /** Stream-stream interval join: each error event joined to signup events
-    * of the same user within the preceding 15 minutes. Both sides carry
-    * watermarks and the join condition bounds event-time on both sides, so
-    * state is evictable — the canonical shape for joining two live streams
-    * without unbounded buffering.
-    */
-  def errorsWithRecentSignup(errors: DataFrame, signups: DataFrame): DataFrame = {
-    val e = errors.withWatermark("ts", "10 minutes").alias("e")
-    val s = signups.withWatermark("ts", "20 minutes").alias("s")
-    e.join(s, expr(
-        """e.user_id = s.user_id AND
-          |s.ts >= e.ts - INTERVAL 15 MINUTES AND s.ts <= e.ts""".stripMargin))
-      .select(col("e.event_id").as("error_id"), col("s.event_id").as("signup_id"),
-        col("e.user_id").as("user_id"))
-  }
 
   /** Streaming dedup on event_id with bounded state: duplicates arriving
     * within the watermark are dropped, state for older keys is evicted —
@@ -204,67 +188,6 @@ object EventStreams {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         sink(combineNearDupVerdicts(batch))
       }
-
-  // ---- custom state: sessionization via flatMapGroupsWithState ----
-
-  case class Event(event_id: Long, ts: Timestamp, user_id: Long,
-                   event_type: String, value: Double)
-  case class SessionState(start: Long, lastTs: Long, n: Int, total: Double)
-  case class SessionOut(user_id: Long, session_start: Timestamp, n_events: Int,
-                        total_value: Double)
-
-  /** Custom per-user sessionizer with explicit state + event-time timeout —
-    * the `flatMapGroupsWithState` shape for semantics the built-in
-    * session_window can't express (e.g. emit-on-close with session-spanning
-    * aggregates). The timeout is what bounds state on a real stream: once
-    * the watermark passes a session's last event + gap, the open session is
-    * emitted and its state removed, so per-user state never outlives its
-    * session (an event-time timeout, not processing-time, so batch-style
-    * replays and catch-up reads close sessions identically to live runs).
-    */
-  def sessionize(spark: SparkSession, events: Dataset[Event],
-                 gapMs: Long = 5 * 60 * 1000L,
-                 watermarkDelay: String = "10 minutes"): Dataset[SessionOut] = {
-    import spark.implicits._
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, SessionOut](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case (userId, rows, state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            // watermark passed last event + gap: close and evict the session.
-            val out = state.getOption.map(s =>
-              SessionOut(userId, new Timestamp(s.start), s.n, s.total))
-            state.remove()
-            out.iterator
-          } else {
-            val sorted = rows.toSeq.sortBy(_.ts.getTime)
-            var closed = List.empty[SessionOut]
-            var cur = state.getOption
-            sorted.foreach { e =>
-              val t = e.ts.getTime
-              cur match {
-                case Some(s) if t - s.lastTs <= gapMs =>
-                  cur = Some(s.copy(lastTs = t, n = s.n + 1, total = s.total + e.value))
-                case Some(s) =>
-                  closed ::= SessionOut(userId, new Timestamp(s.start), s.n, s.total)
-                  cur = Some(SessionState(t, t, 1, e.value))
-                case None =>
-                  cur = Some(SessionState(t, t, 1, e.value))
-              }
-            }
-            cur.foreach { s =>
-              state.update(s)
-              // must exceed the current watermark or Spark rejects it —
-              // a very-late straggler can otherwise set a timeout in the past.
-              state.setTimeoutTimestamp(
-                math.max(s.lastTs + gapMs, state.getCurrentWatermarkMs() + 1))
-            }
-            closed.reverseIterator
-          }
-      }
-  }
 
   /** Streaming → table refresh via foreachBatch + the batch lifecycle's
     * atomic publish: every micro-batch overwrites the prod table through

@@ -118,15 +118,4 @@ class ExtensionsSpec extends SparkSpec {
       .select("file_path").collect().map(_.getString(0)).toSeq
     assert(whole.sorted == got.sorted)
   }
-
-  test("json-lines ingest reads the second source format") {
-    val dir = java.nio.file.Files.createTempDirectory("jsonl")
-    val f = dir.resolve("events.jsonl")
-    java.nio.file.Files.writeString(f,
-      """{"id": 1, "kind": "a"}
-        |{"id": 2, "kind": "b"}""".stripMargin)
-    val df = graft.etl.Ingest.readJsonLines(spark, f.toString)
-    assert(df.count() == 2)
-    assert(df.columns.sorted.toSeq == Seq("id", "kind"))
-  }
 }

@@ -37,8 +37,8 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("hash sampling and chunking are shuffle-free operators") {
-    val sampled = operators.Sampling.hashSample(docs, "doc_id", 0.5)
-    assert(exchangeCount(sampled) == 0, "hashSample must not shuffle")
+    val sampled = operators.Sampling.stratifiedSample(docs, "doc_id", "lang", Map("en" -> 0.2), 0.5)
+    assert(exchangeCount(sampled) == 0, "stratifiedSample must not shuffle")
     val chunks = operators.Chunking.tokenWindows(docs, "doc_id", "text")
     assert(exchangeCount(chunks) == 0, "tokenWindows must not shuffle")
     assert(scanColumns(chunks) == Set("doc_id", "text"))
@@ -637,10 +637,11 @@ class PlanShapeSpec extends SparkSpec {
     val savedThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      // srpCandidatePairs returns the lazy plan (minhash/simhash stage
+      // the band step over an SRP band table, lazy (minhash/simhash stage
       // theirs to parquet), so the join shape is directly inspectable
       val vecs = spark.read.parquet(s"$sf0001/embeddings.parquet")
-      val pairs = operators.Similarity.srpCandidatePairs(vecs, numTables = 2, bits = 8)
+      val banded = operators.Similarity.srpBanded(vecs, 2, 8, "vec_id", "embedding", 42L)
+      val pairs = operators.CandidatePairs.bandPairs(banded, Seq("tbl", "bucket"), "srp band", 0L)
       pairs.collect() // let AQE finalize exchange-reuse decisions
       val plan = pairs.queryExecution.executedPlan.toString
       val pins = "Exchange hashpartitioning\\(tbl".r.findAllIn(plan).length
@@ -656,29 +657,6 @@ class PlanShapeSpec extends SparkSpec {
       spark.conf.unset("spark.graft.bandJoin.broadcastRows")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", savedThreshold)
     }
-  }
-
-  test("srpCandidatePairs with the band gate forced runs no job at build and no count") {
-    // budget 0 decides the regime without its estimate: the corpus count
-    // is passed by name and must not run
-    val vecs = spark.read.parquet(s"$sf0001/embeddings.parquet")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    val (_, logs) = withConf("spark.graft.bandJoin.broadcastRows" -> "0") {
-      org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
-      spark.sparkContext.addSparkListener(listener)
-      try LogCapture("graft.gate") {
-        val pairs = operators.Similarity.srpCandidatePairs(vecs, numTables = 2, bits = 8)
-        org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
-        pairs
-      } finally spark.sparkContext.removeSparkListener(listener)
-    }
-    assert(jobs.get() == 0, s"${jobs.get()} jobs ran building the candidate pairs")
-    assert(logs.exists(l => l.startsWith("gate srpCandidatePairs band: shuffle regime") &&
-      l.contains("estimate not run")), s"no forced band decision in $logs")
   }
 
   test("cdc chunking keeps chunk text out of the shuffle (hashes only)") {

@@ -54,18 +54,4 @@ class JsonlSpec extends SparkSpec {
     val got = back.orderBy("id").collect()
     assert(got(0) == rows(0) && got(1) == rows(1))
   }
-
-  test("readJsonLines parses externally-authored JSONL (one object per line)") {
-    val dir = tmpDir()
-    val f = java.nio.file.Paths.get(dir, "part-0.jsonl")
-    java.nio.file.Files.writeString(f,
-      """{"doc_id": 1, "text": "hello world"}
-        |{"doc_id": 2, "text": "second é line"}
-        |""".stripMargin)
-    val df = Ingest.readJsonLines(spark, dir)
-    assert(df.count() == 2)
-    val byId = df.collect().map(r =>
-      r.getLong(r.fieldIndex("doc_id")) -> r.getString(r.fieldIndex("text"))).toMap
-    assert(byId(2L) == "second é line")
-  }
 }

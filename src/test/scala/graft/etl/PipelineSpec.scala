@@ -135,6 +135,45 @@ class PipelineSpec extends SparkSpec {
 
   private def micros(t: java.time.Instant): Long = t.getEpochSecond * 1000000L + t.getNano / 1000
 
+  test("a 0-byte extract loads as nothing and leaves its table and history; the day's other extracts load") {
+    val dir = Files.createTempDirectory("emptyday")
+    val hist = dir.resolve("history").toString
+    val day1 = Files.createDirectory(dir.resolve("d1"))
+    Pipeline.runDaily(spark, Seq(writeCsv(day1, "Empty_X.csv", Seq("a,b", "1,x", "2,y"))), hist,
+      withHistory = true)
+    def snapshot(t: String) = (spark.table(t).schema, spark.table(t).collect().map(_.toString).sorted.toSeq)
+    val (table, history) = (snapshot("empty_x"), snapshot("empty_x_history"))
+    val day2 = Files.createDirectory(dir.resolve("d2"))
+    val files = Seq(writeCsv(day2, "Normal_Y.csv", Seq("k,v", "1,a", "2,b", "3,c")),
+      writeCsv(day2, "Empty_X.csv", Nil),
+      writeCsv(day2, "Header_Only.csv", Seq("p,q")))
+    assert(Files.size(java.nio.file.Paths.get(files(1))) == 0)
+    val report = Pipeline.runDaily(spark, files, hist, withHistory = true)
+    val byTable = report.tables.map(r => r.table -> (r.rows, r.columns)).toMap
+    assert(byTable == Map("normal_y" -> (3L, 2), "empty_x" -> (0L, 0), "header_only" -> (0L, 2)))
+    spark.catalog.refreshTable("empty_x")
+    spark.catalog.refreshTable("empty_x_history")
+    assert(snapshot("empty_x") == table)
+    assert(snapshot("empty_x_history") == history)
+    assert(!spark.catalog.tableExists("empty_x_build"))
+    assert(spark.table("normal_y").count() == 3 && spark.table("header_only").count() == 0)
+  }
+
+  test("stageBuild writes an unpartitioned _build even from a partitioned source, and swap keeps its rows") {
+    import spark.implicits._
+    Seq((1L, "a"), (2L, "b"), (3L, "a")).toDF("id", "k")
+      .write.mode("overwrite").partitionBy("k").saveAsTable("part_src")
+    def partitionColumns(t: String) = {
+      val state = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
+      state.catalog.getTableMetadata(state.sqlParser.parseTableIdentifier(t)).partitionColumnNames
+    }
+    assert(partitionColumns("part_src") == Seq("k"))
+    assert(TableLifecycle.stageBuild(spark.table("part_src"), "part_dst") == 3L)
+    assert(partitionColumns(TableLifecycle.buildName("part_dst")).isEmpty)
+    TableLifecycle.swap(spark, "part_dst")
+    assert(spark.table("part_dst").count() == 3)
+  }
+
   test("history snapshots copy prod's files into one load_time partition each, in no job") {
     import spark.implicits._
     val t = "hist_copy"
@@ -289,30 +328,6 @@ class PipelineSpec extends SparkSpec {
     assert(report.tables.map(_.table).toSet == Set("t_one", "t_two"))
     assert(spark.table("t_one").schema("a").dataType == ShortType)
     assert(spark.table("t_two").schema("c").dataType == BooleanType)
-  }
-
-  test("partitioned publish prunes partitions on the filter column") {
-    import spark.implicits._
-    val df = (1 to 100).map(i => (i, s"r$i", 2020 + i % 4)).toDF("id", "v", "yr")
-    TableLifecycle.publishPartitioned(df, "pp_orders", Seq("yr"))
-    val q = spark.table("pp_orders").filter($"yr" === 2021)
-    assert(q.count() == 25)
-    val scan = q.queryExecution.executedPlan.toString
-    // partition filter must be applied at the source, not post-scan
-    assert(scan.contains("PartitionFilters") && scan.contains("yr"), scan)
-    assert(!scan.contains("Filter (yr"), "filter should be pruned into the scan")
-  }
-
-  test("compact rewrites into target file count, preserving rows") {
-    import spark.implicits._
-    val df = (1 to 200).map(i => (i.toLong, i % 7)).toDF("id", "g").repartition(20)
-    df.write.mode("overwrite").saveAsTable("cmp_t")
-    TableLifecycle.compact(spark, "cmp_t", targetFiles = 2, sortCols = Seq("id"))
-    val back = spark.table("cmp_t")
-    assert(back.count() == 200)
-    assert(back.select("id").distinct().count() == 200)
-    val files = back.inputFiles.length
-    assert(files <= 2, s"expected <=2 files after compaction, got $files")
   }
 
   test("ORC roundtrip: a third columnar format writes and reads losslessly") {

@@ -27,13 +27,6 @@ class MultimodalSpec extends SparkSpec {
     assert(big._2 == 1000 && big._3 == 64 + (1000 % 512))
   }
 
-  test("frame sampling explodes evenly spaced offsets") {
-    val bin = Multimodal.withBinaryPayload(docs.filter($"doc_id" === 3), "doc_id", "text")
-    val frames = Multimodal.sampleFrames(bin, everyNBytes = 100).collect()
-    assert(frames.length == 10) // offsets 0,100,...,900
-    assert(frames.map(_.getInt(2)).toSeq.sorted == (0 until 1000 by 100).toSeq)
-  }
-
   test("byte-histogram features: normalized, deterministic, ANN-composable") {
     val bin = Multimodal.withBinaryPayload(docs, "doc_id", "text")
     val feats = Multimodal.byteHistogram(spark, bin, bins = 16)
@@ -418,17 +411,5 @@ class MultimodalSpec extends SparkSpec {
     assert(metas(2L).width == 32 && metas(2L).height == 64 && metas(2L).channels == 3)
     assert(metas(3L).width == 10 && metas(3L).height == 20)
     assert(metas(4L).format == "unknown" && metas(4L).width == -1)
-  }
-
-  test("resizePlan emits target geometry and scale factors columnar") {
-    val meta = Multimodal.metaColumns(
-      Multimodal.withBinaryPayload(docs, "doc_id", "text"))
-    val plan = Multimodal.resizePlan(meta, 224, 224).collect()
-    assert(plan.nonEmpty)
-    plan.foreach { r =>
-      val (w, sx) = (r.getInt(1), r.getDouble(5))
-      assert(math.abs(sx - 224.0 / w) < 1e-3)
-      assert(r.getBoolean(7) == (r.getInt(1) != 224 || r.getInt(2) != 224))
-    }
   }
 }

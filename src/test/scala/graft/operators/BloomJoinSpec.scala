@@ -25,8 +25,10 @@ class BloomJoinSpec extends SparkSpec {
 
   test("the bloom prunes at the scan and false positives stay near fpp") {
     val fpp = 0.01
-    val (total, survivors, trueMatches) =
-      BloomJoin.pruneStats(orders, "o_custkey", highBal, "c_custkey", fpp)
+    val total = orders.count()
+    val survivors = BloomJoin.bloomPruned(orders, "o_custkey", highBal, "c_custkey", fpp)._1.count()
+    val trueMatches = orders.join(
+      highBal.select(col("c_custkey").as("o_custkey")), Seq("o_custkey"), "left_semi").count()
     assert(trueMatches <= survivors && survivors <= total)
     assert(survivors < total,
       s"bloom pruned nothing: $survivors of $total (true $trueMatches)")

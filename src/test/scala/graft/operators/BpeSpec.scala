@@ -33,14 +33,16 @@ class BpeSpec extends SparkSpec {
   }
 
   test("every learned merge strictly shrinks the weighted symbol count") {
-    val profile = Bpe.wordProfile(
-      spark.read.parquet(s"$sf0001/documents.parquet"))
+    val docs = spark.read.parquet(s"$sf0001/documents.parquet")
+    val profile = Bpe.wordProfile(docs)
     val merges = Bpe.trainMerges(profile, numMerges = 6)
     assert(merges.length == 6)
     assert(merges.map(m => (m.left, m.right)).distinct.length == 6,
       "merge table must hold distinct pairs")
+    // the corpus's token count under the first i merges: the profile's
+    // words weighted by their counts, as the encoder tokenizes them
     val totals = (0 to merges.length).map(i =>
-      Bpe.totalSymbols(Bpe.applyMerges(profile, merges.take(i))))
+      Bpe.encodeStats(docs, merges.take(i)).agg(sum("n_tokens")).collect()(0).getLong(0))
     totals.sliding(2).foreach { case Seq(before, after) =>
       assert(after < before, s"merge did not compress: $totals")
     }
@@ -76,8 +78,8 @@ class BpeSpec extends SparkSpec {
   }
 
   test("merge counts are monotonically non-increasing (greedy argmax order)") {
-    val profile = Bpe.wordProfile(
-      spark.read.parquet(s"$sf0001/documents.parquet"))
+    val docs = spark.read.parquet(s"$sf0001/documents.parquet")
+    val profile = Bpe.wordProfile(docs)
     val merges = Bpe.trainMerges(profile, numMerges = 6)
     merges.map(_.pairCount).sliding(2).foreach { case Seq(a, b) =>
       assert(b <= a, s"pair counts not monotone: ${merges.map(_.pairCount)}")

@@ -17,24 +17,10 @@ class DecontaminateSpec extends SparkSpec {
     (3L, "completely unrelated text about distributed query engines running on spark"))
     .toDF("doc_id", "text")
 
-  test("contaminated flags only docs sharing a verbatim 8-gram") {
-    val hit = Decontaminate.contaminated(corpus, bench, "doc_id", "text", "btext", n = 8)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(hit.keySet == Set(1L), s"got $hit")
-    assert(hit(1L) >= 1L)
-  }
-
   test("suppress removes contaminated docs and passes all columns through") {
     val out = Decontaminate.suppress(corpus, bench, "doc_id", "text", "btext", n = 8)
     assert(out.columns.toSeq == Seq("doc_id", "text"))
     assert(out.select("doc_id").as[Long].collect().sorted.toSeq == Seq(2L, 3L))
-  }
-
-  test("suppress and contaminated partition the corpus") {
-    val n = corpus.count()
-    val kept = Decontaminate.suppress(corpus, bench, "doc_id", "text", "btext", n = 8).count()
-    val hit = Decontaminate.contaminated(corpus, bench, "doc_id", "text", "btext", n = 8).count()
-    assert(kept + hit == n)
   }
 
   test("suppressExact drops only verbatim content matches") {
@@ -57,8 +43,8 @@ class DecontaminateSpec extends SparkSpec {
     val shortCorpus = Seq(
       (10L, "five tokens exactly in here"),
       (11L, "five tokens exactly in there")).toDF("doc_id", "text")
-    val hit = Decontaminate.contaminated(shortCorpus, shortBench, "doc_id", "text", "btext", n = 8)
+    val kept = Decontaminate.suppress(shortCorpus, shortBench, "doc_id", "text", "btext", n = 8)
       .select("doc_id").as[Long].collect().toSet
-    assert(hit == Set(10L))
+    assert(kept == Set(11L))
   }
 }

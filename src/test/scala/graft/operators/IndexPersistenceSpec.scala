@@ -135,18 +135,4 @@ class IndexPersistenceSpec extends SparkSpec {
         s"appended twin of $qid not found via packed artifact")
     }
   }
-
-  test("ivfPqSave/ivfPqLoad round-trips codebooks and codes exactly") {
-    val built = Similarity.ivfPqBuild(corpus, numCentroids = 8, m = 8, ksub = 16)
-    val dir = tmp("ivfpq")
-    Similarity.ivfPqSave(built, dir)
-    val loaded = Similarity.ivfPqLoad(spark, dir)
-    assert(loaded.dim == built.dim && loaded.m == built.m)
-    assert(loaded.codebooks.flatten.flatten.toSeq == built.codebooks.flatten.flatten.toSeq)
-    val a = Similarity.ivfPqSearch(built, corpus, queries, k = 5).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
-    val b = Similarity.ivfPqSearch(loaded, corpus, queries, k = 5).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
-    assert(a == b)
-  }
 }

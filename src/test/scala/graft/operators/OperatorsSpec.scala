@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
-import graft.functions.{TextFunctions, VectorFunctions}
+import graft.functions.VectorFunctions
 import org.apache.spark.sql.functions._
 
 import java.sql.Timestamp
@@ -40,23 +40,6 @@ class OperatorsSpec extends SparkSpec {
     Dedup.minhashCandidatePairs(docs, "doc_id", "text").count()
     Dedup.simhashNearDups(docs, "doc_id", "text").count()
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
-  }
-
-  test("bandsFor picks the fewest bands reaching the recall target") {
-    // J=0.9, 16 hashes: 4 bands of 4 rows → 1-(1-0.9^4)^4 ≈ 0.988 ≥ 0.9,
-    // while 2 bands of 8 → 0.64 misses; J=0.5 needs all 16 singleton bands
-    assert(Dedup.bandsFor(0.9) == 4)
-    assert(Dedup.bandsFor(0.8) == 8)
-    assert(Dedup.bandsFor(0.5) == 16)
-    // higher precision (fewer bands) when the target is looser
-    assert(Dedup.bandsFor(0.9, recallTarget = 0.5) <= Dedup.bandsFor(0.9))
-  }
-
-  test("minhashNearDups thresholds on true jaccard") {
-    val nd = Dedup.minhashNearDups(docs, "doc_id", "text", threshold = 0.9)
-    val keys = nd.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(keys.contains((0L, 1L)))
-    assert(!keys.exists(p => p._1 == 3L || p._2 == 3L))
   }
 
   test("shuffle verify is invisible in results: grid == join-form == broadcast") {
@@ -240,7 +223,8 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("simhash: identical docs distance 0, near-dups close, unrelated far") {
-    val sh = docs.select($"doc_id", TextFunctions.simhash64($"text").as("sh"))
+    graft.functions.NativeTextExpressions.register(spark)
+    val sh = docs.select($"doc_id", expr("simhash64_native(text)").as("sh"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     def ham(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
     assert(ham(sh(0L), sh(1L)) == 0)
@@ -489,13 +473,14 @@ class OperatorsSpec extends SparkSpec {
   test("srp candidate volume is a fraction of all-pairs; bits scale with corpus size") {
     val n = plantedCorpus.count()
     val allPairs = n * (n - 1) / 2
-    val candidates = Similarity.srpCandidatePairs(plantedCorpus, numTables = 2, bits = 4).count()
+    val banded = Similarity.srpBanded(plantedCorpus, 2, 4, "vec_id", "embedding", 42L)
+    val candidates = CandidatePairs.bandPairs(banded, Seq("tbl", "bucket"), "srp band", 0L).count()
     assert(candidates < allPairs * 0.4, s"$candidates vs $allPairs")
     // auto-tuning: expected bucket population stays at targetBucket as N grows
     assert(Similarity.bitsFor(4096, 4096) == 2)       // floor
     assert(Similarity.bitsFor(1L << 20, 4096) == 8)
     assert(Similarity.bitsFor(1L << 30, 4096) == 18)  // 100 TB-scale corpora
-    assert(Similarity.tablesFor(0.95, 2) >= 2)        // recall target needs >1 table
+    assert(Similarity.tablesForUncapped(0.95, 2) >= 2) // recall target needs >1 table
   }
 
   test("lshTopK recall@5 >= 0.9 vs brute force on the planted corpus") {

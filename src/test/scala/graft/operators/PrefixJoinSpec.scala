@@ -6,6 +6,20 @@ import org.apache.spark.sql.functions._
 class PrefixJoinSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Candidate-pair counts of the prefix index vs the full inverted index
+    * over the same gram sets: the pruning the prefix filter buys (prefix ≤
+    * full always).
+    */
+  private def candidateCounts(docs: org.apache.spark.sql.DataFrame, idCol: String, textCol: String,
+                              threshold: Double, n: Int): (Long, Long) = {
+    val sets = Dedup.stage(PrefixJoin.orderedSets(docs, idCol, textCol, n), "prefixjoin-cand")
+    def distinct(postings: org.apache.spark.sql.DataFrame, key: String): Long =
+      CandidatePairs.distinctPairs(
+        CandidatePairs.keyPairs(postings, Seq(key), broadcastSide = false), pinned = false).count()
+    (distinct(PrefixJoin.prefixPostings(sets, threshold), "ptok"),
+      distinct(sets.select(col("id"), explode(col("toks")).as("tok")), "tok"))
+  }
+
   /** Force the prefix-index path: every spec corpus sits under the
     * brute-force gate, so without this the losslessness assertions
     * would only ever exercise the nested-loop branch.
@@ -74,7 +88,7 @@ class PrefixJoinSpec extends SparkSpec {
 
   test("3-gram prefix pruning collapses the candidate set on the real corpus") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val (pruned, full) = PrefixJoin.candidateCounts(docs, "doc_id", "text", 0.6, n = 3)
+    val (pruned, full) = candidateCounts(docs, "doc_id", "text", 0.6, n = 3)
     assert(pruned <= full, s"prefix index grew the candidate set: $pruned > $full")
     assert(pruned.toDouble / full < 0.5,
       s"expected >2x candidate reduction at t=0.6 on 3-grams, got $pruned/$full")
@@ -348,7 +362,7 @@ class PrefixJoinSpec extends SparkSpec {
     val docs = (0 until 100).map { i =>
       (i.toLong, s"the of and u${i}a u${i}b u${i}c u${i}d u${i}e u${i}f u${i}g")
     }.toDF("doc_id", "text")
-    val (pruned, full) = PrefixJoin.candidateCounts(docs, "doc_id", "text", 0.6, n = 1)
+    val (pruned, full) = candidateCounts(docs, "doc_id", "text", 0.6, n = 1)
     assert(full == 100L * 99 / 2, s"stopwords must pair every doc in the full index: $full")
     assert(pruned == 0, s"df-1 prefixes cannot collide, got $pruned")
     assert(forcingPrefixPath {

@@ -27,13 +27,6 @@ class QualityRulesSpec extends SparkSpec {
     assert(d3._2 == 1 && d3._5 == 0.0) // no bigrams → frac 0, not null
   }
 
-  test("repetitionFilter drops stuffed docs, keeps healthy and tiny ones") {
-    val kept = QualityRules.repetitionFilter(docs, "doc_id", "text",
-        maxTopBigramFrac = 0.5, minDistinctRatio = 0.3)
-      .select("doc_id").as[Long].collect().toSet
-    assert(kept == Set(2L, 3L))
-  }
-
   test("report is layout-independent") {
     val a = QualityRules.repetitionReport(docs, "doc_id", "text")
     val b = QualityRules.repetitionReport(docs.repartition(5), "doc_id", "text")

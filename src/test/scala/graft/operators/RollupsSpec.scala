@@ -42,13 +42,4 @@ class RollupsSpec extends SparkSpec {
       Rollups.rollupState(orders, Seq("day"), "v")
         .orderBy("day").collect().map(_.toSeq).toSeq)
   }
-
-  test("withAvg derives the mean without polluting the mergeable state") {
-    val st = Rollups.rollupState(orders, Seq("day"), "v")
-    assert(!st.columns.contains("avg_v"))
-    val row = Rollups.withAvg(st).filter(col("n_rows") > 1).limit(1).collect()(0)
-    val (n, s) = (row.getAs[Long]("n_rows"), row.getAs[java.math.BigDecimal]("sum_v"))
-    assert(math.abs(row.getAs[java.math.BigDecimal]("avg_v").doubleValue() -
-      s.doubleValue() / n) < 1e-6)
-  }
 }

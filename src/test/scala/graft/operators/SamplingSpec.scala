@@ -25,17 +25,10 @@ class SamplingSpec extends SparkSpec {
     assert(a.except(b).isEmpty && b.except(a).isEmpty)
   }
 
-  test("hashSample is monotone in fraction: smaller sample nests in larger") {
-    val s30 = Sampling.hashSample(ids, "id", 0.3).select("id")
-    val s70 = Sampling.hashSample(ids, "id", 0.7).select("id")
-    assert(s30.except(s70).isEmpty, "0.3-sample must be a subset of the 0.7-sample")
-    val n30 = s30.count().toDouble
-    assert(math.abs(n30 / 10000 - 0.3) < 0.05, s"n30=$n30")
-  }
-
   test("different salts decorrelate membership") {
-    val a = Sampling.hashSample(ids, "id", 0.5, salt = 1L).select("id")
-    val b = Sampling.hashSample(ids, "id", 0.5, salt = 2L).select("id")
+    def half(salt: Long) = Sampling.withSplit(ids, "id", Seq("in" -> 0.5, "out" -> 0.5), salt = salt)
+      .filter(col("split") === "in").select("id")
+    val (a, b) = (half(1L), half(2L))
     val overlap = a.intersect(b).count().toDouble
     // independent 0.5-samples overlap ~0.25 of the universe
     assert(overlap / 10000 > 0.15 && overlap / 10000 < 0.35, s"overlap=$overlap")

@@ -85,20 +85,6 @@ class SkippingIndexSpec extends SparkSpec {
     assert(SkippingIndex.incrementLastCodePoint(top + top) == null)
   }
 
-  test("string manifests merge: mergeStringManifests == stringManifest of the union") {
-    val a = Seq("apple", "avocado", "mango").toDF("k")
-      .withColumn("zshard", (length(col("k")) % 2).cast("long"))
-    val b = Seq("apricot", "melon", "zucchini").toDF("k")
-      .withColumn("zshard", (length(col("k")) % 2).cast("long"))
-    val merged = SkippingIndex.mergeStringManifests(
-        SkippingIndex.stringManifest(a, "k", 4),
-        SkippingIndex.stringManifest(b, "k", 4))
-      .orderBy("zshard").collect().map(_.toSeq).toSeq
-    val direct = SkippingIndex.stringManifest(a.unionByName(b), "k", 4)
-      .orderBy("zshard").collect().map(_.toSeq).toSeq
-    assert(merged == direct)
-  }
-
   test("bloom equality scan has no false negatives for ANY present value") {
     val df = (0L until 2000L).map(i => (i, i % 97)).toDF("key", "cust")
     val path = tmp("bloomzm")
@@ -113,24 +99,5 @@ class SkippingIndexSpec extends SparkSpec {
     }
     // absent values return empty (possibly after a false-positive read)
     assert(SkippingIndex.scanEquals(spark, path, man, "cust", 1234L).isEmpty)
-  }
-
-  test("bloom manifests merge to the same filters as building over the union") {
-    val a = (0L until 500L).map(i => (i, i % 13)).toDF("key", "cust")
-      .withColumn("zshard", (col("key") % 4).cast("long"))
-    val b = (500L until 1000L).map(i => (i, i % 17)).toDF("key", "cust")
-      .withColumn("zshard", (col("key") % 4).cast("long"))
-    def probes(man: org.apache.spark.sql.DataFrame): Map[Long, Seq[Boolean]] =
-      man.select(col("zshard"), col("bloom")).collect().map { r =>
-        val bf = BloomFilter.readFrom(
-          new java.io.ByteArrayInputStream(r.getAs[Array[Byte]]("bloom")))
-        r.getLong(0) -> (0L until 20L).map(bf.mightContainLong)
-      }.toMap
-    val merged = SkippingIndex.mergeBloomManifests(
-      SkippingIndex.bloomManifest(a, "cust", 300),
-      SkippingIndex.bloomManifest(b, "cust", 300))
-    val direct = SkippingIndex.bloomManifest(a.unionByName(b), "cust", 300)
-    assert(probes(merged) == probes(direct),
-      "merged blooms answer differently from union-built blooms")
   }
 }

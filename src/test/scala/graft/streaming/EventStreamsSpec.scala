@@ -6,10 +6,13 @@ import org.apache.spark.sql.streaming.OutputMode
 
 import java.sql.Timestamp
 
+/** A row of the `events` shape, as the MemoryStreams below carry it. */
+final case class Event(event_id: Long, ts: Timestamp, user_id: Long,
+                       event_type: String, value: Double)
+
 /** Streaming semantics under MemoryStream replay: tumbling windows close on
-  * watermark, late-but-inside-watermark rows update their window, duplicate
-  * event_ids are dropped within the watermark, and the custom sessionizer
-  * emits closed sessions.
+  * watermark, late-but-inside-watermark rows update their window, and
+  * duplicate event_ids are dropped within the watermark.
   */
 class EventStreamsSpec extends SparkSpec {
   import spark.implicits._
@@ -111,7 +114,7 @@ class EventStreamsSpec extends SparkSpec {
   }
 
   test("training-data ops compose on a live stream: sample → quality gate → chunk") {
-    // Sampling.hashSample, the token-count gate, and Chunking.tokenWindows
+    // Sampling.withSplit, the token-count gate, and Chunking.tokenWindows
     // are all scan-local, so the SAME operators run unmodified on a
     // streaming DataFrame — the "clean the live crawl" shape with zero
     // state. Output must equal the batch run over the same rows.
@@ -124,8 +127,9 @@ class EventStreamsSpec extends SparkSpec {
       (4L, "yet another document with enough tokens to clear the quality floor okay"))
     def pipeline(df: org.apache.spark.sql.DataFrame) = {
       graft.functions.NativeTextExpressions.register(spark)
-      val sampled = graft.operators.Sampling.hashSample(df, "doc_id", 0.8)
-        .filter(org.apache.spark.sql.functions.expr("token_count_native(text) >= 10"))
+      val sampled = graft.operators.Sampling.withSplit(df, "doc_id", Seq("keep" -> 0.8, "drop" -> 0.2))
+        .filter(org.apache.spark.sql.functions.expr("split = 'keep' AND token_count_native(text) >= 10"))
+        .drop("split")
       graft.operators.Chunking.tokenWindows(sampled, "doc_id", "text", size = 5, stride = 4)
     }
     val in = MemoryStream[(Long, String)]
@@ -251,59 +255,6 @@ class EventStreamsSpec extends SparkSpec {
       q.processAllAvailable()
       assert(kept.synchronized(kept.toSet) == Set(1L, 2L, 3L),
         s"kept $kept — doc 3 should survive after eviction")
-    } finally q.stop()
-  }
-
-  test("custom sessionizer emits closed sessions with totals") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[Event]
-    val out = sessionize(spark, in.toDS())
-    val q = out.writeStream.format("memory").queryName("sessions")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      in.addData(
-        ev(1, "2024-01-01 10:00:00", v = 2.0), ev(2, "2024-01-01 10:02:00", v = 3.0),
-        ev(3, "2024-01-01 10:30:00", v = 5.0)) // >5min gap → closes first session
-      q.processAllAvailable()
-      val rows = spark.table("sessions").as[SessionOut].collect()
-      assert(rows.length == 1)
-      assert(rows.head.session_start == ts("2024-01-01 10:00:00"))
-      assert(rows.head.n_events == 2 && rows.head.total_value == 5.0)
-
-      // event-time timeout: once the watermark (10 min delay) passes the open
-      // session's last event + gap, the 10:30 session is emitted and evicted —
-      // no new event for user 1 is needed, only watermark advancement.
-      in.addData(ev(4, "2024-01-01 11:00:00", user = 99, v = 1.0))
-      q.processAllAvailable()
-      in.addData(ev(5, "2024-01-01 11:30:00", user = 99, v = 1.0))
-      q.processAllAvailable()
-      val after = spark.table("sessions").as[SessionOut].collect()
-        .filter(_.user_id == 1L)
-      assert(after.length == 2)
-      val open = after.find(_.session_start == ts("2024-01-01 10:30:00"))
-      assert(open.exists(s => s.n_events == 1 && s.total_value == 5.0))
-    } finally q.stop()
-  }
-
-  test("stream-stream interval join matches users within the time bound") {
-    implicit val sqlCtx = spark.sqlContext
-    val errIn = MemoryStream[Event]
-    val sigIn = MemoryStream[Event]
-    val joined = errorsWithRecentSignup(errIn.toDF(), sigIn.toDF())
-    val q = joined.writeStream.format("memory").queryName("ss_join")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      sigIn.addData(
-        ev(10, "2024-01-01 10:00:00", user = 1, typ = "signup"),
-        ev(11, "2024-01-01 09:00:00", user = 2, typ = "signup"))
-      errIn.addData(
-        ev(20, "2024-01-01 10:10:00", user = 1, typ = "error"), // 10 min after signup: joins
-        ev(21, "2024-01-01 10:10:00", user = 2, typ = "error"), // signup 70 min prior: outside bound
-        ev(22, "2024-01-01 10:10:00", user = 3, typ = "error")) // no signup at all
-      q.processAllAvailable()
-      val rows = spark.table("ss_join").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(rows == Set((20L, 10L)))
     } finally q.stop()
   }
 
