@@ -245,31 +245,3 @@ object GraftConf {
       org.slf4j.LoggerFactory.getLogger(getClass)
         .info(s"derived default for $key: $detail")
 }
-
-/** Logs `graft.*`-named `Dataset.observe` metrics when their query
-  * completes — the zero-extra-job channel for data-dependent plan
-  * telemetry (e.g. the minhash verify screen's candidates/survivors
-  * counts). Registered at most once per application.
-  */
-object ObservedMetrics {
-  private val registered =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  def ensureLogger(spark: SparkSession): Unit =
-    if (registered.add(spark.sparkContext.applicationId))
-      spark.listenerManager.register(
-        new org.apache.spark.sql.util.QueryExecutionListener {
-          private val log = org.slf4j.LoggerFactory.getLogger(getClass)
-          override def onSuccess(funcName: String,
-              qe: org.apache.spark.sql.execution.QueryExecution,
-              durationNs: Long): Unit = {
-            val m = qe.observedMetrics.filter(_._1.startsWith("graft."))
-            if (m.nonEmpty)
-              log.info(m.map { case (k, r) => s"$k=$r" }
-                .mkString("observed metrics: ", ", ", ""))
-          }
-          override def onFailure(funcName: String,
-              qe: org.apache.spark.sql.execution.QueryExecution,
-              exception: Exception): Unit = ()
-        })
-}

@@ -23,8 +23,7 @@ object IvfDiag {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.NativeTextExpressions.register(spark)
-    graft.functions.VectorFunctions.register(spark)
+    GraftExtensions.install(spark)
 
     def timed[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime(); val r = f

@@ -24,7 +24,7 @@ object PrefixDiag {
       .config("spark.driver.memory", "16g")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.NativeTextExpressions.register(spark)
+    GraftExtensions.install(spark)
 
     def timed[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime(); val r = f

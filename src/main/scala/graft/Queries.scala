@@ -1,7 +1,6 @@
 package graft
 
 import graft.etl.TypeInference
-import graft.functions.NativeTextExpressions
 import graft.functions.TextFunctions._
 import graft.multimodal.Multimodal
 import graft.operators.{AsOfJoin, Bpe, Dedup, Similarity}
@@ -411,7 +410,6 @@ object Queries {
     // native single-pass expressions (one JIT'd loop per row) instead of the
     // interpreted-per-element HOF formulations — identical values, parity
     // asserted in NativeTextExpressionsSpec
-    NativeTextExpressions.register(spark)
     t(spark, dir, "documents")
       .select(col("doc_id"),
         expr("token_count_native(text)").as("n_tokens"),
@@ -429,7 +427,6 @@ object Queries {
       .limit(20)
 
   def qualityFilter(spark: SparkSession, dir: String): DataFrame = {
-    NativeTextExpressions.register(spark)
     t(spark, dir, "documents")
       .filter(col("lang") === "en" && expr("token_count_native(text)") >= 20)
       .select(col("doc_id"), col("n_chars"))
@@ -953,7 +950,6 @@ object Queries {
     * expression; the groupBy has |languages| groups.
     */
   def corpusReport(spark: SparkSession, dir: String): DataFrame = {
-    NativeTextExpressions.register(spark)
     t(spark, dir, "documents")
       .select(col("lang"), expr("token_count_native(text)").as("__n"))
       .groupBy(col("lang"))
@@ -1312,7 +1308,6 @@ object Queries {
     * one <=1-ulp op). Single scan, zero shuffle until the final sort.
     */
   def qualityClassifier(spark: SparkSession, dir: String): DataFrame = {
-    NativeTextExpressions.register(spark)
     // stopword ratio defined as 0 for an empty document: an unguarded
     // 0/0 is NULL in Spark but NaN in DuckDB (and NaN >= 0 is true in
     // DuckDB's ordering), so the guard is a correctness requirement for
@@ -1400,7 +1395,6 @@ object Queries {
     * shuffle); values unify to double.
     */
   def unpivotFeatures(spark: SparkSession, dir: String): DataFrame = {
-    NativeTextExpressions.register(spark)
     t(spark, dir, "documents")
       .select(col("doc_id"),
         expr("token_count_native(text)").cast("double").as("n_tokens"),
@@ -2047,7 +2041,6 @@ object Queries {
     * pinned by NativeTextExpressionsSpec.
     */
   def canonicalText(spark: SparkSession, dir: String): DataFrame = {
-    NativeTextExpressions.register(spark)
     t(spark, dir, "documents")
       .withColumn("canon", expr("canon_text(text)"))
       .select(col("doc_id"),
@@ -2408,7 +2401,6 @@ object Queries {
     * (PrefixJoinSpec), which is the contract that makes the swap safe.
     */
   def annTopkTfidf(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.NativeTextExpressions.register(spark)
     // ONE staged artifact carries both vector forms: the sparse rerank
     // vectors (consumed twice — side a / side b broadcasts, no exchange
     // reuse) and the hashed dense embeddings (consumed by build + query
@@ -3237,7 +3229,6 @@ object Queries {
     * corpus-level distinct count, never chunk text.
     */
   def cdcChunks(spark: SparkSession, dir: String): DataFrame = {
-    NativeTextExpressions.register(spark)
     // boundary detection is the native fused pass (cdc_cuts — the q197
     // lesson applied here after the HOF fold went 5.9× superlinear on
     // the 10× SF step); chunk slicing/hashing stays declarative so the
@@ -3950,7 +3941,6 @@ object Queries {
     * (total / distinct / shared-across-docs / docs-per-fingerprint).
     */
   def winnowFingerprints(spark: SparkSession, dir: String): DataFrame = {
-    NativeTextExpressions.register(spark)
     winnowRollup(perDocFps(spark, dir,
       d => d.select(col("doc_id"), expr("winnow_hashes(text, 5, 4)").as("fps"))))
   }

@@ -14,10 +14,23 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object SparkEntry {
 
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
-  def entry(spark: SparkSession): DataFrame =
+  def entry(spark: SparkSession): DataFrame = {
+    GraftExtensions.install(spark)
     Queries.revenueByNation(spark, "/root/testdata/sf0.001")
+  }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** Every query builder, each run after one [[GraftExtensions.install]]
+    * on the session it is given: the builders themselves put nothing on
+    * the session. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    builders.map { case (name, build) =>
+      name -> { (spark: SparkSession, dir: String) =>
+        GraftExtensions.install(spark)
+        build(spark, dir)
+      }
+    }
+
+  private def builders: Map[String, (SparkSession, String) => DataFrame] = Map(
     // aggregations
     "q01_pricing_summary"   -> Queries.pricingSummary _,
     "q02_revenue_by_nation" -> Queries.revenueByNation _,

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.execution.datasources.parquet.DriverFooterSchema
 import org.apache.spark.sql.functions._
 
@@ -26,17 +27,36 @@ object Tables {
       // — and TIMESTAMP(MICROS) isAdjustedToUTC=false, which Spark reads
       // as TIMESTAMP_NTZ. Normalize both to session-tz TIMESTAMP (the
       // session pins UTC) so every downstream query sees one type.
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      normalizeEventTs(read(spark, path))
+      // The flag cannot be set on one read (the parquet reader takes it
+      // from the session that built the relation), so the relation is
+      // built under a scan session carrying it, and the caller's conf is
+      // never written.
+      val scan = scanSession(spark)
+      scan.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      val relation = read(scan, path).queryExecution.analyzed
+        .collectFirst { case l: LogicalRelation => l.relation }.get
+      normalizeEventTs(spark.baseRelationToDataFrame(relation))
     } else read(spark, path)
   }
 
   /** `spark.read.parquet(path)` without the Spark job its schema inference
     * runs: the schema comes from the same footer, read on the driver.
     */
-  private def read(spark: SparkSession, path: String): DataFrame =
+  private[graft] def read(spark: SparkSession, path: String): DataFrame =
     DriverFooterSchema.infer(spark, path)
       .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+
+  /** A new session carrying a copy of the caller's SQL conf. Spark reads a
+    * file relation's files with the conf of the session that built it, so
+    * a relation built here and wrapped in the caller's session
+    * (`baseRelationToDataFrame`) scans with whatever the caller sets on
+    * this copy, and the caller's own conf is untouched.
+    */
+  private[graft] def scanSession(spark: SparkSession): SparkSession = {
+    val scan = spark.newSession()
+    spark.conf.getAll.foreach { case (k, v) => if (scan.conf.isModifiable(k)) scan.conf.set(k, v) }
+    scan
+  }
 
   /** Normalize an events-shaped frame's `ts` to TIMESTAMP regardless of
     * which physical parquet type it was read as. */

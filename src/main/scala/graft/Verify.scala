@@ -19,8 +19,9 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // Queries are independent (distinct output dirs, idempotent view/function
-    // registration), so dump them on a small thread pool — Spark schedules
+    // Queries are independent (distinct output dirs, idempotent views, and
+    // GraftExtensions.install is once per session and thread-safe), so dump
+    // them on a small thread pool — Spark schedules
     // concurrent jobs from multiple driver threads natively, and the suite is
     // scheduling-overhead-bound, so 4-way overlap roughly halves wall-clock.
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)

@@ -56,8 +56,7 @@ object Ingest {
     * before the scan.
     */
   def readCsvAllText(spark: SparkSession, path: String): DataFrame = {
-    val scanSession = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) => if (scanSession.conf.isModifiable(k)) scanSession.conf.set(k, v) }
+    val scanSession = graft.Tables.scanSession(spark)
     val listed = scanSession.read.option("header", "true").schema(new StructType()).csv(path)
       .queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.relation }.get
       .asInstanceOf[HadoopFsRelation]

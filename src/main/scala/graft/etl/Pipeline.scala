@@ -34,6 +34,7 @@ object Pipeline extends Logging {
     */
   def runDaily(spark: SparkSession, csvFiles: Seq[String], historyDir: String,
                withHistory: Boolean = false): RunReport = {
+    graft.GraftExtensions.install(spark)
     val (_, backupSec) = timed {
       Ingest.backupFiles(spark, csvFiles, historyDir)
     }

@@ -342,7 +342,6 @@ object TypeInference {
     */
   def narrow(df: DataFrame, types: Map[String, DType],
              lenient: Boolean = false): DataFrame = {
-    graft.functions.NativeTextExpressions.register(df.sparkSession)
     val cols: Seq[Column] = df.columns.toSeq.map { c =>
       types.get(c) match {
         case Some(t) if t != Text => narrowColumn(col(c), t, lenient).as(c)

@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, TimeZoneAwareExpression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TimeZoneAwareExpression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
@@ -992,11 +991,15 @@ object NativeTextExpressions {
       copy(child = newChild)
   }
 
-  /** (name → builder) for every native function — the single source both
-    * registration paths consume: session-level [[register]] and the
-    * cluster-level `GraftExtensions` injection (so a function added here
-    * is automatically available under
-    * `--conf spark.sql.extensions=graft.GraftExtensions` too).
+  /** (name → builder) for every native function. `GraftExtensions` puts
+    * them on a session, with [[VectorFunctions.builders]]: at session build
+    * through `spark.sql.extensions`, or by `GraftExtensions.install`.
+    *
+    * `graft_bloom_agg` is Spark's own `BloomFilterAggregate` (the
+    * runtime-filter aggregate, a `TypedImperativeAggregate`) under a graft
+    * name: its buffer is the live `util.sketch.BloomFilter`, serialized
+    * (its `writeTo`, the bytes `SkippingIndex.scanEquals` reads back) only
+    * at partial-aggregate shuffle boundaries, never per row.
     */
   private[graft] val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "shingle_hashes" -> (c => ShingleHashes(c.head, litInt(c(1), "k"))),
@@ -1017,16 +1020,7 @@ object NativeTextExpressions {
     "sorted_dot_block_pairs" -> (c =>
       SortedDotBlockPairs(c.head, c(1), litDbl(c(2), "minDot"), c(3))),
     "bloom_might_contain" -> (c => BloomMightContain(c.head, c(1))),
+    "graft_bloom_agg" -> (c => new BloomFilterAggregate(c.head, c(1), c(2))),
     "winnow_hashes" -> (c => WinnowHashes(c.head, litInt(c(1), "k"), litInt(c(2), "w"))),
     "cdc_cuts" -> (c => CdcCuts(c.head, litInt(c(1), "w"), litInt(c(2), "mask"))))
-
-  /** Register every native function on the session (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    builders.foreach { case (name, builder) =>
-      reg.registerFunction(FunctionIdentifier(name),
-        new ExpressionInfo(getClass.getName, null, name), builder)
-    }
-  }
 }

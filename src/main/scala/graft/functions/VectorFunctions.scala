@@ -1,12 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Native cosine similarity over two `array<float>` columns.
@@ -476,10 +475,9 @@ case class SparseToDense(child: Expression, dim: Int)
 
 object VectorFunctions {
 
-  /** (name → builder) for every vector function — the single source both
-    * registration paths consume: session-level [[register]] and the
-    * cluster-level `GraftExtensions` injection (same contract as
-    * [[NativeTextExpressions.builders]]).
+  /** (name → builder) for every vector function. `GraftExtensions` puts
+    * them on a session, with [[NativeTextExpressions.builders]]: at session
+    * build through `spark.sql.extensions`, or by `GraftExtensions.install`.
     */
   private[graft] val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "cosine_sim" -> (c => CosineSimilarity(c.head, c(1))),
@@ -497,18 +495,6 @@ object VectorFunctions {
       litNum(c(3), "k").toInt, litDouble(c(4), "floor"))),
     "block_cross_topk" -> (c => BlockCrossTopK(c.head, c(1),
       litNum(c(2), "k").toInt, litDouble(c(3), "floor"))))
-
-  /** Register every vector function on this session's registry so they
-    * are usable from both `expr(...)` and `spark.sql(...)`. Idempotent.
-    */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    builders.foreach { case (name, builder) =>
-      reg.registerFunction(FunctionIdentifier(name),
-        new ExpressionInfo(getClass.getName, null, name), builder)
-    }
-  }
 
   private def litNum(e: Expression, what: String): Long = e match {
     case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _)  => v.toLong
@@ -823,7 +809,7 @@ object VectorFunctions {
     new GenericArrayData(out)
   }
 
-  /** Codegen'd native cosine (requires [[register]] on the session). */
+  /** Codegen'd native cosine (needs `GraftExtensions` on the session). */
   def cosine(a: String, b: String): Column = expr(s"cosine_sim($a, $b)")
 
   /** Built-ins-only composition (no registration needed): dot and norms via

@@ -43,7 +43,6 @@ object BloomJoin {
   private[operators] def bloomPruned(big: DataFrame, bigKey: String,
                                      small: DataFrame, smallKey: String,
                                      fpp: Double): (DataFrame, DataFrame) = {
-    graft.functions.NativeTextExpressions.register(big.sparkSession)
     val keys = small.select(col(smallKey).cast("long").as("k")).filter(col("k").isNotNull)
     val n = math.max(1L, keys.distinct().count())
     val bloom = keys.stat.bloomFilter("k", n, fpp)

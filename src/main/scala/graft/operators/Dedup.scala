@@ -37,7 +37,8 @@ object Dedup extends org.apache.spark.internal.Logging {
     * several consumers: Spark does no CSE across DataFrame references, so
     * each downstream reference would re-execute the whole subtree. Every
     * call writes its own directory, so two runs of one query never share
-    * one.
+    * one. The write is the only job: the read-back takes its schema from a
+    * footer read on the driver (`Tables.read`).
     */
   private[graft] def stage(df: DataFrame, tag: String): DataFrame = {
     val spark = df.sparkSession
@@ -59,7 +60,7 @@ object Dedup extends org.apache.spark.internal.Logging {
     df.write.mode("overwrite").parquet(dir)
     val p = new org.apache.hadoop.fs.Path(dir)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).deleteOnExit(p)
-    spark.read.parquet(dir)
+    graft.Tables.read(spark, dir)
   }
 
   /** Persist `sig`, materialize `result(sig)` through a staged write, then
@@ -141,7 +142,6 @@ object Dedup extends org.apache.spark.internal.Logging {
   def suppressBloom(df: DataFrame, reference: DataFrame,
                     textCol: String, refTextCol: String,
                     expectedRefDocs: Long = 1000000L, fpp: Double = 0.001): DataFrame = {
-    NativeTextExpressions.register(df.sparkSession)
     val filter = reference.select(xxhash64(col(refTextCol)).as("__k"))
       .stat.bloomFilter("__k", expectedRefDocs, fpp)
     val out = new java.io.ByteArrayOutputStream()
@@ -181,7 +181,6 @@ object Dedup extends org.apache.spark.internal.Logging {
     // interpreted HOF lambda evaluations — see NativeTextExpressions).
     // Cached for the build (band table + both verify joins), released on
     // return (see [[withCachedSig]]).
-    NativeTextExpressions.register(docs.sparkSession)
     // Null-text docs (null shingle set) are excluded HERE, before banding,
     // so every downstream shape sees the same corpus. Excluding them later
     // would be ROUTE-VARIANT: the verify joins key on id — a null-sh doc
@@ -387,7 +386,6 @@ object Dedup extends org.apache.spark.internal.Logging {
                                            sets: DataFrame,
                                            setBytes: Long): DataFrame = {
     val spark = candidates.sparkSession
-    graft.ObservedMetrics.ensureLogger(spark)
     val cellBytes = graft.GraftConf.gridVerifyCellBytes(spark)
     val p = gridFragments(spark, setBytes)
     logInfo(s"gridJaccardVerify: P=$p fragments (${p.toLong * p} cells; " +
@@ -490,7 +488,6 @@ object Dedup extends org.apache.spark.internal.Logging {
     // cached for the build, released on return — same reuse reason as the
     // MinHash signature table
     val spark = docs.sparkSession
-    NativeTextExpressions.register(spark)
     val rawSig = docs.select(col(idCol).as("id"),
       expr(s"simhash64_native($textCol)").as("sh"))
     withCachedSig(rawSig, "simhash-pairs") { (sig, nDocs) =>
@@ -527,7 +524,6 @@ object Dedup extends org.apache.spark.internal.Logging {
   def suppressNearDups(df: DataFrame, reference: DataFrame,
                        textCol: String, refTextCol: String,
                        maxHamming: Int = 3): DataFrame = {
-    NativeTextExpressions.register(df.sparkSession)
     // Staged (scan + simhash ONCE): the fold below joins against the chunk
     // table four times, and without materialization each anti-join would
     // re-read and re-hash the whole reference corpus — 4 scans of what may
@@ -715,7 +711,6 @@ object Dedup extends org.apache.spark.internal.Logging {
     */
   private[graft] def gramPostings(docs: DataFrame, idCol: String, textCol: String,
                                   n: Int): DataFrame = {
-    NativeTextExpressions.register(docs.sparkSession)
     docs
       .select(col(idCol).as("id"), expr(s"word_ngram_hashes($textCol, $n)").as("__gs"))
       .select(col("id"), size(col("__gs")).as("sz"), explode_outer(col("__gs")).as("gh"))

@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.functions.NativeTextExpressions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -44,7 +43,6 @@ object Packing {
   def packByTokenBudget(docs: DataFrame, idCol: String, textCol: String,
                         budget: Long, bucketWidth: Long = 1000L): DataFrame = {
     require(budget > 0 && bucketWidth > 0, "budget and bucketWidth must be positive")
-    NativeTextExpressions.register(docs.sparkSession)
     val withTok = docs.select(
       col(idCol).cast("long").as("id"),
       expr(s"token_count_native($textCol)").cast("long").as("n_tokens"),

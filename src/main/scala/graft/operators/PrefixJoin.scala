@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.functions.NativeTextExpressions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -187,7 +186,6 @@ object PrefixJoin {
                                idfDocsOverride: Option[Double] = None): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
-    NativeTextExpressions.register(docs.sparkSession)
     val nDocs = docs.count().toDouble
     // idfDocsOverride: weight terms as if the corpus had this many docs —
     // the per-partition-block exact decomposition (disjoint-vocabulary
@@ -328,7 +326,6 @@ object PrefixJoin {
     // — bit-identical rows, spec-pinned), so the tf exchange disappears
     // and only the df aggregate, the df join, and the norm aggregate
     // shuffle — each over (doc, term)-distinct rows, never occurrences.
-    NativeTextExpressions.register(docs.sparkSession)
     val tf = docs
       .select(col(idCol).as("id"),
         explode_outer(expr(s"word_tf_entries($textCol)")).as("e"))
@@ -349,7 +346,6 @@ object PrefixJoin {
     * result once — Spark does no CSE across DataFrame references.
     */
   def unitTfidfTable(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    NativeTextExpressions.register(docs.sparkSession)
     unitTfidfTerms(docs, idCol, textCol, docs.count().toDouble)
   }
 
@@ -383,7 +379,6 @@ object PrefixJoin {
     */
   def vectorTableFromUnit(unit: DataFrame, dim: Int = 256): DataFrame = {
     require(dim >= 2, s"embedding dim must be >= 2, got $dim")
-    graft.functions.VectorFunctions.register(unit.sparkSession)
     unit.groupBy(col("id"))
       .agg(sort_array(collect_list(struct(col("tok"), col("u")))).as("kv"))
       .select(col("id"),
@@ -405,7 +400,6 @@ object PrefixJoin {
     */
   def hashedEmbeddingsFromUnit(unit: DataFrame, dim: Int = 256): DataFrame = {
     require(dim >= 2, s"embedding dim must be >= 2, got $dim")
-    graft.functions.VectorFunctions.register(unit.sparkSession)
     val slotted = unit
       .select(col("id"), pmod(col("tok"), lit(dim)).cast("int").as("slot"),
         // an independent bit of the 64-bit hash decides the sign; tok

@@ -25,7 +25,6 @@ object QualityRules {
     * parity with it is asserted in QualityRulesSpec).
     */
   def repetitionReport(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.functions.NativeTextExpressions.register(docs.sparkSession)
     docs
       .select(col(idCol).as("doc_id"), expr(s"token_profile($textCol)").as("__p"))
       .filter(col("__p.n_tokens") > 0)
@@ -52,7 +51,6 @@ object QualityRules {
   def compressionReport(docs: DataFrame, idCol: String, textCol: String,
                         minRatio: Double = 0.2, maxRatio: Double = 0.95,
                         level: Int = 6): DataFrame = {
-    graft.functions.NativeTextExpressions.register(docs.sparkSession)
     docs
       .filter(octet_length(col(textCol)) > 0)
       .select(col(idCol).as("doc_id"),

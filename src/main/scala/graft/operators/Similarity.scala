@@ -33,7 +33,6 @@ object Similarity extends org.apache.spark.internal.Logging {
     */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    VectorFunctions.register(corpus.sparkSession)
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("query_vec"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("corpus_vec"))
     rankedTopK(c.join(broadcast(q), col("neighbor_id") =!= col("query_id"))
@@ -64,7 +63,6 @@ object Similarity extends org.apache.spark.internal.Logging {
     */
   def exactCosinePairs(corpus: DataFrame, threshold: Double,
                        idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    VectorFunctions.register(corpus.sparkSession)
     val a = corpus.select(col(idCol).as("id_a"), col(vecCol).as("v_a"))
     val b = corpus.select(col(idCol).as("id_b"), col(vecCol).as("v_b"))
     a.join(b, col("id_a") < col("id_b"))
@@ -82,7 +80,6 @@ object Similarity extends org.apache.spark.internal.Logging {
     */
   def exactCosinePairsQuantized(corpus: DataFrame, threshold: Double,
                                 idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    VectorFunctions.register(corpus.sparkSession)
     val q = corpus.select(col(idCol).as("id"), expr(s"quantize_i8($vecCol)").as("qv"))
     val a = q.select(col("id").as("id_a"), col("qv").as("q_a"))
     val b = q.select(col("id").as("id_b"), col("qv").as("q_b"))
@@ -136,7 +133,6 @@ object Similarity extends org.apache.spark.internal.Logging {
   /** The SRP band table: one (id, tbl, bucket) row per vector per table. */
   private[graft] def srpBanded(corpus: DataFrame, numTables: Int, bits: Int,
                         idCol: String, vecCol: String, seed: Long): DataFrame = {
-    VectorFunctions.register(corpus.sparkSession)
     corpus
       .select(col(idCol).as("id"),
         expr(s"srp_buckets($vecCol, $numTables, $bits, ${seed}L)").as("buckets"))
@@ -173,7 +169,6 @@ object Similarity extends org.apache.spark.internal.Logging {
                          recallTarget: Double = 0.9, targetBucket: Int = 4096,
                          idCol: String = "vec_id", vecCol: String = "embedding",
                          seed: Long = 42L): DataFrame = {
-    VectorFunctions.register(corpus.sparkSession)
     val nRows = corpus.count()
     val bits = if (bitsPerTable > 0) bitsPerTable
                else bitsFor(nRows, targetBucket)
@@ -380,7 +375,6 @@ object Similarity extends org.apache.spark.internal.Logging {
               idCol: String = "vec_id", vecCol: String = "embedding",
               seed: Long = 42L,
               maxBroadcastQueries: Long = DefaultMaxBroadcastQueries): DataFrame = {
-    VectorFunctions.register(corpus.sparkSession)
     val bits = if (bitsPerTable > 0) bitsPerTable
                else bitsFor(corpus.count(), targetBucket)
     def banded(df: DataFrame, side: String) = df
@@ -461,7 +455,6 @@ object Similarity extends org.apache.spark.internal.Logging {
     */
   private def trainingSample(corpus: DataFrame, numCentroids: Int, idCol: String,
                              vecCol: String): Array[(Long, Array[Float])] = {
-    VectorFunctions.register(corpus.sparkSession)
     val sampleKey = corpus.schema(idCol).dataType match {
       case _: org.apache.spark.sql.types.NumericType => col(idCol).cast("long")
       case _ => surrogateId(col(idCol))
@@ -616,7 +609,6 @@ object Similarity extends org.apache.spark.internal.Logging {
   def ivfBuild(corpus: DataFrame,
                numCentroids: Int = 16, trainIters: Int = 3,
                idCol: String = "vec_id", vecCol: String = "embedding"): IvfIndex = {
-    VectorFunctions.register(corpus.sparkSession)
     val cents = trainCentroidsLocal(corpus, numCentroids, trainIters, idCol, vecCol)
     IvfIndex(cents, assignCols(corpus, cents, idCol, vecCol))
   }
@@ -674,7 +666,6 @@ object Similarity extends org.apache.spark.internal.Logging {
                 minCosine: Option[Double] = None,
                 blockRows: Int = DefaultBlockRows,
                 quantizedRerank: Option[Boolean] = None): DataFrame = {
-    VectorFunctions.register(queries.sparkSession)
     // Non-long query ids: encode onto the i64 surrogate core and decode
     // in the final projection — EVERY orientation (replicated float/int8/
     // PQ, per-query, cross-block) is then available to a string-id corpus
@@ -1424,7 +1415,6 @@ object Similarity extends org.apache.spark.internal.Logging {
                   k: Int, nprobe: Int = 4, rerankFactor: Int = 4,
                   idCol: String = "vec_id", vecCol: String = "embedding",
                   maxBroadcastQueries: Long = DefaultMaxBroadcastQueries): DataFrame = {
-    VectorFunctions.register(queries.sparkSession)
     val probes = queries.select(col(idCol).as("query_id"), col(vecCol).as("query_vec"),
       pqQueryLut(index.codebooks, index.dim, vecCol).as("lut"),
       queryNorm(vecCol).as("q_norm"),
@@ -1641,7 +1631,6 @@ object Similarity extends org.apache.spark.internal.Logging {
     */
   def ivfAppend(index: IvfIndex, batch: DataFrame,
                 idCol: String = "vec_id", vecCol: String = "embedding"): IvfIndex = {
-    VectorFunctions.register(batch.sparkSession)
     val appended = assignCols(batch, index.centroids, idCol, vecCol)
     val standingGeneric = index.assigned.columns.contains("orig_id")
     require(standingGeneric == appended.columns.contains("orig_id"),
@@ -1662,7 +1651,6 @@ object Similarity extends org.apache.spark.internal.Logging {
     */
   def ivfAppendToSaved(spark: SparkSession, dir: String, batch: DataFrame,
                        idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    VectorFunctions.register(spark)
     val (cents, saved) = readIndex(spark, dir)
     val assignedBatch = assignCols(batch, cents, idCol, vecCol)
     val savedGeneric = saved.columns.contains("orig_id")
@@ -1748,7 +1736,6 @@ object Similarity extends org.apache.spark.internal.Logging {
   def semanticDedup(corpus: DataFrame, threshold: Double,
                     numCentroids: Int = 16, trainIters: Int = 3,
                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    VectorFunctions.register(corpus.sparkSession)
     val cents = trainCentroidsLocal(corpus, numCentroids, trainIters, idCol, vecCol)
     val assigned = corpus.select(col(idCol).as("id"), col(vecCol).as("v"),
       nearestCentroid(col(vecCol), cents).as("cid"))

@@ -139,26 +139,6 @@ object SkippingIndex {
 
   // ---- per-shard bloom filters -----------------------------------------
 
-  /** Register Spark's own `BloomFilterAggregate` (the runtime-filter
-    * aggregate from catalyst, a `TypedImperativeAggregate`) under a
-    * graft name. The buffer is the LIVE `util.sketch.BloomFilter`
-    * object — serialization (the filter's native `writeTo`, the same
-    * bytes [[scanEquals]] reads back) happens
-    * only at partial-aggregate shuffle boundaries, never per row. This
-    * retires the previous `Aggregator` with a Java-serialized buffer —
-    * the last `javaSerialization` encoder in main.
-    */
-  private def registerBloomAgg(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    val reg = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    reg.registerFunction(FunctionIdentifier("graft_bloom_agg"),
-      new ExpressionInfo(getClass.getName, null, "graft_bloom_agg"),
-      c => new BloomFilterAggregate(c(0), c(1), c(2)))
-  }
-
   /** Bit width `util.sketch.BloomFilter.create(n, fpp)` would choose —
     * the aggregate takes (n, numBits), so replicating the formula keeps
     * the geometry identical to filters built via `create` (merge
@@ -186,7 +166,6 @@ object SkippingIndex {
     */
   def bloomManifest(sharded: DataFrame, valueCol: String,
                     expectedPerShard: Long, fpp: Double = 0.01): DataFrame = {
-    registerBloomAgg(sharded.sparkSession)
     val numBits = optimalNumOfBits(expectedPerShard, fpp)
     sharded.groupBy(col("zshard"))
       .agg(expr(s"graft_bloom_agg(CAST(`$valueCol` AS BIGINT), " +

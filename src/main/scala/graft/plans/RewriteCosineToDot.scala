@@ -11,9 +11,11 @@ import org.apache.spark.sql.internal.SQLConf
   * ‖a‖=‖b‖=1 and a third of the per-pair FLOPs, which matters on the
   * 10^11-pair scoring scans similarity search runs at 100 TB.
   *
-  * Installed via [[graft.GraftExtensions]] (`injectOptimizerRule`); also
-  * directly applicable to a plan in tests. The conf gate keeps the rewrite
-  * sound: without the normalization assertion the rule is a no-op.
+  * Installed by [[graft.GraftExtensions]]: injected when a session is built
+  * with the extension, else added to `experimental.extraOptimizations` by
+  * `GraftExtensions.install`; also directly applicable to a plan in tests.
+  * The conf gate keeps the rewrite sound: without the normalization
+  * assertion the rule is a no-op.
   */
 object RewriteCosineToDot extends Rule[LogicalPlan] {
   private def enabled: Boolean =

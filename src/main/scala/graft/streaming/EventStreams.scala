@@ -110,7 +110,6 @@ object EventStreams {
                       delayMs: Long = 10 * 60 * 1000L): DataFrame = {
     val spark = stream.sparkSession
     import spark.implicits._
-    graft.functions.NativeTextExpressions.register(spark)
     require(maxHamming <= 3,
       s"maxHamming $maxHamming > 3 breaks the 4-chunk pigeonhole recall guarantee")
     val delay = s"$delayMs milliseconds"
@@ -368,6 +367,12 @@ object EventStreams {
     * stream schema is taken from a one-footer batch read so both the
     * legacy TIMESTAMP(NANOS)-as-long and the current TIMESTAMP(MICROS)
     * testdata shapes stream correctly.
+    *
+    * This is the one graft call that writes a session conf: it sets
+    * `spark.sql.legacy.parquet.nanosAsLong=true` on `spark` and leaves it
+    * set. A file stream plans every batch in the session it was started
+    * from, so the flag cannot live on a private scan session the way
+    * [[graft.Tables.apply]] keeps it.
     */
   def readEventsStream(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

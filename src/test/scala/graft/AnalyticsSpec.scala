@@ -180,7 +180,6 @@ class AnalyticsSpec extends SparkSpec {
   }
 
   test("q197 native winnow_hashes matches the HOF formulation per document") {
-    graft.functions.NativeTextExpressions.register(spark)
     val native = Tables(spark, sf0001, "documents")
       .select(col("doc_id"), expr("winnow_hashes(text, 5, 4)").as("fps"))
       .filter(size(col("fps")) > 0)
@@ -194,7 +193,6 @@ class AnalyticsSpec extends SparkSpec {
   }
 
   test("q175 native cdc_cuts matches the HOF boundary rule per document") {
-    graft.functions.NativeTextExpressions.register(spark)
     val native = spark.read.parquet(s"$sf0001/documents.parquet")
       .select(col("doc_id"), expr("cdc_cuts(text, 8, 64)").as("cuts"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1).toList).toMap

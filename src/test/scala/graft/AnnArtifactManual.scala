@@ -68,8 +68,7 @@ object AnnArtifactManual {
     require(args.length >= 2, "usage: exact|build <sfDir> <artDir> | probe <artDir>")
     val mode = args(0)
     val spark = session()
-    graft.functions.NativeTextExpressions.register(spark)
-    graft.functions.VectorFunctions.register(spark)
+    GraftExtensions.install(spark)
     // host-drift denominator: cite wall/calibration across sessions
     println(f"[ann-art] calibration=${graft.Calibration.measure(3)}%.3f s")
     mode match {

@@ -30,6 +30,7 @@ object BpeScaleManual {
       .getOrCreate()
     spark.sparkContext.setLogLevel(
       sys.env.getOrElse("SPARK_GRAFT_LOG_LEVEL", "WARN"))
+    GraftExtensions.install(spark)
     println(f"[bpe-scale] calibration=${Calibration.measure(3)}%.3f s")
 
     // English-ish letter pool: repeats ~ frequency, indexed by hash.

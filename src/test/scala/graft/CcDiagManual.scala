@@ -19,6 +19,7 @@ object CcDiagManual {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    GraftExtensions.install(spark)
     def timed[T](tag: String)(f: => T): T = {
       val t0 = System.nanoTime(); val r = f
       println(f"[cc-diag]   $tag: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r

@@ -18,6 +18,7 @@ object CoRunDiagManual {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    GraftExtensions.install(spark)
     def state(tag: String): Unit = {
       val rdds = spark.sparkContext.getPersistentRDDs
       val rt = Runtime.getRuntime

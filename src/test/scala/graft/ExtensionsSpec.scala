@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{DotProduct, VectorFunctions}
+import graft.functions.{CosineSimilarity, DotProduct, VectorFunctions}
 import graft.plans.RewriteCosineToDot
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.functions._
@@ -15,7 +15,6 @@ class ExtensionsSpec extends SparkSpec {
     (0L, Array(1.0f, 0.0f)), (1L, Array(0.6f, 0.8f))).toDF("vec_id", "embedding")
 
   test("RewriteCosineToDot rewrites only when the session asserts unit vectors") {
-    VectorFunctions.register(spark)
     val df = vecs.as("a").crossJoin(vecs.as("b"))
       .select(expr("cosine_sim(a.embedding, b.embedding)").as("c"))
     val analyzed = df.queryExecution.analyzed
@@ -33,8 +32,22 @@ class ExtensionsSpec extends SparkSpec {
     } finally spark.conf.set("spark.graft.assumeUnitVectors", "false")
   }
 
+  test("on a session built without the extension, install makes the unit-vector key rewrite cosine_sim") {
+    // the documented knob, end to end: the rule reaches the optimized plan
+    // through GraftExtensions.install alone (the shared session is plain)
+    def optimized() = vecs.as("a").crossJoin(vecs.as("b"))
+      .select(expr("cosine_sim(a.embedding, b.embedding)").as("c"))
+      .queryExecution.optimizedPlan
+    def has(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, cls: Class[_]) =
+      plan.expressions.exists(_.find(e => cls.isInstance(e)).isDefined)
+    assert(!spark.conf.getOption("spark.sql.extensions").exists(_.contains("GraftExtensions")))
+    val off = withConf("spark.graft.assumeUnitVectors" -> "false")(optimized())
+    assert(has(off, classOf[CosineSimilarity]) && !has(off, classOf[DotProduct]), off.toString)
+    val on = withConf("spark.graft.assumeUnitVectors" -> "true")(optimized())
+    assert(has(on, classOf[DotProduct]) && !has(on, classOf[CosineSimilarity]), on.toString)
+  }
+
   test("dot product equals cosine for unit vectors (the rewrite's soundness)") {
-    VectorFunctions.register(spark)
     val r = vecs.as("a").crossJoin(vecs.as("b"))
       .filter($"a.vec_id" === 0 && $"b.vec_id" === 1)
       .select(
@@ -53,7 +66,7 @@ class ExtensionsSpec extends SparkSpec {
 
   test("a session built with the extensions resolves every injected function end-to-end") {
     // the real cluster path: a FRESH session (shared SparkContext) with
-    // spark.sql.extensions applied, NO register() call anywhere — every
+    // spark.sql.extensions applied, NO install() call anywhere — every
     // function must resolve and evaluate through the injection alone
     val names = (functions.VectorFunctions.builders ++
       functions.NativeTextExpressions.builders).map(_._1)

@@ -50,6 +50,7 @@ object GridCrossoverManual {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("INFO") // capture the decision log line
+    GraftExtensions.install(spark)
     spark.conf.set("spark.graft.broadcastBytes", "8388608")
     spark.conf.set("spark.graft.gridVerify.cellBytes", cellBytes)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

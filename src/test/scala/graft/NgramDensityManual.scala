@@ -18,7 +18,7 @@ object NgramDensityManual {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.NativeTextExpressions.register(spark)
+    GraftExtensions.install(spark)
     for (dir <- args) {
       val docs = Tables(spark, dir, "documents")
       val t0 = System.nanoTime()

@@ -754,14 +754,14 @@ class PlanShapeSpec extends SparkSpec {
     val rnd = new scala.util.Random(5)
     val raw = Seq.fill(300)((rnd.nextInt(80).toLong, rnd.nextInt(80).toLong))
       .filter(e => e._1 != e._2)
-    // the counts the boxed-map kernels ran: the gate count, the edge
-    // collect (BFS also collects its sources), localCheckpoint for
-    // BFS/k-core and the staged write with its read-back
+    // the counts the boxed-map kernels ran, less the staged read-back's
+    // schema job: the gate count, the edge collect (BFS also collects its
+    // sources), localCheckpoint for BFS/k-core and the staged write
     assert(jobsPerCall(operators.Dedup.connectedComponents(
-      raw.toDF("id_a", "id_b"), "id_a", "id_b")) == 6)
+      raw.toDF("id_a", "id_b"), "id_a", "id_b")) == 5)
     assert(jobsPerCall(operators.Graph.bfsHops(
-      raw.toDF("src", "dst"), Seq(0L, 13L).toDF("node"), 3)) == 8)
-    assert(jobsPerCall(operators.Graph.kCore(raw.toDF("a", "b"), 2)) == 6)
+      raw.toDF("src", "dst"), Seq(0L, 13L).toDF("node"), 3)) == 7)
+    assert(jobsPerCall(operators.Graph.kCore(raw.toDF("a", "b"), 2)) == 5)
   }
 
   test("gate: budget 0 runs no estimate job; a negative budget names its key") {

@@ -20,6 +20,7 @@ object RecallSweepManual {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    GraftExtensions.install(spark)
     val exact = Queries.prefixJoinTopK(spark, sf)
       .select("doc_id", "nbr_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     println(s"[sweep] exact pairs: ${exact.size}")

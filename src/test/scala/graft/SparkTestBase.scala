@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM-wide session keeps
-  * `sbt test` fast; suites must not mutate global state destructively).
+  * `sbt test` fast; suites must not mutate global state destructively),
+  * with graft installed once, as an entry point installs it.
   */
 object SparkTestBase {
   lazy val spark: SparkSession = {
@@ -18,6 +19,7 @@ object SparkTestBase {
         java.nio.file.Files.createTempDirectory("graft-wh").toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
+    GraftExtensions.install(s)
     s
   }
 }

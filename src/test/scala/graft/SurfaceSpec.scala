@@ -42,11 +42,14 @@ class SurfaceSpec extends AnyFunSuite {
     }
 
   /** Reads one class: its supertypes, whether it is a module class, its
-    * methods, and (into `calls`) every method it invokes or references.
-    * A static forwarder's call to the module method it forwards to is not
-    * a call.
+    * methods, (into `calls`) every method it invokes or references, and
+    * (into `registrars`) each of its methods that calls a function
+    * registry's `registerFunction`, a lambda body counted as the method
+    * that encloses it. A static forwarder's call to the module method it
+    * forwards to is not a call.
     */
-  private def read(bytes: Array[Byte], calls: mutable.Set[(String, String, String)]): Info = {
+  private def read(bytes: Array[Byte], calls: mutable.Set[(String, String, String)],
+                   registrars: mutable.Set[String] = mutable.Set.empty): Info = {
     var name = ""
     var supers = Seq.empty[String]
     var isModule = false
@@ -69,8 +72,11 @@ class SurfaceSpec extends AnyFunSuite {
         val forwarder = (access & Opcodes.ACC_STATIC) != 0
         new MethodVisitor(Opcodes.ASM9) {
           override def visitMethodInsn(op: Int, owner: String, n: String, desc: String,
-                                       itf: Boolean): Unit =
+                                       itf: Boolean): Unit = {
             if (!(forwarder && owner == name + "$" && n == m && desc == mDesc)) calls += ((owner, n, desc))
+            if (n == "registerFunction" && owner.startsWith("org/apache/spark/sql/catalyst/analysis/"))
+              registrars += name + "." + (if (m.startsWith("$anonfun$")) m.split('$')(2) else m)
+          }
           override def visitInvokeDynamicInsn(n: String, desc: String, bsm: Handle, args: Object*): Unit =
             args.foreach { case h: Handle => note(h); case _ => }
           override def visitLdcInsn(v: Object): Unit = v match {
@@ -83,10 +89,12 @@ class SurfaceSpec extends AnyFunSuite {
     Info(name, supers, isModule, methods.toSeq)
   }
 
+  private def mainClasses: Seq[Array[Byte]] = classFiles(classesDir).map(f => Files.readAllBytes(f.toPath))
+
   /** The `Object.method` names of the uncalled public methods. */
   private def uncalledSurface(): Set[String] = {
     val calls = mutable.Set.empty[(String, String, String)]
-    val infos = classFiles(classesDir).map(f => read(Files.readAllBytes(f.toPath), calls))
+    val infos = mainClasses.map(read(_, calls))
     val byName = infos.map(i => i.name -> i).toMap
     val outside = mutable.Map.empty[String, Info]
     /** A class outside `src/main`, read from the runtime classpath. */
@@ -139,5 +147,15 @@ class SurfaceSpec extends AnyFunSuite {
       s"public methods no src/main code calls, with no README library-surface row: ${(uncalled -- documented).toSeq.sorted}")
     assert((documented -- uncalled).isEmpty,
       s"README library-surface rows for methods src/main calls or no longer has: ${(documented -- uncalled).toSeq.sorted}")
+  }
+
+  test("GraftExtensions.install is the one src/main method that registers a function") {
+    // per-build registration re-registered every function on each query
+    // build; this keeps it from coming back under another name
+    assert(classesDir.isDirectory,
+      s"run from the repo root after compiling (cwd ${new File(".").getAbsolutePath})")
+    val registrars = mutable.Set.empty[String]
+    mainClasses.foreach(read(_, mutable.Set.empty, registrars))
+    assert(registrars.toSet == Set("graft/GraftExtensions$.install"))
   }
 }

@@ -68,4 +68,53 @@ class TablesSpec extends SparkSpec {
     assert(fields(df.schema) == fields(spark.read.parquet(s"$dir/t.parquet").schema))
     assert(df.count() == 3)
   }
+
+  test("events with ts as TIMESTAMP(NANOS) read as ns div 1000, and the caller's nanosAsLong is never written") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val schema = MessageTypeParser.parseMessageType(
+      """message events {
+        |  optional int64 event_id;
+        |  optional int64 ts (TIMESTAMP(NANOS,false));
+        |  optional int64 user_id;
+        |  optional binary event_type (STRING);
+        |  optional double value;
+        |  optional binary props (STRING);
+        |}""".stripMargin)
+    // sub-µs bits at 2023 magnitudes, a whole µs, and one before 1970
+    val ns = Seq(1700000000123456789L, 1700000000123456000L, 1L, -1500L)
+    val dir = java.nio.file.Files.createTempDirectory("graft-nanos").toString
+    val writer = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"$dir/events.parquet")).withType(schema).build()
+    val rows = new SimpleGroupFactory(schema)
+    try ns.zipWithIndex.foreach { case (t, i) =>
+      writer.write(rows.newGroup().append("event_id", i.toLong).append("ts", t)
+        .append("user_id", 7L).append("event_type", "view").append("value", 1.0)
+        .append("props", "{}"))
+    } finally writer.close()
+
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    withConf(key -> "false") {
+      val events = Tables(spark, dir, "events")
+      assert(spark.conf.get(key) == "false", "building the frame wrote the caller's conf")
+      assert(events.schema("ts").dataType == org.apache.spark.sql.types.TimestampType)
+      val got = events.selectExpr("event_id", "unix_micros(ts)").collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(spark.conf.get(key) == "false", "running the frame wrote the caller's conf")
+      assert(got == ns.zipWithIndex.map { case (t, i) => i.toLong -> t / 1000 }.toMap)
+    }
+  }
+
+  test("Dedup.stage runs one job, its write, and reads back the schema spark.read.parquet infers") {
+    import spark.implicits._
+    val df = Seq((1L, "a", Option(1.5)), (2L, null, None), (3L, "c", Option(-0.5)))
+      .toDF("id", "s", "d")
+      .withColumn("arr", org.apache.spark.sql.functions.array($"id", $"id" * 2))
+    val (staged, jobs) = jobsDuring(graft.operators.Dedup.stage(df, "tables-spec"))
+    assert(jobs == 1, s"$jobs jobs staging the frame")
+    val dir = new org.apache.hadoop.fs.Path(staged.inputFiles.head).getParent.toString
+    assert(staged.schema == spark.read.parquet(dir).schema)
+    assert(staged.orderBy("id").collect().toSeq == df.orderBy("id").collect().toSeq)
+  }
 }

@@ -227,7 +227,6 @@ class LenientTemporalSpec extends SparkSpec {
 
   test("temporal_parse(s, true) is codegen'd (CODEGEN_ONLY pin)") {
     import spark.implicits._
-    graft.functions.NativeTextExpressions.register(spark)
     val key = "spark.sql.codegen.factoryMode"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, "CODEGEN_ONLY")

@@ -294,7 +294,6 @@ class TemporalGrammarSpec extends SparkSpec {
 
   test("temporal_parse is codegen'd, not a fallback (CODEGEN_ONLY pin)") {
     import spark.implicits._
-    graft.functions.NativeTextExpressions.register(spark)
     val out = withConf("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
         "spark.sql.codegen.fallback" -> "false", "spark.sql.session.timeZone" -> "UTC") {
       // an RDD scan: a local relation's projection would be evaluated by the optimizer

@@ -20,7 +20,6 @@ class IvfBlockTopKSpec extends SparkSpec {
   private def emb: DataFrame = graft.Tables(spark, sf0001, "embeddings")
 
   private def packCol(entries: Column): Column = {
-    VectorFunctions.register(spark)
     call_function("pack_vec_block", entries)
   }
 
@@ -28,7 +27,6 @@ class IvfBlockTopKSpec extends SparkSpec {
   private def flatIvfSearch(index: Similarity.IvfIndex, queries: DataFrame,
                             k: Int, nprobe: Int,
                             minCosine: Option[Double]): DataFrame = {
-    VectorFunctions.register(spark)
     val probes = queries.select(col("vec_id").as("query_id"),
       col("embedding").as("query_vec"),
       explode(call_function("nearest_centroids", col("embedding"),
@@ -138,7 +136,6 @@ class IvfBlockTopKSpec extends SparkSpec {
     // Every (list_id, chunk, block) row — blob BYTES included — must be
     // identical: probe kernels and packed artifacts both consume this
     // layout.
-    VectorFunctions.register(spark)
     val index = Similarity.ivfBuild(emb, numCentroids = 4, trainIters = 1)
     for (blockRows <- Seq(3, 7, 1 << 20)) {
       val oldForm = index.assigned
@@ -221,7 +218,6 @@ class IvfBlockTopKSpec extends SparkSpec {
   }
 
   test("ivf_block_topk is codegen'd, not a fallback (CODEGEN_ONLY pin)") {
-    VectorFunctions.register(spark)
     val blob = emb.limit(10)
       .agg(packCol(collect_list(struct(col("vec_id"), col("embedding")))).as("b"))
       .head.getAs[Array[Byte]](0)
@@ -252,7 +248,6 @@ class IvfBlockTopKSpec extends SparkSpec {
   }
 
   test("block_cross_topk equals per-query ivf_block_topk and is codegen'd (CODEGEN_ONLY pin)") {
-    VectorFunctions.register(spark)
     import org.apache.spark.sql.functions.expr
     val some = emb.limit(12)
     val cblob = some
@@ -353,7 +348,6 @@ class IvfBlockTopKSpec extends SparkSpec {
   }
 
   test("scores are bit-identical to cosine_sim (no arithmetic drift in the kernel)") {
-    VectorFunctions.register(spark)
     val blob = emb.limit(50)
       .agg(packCol(collect_list(struct(col("vec_id"), col("embedding")))).as("b"))
       .head.getAs[Array[Byte]](0)

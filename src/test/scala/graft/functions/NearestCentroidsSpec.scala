@@ -15,7 +15,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 class NearestCentroidsSpec extends SparkSpec {
 
   private def ncCol(vec: Column, cents: Seq[(Long, Array[Float])], nprobe: Int): Column = {
-    VectorFunctions.register(spark)
     call_function("nearest_centroids", vec,
       lit(VectorFunctions.packBlock(cents)), lit(nprobe))
   }
@@ -41,7 +40,6 @@ class NearestCentroidsSpec extends SparkSpec {
       .map { case (r, i) => (i.toLong, r.getSeq[Float](1).toArray) }
 
   test("probe lists match the HOF formulation exactly (nprobe 1 and 3)") {
-    VectorFunctions.register(spark)
     val cents = someCentroids(8)
     for (nprobe <- Seq(1, 3)) {
       val both = emb.select(
@@ -109,7 +107,6 @@ class NearestCentroidsSpec extends SparkSpec {
     assert(hex(VectorFunctions.packBlock(Seq(7L -> Array(0f, 1f), 0L -> Array(1f, 0f)))) ==
       "0000000200000002" + "00000000000000000000000000000007" +
         "3f80000000000000000000003f800000")
-    VectorFunctions.register(spark)
     val entries = Seq((5L, Array(1f, -2.5f)), (1L, Array(0.5f, 0f)), (3L, Array(3f, 0.25f)))
       .toDF("id", "vec").agg(collect_list(struct(col("id"), col("vec"))).as("e"))
     val row = entries.select(call_function("pack_vec_block", col("e")),
@@ -124,7 +121,6 @@ class NearestCentroidsSpec extends SparkSpec {
   }
 
   test("registered SQL surface agrees with the programmatic column") {
-    VectorFunctions.register(spark)
     val cents = someCentroids(4)
     val packedHex = VectorFunctions.packBlock(cents).map("%02x".format(_)).mkString
     val viaSql = emb.selectExpr(

@@ -71,7 +71,6 @@ class QuantizedProbeSpec extends SparkSpec {
   }
 
   test("int8 probe scores are EXACT: every emitted cosine is the float cosine_sim") {
-    VectorFunctions.register(spark)
     val index = Similarity.ivfBuild(emb, numCentroids = 2, trainIters = 1)
     val queries = emb.filter(col("vec_id") < 10)
     val probe = withConf(
@@ -151,7 +150,6 @@ class QuantizedProbeSpec extends SparkSpec {
   }
 
   test("rerank off emits approximate scores deterministically (the q204 contract)") {
-    VectorFunctions.register(spark)
     val index = Similarity.ivfBuild(emb, numCentroids = 2, trainIters = 1)
     val queries = emb.filter(col("vec_id") < 20)
     val off = withConf(

@@ -50,7 +50,6 @@ class GenericIdAnnSpec extends SparkSpec {
   }
 
   test("string-id corpus: the int8 regime (the old skip) is green, deterministic, exact-scored") {
-    graft.functions.VectorFunctions.register(spark)
     val index = Similarity.ivfBuild(corpus, numCentroids = 2, trainIters = 1)
     val probe = withConf(
       "spark.graft.ann.replicateIndexBytes" -> int8OnlyBudget(index).toString) {

@@ -223,7 +223,6 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("simhash: identical docs distance 0, near-dups close, unrelated far") {
-    graft.functions.NativeTextExpressions.register(spark)
     val sh = docs.select($"doc_id", expr("simhash64_native(text)").as("sh"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     def ham(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
@@ -337,7 +336,6 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("native cosine_sim expression agrees with the HOF composition") {
-    VectorFunctions.register(spark)
     val paired = vecs.as("a").crossJoin(vecs.as("b"))
       .select(
         VectorFunctions.cosineHof(col("a.embedding"), col("b.embedding")).as("hof"),
@@ -347,7 +345,6 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("cosine_sim works from spark.sql after registration") {
-    VectorFunctions.register(spark)
     vecs.createOrReplaceTempView("v_test")
     val r = spark.sql(
       "SELECT cosine_sim(a.embedding, b.embedding) c FROM v_test a JOIN v_test b ON a.vec_id=0 AND b.vec_id=3")
@@ -673,7 +670,6 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("minhash candidate recall >= 0.9 vs exact shingle-jaccard pairs") {
-    graft.functions.NativeTextExpressions.register(spark)
     val words = Vector("alpha", "beta", "gamma", "delta", "epsilon", "zeta",
       "eta", "theta", "iota", "kappa", "lambda", "mu", "nu", "xi", "omicron")
     val rnd = new scala.util.Random(11)

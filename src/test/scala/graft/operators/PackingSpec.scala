@@ -21,7 +21,6 @@ class PackingSpec extends SparkSpec {
   }.toDF("doc_id", "text")
 
   private def naive(budget: Long) = {
-    graft.functions.NativeTextExpressions.register(spark)
     docs.select($"doc_id",
         expr("token_count_native(text)").cast("long").as("n_tokens"))
       .withColumn("cum_tokens", sum($"n_tokens").over(

@@ -261,7 +261,6 @@ class PrefixJoinSpec extends SparkSpec {
   }
 
   test("sparse_to_dense accumulates repeated slots (and matches the pre-summed path)") {
-    graft.functions.VectorFunctions.register(spark)
     // repeated slot 1 must SUM (0.5 + 0.25), not last-write-win
     val got = spark.sql(
       """SELECT sparse_to_dense(array(

@@ -126,7 +126,6 @@ class EventStreamsSpec extends SparkSpec {
       (3L, "spark streaming composes stateless operators without any changes at all"),
       (4L, "yet another document with enough tokens to clear the quality floor okay"))
     def pipeline(df: org.apache.spark.sql.DataFrame) = {
-      graft.functions.NativeTextExpressions.register(spark)
       val sampled = graft.operators.Sampling.withSplit(df, "doc_id", Seq("keep" -> 0.8, "drop" -> 0.2))
         .filter(org.apache.spark.sql.functions.expr("split = 'keep' AND token_count_native(text) >= 10"))
         .drop("split")
@@ -188,7 +187,6 @@ class EventStreamsSpec extends SparkSpec {
   test("in-stream near-dup dedup catches cross-batch near-dups exactly (planted corpus)") {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.functions.{col, expr}
-    graft.functions.NativeTextExpressions.register(spark)
     val words = Vector("alpha", "beta", "gamma", "delta", "epsilon", "zeta",
       "eta", "theta", "iota", "kappa")
     val rnd = new scala.util.Random(7)
